@@ -277,12 +277,12 @@ def main() -> None:
         dt = time.time() - t0
         print(f"bpe    {k:>2}x  docs={k * base.count():>6}  merges={n_merges:>8}  wall={dt:6.2f}s")
 
-    # Bulk-ADC probe: the axis that grows in production SERVING is the
+    # ADC probe: the axis that grows in production SERVING is the
     # QUERY set (reindex scoring, batch dedup sweeps), so inflate queries
     # 1x/4x/16x against a fixed corpus — the join-based scorer should be
     # ~linear in query count (candidate volume is |corpus| * |queries| in
     # the compressed domain, distributed; no driver tables, no cap).
-    from syscol_spark.operators.similarity import pq_adc_topk_bulk
+    from syscol_spark.operators.similarity import pq_adc_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     emb_corpus = emb.filter(F.col("vec_id") < 1000).localCheckpoint()
@@ -296,7 +296,7 @@ def main() -> None:
             "embedding",
         )
         t0 = time.time()
-        n = pq_adc_topk_bulk(
+        n = pq_adc_topk(
             emb_corpus, queries, dim=64, n_subspaces=8, n_centroids=16,
             max_iter=2, train_stride=4, k=5,
         ).count()

@@ -15,7 +15,6 @@ Two paths:
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -515,33 +514,6 @@ def _bounded_sample(train: DataFrame) -> list | None:
     rows = train.limit(_LOCAL_TRAIN_LIMIT + 1).collect()
     return rows if len(rows) <= _LOCAL_TRAIN_LIMIT else None
 
-# ADC serving collects the query side to the driver to build distance tables
-# and broadcasts them; "queries are small by contract" is enforced, not just
-# documented. 10k queries × 8 subspaces × 256 centroids of float64 ≈ 160 MB
-# of broadcast tables — the ceiling of comfortable.
-_QUERY_SIDE_LIMIT = 10_000
-
-
-def _collect_query_side(queries: DataFrame, what: str, bulk_alt: str = "pq_adc_topk_bulk") -> list:
-    """Bounded collect enforcing the query-side contract in the SAME job
-    that fetches the rows: limit(N+1) caps the driver transfer at ~N rows
-    (a few MB at dim=64) whether or not the caller's frame is huge, and
-    one row past the bound raises instead of serving a silently-oversized
-    broadcast. One Spark job total — a separate count() probe would double
-    the scheduling cost of every ADC query for no extra safety at this
-    bound (unlike _LOCAL_TRAIN_LIMIT, whose 200k-row bound makes the
-    8-byte count probe worth a job)."""
-    rows = queries.limit(_QUERY_SIDE_LIMIT + 1).collect()
-    if len(rows) > _QUERY_SIDE_LIMIT:
-        raise ValueError(
-            f"{what}: query side exceeds _QUERY_SIDE_LIMIT={_QUERY_SIDE_LIMIT} rows; "
-            f"ADC serving builds driver-side distance tables per query — batch the "
-            f"queries or use {bulk_alt}, whose distance tables stay a "
-            f"DataFrame equi-joined to the codes (no driver materialization, "
-            f"no query cap)"
-        )
-    return rows
-
 
 def _kmeans_local(rows: list, k: int, max_iter: int) -> list[list[float]]:
     """Lloyd's on a collected (id, vec) sample — numerically the same
@@ -1013,30 +985,41 @@ def _score_pairs_arrow(pairs_with_vecs: DataFrame) -> DataFrame:
     ulp, which the shared rounding absorbs (same argument as the DuckDB
     list_* kernels, already hash-verified). Output id columns keep the
     input's id dtypes (string doc ids work, not just longs)."""
-    import pandas as pd  # noqa: F401 — signature requirement
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    in_schema = pairs_with_vecs.schema
-    out_schema = StructType(
-        [in_schema["id_a"], in_schema["id_b"], StructField("cosine", DoubleType())]
-    )
 
     def score(batches):
-        import numpy as np
-
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             va = np.stack(pdf["vec_a"].to_numpy()).astype("float64")
             vb = np.stack(pdf["vec_b"].to_numpy()).astype("float64")
-            dots = np.einsum("ij,ij->i", va, vb)
-            na = np.sqrt(np.einsum("ij,ij->i", va, va))
-            nb = np.sqrt(np.einsum("ij,ij->i", vb, vb))
-            out = pdf[["id_a", "id_b"]].copy()
-            out["cosine"] = dots / (na * nb)
-            yield out
+            yield _cosine_batch(pdf, va, vb)
 
-    scored = pairs_with_vecs.mapInPandas(score, out_schema)
+    return _scored_pairs(pairs_with_vecs, score)
+
+
+def _cosine_batch(pdf, va, vb):
+    """The one pair-cosine kernel both scorers run: (id_a, id_b, raw cosine)
+    for one Arrow batch whose row-aligned float64 vectors are ``va``/``vb``.
+    The 6dp rounding is NOT applied here — _scored_pairs rounds with F.round
+    so every scorer shares the DuckDB ROUND definition."""
+    dots = np.einsum("ij,ij->i", va, vb)
+    na = np.sqrt(np.einsum("ij,ij->i", va, va))
+    nb = np.sqrt(np.einsum("ij,ij->i", vb, vb))
+    out = pdf[["id_a", "id_b"]].copy()
+    out["cosine"] = dots / (na * nb)
+    return out
+
+
+def _scored_pairs(pairs: DataFrame, score) -> DataFrame:
+    """Run a _cosine_batch generator over ``pairs`` and round the cosine to
+    6dp; output id columns keep the input's id dtypes."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    in_schema = pairs.schema
+    out_schema = StructType(
+        [in_schema["id_a"], in_schema["id_b"], StructField("cosine", DoubleType())]
+    )
+    scored = pairs.mapInPandas(score, out_schema)
     return scored.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
@@ -1080,11 +1063,9 @@ def _score_pairs_closure(
     2.2 s -> 0.6 s on the 622k-pair knn_graph scoring step at sf0.1.
 
     Callers MUST gate on _BROADCAST_SCORE_LIMIT (see _score_pairs_for).
-    The einsum and the final F.round are byte-identical to
+    The kernel (_cosine_batch) and the final F.round are shared with
     _score_pairs_arrow, so the two paths emit the same cosines and the
     DuckDB oracles hold for either."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     # Arrow collect (toPandas), not Row collect: at the _BROADCAST_SCORE_LIMIT
     # bound a Row collect builds hundreds of MB of boxed Python objects on the
     # driver before the matrix exists; the Arrow path lands as numpy float32
@@ -1101,56 +1082,18 @@ def _score_pairs_closure(
         [np.asarray(v, dtype="float64") for v in pdf.iloc[:, 1]], dtype="float64"
     )[order]
 
-    in_schema = pairs.schema
-    out_schema = StructType(
-        [in_schema["id_a"], in_schema["id_b"], StructField("cosine", DoubleType())]
-    )
+    # The matrix rides in the python command (re-shipped per task, bounded
+    # by _BROADCAST_SCORE_LIMIT), not in a SparkContext.broadcast: that
+    # measured 36% slower on q_knn_graph at sf1 (r15).
+    def score(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ia = np.searchsorted(ids_sorted, pdf["id_a"].to_numpy())
+            ib = np.searchsorted(ids_sorted, pdf["id_b"].to_numpy())
+            yield _cosine_batch(pdf, mat[ia], mat[ib])
 
-    # Ship mode (r15, VERDICT item 5): "closure" captures the matrix in the
-    # python command (re-shipped per TASK — bounded by
-    # _BROADCAST_SCORE_LIMIT but paid once per task on a wide stage);
-    # "broadcast" ships a SparkContext.broadcast once per EXECUTOR and the
-    # UDF dereferences the handle per task. Same arrays either way, so the
-    # cosines are byte-identical. Default stays closure: the r14 sf10 probe
-    # saw a reused Python worker sporadically deadlock reading broadcast
-    # bookkeeping; the env knob exists to A/B the broadcast path at scale.
-    ship_mode = os.environ.get("SPARK_GRAFT_SCORE_SHIP", "closure")
-    if ship_mode == "broadcast":
-        bc = sides.sparkSession.sparkContext.broadcast((ids_sorted, mat))
-
-        def score(batches):
-            b_ids, b_mat = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ia = np.searchsorted(b_ids, pdf["id_a"].to_numpy())
-                ib = np.searchsorted(b_ids, pdf["id_b"].to_numpy())
-                va, vb = b_mat[ia], b_mat[ib]
-                dots = np.einsum("ij,ij->i", va, vb)
-                na = np.sqrt(np.einsum("ij,ij->i", va, va))
-                nb = np.sqrt(np.einsum("ij,ij->i", vb, vb))
-                out = pdf[["id_a", "id_b"]].copy()
-                out["cosine"] = dots / (na * nb)
-                yield out
-
-    else:
-
-        def score(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ia = np.searchsorted(ids_sorted, pdf["id_a"].to_numpy())
-                ib = np.searchsorted(ids_sorted, pdf["id_b"].to_numpy())
-                va, vb = mat[ia], mat[ib]
-                dots = np.einsum("ij,ij->i", va, vb)
-                na = np.sqrt(np.einsum("ij,ij->i", va, va))
-                nb = np.sqrt(np.einsum("ij,ij->i", vb, vb))
-                out = pdf[["id_a", "id_b"]].copy()
-                out["cosine"] = dots / (na * nb)
-                yield out
-
-    scored = pairs.mapInPandas(score, out_schema)
-    return scored.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+    return _scored_pairs(pairs, score)
 
 
 def _score_pairs_for(
@@ -1395,25 +1338,6 @@ def pq_codes(
     )
 
 
-def _tables_schema(queries: DataFrame, id_col: str, *, list_id: bool = False,
-                   vec: bool = False):
-    """Broadcast-side schema for ADC serving, with query_id typed from the
-    caller's frame (queries.schema[id_col]) instead of a hard-coded long —
-    string doc ids (UUID corpora) serve through the same plan."""
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
-    )
-
-    fields = [StructField("query_id", queries.schema[id_col].dataType)]
-    if list_id:
-        fields.append(StructField("list_id", IntegerType()))
-    if vec:
-        fields.append(StructField("q_vec", ArrayType(DoubleType())))
-    else:
-        fields.append(StructField("tables", ArrayType(ArrayType(DoubleType()))))
-    return StructType(fields)
-
-
 def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1435,20 +1359,23 @@ def pq_adc_topk(
     corpus vectors. This is the memory half of the billion-scale ANN
     recipe (IVF partitions, PQ compresses; the two compose).
 
-    Plan shape: serving is ONE corpus scan emitting codes (pq_codes), one
-    broadcast of the per-query tables (queries are small by contract, the
-    same bound as brute_force_topk's broadcast side), and a cross join
-    whose per-row cost is n_subspaces array lookups — no vector math at
-    serve time. The per-query distance tables are exact float64 numpy vs
-    the codebook literals, so the SQL oracle reproduces them from the
-    unrolled-k-means CTEs (q_ann_pq_adc).
+    Plan shape: one corpus scan emitting codes (pq_codes); the per-query
+    distance tables are computed on-plan (_pq_dist_tables) and carried as
+    a DataFrame keyed (query_id, subspace, centroid), equi-joined to the
+    long-format codes on (subspace, code) — nothing per query touches the
+    driver, so the query set has no size cap. The tables side is
+    |queries| * n_subspaces * n_centroids rows (128 per query at 8x16);
+    the join key has only n_subspaces * n_centroids distinct values, AQE
+    skew-join splits the big matches, and the per-(query, neighbor) sum
+    partially aggregates map-side. Full ADC is inherently |corpus| *
+    |queries| work in the compressed domain — at production scale compose
+    with IVF pruning (ivf_pq_topk) for sublinear candidates. The SQL
+    oracle reproduces the tables from the unrolled-k-means CTEs
+    (q_ann_pq_adc).
 
     Output: (query_id, neighbor_id, adc_dist rounded 6dp, rk<=k);
     deterministic ties (adc_dist asc, neighbor_id asc).
     """
-    import numpy as np
-
-    sub = dim // n_subspaces
     df = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     codebooks = _pq_codebooks(
         df, dim=dim, n_subspaces=n_subspaces, n_centroids=n_centroids,
@@ -1459,67 +1386,9 @@ def pq_adc_topk(
         n_subspaces=n_subspaces, n_centroids=n_centroids,
         max_iter=max_iter, train_stride=train_stride, codebooks=codebooks,
     )
-    # per-query distance tables: table[s][c] = |q_s - codebook[s][c]|^2
-    books = [np.array(cb, dtype="float64") for cb in codebooks]
-    qrows = _collect_query_side(
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")),
-        "pq_adc_topk",
-    )
-    table_rows = []
-    for r in qrows:
-        qv = np.array([float(x) for x in r["qvec"]], dtype="float64")
-        tables = [
-            [float(((qv[s * sub : (s + 1) * sub] - books[s][c]) ** 2).sum())
-             for c in range(n_centroids)]
-            for s in range(n_subspaces)
-        ]
-        table_rows.append((r["qid"], tables))
-    spark = corpus.sparkSession
-    # query-id type is derived from the caller's frame (real corpora key on
-    # string doc UUIDs as often as integers — the reference's own SlaveID is
-    # a string, syscol/metrics_reporter.go:33-40), so the broadcast
-    # distance-table schema follows whatever the id column actually is
-    tables_df = spark.createDataFrame(
-        table_rows, _tables_schema(queries, id_col)
-    )
-    dist = None
-    for s in range(n_subspaces):
-        term = F.element_at(F.element_at("tables", s + 1), F.col(f"c{s}") + 1)
-        dist = term if dist is None else dist + term
-    scored = (
-        codes.crossJoin(broadcast(tables_df))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(dist, 6).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id"))
-    return scored.select("*", F.row_number().over(w).cast("long").alias("rk")).filter(
-        F.col("rk") <= k
-    )
-
-
-def matrix_sqdists(vec: Column | str, matrix: list[list[float]]) -> Column:
-    """Array of squared L2 distances |v - row_j|^2 to every row of a
-    plan-time matrix literal, via one Arrow-batched numpy broadcast —
-    the distance-table construction of pq_adc_topk computed ON-PLAN
-    instead of on the driver. The per-element arithmetic
-    ((v - row) ** 2).sum(last_axis) is the same float64 reduction the
-    driver-side numpy tables use, so the two ADC paths' tables agree
-    bit-for-bit."""
-    from pyspark.sql.functions import pandas_udf
-
-    m = np.array(matrix, dtype="float64")  # (n_rows, dim)
-
-    @pandas_udf("array<double>")
-    def _sqd(v: pd.Series) -> pd.Series:
-        b = np.stack(v.to_numpy()).astype("float64")  # (batch, dim)
-        d = ((b[:, None, :] - m[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(list(d))
-
-    return _sqd(F.col(vec) if isinstance(vec, str) else vec)
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
+    scored = _adc_scored(codes, q, codebooks, id_col=id_col)
+    return _top_per_query(scored, "adc_dist", k)
 
 
 def _pq_assign_codes(vec: Column | str, codebooks: list[list[list[float]]], sub: int) -> Column:
@@ -1557,11 +1426,11 @@ def _pq_assign_codes(vec: Column | str, codebooks: list[list[list[float]]], sub:
 
 def _pq_dist_tables(vec: Column | str, codebooks: list[list[list[float]]], sub: int) -> Column:
     """ALL n_subspaces ADC distance tables in ONE Arrow crossing, as an
-    array<array<double>> column (subspace-major) — replaces the
-    per-subspace slice → matrix_sqdists withColumn loop for the same
-    driver-wall reason as _pq_assign_codes. Per subspace the arithmetic is
-    matrix_sqdists' own ((b - m)**2).sum(axis=2) float64 broadcast over a
-    contiguous slice, so every table value is bit-identical."""
+    array<array<double>> column (subspace-major) — one column instead of
+    a per-subspace withColumn loop, for the same driver-wall reason as
+    _pq_assign_codes. Per subspace the table is ((b - m)**2).sum(axis=2):
+    a float64 numpy broadcast of each query's contiguous sub-vector slice
+    against that subspace's codebook."""
     from pyspark.sql.functions import pandas_udf
 
     mats = [np.array(cb, dtype="float64") for cb in codebooks]  # (k, sub)
@@ -1581,14 +1450,13 @@ def _pq_dist_tables(vec: Column | str, codebooks: list[list[list[float]]], sub: 
 
 
 def _adc_sum_fixed_order() -> Column:
-    """Order-independent ADC distance aggregate for the bulk scorers: the
+    """Order-independent ADC distance aggregate for _adc_scored: the
     per-subspace lookup terms are collected as (subspace, dist) structs,
     sorted by subspace, and folded left-to-right — so the float64 additions
     happen in FIXED subspace order no matter how the shuffle partitioned
     the rows. A bare ``F.sum`` accumulates in partition-arrival order, which
     is not bitwise-deterministic across runs/cluster layouts and could flip
-    a 6dp rounding knife-edge; this fold is the join-based path's analogue
-    of the driver-table path's fixed-order numpy reduction. collect_list
+    a 6dp rounding knife-edge. collect_list
     still partially aggregates map-side (list concat), and the state is
     n_subspaces structs per (query, neighbor) — bounded."""
     return F.round(
@@ -1601,73 +1469,44 @@ def _adc_sum_fixed_order() -> Column:
     )
 
 
-def pq_adc_topk_bulk(
-    corpus: DataFrame,
+def _adc_scored(
+    codes: DataFrame,
     queries: DataFrame,
+    codebooks: list[list[list[float]]],
     *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    n_subspaces: int = 8,
-    n_centroids: int = 16,
-    max_iter: int = 2,
-    train_stride: int = 1,
-    k: int = 5,
+    id_col: str,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
-    """PQ-ADC top-k for LARGE query sets — the join-based scorer the
-    broadcast path's _QUERY_SIDE_LIMIT error points at. Same semantics and
-    output columns as pq_adc_topk (6dp-rounded ADC distance, (dist asc,
-    neighbor_id asc) ties), but the per-query distance tables never touch
-    the driver: they are computed on-plan (matrix_sqdists over each query's
-    sub-vectors) and carried as a DataFrame keyed (query_id, subspace,
-    centroid), equi-joined to the long-format codes on (subspace, code).
-
-    Scale shape: tables side is |queries| * n_subspaces * n_centroids rows
-    (128 per query at 8x16) — distributed, no broadcast, no cap. The join
-    key has only n_subspaces * n_centroids distinct values; AQE skew-join
-    splits the big matches, and the per-(query, neighbor) sum is partially
-    aggregated map-side before its shuffle. Full-ADC scoring is inherently
-    |corpus| * |queries| work in the compressed domain — at production
-    scale compose with IVF pruning (ivf_pq_topk) for sublinear candidates;
-    this operator is the exhaustive-scoring path at unbounded query count.
-    """
-    sub = dim // n_subspaces
-    df = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    codebooks = _pq_codebooks(
-        df, dim=dim, n_subspaces=n_subspaces, n_centroids=n_centroids,
-        max_iter=max_iter, train_stride=train_stride,
-    )
-    codes = pq_codes(
-        corpus, vec_col=vec_col, id_col=id_col, dim=dim,
-        n_subspaces=n_subspaces, n_centroids=n_centroids,
-        max_iter=max_iter, train_stride=train_stride, codebooks=codebooks,
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
-    tables = (
-        q.select(
-            "query_id",
-            F.posexplode(_pq_dist_tables(F.col("__qvec"), codebooks, sub))
-            .alias("__ts", "__dists"),
-        )
-        .select(
-            "query_id", "__ts", F.posexplode(F.col("__dists")).alias("__tc", "__d")
-        )
-    )
+    """The one ADC scoring core behind pq_adc_topk and ivfpq_serve:
+    ``queries`` (query_id, *keys, __qvec) become on-plan distance tables
+    in long format (query_id, *keys, __s, __code, __d), equi-joined to the
+    codes exploded to (neighbor_id, *keys, __s, __code), and summed per
+    (query, neighbor) in fixed subspace order. ``keys=("list_id",)`` puts
+    the IVF pruning inside the join key. Output: (query_id, neighbor_id,
+    adc_dist rounded 6dp), self-matches excluded."""
+    n_subspaces, sub = len(codebooks), len(codebooks[0][0])
+    tables = queries.select(
+        "query_id", *keys,
+        F.posexplode(_pq_dist_tables(F.col("__qvec"), codebooks, sub)).alias("__s", "__dists"),
+    ).select("query_id", *keys, "__s", F.posexplode("__dists").alias("__code", "__d"))
     codes_long = codes.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col(id_col).alias("neighbor_id"), *keys,
         F.posexplode(F.array(*[F.col(f"c{s}") for s in range(n_subspaces)]))
         .alias("__s", "__code"),
     )
-    scored = (
-        codes_long.join(
-            tables,
-            (F.col("__s") == F.col("__ts")) & (F.col("__code") == F.col("__tc")),
-        )
+    return (
+        codes_long.join(tables, [*keys, "__s", "__code"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .groupBy("query_id", "neighbor_id")
         .agg(_adc_sum_fixed_order().alias("adc_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id"))
+
+
+def _top_per_query(scored: DataFrame, score: str, k: int, *, desc: bool = False) -> DataFrame:
+    """row_number() <= k per query_id by ``score`` (ascending unless
+    ``desc``), ties to the lower neighbor_id; rk is a long."""
+    order = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
     return scored.select("*", F.row_number().over(w).cast("long").alias("rk")).filter(
         F.col("rk") <= k
     )
@@ -1709,7 +1548,7 @@ def ivf_pq_topk(
     spent on the variance the coarse quantizer did NOT explain, and each
     query builds one distance table per PROBED LIST from its own residual
     to that list's centroid. Same serving plan — one corpus scan to
-    (id, list, codes), broadcast per-(query, list) tables, n_subspaces
+    (id, list, codes), on-plan per-(query, list) tables, n_subspaces
     lookups per candidate — with strictly better recall per code byte.
     Oracle-mirrored by q_ann_ivfpq_res (residual CTE + long-format
     k-means chains).
@@ -1717,7 +1556,7 @@ def ivf_pq_topk(
     ``refine=R`` (IVFADC+R, Jégou et al. §V): keep the top-R ADC
     candidates per query, then re-rank ONLY those R rows with the exact
     cosine against the raw vectors. The refinement join touches R rows per
-    query (broadcast shortlist vs one corpus scan), so the 100 TB shape is
+    query (shortlist vs one corpus scan), so the 100 TB shape is
     unchanged, and recall recovers to the coarse stage's ceiling — ADC
     ordering noise inside the shortlist no longer costs recall (measured:
     the fixture's recall@5 roughly doubles at R=50; see
@@ -1984,170 +1823,38 @@ def ivfpq_serve(
     refine: int = 0,
     corpus: DataFrame | None = None,
 ) -> DataFrame:
-    """Serve half of IVF+PQ: rank an index's codes for a query set.
-    ``refine`` needs the raw ``corpus`` frame (exact re-rank touches
-    refine rows per query). Same output contract as ivf_pq_topk."""
-    import numpy as np
+    """Serve half of IVF+PQ: rank an index's codes for a query set (plain
+    or residual per ``meta``). Same output contract as ivf_pq_topk.
+    Nothing touches the driver: probe selection, the (query, probed list)
+    pairs and the ADC distance tables are all plan expressions, carried as
+    a DataFrame keyed (query_id, list_id, subspace, centroid) and
+    equi-joined to the long-format codes on (list_id, subspace, code), so
+    the query set has no size cap and building the plan runs no job.
 
-    dim, n_subspaces = meta["dim"], meta["n_subspaces"]
-    n_lists, pq_centroids = meta["n_lists"], meta["n_centroids"]
-    residual, id_col = meta["residual"], meta["id_col"]
-    coarse, codebooks = meta["coarse"], meta["codebooks"]
-    codes = index_codes
-    sub = dim // n_subspaces
-    if refine and corpus is None:
-        raise ValueError("ivfpq_serve: refine>0 needs the raw corpus frame for the exact re-rank")
-    books = [np.array(cb, dtype="float64") for cb in codebooks]
-    coarse_m = np.array(coarse, dtype="float64")
-    half = 0.5 * (coarse_m * coarse_m).sum(axis=1)
-    qrows = _collect_query_side(
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")),
-        "ivf_pq_topk",
-        bulk_alt="ivfpq_serve_bulk",
-    )
-    spark = queries.sparkSession
-    if residual:
-        # per-(query, probed list) distance tables on the query's residual
-        # to THAT list's centroid: table[s][c] = |(q - C_list)_s - cb[s][c]|^2.
-        # Probe ranking mirrors the Spark-side slice(reverse(array_sort)):
-        # score desc, ties to the HIGHER list index.
-        table_rows = []
-        for r in qrows:
-            qv = np.array([float(x) for x in r["qvec"]], dtype="float64")
-            scores = coarse_m @ qv - half
-            probe_ids = sorted(range(n_lists), key=lambda j: (-scores[j], -j))[:nprobe]
-            for lid in probe_ids:
-                qres = qv - coarse_m[lid]
-                tables = [
-                    [float(((qres[s * sub : (s + 1) * sub] - books[s][c]) ** 2).sum())
-                     for c in range(pq_centroids)]
-                    for s in range(n_subspaces)
-                ]
-                table_rows.append((r["qid"], lid, tables))
-        tables_df = spark.createDataFrame(
-            table_rows, _tables_schema(queries, id_col, list_id=True)
-        )
-        joined = codes.join(broadcast(tables_df), "list_id")
-    else:
-        # query probes: nprobe best coarse lists (same ranking as ivf_topk),
-        # computed Spark-side so the plain-PQ oracle chain mirrors it
-        half_norms = [float(h) for h in half]
-        qb = queries.select(
-            F.col(id_col).alias("query_id"),
-            matrix_dots(vec_col, coarse).alias("__dots"),
-        )
-        scored_lists = F.zip_with(
-            F.col("__dots"), F.array(*[F.lit(h) for h in half_norms]), lambda d, h: d - h
-        )
-        ranked = F.transform(
-            scored_lists, lambda s, i: F.struct(s.alias("score"), i.cast("int").alias("idx"))
-        )
-        probes = F.slice(F.reverse(F.array_sort(ranked)), 1, nprobe)
-        qp = qb.select("query_id", F.explode(probes).alias("__p")).select(
-            "query_id", F.col("__p.idx").alias("list_id")
-        )
-        # per-query PQ distance tables (same construction as pq_adc_topk)
-        table_rows = []
-        for r in qrows:
-            qv = np.array([float(x) for x in r["qvec"]], dtype="float64")
-            tables = [
-                [float(((qv[s * sub : (s + 1) * sub] - books[s][c]) ** 2).sum())
-                 for c in range(pq_centroids)]
-                for s in range(n_subspaces)
-            ]
-            table_rows.append((r["qid"], tables))
-        tables_df = spark.createDataFrame(
-            table_rows, _tables_schema(queries, id_col)
-        )
-        joined = codes.join(broadcast(qp), "list_id").join(broadcast(tables_df), "query_id")
-    dist = None
-    for s in range(n_subspaces):
-        term = F.element_at(F.element_at("tables", s + 1), F.col(f"c{s}") + 1)
-        dist = term if dist is None else dist + term
-    scored = (
-        joined.filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(dist, 6).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id"))
-    if refine:
-        shortlist = (
-            scored.select("*", F.row_number().over(w).alias("__r"))
-            .filter(F.col("__r") <= refine)
-            .drop("adc_dist", "__r")
-        )
-        qvec_df = spark.createDataFrame(
-            [(r["qid"], [float(x) for x in r["qvec"]]) for r in qrows],
-            _tables_schema(queries, id_col, vec=True),
-        )
-        rescored = (
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-            .join(broadcast(shortlist), "neighbor_id")
-            .join(broadcast(qvec_df), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine_similarity("q_vec", "c_vec"), 6).alias("cosine"),
-            )
-        )
-        w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-        return rescored.select("*", F.row_number().over(w2).cast("long").alias("rk")).filter(
-            F.col("rk") <= k
-        )
-    return scored.select("*", F.row_number().over(w).cast("long").alias("rk")).filter(
-        F.col("rk") <= k
-    )
-
-
-def ivfpq_serve_bulk(
-    index_codes: DataFrame,
-    meta: dict,
-    queries: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 4,
-    refine: int = 0,
-    corpus: DataFrame | None = None,
-) -> DataFrame:
-    """IVF+PQ serving for LARGE query sets — the list-pruned counterpart of
-    pq_adc_topk_bulk. Same ranking semantics and output columns as
-    ivfpq_serve (plain or residual per ``meta``), but NOTHING touches the
-    driver: probe selection, the (query, probed list) pairs, and the ADC
-    distance tables are all plan expressions, carried as a DataFrame keyed
-    (query_id, list_id, subspace, centroid) and equi-joined to the
-    long-format codes on (list_id, subspace, code).
-
-    Scale shape: tables side is |queries| * nprobe * n_subspaces *
-    n_centroids rows — distributed, no broadcast, no _QUERY_SIDE_LIMIT.
-    The join meets each code row only with queries that PROBED its list
-    (the IVF pruning is inside the equi-join key), so join output is
-    candidate-proportional, ~|corpus| * nprobe / n_lists per query, and
-    the per-(query, neighbor) sum partially aggregates map-side. For the
-    residual recipe the per-list residual (q - C_list) is one zip_with
-    against the coarse-centroid literal before the same sqdist tables —
-    the construction the broadcast path does in numpy, here in-plan.
+    Scale shape: the tables side is |queries| * nprobe * n_subspaces *
+    n_centroids rows, distributed. The join meets each code row only with
+    queries that PROBED its list (the IVF pruning is inside the equi-join
+    key), so join output is candidate-proportional, ~|corpus| * nprobe /
+    n_lists per query, and the per-(query, neighbor) sum partially
+    aggregates map-side. For the residual recipe the per-list residual
+    (q - C_list) is one zip_with against the coarse-centroid literal
+    before the same distance tables.
 
     ``refine=R`` (IVFADC+R) re-ranks each query's top-R ADC candidates by
     exact cosine against the raw ``corpus`` vectors — both joins are plain
     distributed equi-joins on neighbor_id / query_id (R rows per query on
-    the shortlist side), so the no-cap property is preserved.
+    the shortlist side).
     """
-    dim, n_subspaces = meta["dim"], meta["n_subspaces"]
     residual, id_col = meta["residual"], meta["id_col"]
     coarse, codebooks = meta["coarse"], meta["codebooks"]
-    sub = dim // n_subspaces
     half_norms = [sum(x * x for x in c) / 2.0 for c in coarse]
     if refine and corpus is None:
         raise ValueError(
-            "ivfpq_serve_bulk: refine>0 needs the raw corpus frame for the exact re-rank"
+            "ivfpq_serve: refine>0 needs the raw corpus frame for the exact re-rank"
         )
 
-    # nprobe best coarse lists per query — the same ranking expression the
-    # broadcast path's plain branch uses (score desc, ties to higher index)
+    # nprobe best coarse lists per query (score desc, ties to the higher
+    # list index) — the ranking ivf_topk and the oracle chains mirror
     qb = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
@@ -2174,62 +1881,22 @@ def ivfpq_serve_bulk(
                 lambda a, b: a.cast("double") - b,
             ).alias("__qvec"),
         )
-    tables = (
-        qp.select(
-            "query_id",
-            "list_id",
-            F.posexplode(_pq_dist_tables(F.col("__qvec"), codebooks, sub))
-            .alias("__ts", "__dists"),
-        )
+    scored = _adc_scored(index_codes, qp, codebooks, id_col=id_col, keys=("list_id",))
+    if not refine:
+        return _top_per_query(scored, "adc_dist", k)
+    shortlist = _top_per_query(scored, "adc_dist", refine).drop("adc_dist", "rk")
+    qvecs = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+    rescored = (
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+        .join(shortlist, "neighbor_id")
+        .join(qvecs, "query_id")
         .select(
-            "query_id", "list_id", "__ts",
-            F.posexplode(F.col("__dists")).alias("__tc", "__d"),
+            "query_id",
+            "neighbor_id",
+            F.round(cosine_similarity("q_vec", "c_vec"), 6).alias("cosine"),
         )
     )
-    codes_long = index_codes.select(
-        F.col(id_col).alias("neighbor_id"),
-        "list_id",
-        F.posexplode(F.array(*[F.col(f"c{s}") for s in range(n_subspaces)]))
-        .alias("__s", "__code"),
-    )
-    scored = (
-        codes_long.join(
-            tables,
-            (codes_long["list_id"] == tables["list_id"])
-            & (F.col("__s") == F.col("__ts"))
-            & (F.col("__code") == F.col("__tc")),
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(_adc_sum_fixed_order().alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id"))
-    if refine:
-        shortlist = (
-            scored.select("*", F.row_number().over(w).alias("__r"))
-            .filter(F.col("__r") <= refine)
-            .drop("adc_dist", "__r")
-        )
-        qvecs = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-        )
-        rescored = (
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-            .join(shortlist, "neighbor_id")
-            .join(qvecs, "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(cosine_similarity("q_vec", "c_vec"), 6).alias("cosine"),
-            )
-        )
-        w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-        return rescored.select("*", F.row_number().over(w2).cast("long").alias("rk")).filter(
-            F.col("rk") <= k
-        )
-    return scored.select("*", F.row_number().over(w).cast("long").alias("rk")).filter(
-        F.col("rk") <= k
-    )
+    return _top_per_query(rescored, "cosine", k, desc=True)
 
 
 def semantic_dedup(

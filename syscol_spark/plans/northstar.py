@@ -1070,23 +1070,21 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The bulk ADC scorer must produce byte-identical answers to the broadcast
-# scorer — same oracle SQL, different physical plan (distance tables as a
-# DataFrame equi-joined to codes instead of a driver-built broadcast; no
-# query-count cap). Registering it against the SAME unrolled-CTE oracle
-# hash-validates the join-based path end-to-end.
+# q_ann_adc_bulk runs the same pq_adc_topk plan as q_ann_pq_adc (distance
+# tables as a DataFrame equi-joined to codes, no query-count cap) against the
+# SAME unrolled-CTE oracle; the name stays for catalog stability.
 @register(
     "q_ann_adc_bulk",
     _pq_adc_oracle_sql(
         n_subspaces=8, sub_dim=8, k=16, iters=2, train_stride=4, q_max=10, topk=5
     ),
-    description="join-based bulk PQ-ADC top-k: on-plan distance tables equi-joined to codes (no driver tables, no query cap) — same oracle as q_ann_pq_adc",
+    description="PQ-ADC top-k served through the same pq_adc_topk plan as q_ann_pq_adc (on-plan distance tables equi-joined to codes, no query cap) — same oracle",
 )
 def q_ann_adc_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from syscol_spark.operators.similarity import pq_adc_topk_bulk
+    from syscol_spark.operators.similarity import pq_adc_topk
 
     emb = _emb(spark, sf_dir)
-    return pq_adc_topk_bulk(
+    return pq_adc_topk(
         emb, emb.filter(F.col("vec_id") < 10), dim=64, n_subspaces=8,
         n_centroids=16, max_iter=2, train_stride=4, k=5,
     )
@@ -1345,10 +1343,11 @@ def q_ann_ivfpq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Bulk IVFADC serving: same answers as q_ann_ivfpq_res through a different
-# physical plan — probes, per-(query, probed-list) residuals, and distance
-# tables all ON-PLAN, equi-joined to the codes on (list_id, subspace, code)
-# with no driver tables and no query-count cap. Same oracle.
+# IVFADC through the explicit build/serve split: the index is built once and
+# handed to ivfpq_serve, whose probes, per-(query, probed-list) residuals and
+# distance tables are all on-plan, equi-joined to the codes on (list_id,
+# subspace, code), with no query-count cap. The "_bulk" names are kept for
+# catalog stability. Same oracles as q_ann_ivfpq_res / q_ann_ivfpq_rr.
 @register(
     "q_ann_ivfadc_bulk",
     _ivfpq_res_oracle_sql(
@@ -1356,17 +1355,17 @@ def q_ann_ivfpq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_subspaces=8, sub_dim=8, pq_k=16, pq_iters=2, pq_stride=4,
         q_max=10, topk=5,
     ),
-    description="bulk IVFADC serving: on-plan probes + residual distance tables equi-joined to codes (no driver tables, no query cap) — same oracle as q_ann_ivfpq_res",
+    description="IVFADC through the explicit index lifecycle: build_ivfpq_index, then ivfpq_serve (on-plan probes + residual distance tables equi-joined to codes, no query cap) — same oracle as q_ann_ivfpq_res",
 )
 def q_ann_ivfadc_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from syscol_spark.operators.similarity import build_ivfpq_index, ivfpq_serve_bulk
+    from syscol_spark.operators.similarity import build_ivfpq_index, ivfpq_serve
 
     emb = _emb(spark, sf_dir)
     codes, meta = build_ivfpq_index(
         emb, dim=64, n_lists=16, coarse_iter=3, coarse_stride=4,
         n_subspaces=8, pq_centroids=16, pq_iter=2, pq_stride=4, residual=True,
     )
-    return ivfpq_serve_bulk(codes, meta, emb.filter(F.col("vec_id") < 10), nprobe=4, k=5)
+    return ivfpq_serve(codes, meta, emb.filter(F.col("vec_id") < 10), nprobe=4, k=5)
 
 
 @register(
@@ -1376,17 +1375,17 @@ def q_ann_ivfadc_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_subspaces=8, sub_dim=8, pq_k=16, pq_iters=2, pq_stride=4,
         q_max=10, topk=5, refine=20,
     ),
-    description="bulk IVFADC+R: on-plan ADC shortlist re-ranked by exact cosine through distributed equi-joins — no driver tables, no query cap; same oracle as q_ann_ivfpq_rr",
+    description="IVFADC+R through the explicit index lifecycle: build_ivfpq_index, then ivfpq_serve with refine (ADC shortlist re-ranked by exact cosine via equi-joins, no query cap) — same oracle as q_ann_ivfpq_rr",
 )
 def q_ann_ivfadc_rr_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from syscol_spark.operators.similarity import build_ivfpq_index, ivfpq_serve_bulk
+    from syscol_spark.operators.similarity import build_ivfpq_index, ivfpq_serve
 
     emb = _emb(spark, sf_dir)
     codes, meta = build_ivfpq_index(
         emb, dim=64, n_lists=16, coarse_iter=3, coarse_stride=4,
         n_subspaces=8, pq_centroids=16, pq_iter=2, pq_stride=4, residual=True,
     )
-    return ivfpq_serve_bulk(
+    return ivfpq_serve(
         codes, meta, emb.filter(F.col("vec_id") < 10), nprobe=4, k=5,
         refine=20, corpus=emb,
     )

@@ -908,27 +908,6 @@ def test_semantic_dedup_delta_parity(spark, sf_dir):
     assert any(not keep for _, keep in delta.values()), "fixture must produce drops"
 
 
-def test_adc_query_side_guard(spark, sf_dir):
-    """ADC serving collects the query side to build distance tables; an
-    oversized query frame must raise cleanly instead of materializing on
-    the driver (the 'small by contract' docstring is now enforced)."""
-    import pytest as _pytest
-
-    from syscol_spark.operators import similarity as sim
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    big = spark.range(0, 20).selectExpr("id AS vec_id", "array(CAST(id AS FLOAT)) AS embedding")
-    old = sim._QUERY_SIDE_LIMIT
-    sim._QUERY_SIDE_LIMIT = 10
-    try:
-        with _pytest.raises(ValueError, match="query side exceeds"):
-            sim.pq_adc_topk(emb, big, dim=64)
-        with _pytest.raises(ValueError, match="query side exceeds"):
-            sim.ivf_pq_topk(emb, big, dim=64)
-    finally:
-        sim._QUERY_SIDE_LIMIT = old
-
-
 def test_heavy_hitters_exact_vs_bruteforce_random(spark):
     """heavy_hitters must equal the brute-force groupBy answer on a skewed
     random stream even with a tiny MG capacity and adversarial partitioning
@@ -1374,116 +1353,114 @@ def test_bpe_apply_reconstructs_words(spark):
     assert len(out) < len("bananabandana")
 
 
-def test_pq_adc_bulk_matches_broadcast_beyond_query_cap(spark, sf_dir):
-    """The join-based bulk ADC scorer must (a) accept a query set far past
-    the broadcast path's _QUERY_SIDE_LIMIT and (b) return exactly the
-    broadcast path's top-k on a 10k subset (same trained codebooks — both
-    trainers are deterministic)."""
-    from syscol_spark.operators.similarity import (
-        _QUERY_SIDE_LIMIT,
-        pq_adc_topk,
-        pq_adc_topk_bulk,
-    )
-
+def _assert_batch_invariant_past_old_cap(spark, sf_dir, make_serves):
+    """One ADC serving call over 20,100 queries (201 replicas of a
+    100-vector block, ids shifted per replica — more than twice the
+    10,000-query cap the serving path once had) must return, for every
+    replica block, exactly the rows that serving one block alone returns.
+    ``make_serves(corpus)`` maps a case name to a queries -> top-k frame
+    callable."""
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
-        F.col("vec_id") < 200
+        F.col("vec_id") < 100
     )
     n_base = corpus.count()
-    assert n_base == 200
-    reps = _QUERY_SIDE_LIMIT // n_base * 2 + 1  # 101 reps -> 20,200 queries
+    assert n_base == 100
+    reps, shift = 201, 100_000
     queries = corpus.select(
-        F.explode(F.array(*[F.lit(i) for i in range(reps)])).alias("__r"),
+        F.explode(F.sequence(F.lit(1), F.lit(reps))).alias("__r"),
         "vec_id",
         "embedding",
-    ).select(
-        (F.col("vec_id") + (F.col("__r") + 1) * 100_000).alias("vec_id"),
-        "embedding",
-        "__r",
+    ).select((F.col("vec_id") + F.col("__r") * shift).alias("vec_id"), "embedding")
+    assert queries.count() == reps * n_base > 20_000
+    block = queries.filter(F.col("vec_id") < 2 * shift)  # replica 1 alone
+
+    def by_block(df) -> dict[int, set]:
+        out: dict[int, set] = {}
+        for r in df.collect():
+            rep, qid = divmod(r[0], shift)
+            out.setdefault(rep, set()).add((qid, *r[1:]))
+        return out
+
+    for name, serve in make_serves(corpus).items():
+        alone = by_block(serve(block))
+        assert list(alone) == [1] and len(alone[1]) == n_base * 5, name
+        together = by_block(serve(queries))
+        assert sorted(together) == list(range(1, reps + 1)), name
+        bad = [rep for rep, rows in together.items() if rows != alone[1]]
+        assert bad == [], f"{name}: replica blocks differ from the lone block: {bad[:5]}"
+
+
+def test_pq_adc_bulk_matches_broadcast_beyond_query_cap(spark, sf_dir):
+    """Plain-PQ ADC serving (pq_adc_topk, the one ADC path left after the
+    driver-table and bulk paths were merged) has no query-count cap and no
+    coupling between queries: see _assert_batch_invariant_past_old_cap."""
+    from syscol_spark.operators.similarity import pq_adc_topk
+
+    _assert_batch_invariant_past_old_cap(
+        spark,
+        sf_dir,
+        lambda corpus: {
+            "plain": lambda q: pq_adc_topk(
+                corpus, q, dim=64, n_subspaces=8, n_centroids=16, max_iter=2,
+                train_stride=4, k=5,
+            ),
+        },
     )
-    assert queries.count() == reps * n_base > 2 * _QUERY_SIDE_LIMIT
-
-    params = dict(dim=64, n_subspaces=8, n_centroids=16, max_iter=2,
-                  train_stride=4, k=5)
-    bulk = pq_adc_topk_bulk(corpus, queries.drop("__r"), **params)
-
-    # broadcast path on an exactly-10k subset; bulk rows for those queries
-    # must match row-for-row (codebooks identical by deterministic training)
-    sub_reps = _QUERY_SIDE_LIMIT // n_base  # 50 reps -> 10,000 queries
-    subset = queries.filter(F.col("__r") < sub_reps).drop("__r")
-    assert subset.count() == _QUERY_SIDE_LIMIT
-    bc = pq_adc_topk(corpus, subset, **params)
-    want = {tuple(r) for r in bc.collect()}
-    cutoff = sub_reps * 100_000 + n_base  # subset ids: (r+1)*1e5+vid, r<50
-    got = {tuple(r) for r in bulk.filter(F.col("query_id") < cutoff).collect()}
-    assert got == want and len(want) == _QUERY_SIDE_LIMIT * params["k"]
 
 
 def test_ivfpq_serve_bulk_matches_broadcast(spark, sf_dir):
-    """ivfpq_serve_bulk must reproduce ivfpq_serve row-for-row in BOTH
-    recipes (plain and residual) and accept query sets past the broadcast
-    path's _QUERY_SIDE_LIMIT, with the list pruning inside the equi-join
-    key."""
-    from syscol_spark.operators.similarity import (
-        _QUERY_SIDE_LIMIT,
-        build_ivfpq_index,
-        ivfpq_serve,
-        ivfpq_serve_bulk,
-    )
+    """IVF-PQ serving (ivfpq_serve, the one serving path left after the
+    driver-table and bulk paths were merged) is batch-invariant past the
+    old query cap in both recipes (plain and residual) and with the
+    exact-cosine refine: see _assert_batch_invariant_past_old_cap."""
+    from syscol_spark.operators.similarity import build_ivfpq_index, ivfpq_serve
+
+    def serves(corpus):
+        out = {}
+        for residual in (False, True):
+            codes, meta = build_ivfpq_index(
+                corpus, dim=64, n_lists=8, coarse_iter=2, coarse_stride=4,
+                n_subspaces=8, pq_centroids=16, pq_iter=2, pq_stride=4,
+                residual=residual,
+            )
+            tag = "residual" if residual else "plain"
+            out[tag] = lambda q, c=codes, m=meta: ivfpq_serve(c, m, q, nprobe=4, k=5)
+            if residual:
+                out["residual+refine"] = lambda q, c=codes, m=meta: ivfpq_serve(
+                    c, m, q, nprobe=4, k=5, refine=20, corpus=corpus
+                )
+        return out
+
+    _assert_batch_invariant_past_old_cap(spark, sf_dir, serves)
+
+
+def test_ivfpq_serve_runs_no_job_until_forced(spark, sf_dir):
+    """Serving is a lazy plan: building the ivfpq_serve frame schedules no
+    Spark job (nothing per query is collected to the driver); jobs appear
+    in the serve's job group only once the result is forced."""
+    from syscol_spark.operators.similarity import build_ivfpq_index, ivfpq_serve
 
     corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
         F.col("vec_id") < 300
     )
-    n_base = corpus.count()
-    reps = _QUERY_SIDE_LIMIT // n_base + 2  # 35 reps -> 10,500 queries
-    queries = corpus.select(
-        F.explode(F.array(*[F.lit(i) for i in range(reps)])).alias("__r"),
-        "vec_id",
-        "embedding",
-    ).select(
-        (F.col("vec_id") + (F.col("__r") + 1) * 100_000).alias("vec_id"),
-        "embedding",
-        "__r",
-    )
-    assert queries.count() == reps * n_base > _QUERY_SIDE_LIMIT
-
-    sub_reps = _QUERY_SIDE_LIMIT // n_base  # 33 reps -> 9,900 <= cap
-    subset = queries.filter(F.col("__r") < sub_reps).drop("__r")
-    cutoff = sub_reps * 100_000 + n_base
-    for residual in (False, True):
-        codes, meta = build_ivfpq_index(
-            corpus, dim=64, n_lists=8, coarse_iter=2, coarse_stride=4,
-            n_subspaces=8, pq_centroids=16, pq_iter=2, pq_stride=4,
-            residual=residual,
-        )
-        bulk = ivfpq_serve_bulk(codes, meta, queries.drop("__r"), nprobe=4, k=5)
-        want = {
-            tuple(r) for r in ivfpq_serve(codes, meta, subset, nprobe=4, k=5).collect()
-        }
-        got = {
-            tuple(r) for r in bulk.filter(F.col("query_id") < cutoff).collect()
-        }
-        assert got == want and want, f"residual={residual}"
-
-    # IVFADC+R: the exact-cosine re-rank path must also match (residual
-    # recipe, small query set — the refine joins are id-equi, no caps)
-    small = corpus.select("vec_id", "embedding").filter(F.col("vec_id") < 40)
     codes, meta = build_ivfpq_index(
         corpus, dim=64, n_lists=8, coarse_iter=2, coarse_stride=4,
         n_subspaces=8, pq_centroids=16, pq_iter=2, pq_stride=4, residual=True,
     )
-    a = {
-        tuple(r)
-        for r in ivfpq_serve(
-            codes, meta, small, nprobe=4, k=5, refine=20, corpus=corpus
-        ).collect()
-    }
-    b = {
-        tuple(r)
-        for r in ivfpq_serve_bulk(
-            codes, meta, small, nprobe=4, k=5, refine=20, corpus=corpus
-        ).collect()
-    }
-    assert a == b and a
+    queries = corpus.filter(F.col("vec_id") < 20)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test-ivfpq-serve-lazy"
+    sc.setJobGroup(group, "ivfpq_serve laziness")
+    try:
+        plain = ivfpq_serve(codes, meta, queries, nprobe=4, k=5)
+        refined = ivfpq_serve(codes, meta, queries, nprobe=4, k=5, refine=10, corpus=corpus)
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        assert plain.collect() and refined.collect()
+        assert list(tracker.getJobIdsForGroup(group)) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_ivfpq_append_matches_full_encode(spark, sf_dir):
