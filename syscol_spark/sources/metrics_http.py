@@ -2,12 +2,12 @@
 
 Re-expresses the reference's data plane — poll
 ``GET http://<host>:<port>/metrics/snapshot`` per node on a fixed interval
-(/root/reference/syscol/metrics_reporter.go:75-131) — as a Structured
-Streaming source:
+(metrics_reporter.go:75-131) — as a Structured Streaming source:
 
-- one logical partition per monitored host (the reference runs one collector
-  task per Mesos slave; here each host's fetch is an independent task, so a
-  1000-host fleet polls in parallel across executors),
+- a batch's hosts are dealt round-robin into one slice per core (option
+  ``partitions``; one slice without it) and each task scrapes its slice
+  concurrently: the fixed cost of a task is paid per core, not per host
+  (one slice for all hosts measured slower than one per core),
 - offsets are per-host tick counters → replayable/checkpointable,
 - scrape-error tolerance (S3, metrics_reporter.go:89-94): fetch/decode
   failures still emit an envelope with an empty metrics map and the error
@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import time
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -68,28 +69,53 @@ def fetch_snapshot(host: str, port: int, timeout: float = 5.0) -> tuple[dict[str
         return ({}, f"{type(e).__name__}: {e}")
 
 
-def _row(host: str, port: int, namespace: str, metrics: dict[str, float], err: str | None) -> tuple:
+def _scrape_row(host: str, port: int, namespace: str) -> tuple:
+    metrics, err = fetch_snapshot(host, port)
     return (
         f"slave-{host}:{port}",
         host,
         port,
         namespace,
-        time.time_ns(),  # reference stamps UnixNano (metrics_reporter.go:139)
+        time.time_ns(),  # UnixNano when this host's scrape completes (metrics_reporter.go:139)
         metrics,
         err,
     )
 
 
 class _HostTickPartition(InputPartition):
-    def __init__(self, host: str, port: int, namespace: str, start_tick: int, end_tick: int):
-        self.host = host
+    def __init__(self, hosts: list[str], port: int, namespace: str):
+        self.hosts = hosts
         self.port = port
         self.namespace = namespace
-        self.start_tick = start_tick
-        self.end_tick = end_tick
 
 
-class MetricsSnapshotStreamReader(DataSourceStreamReader):
+class _HostSlices:
+    """Options, layout and read shared by the batch and the stream reader:
+    ``min(len(hosts), partitions)`` round-robin slices of the hosts."""
+
+    def __init__(self, schema: StructType, options: dict):
+        self.hosts = [h.strip() for h in options.get("hosts", "localhost").split(",") if h.strip()]
+        self.port = int(options.get("port", 5051))
+        self.namespace = options.get("namespace", "")
+        self.slices = min(len(self.hosts), int(options.get("partitions", 1)))
+
+    def partitions(self, *_) -> list[InputPartition]:
+        n = self.slices
+        return [_HostTickPartition(self.hosts[k::n], self.port, self.namespace) for k in range(n)]
+
+    def read(self, partition: _HostTickPartition) -> Iterator[tuple]:
+        # One scrape per micro-batch per host: ticks within a batch coalesce
+        # (the reference also drops ticks when a scrape outlasts the
+        # interval — ticker semantics). The slice's hosts are scraped at
+        # once; ``fetch_snapshot`` never raises, so a failed or slow host
+        # yields its error row without holding back or failing the others.
+        with ThreadPoolExecutor(max_workers=len(partition.hosts)) as pool:
+            yield from pool.map(
+                lambda h: _scrape_row(h, partition.port, partition.namespace), partition.hosts
+            )
+
+
+class MetricsSnapshotStreamReader(_HostSlices, DataSourceStreamReader):
     """Offsets: {"tick": n} where n is the EPOCH-based tick
     ``floor(unix_time / interval)`` — not ticks since reader construction.
 
@@ -102,9 +128,7 @@ class MetricsSnapshotStreamReader(DataSourceStreamReader):
     A monotonic guard absorbs wall-clock steps backwards (NTP)."""
 
     def __init__(self, schema: StructType, options: dict):
-        self.hosts = [h.strip() for h in options.get("hosts", "localhost").split(",") if h.strip()]
-        self.port = int(options.get("port", 5051))
-        self.namespace = options.get("namespace", "")
+        super().__init__(schema, options)
         self.interval = float(options.get("interval", 1.0))
         self._max_tick = self._epoch_tick()
 
@@ -118,40 +142,18 @@ class MetricsSnapshotStreamReader(DataSourceStreamReader):
         self._max_tick = max(self._max_tick, self._epoch_tick())
         return {"tick": self._max_tick}
 
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        return [
-            _HostTickPartition(h, self.port, self.namespace, start["tick"], end["tick"])
-            for h in self.hosts
-        ]
-
-    def read(self, partition: _HostTickPartition) -> Iterator[tuple]:
-        # One scrape per micro-batch per host: ticks within a batch coalesce
-        # (the reference also drops ticks when a scrape outlasts the
-        # interval — ticker semantics).
-        metrics, err = fetch_snapshot(partition.host, partition.port)
-        yield _row(partition.host, partition.port, partition.namespace, metrics, err)
-
     def commit(self, end: dict) -> None:
         pass
 
 
-class MetricsSnapshotBatchReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict):
-        self.hosts = [h.strip() for h in options.get("hosts", "localhost").split(",") if h.strip()]
-        self.port = int(options.get("port", 5051))
-        self.namespace = options.get("namespace", "")
-
-    def partitions(self) -> list[InputPartition]:
-        return [_HostTickPartition(h, self.port, self.namespace, 0, 1) for h in self.hosts]
-
-    def read(self, partition: _HostTickPartition) -> Iterator[tuple]:
-        metrics, err = fetch_snapshot(partition.host, partition.port)
-        yield _row(partition.host, partition.port, partition.namespace, metrics, err)
+class MetricsSnapshotBatchReader(_HostSlices, DataSourceReader):
+    pass
 
 
 class MetricsSnapshotDataSource(DataSource):
     """format("metrics_snapshot") — options: hosts (csv), port, namespace,
-    interval (seconds, default 1 = reference ReportingInterval)."""
+    interval (seconds, default 1 = reference ReportingInterval), partitions
+    (the session's default parallelism; default 1)."""
 
     @classmethod
     def name(cls) -> str:

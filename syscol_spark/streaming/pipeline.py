@@ -47,7 +47,9 @@ def serialized_value(envelope: F.Column, config: CollectorConfig) -> F.Column:
 
 
 def enriched_stream(spark: SparkSession, config: CollectorConfig) -> DataFrame:
-    """Source + P1: envelope column per scrape row."""
+    """Source + P1: envelope column per scrape row. The source learns the
+    core count from the ``partitions`` option because its reader runs in a
+    Python process with no SparkContext to ask."""
     from syscol_spark.sources.metrics_http import MetricsSnapshotDataSource
 
     try:
@@ -60,6 +62,7 @@ def enriched_stream(spark: SparkSession, config: CollectorConfig) -> DataFrame:
         .option("port", str(config.port))
         .option("namespace", config.namespace)
         .option("interval", str(config.reporting_interval_secs))
+        .option("partitions", str(spark.sparkContext.defaultParallelism))
         .load()
     )
     env = enrich_envelope(

@@ -6,11 +6,15 @@ tuning switch read from the environment forks a capability into two
 implementations that tests and benchmarks see only one side of; measured
 negatives are deleted rather than kept behind such a switch. This test
 fails when a new read appears, so adding one is a deliberate edit here.
+The same holds for the metrics source's options and the collector's
+config: the source's layout follows the session's core count, and no
+per-host or thread-count setting sits beside it.
 """
 
 from __future__ import annotations
 
 import ast
+import dataclasses
 import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "syscol_spark"
@@ -20,6 +24,14 @@ DEPLOYMENT_SETTINGS = {
     "SPARK_GRAFT_DRIVER_MEM",
     "SPARK_GRAFT_WAREHOUSE",
     "SYSCOL_API",
+}
+
+
+SOURCE_OPTIONS = {"hosts", "port", "namespace", "interval", "partitions"}
+
+COLLECTOR_CONFIG_FIELDS = {
+    "producer_properties", "topic", "transform", "schema_registry_url", "reporting_interval_secs",
+    "namespace", "hosts", "port", "cpus", "mem_mb",
 }
 
 
@@ -99,3 +111,36 @@ g = os.environ.get(name)
     assert sorted(_env_names(ast.parse(src))) == [
         "<non-literal key>", "A", "B", "C", "D", "E", "F",
     ]
+
+
+def _option_keys(tree: ast.AST) -> list[str]:
+    """Keys read through options.get(...) / options[...], also where
+    ``options`` is an attribute (``self.options``)."""
+    keys = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.func.attr == "get":
+            target, key = node.func.value, node.args[0] if node.args else None
+        elif isinstance(node, ast.Subscript):
+            target, key = node.value, node.slice
+        else:
+            continue
+        name = target.id if isinstance(target, ast.Name) else getattr(target, "attr", None)
+        if name == "options":
+            keys.append(_literal(key))
+    return keys
+
+
+def test_metrics_source_options_are_pinned():
+    src = PKG / "sources" / "metrics_http.py"
+    assert set(_option_keys(ast.parse(src.read_text(), str(src)))) == SOURCE_OPTIONS
+
+
+def test_collector_config_fields_are_pinned():
+    from syscol_spark.config import CollectorConfig
+
+    assert {f.name for f in dataclasses.fields(CollectorConfig)} == COLLECTOR_CONFIG_FIELDS
+
+
+def test_option_scan_sees_every_read_form():
+    src = 'a = options.get("A", "1")\nb = options["B"]\nc = self.options.get("C")\nd = options.get(k)\n'
+    assert sorted(_option_keys(ast.parse(src))) == ["<non-literal key>", "A", "B", "C"]

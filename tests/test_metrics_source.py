@@ -35,6 +35,44 @@ def stub_server():
     srv.shutdown()
 
 
+ALIASES = [f"127.0.1.{i}" for i in range(1, 7)]
+REFUSED = "127.0.1.99"
+
+
+@pytest.fixture(scope="module")
+def alias_stub():
+    """One stub on 0.0.0.0, so every 127.0.1.x alias reaches it (as in
+    perfbench/fleet.py). Each answer takes ~200 ms; the stub counts the
+    requests in flight and drops every connection made to REFUSED."""
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_GET(self):  # noqa: N802
+            with stats["lock"]:
+                stats["now"] += 1
+                stats["peak"] = max(stats["peak"], stats["now"])
+            time.sleep(0.2)
+            with stats["lock"]:
+                stats["now"] -= 1
+            body = json.dumps({"host": float(ALIASES.index(self.connection.getsockname()[0]))}).encode()
+            self.send_response(200)
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *a):
+            pass
+
+    class Server(http.server.ThreadingHTTPServer):
+        def verify_request(self, request, client_address):
+            return client_address[0].startswith("127.") and request.getsockname()[0] != REFUSED
+
+    stats = {"lock": threading.Lock(), "now": 0, "peak": 0}
+    srv = Server(("0.0.0.0", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield srv.server_address[1], stats
+    srv.shutdown()
+    srv.server_close()
+
+
 def test_fetch_snapshot_ok(stub_server):
     from syscol_spark.sources.metrics_http import fetch_snapshot
 
@@ -83,6 +121,48 @@ def test_batch_read_dead_host_emits_empty(spark):
     [row] = df.collect()
     assert row["Metrics"] == {}
     assert row["error"]
+
+
+def test_partitions_are_round_robin_host_slices():
+    from syscol_spark.sources.metrics_http import SOURCE_SCHEMA, MetricsSnapshotStreamReader
+
+    hosts = [f"10.0.0.{i}" for i in range(10)]
+
+    def layout(**opts):
+        reader = MetricsSnapshotStreamReader(SOURCE_SCHEMA, {"hosts": ",".join(hosts), **opts})
+        return [p.hosts for p in reader.partitions({"tick": 0}, {"tick": 1})]
+
+    parts = layout(partitions="4")
+    assert len(parts) == 4
+    assert sorted(h for p in parts for h in p) == sorted(hosts)  # each host in exactly one
+    assert parts[0] == ["10.0.0.0", "10.0.0.4", "10.0.0.8"]
+    assert len(layout(partitions="32")) == 10
+    assert layout() == [hosts]
+
+
+def test_slice_scrapes_concurrently_and_isolates_errors(spark, alias_stub):
+    """One partition over four live hosts and one refused host: the live
+    scrapes overlap, and the refused host costs only its own row."""
+    from syscol_spark.sources.metrics_http import MetricsSnapshotDataSource
+
+    port, stats = alias_stub
+    stats["peak"] = 0
+    spark.dataSource.register(MetricsSnapshotDataSource)
+    rows = (
+        spark.read.format("metrics_snapshot")
+        .option("hosts", ",".join(ALIASES[:4] + [REFUSED]))
+        .option("port", str(port))
+        .option("partitions", "1")
+        .load()
+        .collect()
+    )
+    by_host = {r["Hostname"]: r for r in rows}
+    assert len(rows) == 5 and set(by_host) == set(ALIASES[:4]) | {REFUSED}
+    assert by_host[REFUSED]["Metrics"] == {} and by_host[REFUSED]["error"]
+    for i, h in enumerate(ALIASES[:4]):
+        assert by_host[h]["error"] is None
+        assert by_host[h]["Metrics"] == {"host": float(i)}
+    assert stats["peak"] >= 2, "the slice's scrapes ran one at a time"
 
 
 def test_streaming_pipeline_end_to_end(spark, stub_server, tmp_path):
@@ -210,3 +290,43 @@ def test_control_plane_gates(spark):
     mgr.update(topic="t2")
     assert mgr.config.topic == "t2"
     assert mgr.status()["active"] is False
+
+
+def test_pipeline_polls_every_host_once_per_batch(spark, alias_stub, tmp_path):
+    """Six hosts through CollectorManager into the parquet fallback sink:
+    every committed batch holds exactly one envelope per host."""
+    from syscol_spark.config import CollectorConfig
+    from syscol_spark.streaming.control import CollectorManager
+
+    port, _ = alias_stub
+    props = tmp_path / "p.properties"
+    props.write_text("bootstrap.servers=localhost:9092\n")
+    mgr = CollectorManager(
+        spark,
+        CollectorConfig(
+            producer_properties=str(props),
+            topic="t-fleet",
+            hosts=ALIASES,
+            port=port,
+            reporting_interval_secs=0.5,
+        ),
+    )
+    log_dir = tmp_path / "ckpt_out" / "_spark_metadata"
+
+    def batch_logs():
+        return sorted(p for p in log_dir.glob("*") if p.name.isdigit()) if log_dir.exists() else []
+
+    mgr.start(checkpoint_dir=str(tmp_path / "ckpt"))
+    try:
+        deadline = time.time() + 60
+        while time.time() < deadline and len(batch_logs()) < 3:
+            time.sleep(0.2)
+    finally:
+        mgr.stop()
+    logs = batch_logs()
+    assert len(logs) >= 3, "fewer than three batches committed"
+    for log in logs:
+        files = [json.loads(line)["path"] for line in log.read_text().splitlines()[1:]]
+        values = spark.read.parquet(*files).collect() if files else []
+        hosts = sorted(json.loads(bytes(r["value"]))["Hostname"] for r in values)
+        assert hosts == sorted(ALIASES), f"batch {log.name}: {hosts}"
