@@ -12,18 +12,19 @@ not describe individual metrics.
 
 No Avro library ships in this environment, and Spark's to_avro/from_avro
 (external spark-avro module) are not on the classpath — so the codec is
-implemented directly from the Avro 1.x binary spec (zigzag-varint ints,
-length-prefixed utf8/bytes), which for this flat record is ~40 lines and
-byte-exact. Exposed as Arrow-batched pandas UDFs: the envelope JSON is
-produced JVM-side (to_json), only the final byte framing crosses to Python
-in Arrow batches.
+implemented directly from the Avro 1.x binary spec. One codec,
+``AvroCodec``, covers the whole type universe; the envelope is just its
+flattest schema. Spark sees one Arrow-batched pandas UDF per direction: the
+JSON of each record is produced JVM-side (to_json), only the byte framing
+crosses to Python, and the two builders below own the framing, the
+corrupt-frame tolerance and the null mapping for every caller.
 """
 
 from __future__ import annotations
 
 import json
 import struct
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -82,110 +83,64 @@ def zigzag_decode(buf: bytes, pos: int) -> tuple[int, int]:
     return (acc >> 1) ^ -(acc & 1), pos
 
 
-def _enc_str(s: str) -> bytes:
-    raw = s.encode("utf-8")
-    return zigzag_encode(len(raw)) + raw
-
-
-def _enc_bytes(b: bytes) -> bytes:
-    return zigzag_encode(len(b)) + b
-
-
-class FlatAvroCodec:
-    """Generic Avro binary codec for FLAT record schemas.
-
-    Covers the primitive type universe of the reference's vendored decoder
-    (go-kafka-avro/avro_encoder_decoder.go:127-170 over go-avro's
-    schema.go:11-26): null, boolean, int, long, float, double, bytes,
-    string — plus optional-field unions ``["null", <primitive>]``. Nested
-    records/arrays/maps/enums are out of scope for the wire path (the
-    reference's only production record is flat; nested payloads travel as
-    JSON-in-bytes, same as its Metrics field).
-
-    Implemented directly from the Avro 1.x binary spec: zigzag-varint
-    int/long, IEEE little-endian float/double, length-prefixed utf8/bytes,
-    union = varint branch index + branch value.
-    """
-
-    def __init__(self, schema: dict):
-        if schema.get("type") != "record":
-            raise ValueError("FlatAvroCodec needs a record schema")
-        self.name = schema["name"]
-        self.fields: list[tuple[str, object]] = []
-        for f in schema["fields"]:
-            t = f["type"]
-            if isinstance(t, list):
-                if len(t) != 2 or "null" not in t:
-                    raise ValueError(f"field {f['name']}: only [null, primitive] unions supported")
-            elif t not in ("null", "boolean", "int", "long", "float", "double", "bytes", "string"):
-                raise ValueError(f"field {f['name']}: unsupported type {t!r} (flat records only)")
-            self.fields.append((f["name"], t))
-
-    @staticmethod
-    def _enc_value(t: str, v: object) -> bytes:
-        if t == "null":
-            return b""
-        if t == "boolean":
-            return b"\x01" if v else b"\x00"
-        if t in ("int", "long"):
-            return zigzag_encode(int(v))
-        if t == "float":
-            return struct.pack("<f", float(v))
-        if t == "double":
-            return struct.pack("<d", float(v))
-        if t == "bytes":
-            return _enc_bytes(bytes(v))
-        if t == "string":
-            return _enc_str(str(v))
-        raise ValueError(f"unsupported type {t!r}")
-
-    @staticmethod
-    def _dec_value(t: str, buf: bytes, pos: int) -> tuple[object, int]:
-        if t == "null":
-            return None, pos
-        if t == "boolean":
-            return buf[pos] != 0, pos + 1
-        if t in ("int", "long"):
-            return zigzag_decode(buf, pos)
-        if t == "float":
-            return struct.unpack_from("<f", buf, pos)[0], pos + 4
-        if t == "double":
-            return struct.unpack_from("<d", buf, pos)[0], pos + 8
-        if t in ("bytes", "string"):
-            n, pos = zigzag_decode(buf, pos)
-            raw = buf[pos : pos + n]
-            return (raw.decode("utf-8") if t == "string" else raw), pos + n
-        raise ValueError(f"unsupported type {t!r}")
-
-    def encode(self, record: dict) -> bytes:
-        out = []
-        for name, t in self.fields:
-            v = record.get(name)
-            if isinstance(t, list):  # [null, primitive] union
-                branch = t.index("null") if v is None else 1 - t.index("null")
-                out.append(zigzag_encode(branch))
-                out.append(self._enc_value(t[branch], v))
-            else:
-                out.append(self._enc_value(t, v))
-        return b"".join(out)
-
-    def decode(self, body: bytes) -> dict:
-        pos = 0
-        out = {}
-        for name, t in self.fields:
-            if isinstance(t, list):
-                branch, pos = zigzag_decode(body, pos)
-                out[name], pos = self._dec_value(t[branch], body, pos)
-            else:
-                out[name], pos = self._dec_value(t, body, pos)
-        return out
-
-
 _PRIMITIVES = ("null", "boolean", "int", "long", "float", "double", "bytes", "string")
 
 
+def _enc_prim(t: str, v: object) -> bytes:
+    """IEEE little-endian float/double, zigzag-varint int/long,
+    length-prefixed utf8/bytes."""
+    if t == "null":
+        return b""
+    if t == "boolean":
+        return b"\x01" if v else b"\x00"
+    if t in ("int", "long"):
+        return zigzag_encode(int(v))
+    if t == "float":
+        return struct.pack("<f", float(v))
+    if t == "double":
+        return struct.pack("<d", float(v))
+    raw = str(v).encode("utf-8") if t == "string" else bytes(v)
+    return zigzag_encode(len(raw)) + raw
+
+
+def _dec_prim(t: str, buf: bytes, pos: int) -> tuple[object, int]:
+    if t == "null":
+        return None, pos
+    if t == "boolean":
+        return buf[pos] != 0, pos + 1
+    if t in ("int", "long"):
+        return zigzag_decode(buf, pos)
+    if t == "float":
+        return struct.unpack_from("<f", buf, pos)[0], pos + 4
+    if t == "double":
+        return struct.unpack_from("<d", buf, pos)[0], pos + 8
+    n, pos = zigzag_decode(buf, pos)
+    raw = buf[pos : pos + n]
+    return (raw.decode("utf-8") if t == "string" else raw), pos + n
+
+
+def _prim_matches(t: str, v: object, exact: bool = False) -> bool:
+    """Does Python value ``v`` belong to primitive ``t``? ``exact`` excludes
+    the int->float promotion: union encode tries an exact pass first so an
+    int value in a [double, long] union takes the LONG branch (lossless, the
+    Avro-Java writer behavior) instead of the first float branch (silent
+    precision loss past 2^53)."""
+    if t == "null":
+        return v is None
+    if t == "boolean":
+        return isinstance(v, bool)
+    is_int = isinstance(v, int) and not isinstance(v, bool)
+    if t in ("int", "long"):
+        return is_int
+    if t in ("float", "double"):
+        return isinstance(v, float) or (not exact and is_int)
+    if t == "bytes":
+        return isinstance(v, (bytes, bytearray))
+    return isinstance(v, str)
+
+
 class AvroCodec:
-    """Full Avro 1.x binary codec: the complete type universe of the
+    """Avro 1.x binary codec: the complete type universe of the
     reference's vendored decoder (go-avro/schema.go:11-26) — primitives,
     records (nested + recursive via named references), enums, arrays, maps,
     fixed, and general unions.
@@ -207,9 +162,7 @@ class AvroCodec:
     * record   → fields in schema order
 
     Python value mapping: record/map → dict, array → list, enum → symbol
-    string, fixed → bytes. ``FlatAvroCodec`` remains the fast path for flat
-    records (the reference's only production schema is flat); ``codec_for``
-    picks automatically.
+    string, fixed → bytes.
     """
 
     def __init__(self, schema: dict | str | list):
@@ -263,26 +216,7 @@ class AvroCodec:
         node = self._deref(node)
         kind = node[0]
         if kind == "prim":
-            t = node[1]
-            if t == "null":
-                return v is None
-            if t == "boolean":
-                return isinstance(v, bool)
-            if t in ("int", "long"):
-                return isinstance(v, int) and not isinstance(v, bool)
-            if t in ("float", "double"):
-                # ``exact`` excludes the int->float promotion: union encode
-                # tries an exact pass first so an int value in a
-                # [double, long] union takes the LONG branch (lossless, the
-                # Avro-Java writer behavior) instead of the first float
-                # branch (silent precision loss past 2^53).
-                return isinstance(v, float) or (
-                    not exact and isinstance(v, int) and not isinstance(v, bool)
-                )
-            if t == "bytes":
-                return isinstance(v, (bytes, bytearray))
-            if t == "string":
-                return isinstance(v, str)
+            return _prim_matches(node[1], v, exact)
         if kind == "fixed":
             return isinstance(v, (bytes, bytearray)) and len(v) == node[2]
         if kind == "enum":
@@ -297,7 +231,7 @@ class AvroCodec:
         node = self._deref(node)
         kind = node[0]
         if kind == "prim":
-            out.append(FlatAvroCodec._enc_value(node[1], v))
+            out.append(_enc_prim(node[1], v))
         elif kind == "fixed":
             raw = bytes(v)
             if len(raw) != node[2]:
@@ -315,7 +249,7 @@ class AvroCodec:
             if v:
                 out.append(zigzag_encode(len(v)))
                 for key, val in v.items():
-                    out.append(_enc_str(key))
+                    out.append(_enc_prim("string", key))
                     self._enc(node[1], val, out)
             out.append(b"\x00")
         elif kind == "union":
@@ -346,7 +280,7 @@ class AvroCodec:
         node = self._deref(node)
         kind = node[0]
         if kind == "prim":
-            return FlatAvroCodec._dec_value(node[1], buf, pos)
+            return _dec_prim(node[1], buf, pos)
         if kind == "fixed":
             size = node[2]
             return bytes(buf[pos : pos + size]), pos + size
@@ -375,7 +309,7 @@ class AvroCodec:
                     n = -n
                     _, pos = zigzag_decode(buf, pos)
                 for _ in range(n):
-                    key, pos = FlatAvroCodec._dec_value("string", buf, pos)
+                    key, pos = _dec_prim("string", buf, pos)
                     d[key], pos = self._dec(node[1], buf, pos, tag)
         if kind == "union":
             branch, pos = zigzag_decode(buf, pos)
@@ -445,30 +379,7 @@ class AvroCodec:
         return v
 
 
-def _is_flat(schema: dict) -> bool:
-    """True when FlatAvroCodec's fast path covers the schema."""
-    if not isinstance(schema, dict) or schema.get("type") != "record":
-        return False
-    for f in schema.get("fields", []):
-        t = f.get("type")
-        if isinstance(t, list):
-            if len(t) != 2 or "null" not in t or not all(
-                isinstance(b, str) and b in _PRIMITIVES for b in t
-            ):
-                return False
-        elif not (isinstance(t, str) and t in _PRIMITIVES):
-            return False
-    return True
-
-
-def codec_for(schema: dict) -> FlatAvroCodec | AvroCodec:
-    """Flat record → FlatAvroCodec (fast path); anything else → AvroCodec.
-    Both produce identical bytes for flat records (the flat path is a strict
-    subset of the spec), so the choice is invisible on the wire."""
-    return FlatAvroCodec(schema) if _is_flat(schema) else AvroCodec(schema)
-
-
-_ENVELOPE_CODEC = FlatAvroCodec(SLAVE_METRICS_AVSC)
+_ENVELOPE_CODEC = AvroCodec(SLAVE_METRICS_AVSC)
 
 
 def encode_slave_metrics(
@@ -504,38 +415,65 @@ def unframe_confluent(msg: bytes) -> tuple[int, bytes]:
     return schema_id, msg[5:]
 
 
+def _bytes_to_jsonable(v: object) -> object:
+    """Recursively map bytes → latin-1 strings so nested decoded values
+    (records/arrays/maps at any depth) survive json.dumps losslessly."""
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v).decode("latin-1")
+    if isinstance(v, dict):
+        return {k: _bytes_to_jsonable(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_bytes_to_jsonable(x) for x in v]
+    return v
+
+
+def _envelope_record(d: dict) -> dict:
+    """to_json'd envelope → SlaveMetrics record: the metrics map travels as
+    compact JSON bytes (metrics_reporter.go:151-165)."""
+    return {
+        "SlaveID": d["SlaveID"],
+        "Hostname": d["Hostname"],
+        "Port": int(d["Port"]),
+        "Namespace": d.get("Namespace") or "",
+        "Timestamp": int(d["Timestamp"]),
+        "Metrics": json.dumps(d.get("Metrics") or {}, separators=(",", ":")).encode(),
+    }
+
+
+def _envelope_jsonable(d: dict) -> dict:
+    """Decoded SlaveMetrics record → envelope dict with the metrics map
+    parsed back out of its JSON bytes."""
+    d["Metrics"] = json.loads(d["Metrics"].decode("utf-8") or "{}")
+    return d
+
+
 # --- Spark column helpers ----------------------------------------------------
+# One pandas UDF body per direction; the four public helpers below only pick
+# the codec and the record <-> JSON mapping.
 
-def to_confluent_avro(envelope: Column, schema_id: int) -> Column:
-    """Envelope struct column → Confluent-framed Avro binary column.
-
-    The schema id is resolved ONCE at plan time via the registry client
-    (register_envelope_schema) — the reference caches it the same way
-    (schema_registry.go:100-113)."""
+def _encode_udf(
+    codec: AvroCodec, schema_id: int, to_record: Callable[[dict], object]
+) -> Callable[[Column], Column]:
+    """JSON string column → Confluent-framed Avro binary column."""
 
     @F.pandas_udf(BinaryType())
     def _encode(js: pd.Series) -> pd.Series:
-        def one(j: str) -> bytes:
-            d = json.loads(j)
-            metrics_json = json.dumps(d.get("Metrics") or {}, separators=(",", ":")).encode()
-            body = encode_slave_metrics(
-                d["SlaveID"], d["Hostname"], int(d["Port"]), d.get("Namespace") or "",
-                int(d["Timestamp"]), metrics_json,
-            )
-            return frame_confluent(body, schema_id)
+        return js.map(lambda j: frame_confluent(codec.encode(to_record(json.loads(j))), schema_id))
 
-        return js.map(one)
-
-    return _encode(F.to_json(envelope))
+    return _encode
 
 
-def from_confluent_avro(value: Column) -> Column:
-    """Confluent-framed binary → JSON string of the envelope (parse with
-    from_json(ENVELOPE_SCHEMA) downstream).
+def _decode_udf(
+    codec_of: Callable[[int], AvroCodec | None], to_jsonable: Callable[[object], object]
+) -> Callable[[Column], Column]:
+    """Confluent-framed binary column → JSON string column. A null value, a
+    corrupt frame or a schema id ``codec_of`` does not know decodes to NULL —
+    matching from_json's null-on-malformed semantics — so one bad record
+    cannot fail a batch (same tolerance philosophy as the scrape path, S3).
 
-    Malformed frames decode to NULL — matching from_json's null-on-malformed
-    semantics — so one corrupt record cannot fail a 100 TB batch (same
-    tolerance philosophy as the scrape path, S3)."""
+    Marked nondeterministic so Catalyst never copies the call: otherwise a
+    filter inferred downstream (``size(Metrics) > 0`` from an ``explode``) is
+    pushed below the projection and the decode runs twice per frame."""
 
     @F.pandas_udf(StringType())
     def _decode(vs: pd.Series) -> pd.Series:
@@ -543,16 +481,33 @@ def from_confluent_avro(value: Column) -> Column:
             if v is None:
                 return None
             try:
-                _, body = unframe_confluent(bytes(v))
-                d = decode_slave_metrics(body)
-                d["Metrics"] = json.loads(d["Metrics"].decode("utf-8") or "{}")
-                return json.dumps(d)
+                sid, body = unframe_confluent(bytes(v))
+                codec = codec_of(sid)
+                if codec is None:
+                    return None
+                return json.dumps(to_jsonable(codec.decode(body)))
             except Exception:  # noqa: BLE001 — corrupt frame → null row
                 return None
 
         return vs.map(one)
 
-    return _decode(value)
+    return _decode.asNondeterministic()
+
+
+def to_confluent_avro(envelope: Column, schema_id: int) -> Column:
+    """Envelope struct column → Confluent-framed Avro binary column.
+
+    The schema id is resolved ONCE at plan time via the registry client
+    (register_envelope_schema) — the reference caches it the same way
+    (schema_registry.go:100-113)."""
+    return _encode_udf(_ENVELOPE_CODEC, schema_id, _envelope_record)(F.to_json(envelope))
+
+
+def from_confluent_avro(value: Column) -> Column:
+    """Confluent-framed binary → JSON string of the envelope (parse with
+    from_json(ENVELOPE_SCHEMA) downstream). Every frame decodes as the
+    envelope whatever its schema id; malformed frames decode to NULL."""
+    return _decode_udf(lambda _sid: _ENVELOPE_CODEC, _envelope_jsonable)(value)
 
 
 def from_confluent_avro_generic(value: Column, schemas_by_id: dict[int, dict]) -> Column:
@@ -568,77 +523,19 @@ def from_confluent_avro_generic(value: Column, schemas_by_id: dict[int, dict]) -
     ``bytes`` fields are emitted as latin-1-mapped strings in the JSON (a
     lossless byte↔codepoint mapping) since JSON has no binary type — at any
     nesting depth; parse with from_json downstream using a matching schema.
-    Schemas beyond the flat fast path (nested records, arrays, maps, enums,
-    fixed, general unions) dispatch to the full AvroCodec via codec_for.
     """
-    codecs = {sid: codec_for(s) for sid, s in schemas_by_id.items()}
-
-    @F.pandas_udf(StringType())
-    def _decode(vs: pd.Series) -> pd.Series:
-        def one(v: bytes | None) -> str | None:
-            if v is None:
-                return None
-            try:
-                sid, body = unframe_confluent(bytes(v))
-                codec = codecs.get(sid)
-                if codec is None:
-                    return None
-                return json.dumps(_bytes_to_jsonable(codec.decode(body)))
-            except Exception:  # noqa: BLE001 — corrupt frame → null row
-                return None
-
-        return vs.map(one)
-
-    return _decode(value)
-
-
-def _bytes_to_jsonable(v: object) -> object:
-    """Recursively map bytes → latin-1 strings so nested decoded values
-    (records/arrays/maps at any depth) survive json.dumps losslessly."""
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v).decode("latin-1")
-    if isinstance(v, dict):
-        return {k: _bytes_to_jsonable(x) for k, x in v.items()}
-    if isinstance(v, list):
-        return [_bytes_to_jsonable(x) for x in v]
-    return v
+    codecs = {sid: AvroCodec(s) for sid, s in schemas_by_id.items()}
+    return _decode_udf(codecs.get, _bytes_to_jsonable)(value)
 
 
 def to_confluent_avro_generic(record: Column, schema: dict, schema_id: int) -> Column:
     """Generic write path: a struct column whose field names match the Avro
     ``schema`` → Confluent-framed binary. The struct is serialized JVM-side
-    (to_json); only byte framing crosses to Python, Arrow-batched. Flat
-    records take the FlatAvroCodec fast path; nested schemas dispatch to the
-    full AvroCodec, with JSON strings coerced back to bytes (latin-1) at
-    bytes/fixed schema positions at any depth."""
-    codec = codec_for(schema)
-    if isinstance(codec, FlatAvroCodec):
-
-        @F.pandas_udf(BinaryType())
-        def _encode(js: pd.Series) -> pd.Series:
-            def one(j: str) -> bytes:
-                d = json.loads(j)
-                rec = {}
-                for name, t in codec.fields:
-                    v = d.get(name)
-                    if t == "bytes" and isinstance(v, str):
-                        v = v.encode("latin-1")
-                    rec[name] = v
-                return frame_confluent(codec.encode(rec), schema_id)
-
-            return js.map(one)
-
-        return _encode(F.to_json(record))
-
-    @F.pandas_udf(BinaryType())
-    def _encode_full(js: pd.Series) -> pd.Series:
-        def one(j: str) -> bytes:
-            rec = codec.coerce_jsonable(json.loads(j))
-            return frame_confluent(codec.encode(rec), schema_id)
-
-        return js.map(one)
-
-    return _encode_full(F.to_json(record))
+    (to_json); only byte framing crosses to Python, Arrow-batched. JSON
+    strings are coerced back to bytes (latin-1) at bytes/fixed schema
+    positions at any depth."""
+    codec = AvroCodec(schema)
+    return _encode_udf(codec, schema_id, codec.coerce_jsonable)(F.to_json(record))
 
 
 # --- schema registry client (§2.9) ------------------------------------------
@@ -954,39 +851,25 @@ class AvroResolver:
             return {k: self._project(v, wn["values"], rn["values"]) for k, v in value.items()}
         raise AvroSchemaResolutionError(f"unsupported kind {wk}")
 
+    _SHAPES = {"record": dict, "enum": str, "fixed": (bytes, bytearray), "array": list, "map": dict}
+
     def _writer_branch(self, value: object, branches: list) -> object:
-        probe = AvroCodec(["null"])  # reuse _matches via a parsed probe
-        for b in branches:
-            if isinstance(b, dict) and b.get("type") in ("record", "enum", "fixed"):
-                continue  # named/complex branches matched by shape below
-            try:
-                if probe._matches(probe._parse(b), value):
+        """Untagged fallback: primitives, arrays and maps by the value's
+        type first, then named types (record, enum, fixed) by shape."""
+        kinds = [(b, *self._kind(b, self._wnamed)) for b in branches]
+        for named in (False, True):
+            for b, bk, bn in kinds:
+                if (bk in ("record", "enum", "fixed")) != named:
+                    continue
+                if _prim_matches(bn, value) if bk == "prim" else isinstance(value, self._SHAPES.get(bk, ())):
                     return b
-            except KeyError:  # unresolved named ref inside the branch
-                continue
-        # named/complex branches: match by shape
-        for b in branches:
-            bk, bn = self._kind(b, self._wnamed)
-            if bk == "record" and isinstance(value, dict):
-                return b
-            if bk == "enum" and isinstance(value, str):
-                return b
-            if bk == "fixed" and isinstance(value, (bytes, bytearray)):
-                return b
-            if bk == "array" and isinstance(value, list):
-                return b
-            if bk == "map" and isinstance(value, dict):
-                return b
         raise AvroSchemaResolutionError(f"no writer union branch matches {value!r}")
 
 
 def decode_resolved(body: bytes, writer_schema: dict, reader_schema: dict) -> object:
     """Decode Avro binary written with ``writer_schema`` and project it into
-    ``reader_schema`` (the registry-consumer evolution path). Uses the
-    branch-tagged decode when the codec supports it, so union resolution
-    follows the exact wire branch rather than guessing from value shape."""
-    codec = codec_for(writer_schema)
-    decoded = (
-        codec.decode_tagged(body) if hasattr(codec, "decode_tagged") else codec.decode(body)
-    )
+    ``reader_schema`` (the registry-consumer evolution path). The decode is
+    branch-tagged, so union resolution follows the exact wire branch rather
+    than guessing from value shape."""
+    decoded = AvroCodec(writer_schema).decode_tagged(body)
     return AvroResolver(writer_schema, reader_schema).project(decoded)

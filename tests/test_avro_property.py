@@ -19,7 +19,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from syscol_spark.functions.confluent import (
-    FlatAvroCodec,
+    AvroCodec,
     frame_confluent,
     unframe_confluent,
     zigzag_decode,
@@ -75,7 +75,7 @@ def test_zigzag_varint_length_is_minimal(v):
     os_=st.none() | st.text(max_size=40),
 )
 def test_flat_record_round_trip(b, i, l, f, d, s, y, ol, os_):  # noqa: E741
-    codec = FlatAvroCodec(SCHEMA)
+    codec = AvroCodec(SCHEMA)
     rec = {"b": b, "i": i, "l": l, "f": f, "d": d, "s": s, "y": y, "ol": ol, "os": os_}
     out = codec.decode(codec.encode(rec))
     assert out["b"] == b and out["i"] == i and out["l"] == l
@@ -103,11 +103,7 @@ def test_confluent_frame_layout_and_round_trip(body, sid):
 # plus named references (including recursive schemas). hypothesis drives
 # randomly-shaped nested schemas AND matching values through encode/decode.
 
-from syscol_spark.functions.confluent import (  # noqa: E402
-    AvroCodec,
-    _bytes_to_jsonable,
-    codec_for,
-)
+from syscol_spark.functions.confluent import _bytes_to_jsonable  # noqa: E402
 
 _PRIMS = ("null", "boolean", "int", "long", "float", "double", "bytes", "string")
 
@@ -227,24 +223,6 @@ def test_nested_json_interop_round_trip(sv):
     wire = codec.encode(value)
     j = _json.dumps(_bytes_to_jsonable(codec.decode(wire)))
     assert codec.encode(codec.coerce_jsonable(_json.loads(j))) == wire
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    b=st.booleans(), i=I32, l=I64, f=F32, d=F64,  # noqa: E741
-    s=st.text(max_size=40), y=st.binary(max_size=40), ol=st.none() | I64,
-)
-def test_flat_fast_path_bytes_identical(b, i, l, f, d, s, y, ol):  # noqa: E741
-    """codec_for's flat fast path and the full codec agree byte-for-byte,
-    so the dispatch is invisible on the wire."""
-    rec = {"b": b, "i": i, "l": l, "f": f, "d": d, "s": s, "y": y, "ol": ol}
-    flat = codec_for(SCHEMA)
-    assert isinstance(flat, FlatAvroCodec)
-    full = AvroCodec(SCHEMA)
-    # SCHEMA has 9 fields incl os; supply it
-    rec["os"] = None
-    assert flat.encode(rec) == full.encode(rec)
-    assert _norm(full.decode(flat.encode(rec))) == _norm(flat.decode(flat.encode(rec)))
 
 
 def test_recursive_named_reference():

@@ -61,6 +61,55 @@ def test_read_path_confluent_avro(spark):
     _round_trip(spark, "avro")
 
 
+def _python_udf_nodes(df) -> int:
+    """ArrowEvalPython nodes in ``df``'s executed physical plan."""
+    plan = df._jdf.queryExecution().executedPlan()  # noqa: SLF001
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return sum(1 for line in plan.toString().splitlines() if "ArrowEvalPython" in line)
+
+
+def test_avro_long_view_decodes_each_frame_once(spark):
+    """The filter Catalyst infers from long_view's explode (size(Metrics) > 0)
+    must not be pushed below the decode and run it a second time."""
+    cfg = CollectorConfig(transform="avro", schema_registry_url="http://127.0.0.1:1")
+    env = spark.range(100).select(
+        enrich_envelope(
+            F.create_map(F.lit("m/a"), F.col("id").cast("double"), F.lit("m/b"), F.lit(1.0)),
+            slave_id=F.lit("S1"), hostname=F.lit("h1"), port=F.lit(5051), namespace=F.lit(""),
+            timestamp_ns=F.col("id") * 10**9,
+        ).alias("envelope")
+    )
+    rows = env.select(serialized_value(F.col("envelope"), cfg).alias("value")).collect()
+    frames = spark.createDataFrame(rows, "value binary")
+    lv = long_view(parse_serialized_stream(frames, transform="avro"))
+    assert len(lv.collect()) == 200
+    assert _python_udf_nodes(lv) == 1
+
+
+def test_avro_parse_in_streaming_plan(spark):
+    """The decode UDF is nondeterministic; Spark must still accept it in a
+    streaming plan (rate source → encode → decode → long view)."""
+    cfg = CollectorConfig(transform="avro", schema_registry_url="http://127.0.0.1:1")
+    src = spark.readStream.format("rate-micro-batch").option("rowsPerBatch", 5).load()
+    env = enrich_envelope(
+        F.create_map(F.lit("m/a"), F.col("value").cast("double")),
+        slave_id=F.lit("S1"), hostname=F.lit("h1"), port=F.lit(5051), namespace=F.lit(""),
+        timestamp_ns=F.col("value") * 10**9,
+    )
+    wire = src.select(serialized_value(env, cfg).alias("value"))
+    lv = long_view(parse_serialized_stream(wire, transform="avro"))
+    q = lv.writeStream.format("memory").queryName("avro_stream").trigger(availableNow=True).start()
+    try:
+        finished = q.awaitTermination(60)
+    finally:
+        q.stop()
+    assert finished, "availableNow stream did not finish"
+    rows = spark.sql("SELECT * FROM avro_stream").collect()
+    assert rows and all(r["metric"] == "m/a" and r["hostname"] == "h1" for r in rows)
+    assert all(r["ts_ns"] == int(r["value"]) * 10**9 for r in rows)
+
+
 def test_jsonl_corpus_quarantines_corrupt_lines(spark, tmp_path):
     """Malformed JSONL lines must land in the quarantine frame — never fail
     the read, never silently disappear."""

@@ -7,10 +7,12 @@ import json
 import struct
 
 import pyspark.sql.functions as F
+import pytest
 
 from syscol_spark.config import CollectorConfig, parse_producer_properties
 from syscol_spark.functions.confluent import (
     MAGIC_BYTE,
+    AvroCodec,
     decode_slave_metrics,
     encode_slave_metrics,
     frame_confluent,
@@ -87,42 +89,61 @@ PAGE_VIEW_AVSC = {
     ],
 }
 
+PAGE_VIEW = {
+    "url": "https://example.com/a?b=c",
+    "user_id": 2**40 + 7,
+    "duration_s": 12.375,
+    "score": 0.5,
+    "bounced": True,
+    "referrer": None,
+    "payload": b"\x00\x01\xfe\xff",
+}
+
 
 def test_flat_codec_second_schema_round_trip():
     """General read/write path beyond the fixed envelope: a second flat
     record with every primitive type + an optional union."""
-    from syscol_spark.functions.confluent import FlatAvroCodec
-
-    codec = FlatAvroCodec(PAGE_VIEW_AVSC)
-    rec = {
-        "url": "https://example.com/a?b=c",
-        "user_id": 2**40 + 7,
-        "duration_s": 12.375,
-        "score": 0.5,
-        "bounced": True,
-        "referrer": None,
-        "payload": b"\x00\x01\xfe\xff",
-    }
-    body = codec.encode(rec)
-    assert codec.decode(body) == rec
+    codec = AvroCodec(PAGE_VIEW_AVSC)
+    body = codec.encode(PAGE_VIEW)
+    assert codec.decode(body) == PAGE_VIEW
     # and with the union's non-null branch
-    rec2 = dict(rec, referrer="https://other.example")
+    rec2 = dict(PAGE_VIEW, referrer="https://other.example")
     assert codec.decode(codec.encode(rec2)) == rec2
     # byte-level goldens: float/double are IEEE little-endian per Avro spec
     assert struct.pack("<d", 12.375) in body
     assert struct.pack("<f", 0.5) in body
 
 
-def test_flat_codec_rejects_nested():
-    import pytest
+def test_flat_record_body_golden():
+    """The exact body bytes of a flat record, pinned from the former flat
+    codec: every primitive, and the [null, string] union on both branches
+    (branch index 0 = null, 1 = string)."""
+    codec = AvroCodec(PAGE_VIEW_AVSC)
+    head = (
+        "3268747470733a2f2f6578616d706c652e636f6d2f613f623d63"  # url
+        "8e8080808040"  # user_id 2**40 + 7
+        "0000000000c02840"  # duration_s 12.375, double LE
+        "0000003f"  # score 0.5, float LE
+        "01"  # bounced
+    )
+    payload = "080001feff"
+    assert codec.encode(PAGE_VIEW).hex() == head + "00" + payload
+    other = dict(PAGE_VIEW, referrer="https://other.example")
+    assert codec.encode(other).hex() == (
+        head + "02" + "2a68747470733a2f2f6f746865722e6578616d706c65" + payload
+    )
 
-    from syscol_spark.functions.confluent import FlatAvroCodec
 
-    with pytest.raises(ValueError, match="unsupported type"):
-        FlatAvroCodec(
-            {"type": "record", "name": "X",
-             "fields": [{"name": "m", "type": {"type": "map", "values": "double"}}]}
-        )
+def test_avro_codec_rejects_bad_schema():
+    with pytest.raises(ValueError, match="unsupported avro type"):
+        AvroCodec({"type": "record", "name": "X", "fields": [{"name": "m", "type": {"type": "decimal"}}]})
+    with pytest.raises(ValueError, match="unsupported avro type"):
+        AvroCodec({"type": "nosuch"})
+    for node in (42, None, 1.5):
+        with pytest.raises(ValueError, match="bad schema node"):
+            AvroCodec(node)
+    with pytest.raises(ValueError, match="bad schema node"):
+        AvroCodec({"type": "array", "items": 7})
 
 
 def test_generic_confluent_dispatch_spark(spark):
@@ -130,13 +151,12 @@ def test_generic_confluent_dispatch_spark(spark):
     types decodes row-by-row against the right schema; unknown ids → NULL."""
     from syscol_spark.functions.confluent import (
         SLAVE_METRICS_AVSC,
-        FlatAvroCodec,
         frame_confluent,
         from_confluent_avro_generic,
     )
 
-    pv = FlatAvroCodec(PAGE_VIEW_AVSC)
-    sm = FlatAvroCodec(SLAVE_METRICS_AVSC)
+    pv = AvroCodec(PAGE_VIEW_AVSC)
+    sm = AvroCodec(SLAVE_METRICS_AVSC)
     rows = [
         (1, frame_confluent(sm.encode({
             "SlaveID": "S1", "Hostname": "h", "Port": 1, "Namespace": "",
@@ -224,6 +244,28 @@ def test_confluent_avro_spark_round_trip(spark):
     assert b["SlaveID"] == "S1"
     assert b["Timestamp"] == 1704067798778549829
     assert b["Metrics"] == {"m": 1.5}
+
+
+def test_confluent_avro_spark_frame_golden(spark):
+    """The full framed value to_confluent_avro emits for one fixed
+    envelope, byte for byte."""
+    df = spark.createDataFrame(
+        [("S1", "h1", 5051, "ns", 1704067798778549829, {"m/a": 1.5, "m/b": -2.0})], ENVELOPE_SCHEMA
+    )
+    env = enrich_envelope(
+        F.col("Metrics"), slave_id=F.col("SlaveID"), hostname=F.col("Hostname"),
+        port=F.col("Port"), namespace=F.col("Namespace"), timestamp_ns=F.col("Timestamp"),
+    )
+    [row] = df.select(to_confluent_avro(env, schema_id=7).alias("v")).collect()
+    assert bytes(row["v"]).hex() == (
+        "0000000007"  # magic + BE schema id 7
+        "04" "5331"  # SlaveID "S1"
+        "04" "6831"  # Hostname "h1"
+        "f64e"  # Port 5051
+        "04" "6e73"  # Namespace "ns"
+        "8ad984b6cda888a62f"  # Timestamp, zigzag varint
+        "2c" + b'{"m/b":-2.0,"m/a":1.5}'.hex()  # Metrics: JSON bytes
+    )
 
 
 def test_config_gates(tmp_path):
