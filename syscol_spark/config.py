@@ -1,9 +1,10 @@
-"""Engine configuration, mirroring the reference's config struct
-field-for-field (/root/reference/syscol/config.go:42-58, defaults :30-38)
-so a syscol user can carry their settings over unchanged.
+"""Engine configuration, mirroring the data-plane and endpoint fields of the
+reference's config struct (config.go:42-58) so a syscol user can carry those
+settings over unchanged. The reference's per-task Cpus/Mem sizing has no
+counterpart: the executor size is the Spark session's, not the collector's.
 
-Reference defaults: ReportingInterval=1s (config.go:35), Cpus=0.1, Mem=64
-(config.go:33-34); transform ∈ {none, avro} (metrics_reporter.go:28-31);
+Reference defaults: ReportingInterval=1s (config.go:35);
+transform ∈ {none, avro} (metrics_reporter.go:28-31);
 CanStart gate requires producer properties + topic, plus schema-registry URL
 in avro mode (config.go:60-65).
 """
@@ -29,9 +30,6 @@ class CollectorConfig:
     # collection endpoints: the hosts whose /metrics/snapshot we poll
     hosts: list[str] = field(default_factory=list)
     port: int = 5051
-    # execution envelope (reference: per-task cpus/mem; here executor sizing)
-    cpus: float = 0.1
-    mem_mb: int = 64
 
     def can_start(self) -> tuple[bool, str]:
         """Start gate, same rules as reference CanStart (config.go:60-65)."""

@@ -6,11 +6,9 @@ Design notes (100 TB scale):
   same plans run on a 1000-executor cluster.
 - UTC session timezone: all event-time semantics are wall-clock-free; parquet
   naive timestamps mean the same instant on every executor.
-- ns timestamps: the reference stamps envelopes with Unix *nanoseconds*
-  (/root/reference/syscol/metrics_reporter.go:139). Spark ≤3.x reads
-  TIMESTAMP(NANOS) parquet as raw int64 via ``nanosAsLong``; Spark 4.1+
-  yields timestamp_ntz (µs-truncated). sources/tables.py adapts on the
-  scanned dtype and derives canonical ts_ns/ts_us/ts_utc columns.
+- ns timestamps: the reference stamps envelopes with Unix *nanoseconds*.
+  Spark 4 scans TIMESTAMP(NANOS) parquet as timestamp_ntz (µs-truncated);
+  sources/tables.py derives canonical ts_ns/ts_us/ts_utc columns from it.
 - Arrow enabled: every pandas UDF / mapInPandas crossing is Arrow-batched.
 """
 
@@ -30,12 +28,6 @@ def default_parallelism() -> int:
 # SparkSession (e.g. the verification driver's) — getOrCreate() ignores
 # builder configs when a session already exists.
 ENGINE_SQL_CONF = {
-    # Spark ≤3.x: read TIMESTAMP(NANOS) parquet as raw int64 ns (without it
-    # the scan fails with PARQUET_TYPE_ILLEGAL). Spark 4.1+ removed the conf
-    # (silently ignored; scan yields timestamp_ntz) — the events loader
-    # (sources/tables.py) branches on the scanned dtype, so setting it here
-    # stays harmless on 4.1 and load-bearing on 3.x.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     # all temporal semantics are UTC (string→timestamp casts, date_trunc)
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -66,12 +58,6 @@ def get_session(app_name: str = "syscol-spark", *, shuffle_partitions: int | Non
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # keep parquet scans wide enough to parallelize at local scale but
         # bounded so a 100 TB scan yields sane task sizes (default 128 MiB)
         .config("spark.sql.files.maxPartitionBytes", "134217728")

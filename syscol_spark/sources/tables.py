@@ -6,10 +6,9 @@ ns timestamps, JSON props) + north-star ``documents`` / ``embeddings``.
 Scale notes: these are plain parquet scans — Catalyst pushes filters and
 prunes columns into the scan (verify with ``.explain``: PushedFilters /
 ReadSchema), so the same loaders work unchanged against a 100 TB lake; only
-the path changes. ``events.ts`` is TIMESTAMP(NANOS) parquet; the scan dtype
-is engine-dependent (int64 under Spark 3.x nanosAsLong, timestamp_ntz under
-Spark 4.1+), so ``load_table`` adapts on the scanned schema and derives the
-canonical ``ts_ns`` / ``ts_us`` / ``ts_utc`` columns once, in one place.
+the path changes. ``events.ts`` is TIMESTAMP(NANOS) parquet, which Spark 4
+scans as µs-truncated timestamp_ntz; ``load_table`` derives the canonical
+``ts_ns`` / ``ts_us`` / ``ts_utc`` columns from it once, in one place.
 """
 
 from __future__ import annotations
@@ -112,30 +111,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in _FAN_OUT_TABLES and _needs_fan_out(spark, path):
         df = df.repartition(spark.sparkContext.defaultParallelism)
     if name == "events":
-        # The parquet column is TIMESTAMP(NANOS). How Spark scans it depends
-        # on the engine version:
-        #   - Spark ≤3.x with spark.sql.legacy.parquet.nanosAsLong: raw int64
-        #     Unix-ns (full fidelity).
-        #   - Spark 4.1+: the legacy conf is gone (silently ignored) and the
-        #     scan yields timestamp_ntz, already truncated ns→µs.
-        # Branch on the scanned dtype so both engines produce the same
-        # canonical columns: ts_ns (int64 ns), ts_us (int64 µs), ts_utc
-        # (µs TimestampType). All event-time operators and every DuckDB
-        # oracle compare at µs (epoch_us), so the µs-truncated ts_ns of the
-        # 4.1 branch is hash-identical to `ts_ns div 1000 * 1000` fidelity.
+        # The parquet column is TIMESTAMP(NANOS); Spark 4 scans it as
+        # timestamp_ntz, already truncated ns→µs. Derive the canonical
+        # columns: ts_ns (int64 ns), ts_us (int64 µs), ts_utc (µs
+        # TimestampType). All event-time operators and every DuckDB oracle
+        # compare at µs (epoch_us), so the µs-truncated ts_ns is
+        # hash-identical to `ts_ns div 1000 * 1000` fidelity. Integer `div`,
+        # not `/`: float division of ~1.7e18 ns values loses sub-µs bits.
         ts_dtype = dict(df.dtypes)["ts"]
-        if ts_dtype == "bigint":
-            # NB: integer `div`, not `/` — float division of ~1.7e18 ns
-            # values loses sub-µs bits (double has 53-bit mantissa) and
-            # drifts ±1 µs from DuckDB's exact epoch_us().
-            df = (
-                df.withColumnRenamed("ts", "ts_ns")
-                .withColumn("ts_us", F.expr("ts_ns div 1000"))
-                .withColumn("ts_utc", F.timestamp_micros(F.col("ts_us")))
-            )
-        elif ts_dtype in ("timestamp_ntz", "timestamp"):
+        if ts_dtype in ("timestamp_ntz", "timestamp"):
             # UTC session timezone makes the ntz→timestamp cast exact. Keep
-            # ts_ns in ts's ordinal slot so both branches yield one schema.
+            # ts_ns in ts's ordinal slot.
             ts_ns = (F.unix_micros(F.col("ts").cast("timestamp")) * F.lit(1000)).alias("ts_ns")
             df = (
                 df.select(*[ts_ns if c == "ts" else F.col(c) for c in df.columns])

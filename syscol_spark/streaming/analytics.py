@@ -124,9 +124,7 @@ def dedup_stream(stream: DataFrame, *, watermark: str = "2 minutes") -> DataFram
         .withColumn("slave_id", F.col("envelope.SlaveID"))  # dedup keys must be top-level
         .withWatermark("event_time", watermark)
     )
-    if hasattr(s, "dropDuplicatesWithinWatermark"):
-        return s.dropDuplicatesWithinWatermark(["slave_id", "event_time"])
-    return s.dropDuplicates(["slave_id", "event_time"])
+    return s.dropDuplicatesWithinWatermark(["slave_id", "event_time"])
 
 
 def interval_join_streams(
@@ -614,91 +612,19 @@ _TOPK_STATE = StructType(
 )
 
 
-def _topk_merge(pairs: list[tuple[int, float]], k: int) -> list[tuple[int, float]]:
-    """Shared top-k merge: by (value DESC, event_id ASC), truncated to k."""
-    pairs.sort(key=lambda p: (-p[1], p[0]))
-    return pairs[:k]
-
-
-def _topk_frame(event_type: str, pairs: list[tuple[int, float]]) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "event_type": [event_type] * len(pairs),
-            "event_id": [p[0] for p in pairs],
-            "value": [p[1] for p in pairs],
-            "rk": list(range(1, len(pairs) + 1)),
-        }
-    )
-
-
-def transform_with_state_available() -> bool:
-    """The Spark 4 arbitrary-state API (transformWithStateInPandas) speaks a
-    protobuf protocol to the JVM state server; without the google.protobuf
-    package the driver worker crashes at init. Gate, don't assume."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def streaming_topk_per_group(stream: DataFrame, *, k: int = 3, api: str = "auto") -> DataFrame:
+def streaming_topk_per_group(stream: DataFrame, *, k: int = 3) -> DataFrame:
     """Streaming twin of q_ev_topk_per_group (plans/events.py): per
     event_type, maintain the running top-k by (value DESC, event_id ASC)
     across micro-batches, re-emitting the group's complete current top-k
     whenever a batch delivers rows for it.
 
-    ``api`` selects the state backend: ``"tws"`` uses the Spark 4
-    arbitrary-state API (``transformWithStateInPandas``, ValueState),
-    ``"apiws"`` the Spark 3-era ``applyInPandasWithState``, and ``"auto"``
-    picks tws when its protobuf dependency is importable (this container
-    lacks it, so the fallback is what tests exercise; the tws path is the
-    same merge function behind the newer handle API).
-
-    State is BOUNDED: exactly k (event_id, value) pairs per group —
-    independent of stream length. After the source is exhausted, the LAST
-    emission per group equals the batch query's rows for that group, which
-    is what the twin test asserts. Input must carry (event_type, event_id,
-    value).
+    State (``applyInPandasWithState``) is BOUNDED: exactly k (event_id,
+    value) pairs per group, independent of stream length. After the source
+    is exhausted, the LAST emission per group equals the batch query's rows
+    for that group, which is what the twin test asserts. Input must carry
+    (event_type, event_id, value).
     """
-    if api == "auto":
-        api = "tws" if transform_with_state_available() else "apiws"
     prepared = stream.select("event_type", "event_id", "value")
-
-    if api == "tws":
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        class TopK(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._state = handle.getValueState(
-                    "topk", "ids array<bigint>, vals array<double>"
-                )
-
-            def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-                (event_type,) = key
-                held = self._state.get() if self._state.exists() else None
-                pairs = list(zip(held[0], held[1])) if held else []
-                for pdf in rows:
-                    pairs.extend(
-                        zip((int(i) for i in pdf["event_id"]), (float(v) for v in pdf["value"]))
-                    )
-                pairs = _topk_merge(pairs, k)
-                self._state.update(([p[0] for p in pairs], [p[1] for p in pairs]))
-                yield _topk_frame(event_type, pairs)
-
-            def close(self) -> None:
-                pass
-
-        return prepared.groupBy("event_type").transformWithStateInPandas(
-            statefulProcessor=TopK(),
-            outputStructType=_TOPK_OUT,
-            outputMode="Update",
-            timeMode="None",
-        )
 
     def update(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -710,9 +636,13 @@ def streaming_topk_per_group(stream: DataFrame, *, k: int = 3, api: str = "auto"
             pairs.extend(
                 zip((int(i) for i in pdf["event_id"]), (float(v) for v in pdf["value"]))
             )
-        pairs = _topk_merge(pairs, k)
-        state.update(([p[0] for p in pairs], [p[1] for p in pairs]))
-        yield _topk_frame(event_type, pairs)
+        pairs = sorted(pairs, key=lambda p: (-p[1], p[0]))[:k]
+        ids, vals = [p[0] for p in pairs], [p[1] for p in pairs]
+        state.update((ids, vals))
+        yield pd.DataFrame(
+            {"event_type": [event_type] * len(pairs), "event_id": ids, "value": vals,
+             "rk": list(range(1, len(pairs) + 1))}
+        )
 
     return prepared.groupBy("event_type").applyInPandasWithState(
         update,
@@ -1090,14 +1020,7 @@ def streaming_norm_dedup(
     s = docs.withColumn("norm_hash", F.md5(normalize_text(content_col))).withWatermark(
         "event_time", watermark
     )
-    if hasattr(s, "dropDuplicatesWithinWatermark"):
-        return s.dropDuplicatesWithinWatermark(["norm_hash"])
-    # Pre-3.5 fallback: keep the documented first-per-digest contract by
-    # deduping on the digest ALONE (state never ages out — unbounded over an
-    # infinite stream, the price of the missing API). Deduping on
-    # ['norm_hash', 'event_time'] instead would only drop same-timestamp
-    # twins — silently no canonical dedup at all.
-    return s.dropDuplicates(["norm_hash"])
+    return s.dropDuplicatesWithinWatermark(["norm_hash"])
 
 
 _CUSUM_STATE = StructType(

@@ -31,7 +31,7 @@ SOURCE_OPTIONS = {"hosts", "port", "namespace", "interval", "partitions"}
 
 COLLECTOR_CONFIG_FIELDS = {
     "producer_properties", "topic", "transform", "schema_registry_url", "reporting_interval_secs",
-    "namespace", "hosts", "port", "cpus", "mem_mb",
+    "namespace", "hosts", "port",
 }
 
 
@@ -94,6 +94,13 @@ def test_env_reads_are_exactly_the_deployment_settings():
     assert set(found) == DEPLOYMENT_SETTINGS, {
         n: where for n, where in found.items() if n not in DEPLOYMENT_SETTINGS
     } or f"missing: {DEPLOYMENT_SETTINGS - set(found)}"
+
+
+def test_ledger_reads_no_environment():
+    """scripts/ledger.py takes its queries, scales and repetitions as
+    arguments; its session reads only the deployment settings above."""
+    path = PKG.parent / "scripts" / "ledger.py"
+    assert _env_names(ast.parse(path.read_text(), str(path))) == []
 
 
 def test_env_scan_sees_every_read_form():

@@ -1752,7 +1752,10 @@ def test_streaming_burn_rate_state_survives_restart(spark, sf_dir, tmp_path):
     assert got == expected
 
 
-def _topk_restart(spark, sf_dir, tmp_path, api):
+def test_streaming_topk_state_survives_restart_apiws(spark, sf_dir, tmp_path):
+    """Kill/restart for the applyInPandasWithState top-k: the post-restart
+    per-group emission must rank recovered pre-restart rows against the new
+    shard's."""
     from syscol_spark.plans.catalog import query_catalog
     from syscol_spark.streaming.analytics import streaming_topk_per_group
 
@@ -1770,7 +1773,7 @@ def _topk_restart(spark, sf_dir, tmp_path, api):
     schema = "event_type string, event_id long, value double"
 
     def build(stream):
-        return streaming_topk_per_group(stream, k=3, api=api)
+        return streaming_topk_per_group(stream, k=3)
 
     _restart_run(spark, build, schema, f"{src}/f*", ckpt, out, "update")
     bid1 = spark.read.parquet(out).agg(F.max("__bid")).collect()[0][0]
@@ -1794,21 +1797,3 @@ def _topk_restart(spark, sf_dir, tmp_path, api):
         r["event_id"] for r in rows if r["__bid"] > bid1 and r["event_id"] % 3 != 2
     ]
     assert run2_prestart_ids, "restarted top-k lost pre-restart members"
-
-
-def test_streaming_topk_state_survives_restart_apiws(spark, sf_dir, tmp_path):
-    """Kill/restart for the applyInPandasWithState top-k (the path this
-    container can execute): the post-restart per-group emission must rank
-    recovered pre-restart rows against the new shard's."""
-    _topk_restart(spark, sf_dir, tmp_path, "apiws")
-
-
-def test_streaming_topk_state_survives_restart_tws(spark, sf_dir, tmp_path):
-    """Same kill/restart proof through the Spark 4 transformWithState
-    ValueState path. Env-gated like the live-Kafka pair: this container
-    lacks google.protobuf, which the tws state-server protocol requires."""
-    from syscol_spark.streaming.analytics import transform_with_state_available
-
-    if not transform_with_state_available():
-        pytest.skip("transformWithStateInPandas needs google.protobuf (env-blocked)")
-    _topk_restart(spark, sf_dir, tmp_path, "tws")
