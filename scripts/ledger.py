@@ -19,6 +19,8 @@ A row holds, for the fastest of ``--reps`` repetitions:
 - ``execute``: the result forced into the noop sink, so it never reaches
   the driver, with task time and shuffle bytes per stage.
 - ``python_rows``: rows out of every Python plan node the query ran.
+- ``routes``: each driver-local / distributed decision the build made
+  (``syscol_spark/operators/route.py``): name, bound, observed rows, path.
 
 Given two or more ``--sf`` directories, a row also carries ``step_ratio``:
 its wall over the same query's wall at the previous directory. ``inflate``
@@ -32,6 +34,7 @@ import argparse
 import functools
 import gc
 import json
+import logging
 import os
 import re
 import sys
@@ -45,6 +48,7 @@ sys.path.insert(0, ROOT)
 from perfbench.common import Phase, testdata_dir  # noqa: E402
 
 PKG = os.path.join(ROOT, "syscol_spark") + os.sep
+ROUTE = os.path.join(PKG, "operators", "route.py")
 ACTIONS = ("collect", "count", "toPandas", "localCheckpoint", "checkpoint", "take", "head", "first")
 JOIN = re.compile(r"\b(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)\b")
 PYTHON_NODE = re.compile(r"\b(\w+(?:Python|InPandas|InArrow))\b")
@@ -114,12 +118,37 @@ class Sites:
         return wrapper
 
 
+class Routes(logging.Handler):
+    """The route decisions (syscol_spark/operators/route.py) logged while
+    the block runs, in order."""
+
+    def __init__(self):
+        super().__init__(logging.DEBUG)
+        self.routes: list[dict] = []
+        self._log = logging.getLogger("syscol_spark.route")
+
+    def emit(self, record: logging.LogRecord) -> None:
+        self.routes.append(record.route)
+
+    def __enter__(self) -> Routes:
+        self._level = self._log.level
+        self._log.setLevel(logging.DEBUG)
+        self._log.addHandler(self)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._log.removeHandler(self)
+        self._log.setLevel(self._level)
+
+
 def _call_site() -> str:
     """file:line of the innermost caller inside the package (paths relative
-    to ``syscol_spark/``), or ``?`` when the call did not come from it."""
+    to ``syscol_spark/``), or ``?`` when the call did not come from it.
+    A route probe counts at the operator line that asked for it, not in
+    ``operators/route.py``, which every routed operator shares."""
     frame = sys._getframe(2)  # noqa: SLF001 - skip this function and the wrapper
     while frame is not None:
-        if frame.f_code.co_filename.startswith(PKG):
+        if frame.f_code.co_filename.startswith(PKG) and frame.f_code.co_filename != ROUTE:
             return f"{frame.f_code.co_filename[len(PKG):]}:{frame.f_lineno}"
         frame = frame.f_back
     return "?"
@@ -209,7 +238,7 @@ def measure(spark, name: str, sf_dir: str) -> dict:
     _ensure_loaded()
     first_execution = _last_execution(spark) + 1
     jobs0 = _jobs_submitted(spark)
-    with Sites(spark) as sites, Phase(spark, f"{name} build") as build:
+    with Sites(spark) as sites, Routes() as decisions, Phase(spark, f"{name} build") as build:
         df = QUERIES[name].builder(spark, sf_dir)
         _drain(spark)
     build_jobs = _jobs_submitted(spark) - jobs0
@@ -234,6 +263,7 @@ def measure(spark, name: str, sf_dir: str) -> dict:
         "execute": {"s": execute.seconds, "jobs": execute.jobs, "stages": execute.stages,
                     "stage_detail": _stages(spark, execute)},
         "python_rows": _python_rows(spark, first_execution),
+        "routes": decisions.routes,
     }
 
 

@@ -50,6 +50,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from syscol_spark.functions.text import tokens
+from syscol_spark.operators.route import route
 
 
 def word_freq_table(df: DataFrame, content_col: str) -> DataFrame:
@@ -141,12 +142,6 @@ def _round_top_pairs(words: DataFrame, batch: int) -> list[tuple[str, int]]:
         .collect()
     )
     return [(r["pair"], int(r["cnt"])) for r in rows]
-
-
-#: driver bound for the local trainer: 200k (word, freq) rows is a few MB
-#: of strings — the kmeans_centroids `_LOCAL_TRAIN_LIMIT` pattern. A lake
-#: corpus' 10-100M-word vocabulary exceeds it and takes the distributed path.
-_BPE_LOCAL_LIMIT = 200_000
 
 
 #: characters Java's regex `.` does NOT match — _char_repr leaves them
@@ -244,16 +239,12 @@ def learn_bpe_merges(
     spark = df.sparkSession
     schema = "step int, left_sym string, right_sym string, merged string, freq long"
     wf = word_freq_table(df, content_col)
-    # Driver-local fast path (r14, the kmeans_centroids pattern): the merge
-    # rounds only ever touch the VOCABULARY-sized (word, freq) table, so
-    # when it fits the driver bound, pull it once and run every round in
-    # pure Python — ONE Spark action total instead of one checkpoint plus
-    # one collect-round per merge batch (the 8-merge queries ran ~9 actions
-    # over a table of a few thousand rows). The bounded limit(N+1) collect
-    # is the probe AND the fetch; above the bound the rows are discarded
-    # and the distributed rounds below run unchanged.
-    local_rows = wf.limit(_BPE_LOCAL_LIMIT + 1).collect()
-    if len(local_rows) <= _BPE_LOCAL_LIMIT:
+    # Driver-local trainer: the merge rounds only ever touch the
+    # vocabulary-sized (word, freq) table, so when it fits the bpe_vocab
+    # route every round runs in pure Python — one Spark action in all
+    # instead of one checkpoint plus one collect per merge batch.
+    local_rows = route("bpe_vocab", wf)
+    if local_rows is not None:
         return spark.createDataFrame(
             _learn_bpe_local(local_rows, n_merges, batch), schema
         )

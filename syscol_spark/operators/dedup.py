@@ -24,6 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from syscol_spark.functions.text import word_shingles
+from syscol_spark.operators.route import route
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -459,12 +460,6 @@ def simhash_band_pairs(
     )
 
 
-#: driver bound for the local connected-components path: 200k edge rows
-#: (two ids each) is a few MB — the kmeans_centroids pattern. A lake-scale
-#: near-dup graph exceeds it and takes the distributed label propagation.
-_CC_LOCAL_LIMIT = 200_000
-
-
 def _cc_local(pairs: DataFrame, id_a: str, edge_rows: list) -> DataFrame:
     """Driver-local union-find over a bounded collected edge list — the
     same fixpoint the distributed min-label propagation converges to
@@ -522,17 +517,16 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", *, 
     leaves the cluster. This is the engine's iterative-algorithm surface:
     not expressible as one SQL query (the oracle uses a recursive CTE).
 
-    Driver-local fast path (r14, the kmeans_centroids pattern): near-dup
-    pair sets are a small fraction of the corpus BY DESIGN, and at
-    oracle/bench scales they are a few hundred rows being pushed through
-    O(diameter) rounds of join + checkpoint + convergence-count jobs —
-    pure scheduling. When the edge list fits the bound, ONE bounded
-    collect + union-find computes the identical min-reachable-id fixpoint;
-    above the bound the distributed rounds run unchanged
-    (test_dedup_clusters_local_matches_distributed pins both paths).
+    Driver-local twin: near-dup pair sets are a small fraction of the
+    corpus by design, and at oracle/bench scales they are a few hundred
+    rows pushed through O(diameter) rounds of join + checkpoint +
+    convergence-count jobs — pure scheduling. When the edge list fits the
+    ``cc_edges`` route, one bounded fetch + union-find computes the
+    identical min-reachable-id fixpoint; above the bound the distributed
+    rounds run (tests/test_routes.py runs both sides).
     """
-    edge_rows = pairs.select(id_a, id_b).limit(_CC_LOCAL_LIMIT + 1).collect()
-    if len(edge_rows) <= _CC_LOCAL_LIMIT:
+    edge_rows = route("cc_edges", pairs.select(id_a, id_b))
+    if edge_rows is not None:
         return _cc_local(pairs, id_a, [(r[0], r[1]) for r in edge_rows])
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))

@@ -1,0 +1,72 @@
+"""The driver-local / distributed choice, made in one place.
+
+Six operator decisions have a driver-local twin, exact and cheap while its
+input is small, and a distributed twin that runs at any size. Both twins
+compute the same result, so the choice steers only cost. Each decision is
+one row of ``BOUNDS`` and one bounded fetch: ``route(name, frame)`` pulls at
+most ``bound + 1`` rows, and when no more than ``bound`` came back the fetch
+returned every row, so the local twin starts from the complete input
+(``limit``'s choice of rows matters only on the over-bound side, where the
+rows are dropped). The fetch is the only measurement: Catalyst's size
+estimate sizes a 200-row MMR shortlist at tens of GB, so it cannot pick a
+side.
+
+Every decision is logged on the ``syscol_spark.route`` logger at DEBUG as a
+record whose ``route`` attribute is ``{name, bound, observed, path}``
+(``observed`` of a fetch stops at ``bound + 1``); ``scripts/ledger.py``
+reports them per query. Tests force the distributed twin by setting a bound
+to -1.
+"""
+
+from __future__ import annotations
+
+import logging
+
+from pyspark.sql import DataFrame
+
+log = logging.getLogger("syscol_spark.route")
+
+#: rows a driver-local twin accepts, per decision
+BOUNDS = {
+    # mmr_topk: (query, candidate) shortlist rows
+    "mmr_shortlist": 10_000,
+    # mmr_topk: in-shortlist pair rows, sum over queries of n_q * (n_q - 1),
+    # ~64 MB of Row objects; the row bound alone admits a single
+    # 10k-candidate query with ~1e8 pairs
+    "mmr_pairs": 2_000_000,
+    # k-means training sample, (id, vec) rows: ~100 MB of float64 at dim=64
+    "kmeans_sample": 200_000,
+    # candidate-pair scoring: the (id, vec) corpus rides in the Python task
+    # closure and is re-shipped per task, so the bound is a closure budget,
+    # 65,536 x 64 dims x 8 B = 32 MB. At 200k vectors (sf10) raw closure
+    # capture wedged worker set-up and a Spark broadcast variable deadlocked
+    # worker reuse; above the bound the vectors are attached by id joins
+    "pair_scorer": 65_536,
+    # BPE training: (word, freq) vocabulary rows, a few MB of strings
+    "bpe_vocab": 200_000,
+    # connected components: near-dup edge rows, two ids each
+    "cc_edges": 200_000,
+}
+
+
+def route(name: str, frame: DataFrame, *, arrow: bool = False):
+    """All rows of ``frame`` when it has at most ``BOUNDS[name]`` of them,
+    else None, from one bounded fetch. ``arrow`` fetches a pandas frame
+    through Arrow (``toPandas``): at the scorer's bound a Row collect builds
+    hundreds of MB of boxed objects before the matrix exists."""
+    bound = BOUNDS[name]
+    probe = frame.limit(bound + 1)
+    rows = probe.toPandas() if arrow else probe.collect()
+    return rows if fits(name, len(rows)) else None
+
+
+def fits(name: str, observed: int) -> bool:
+    """Whether ``observed``, a size the caller already holds, is within
+    ``BOUNDS[name]``; logs the decision."""
+    bound = BOUNDS[name]
+    path = "local" if observed <= bound else "distributed"
+    log.debug(
+        "%s: %d against %d -> %s", name, observed, bound, path,
+        extra={"route": {"name": name, "bound": bound, "observed": observed, "path": path}},
+    )
+    return path == "local"

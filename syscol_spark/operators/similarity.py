@@ -15,6 +15,7 @@ Two paths:
 from __future__ import annotations
 
 import math
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -23,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.functions import broadcast
 
 from syscol_spark.functions.vectors import cosine_similarity
+from syscol_spark.operators.route import fits, route
 
 
 def brute_force_topk(
@@ -104,33 +106,19 @@ def mmr_topk(
             F.round(cosine_similarity("__va", "__vb"), 6).alias("sim"),
         )
     )
-    # Driver-local greedy (r14): the MMR state is BOUNDED BY DESIGN —
-    # queries are broadcast-small (brute_force_topk's contract) and the
-    # per-query pool is `shortlist` rows, so (query, cand, simq) plus the
-    # in-shortlist pair table are a few thousand rows. When the shortlist
-    # fits the bound, pull both (the pair COSINES are still computed
-    # on-plan with the same F.round, so every emitted float is produced by
-    # the exact expressions the distributed loop used) and run the k-step
-    # greedy in Python: 3 Spark actions total instead of one
-    # join+window+checkpoint round per selection step (the k=5 catalog
-    # query ran ~50 jobs; the greedy arithmetic lam*simq - (1-lam)*pen is
-    # the same two IEEE-double ops in either runtime, ties on cand_id —
-    # trajectories are bit-identical, pinned by
-    # test_mmr_local_matches_distributed). Oversized shortlists keep the
-    # distributed loop below.
-    sv_rows = sv.limit(_MMR_LOCAL_LIMIT + 1).collect()
-    # Gate the local path on PAIR volume too (r15, ADVICE): the pair table
-    # is sum over queries of n_q*(n_q-1) rows — computable exactly from the
-    # already-collected shortlist rows at zero extra Spark actions — and a
-    # single 10k-row query would pass the row gate yet collect ~1e8 pair
-    # rows to the driver. Oversized pair volumes fall through to the
-    # distributed loop, which computes the identical trajectory.
-    if len(sv_rows) <= _MMR_LOCAL_LIMIT:
-        per_q: dict = {}
-        for r in sv_rows:
-            per_q[r["query_id"]] = per_q.get(r["query_id"], 0) + 1
-        n_pairs = sum(n * (n - 1) for n in per_q.values())
-        if n_pairs <= _MMR_LOCAL_PAIR_LIMIT:
+    # Driver-local greedy: the MMR state is bounded by design (queries are
+    # broadcast-small and each pool is `shortlist` rows), so under both
+    # bounds the shortlist and its pair table are pulled and the k-step
+    # greedy runs in Python: 3 Spark actions instead of one
+    # join+aggregate+checkpoint round per step. The pair cosines are still
+    # computed on-plan with the same F.round, and the greedy arithmetic is
+    # the same two IEEE-double ops with the same ties, so trajectories are
+    # bit-identical. The pair volume is counted from the fetched shortlist:
+    # one 10k-row query passes the row bound with ~1e8 pairs.
+    sv_rows = route("mmr_shortlist", sv)
+    if sv_rows is not None:
+        per_q = Counter(r["query_id"] for r in sv_rows)
+        if fits("mmr_pairs", sum(n * (n - 1) for n in per_q.values())):
             return _mmr_greedy_local(sv, sv_rows, pairs.collect(), k, lam)
     pairs = pairs.localCheckpoint()
     # step-1 argmax as ONE aggregate (r15): min_by over (-simq, cand_id)
@@ -184,15 +172,6 @@ def mmr_topk(
     return selected.select(
         "query_id", F.col("cand_id").alias("neighbor_id"), "simq", "step"
     )
-
-
-#: bounds for mmr_topk's driver-local greedy: 10k (query, cand) shortlist
-#: rows AND at most 2M in-shortlist pair rows (~64 MB of Row objects) —
-#: the pair table is sum(n_q^2) so the row gate alone admits a single
-#: 10k-shortlist query with ~1e8 pairs (r15, ADVICE). Above either bound
-#: the distributed per-step loop runs unchanged.
-_MMR_LOCAL_LIMIT = 10_000
-_MMR_LOCAL_PAIR_LIMIT = 2_000_000
 
 
 def _mmr_greedy_local(sv, sv_rows: list, pair_rows: list, k: int, lam: float):
@@ -384,7 +363,7 @@ def matrix_dots(vec: Column | str, matrix: list[list[float]]) -> Column:
     return _dots(F.col(vec) if isinstance(vec, str) else vec)
 
 
-def _stride_predicate(df: DataFrame, id_col: str, stride: int):
+def _stride_sample(df: DataFrame, id_col: str, stride: int) -> DataFrame:
     """Deterministic 1-in-``stride`` training sample. Numeric ids keep the
     oracle-mirrorable ``id % stride == 0`` (dense ids → uniform; the catalog
     oracles reproduce it as WHERE id % stride = 0). Non-numeric ids (string
@@ -392,9 +371,11 @@ def _stride_predicate(df: DataFrame, id_col: str, stride: int):
     determinism, just not CTE-mirrored (no catalog query strides on them)."""
     from pyspark.sql.types import NumericType
 
+    if stride <= 1:
+        return df
     if isinstance(df.schema[id_col].dataType, NumericType):
-        return F.col(id_col) % stride == 0
-    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0
+        return df.filter(F.col(id_col) % stride == 0)
+    return df.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0)
 
 
 def kmeans_centroids(
@@ -428,21 +409,25 @@ def kmeans_centroids(
     stride sample (ids are dense) is uniform, deterministic, and exactly
     mirrorable in a SQL oracle twin (WHERE id % stride = 0) — unlike
     df.sample, whose RNG is engine-private."""
-    train = corpus.select(id_col, vec_col)
-    if train_stride > 1:
-        train = train.filter(_stride_predicate(train, id_col, train_stride))
-    # Driver-local fast path: a coarse quantizer's training set is small BY
-    # DESIGN (that's what the stride sample is for — ~1000 points/centroid),
-    # so when it fits the bound, pull it once and run Lloyd's in numpy:
-    # zero Spark jobs per iteration instead of a collect-roundtrip each.
-    sample = _bounded_sample(train)
+    train = _stride_sample(corpus.select(id_col, vec_col), id_col, train_stride)
+    # A coarse quantizer's training set is small by design (that is what
+    # the stride sample is for, ~1000 points per centroid), so under the
+    # bound it is pulled once and Lloyd's runs in numpy: no Spark job per
+    # iteration.
+    sample = route("kmeans_sample", train)
     if sample is not None:
         return _kmeans_local(sample, k, max_iter)
-    # Distributed path: training re-scans the (sampled) corpus max_iter+2
-    # times (dim probe, seed pick, one assignment+sum per iteration).
-    # Persist the projected (id, vec) slice for the duration so only the
-    # FIRST action pays the source read; unpersisted before returning —
-    # the serving scan reads the source.
+    return _lloyd_distributed(train, vec_col, id_col, k, max_iter)
+
+
+def _lloyd_distributed(
+    train: DataFrame, vec_col: str, id_col: str, k: int, max_iter: int
+) -> list[list[float]]:
+    """kmeans_centroids' distributed twin over an over-bound training frame.
+    Training re-scans it max_iter+1 times (seed pick, one assignment+sum per
+    iteration), so the frame is persisted for the duration and only the
+    first action pays the source read; it is unpersisted before returning
+    because the serving scan reads the source."""
     train = train.persist()
     try:
         seed_rows = train.orderBy(id_col).limit(k).select(vec_col).collect()
@@ -470,49 +455,6 @@ def kmeans_centroids(
         return centroids
     finally:
         train.unpersist()
-
-
-_LOCAL_TRAIN_LIMIT = 200_000  # ≈100 MB of float64 at dim=64 — driver-safe
-
-# Probe short-circuit (r15, ADVICE): the merged limit(N+1) probe transfers
-# ~N full (id, vec) rows even when the frame is lake-sized and the rows are
-# then discarded. When the optimizer's sizeInBytes estimate is MUCH larger
-# than any under-bound frame could be, skip the probe and take the
-# distributed path directly. Correctness is path-invariant (local and
-# distributed twins are equivalence-pinned), so a wrong estimate costs only
-# the path choice, never the result; 2 GiB is ~20x the largest possible
-# under-bound transfer, far outside estimate noise at bench scale.
-_SKIP_PROBE_EST_BYTES = 2 << 30
-
-
-def _estimated_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan sizeInBytes estimate; None when the py4j
-    surface is unavailable. Diagnostics-grade only — callers must treat it
-    as a coarse upper-bound hint, never a row count."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 - estimate is optional
-        return None
-
-
-def _bounded_sample(train: DataFrame) -> list | None:
-    """The training rows when they fit _LOCAL_TRAIN_LIMIT, else None.
-
-    ONE Spark action (limit(N+1).collect()) decides the bound AND fetches
-    the rows — r14: the previous shape was a limit(N+1).count() probe
-    followed by a separate full collect(), i.e. two actions and two scans
-    of the (possibly lake-sized) train frame per quantizer training; the
-    merged form halves that. The transfer stays bounded at N+1 rows
-    (~100 MB at dim=64) whichever path wins, and when len(rows) <= N the
-    limit returned EVERY row, so which-rows nondeterminism of limit cannot
-    leak into the local path (it only truncates on the over-bound branch,
-    where the rows are discarded). Frames whose optimizer size estimate is
-    clearly lake-scale skip the probe transfer entirely (r15, ADVICE)."""
-    est = _estimated_bytes(train)
-    if est is not None and est > _SKIP_PROBE_EST_BYTES:
-        return None
-    rows = train.limit(_LOCAL_TRAIN_LIMIT + 1).collect()
-    return rows if len(rows) <= _LOCAL_TRAIN_LIMIT else None
 
 
 def _kmeans_local(rows: list, k: int, max_iter: int) -> list[list[float]]:
@@ -777,7 +719,8 @@ def srp_band_pairs(
     # EXPRESSION gets it duplicated into the join condition and re-evaluated
     # per reference (the interpreted fold was ~4x the query's wall time);
     # the einsum path scores each candidate pair exactly once.
-    return _score_pairs_for(pairs, sides).filter(F.col("cosine") >= min_cosine)
+    pdf = route("pair_scorer", sides, arrow=True)
+    return _score_pairs_for(pairs, sides, pdf).filter(F.col("cosine") >= min_cosine)
 
 
 def _srp_candidate_pairs(
@@ -1023,20 +966,6 @@ def _scored_pairs(pairs: DataFrame, score) -> DataFrame:
     return scored.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
-# Closure-scoring bound: the corpus matrix is captured in the python-UDF
-# command and re-shipped per task, so the bound is a CLOSURE-SIZE budget —
-# 65,536 vectors * 64 dims * 8 B = 32 MB — not a row-count convenience. Two
-# measured failure modes above it (sf10, 200k vectors = 102 MB): (a) raw
-# closure capture wedged the runner outright (workers never finished
-# set-up); (b) a Spark broadcast variable avoided the per-task copy but
-# sporadically deadlocked the worker-REUSE protocol (a reused worker blocks
-# reading broadcast bookkeeping the JVM never sends, until the output
-# socket times out and kills the job). Above the bound the join-attach path
-# re-attaches vectors with plain JVM-side joins (broadcast-hash at these
-# side sizes) — no python-protocol payload at all, and the right plan on a
-# real cluster anyway.
-_BROADCAST_SCORE_LIMIT = 65_536
-
 # knn_graph's bucket-size cap (shared with the SQL oracles in
 # plans/northstar.py so engine and oracle stay one definition): buckets over
 # KNN_BUCKET_CAP members pair each member with only its KNN_CAP_WINDOW
@@ -1052,29 +981,19 @@ KNN_BUCKET_CAP = 2048
 KNN_CAP_WINDOW = 128
 
 
-def _score_pairs_closure(
-    pairs: DataFrame, sides: DataFrame, pdf=None
-) -> DataFrame:
+def _score_pairs_closure(pairs: DataFrame, pdf) -> DataFrame:
     """Score (id_a, id_b) candidate pairs WITHOUT attaching vectors to them:
-    the whole (id, vec) corpus rides to executors in the task closure and
-    each Arrow batch gathers its rows by binary search. Candidates are
-    narrow (two ids), so the shuffle + Arrow payload drops from
-    2·dim floats per pair to 16 bytes per pair (~30x at dim=64) — measured
-    2.2 s -> 0.6 s on the 622k-pair knn_graph scoring step at sf0.1.
+    the whole (id, vec) corpus ``pdf``, fetched by the ``pair_scorer``
+    route, rides to executors in the task closure and each Arrow batch
+    gathers its rows by binary search. Candidates are narrow (two ids), so
+    the shuffle + Arrow payload drops from 2·dim floats per pair to 16 bytes
+    per pair (~30x at dim=64) — measured 2.2 s -> 0.6 s on the 622k-pair
+    knn_graph scoring step at sf0.1.
 
-    Callers MUST gate on _BROADCAST_SCORE_LIMIT (see _score_pairs_for).
     The kernel (_cosine_batch) and the final F.round are shared with
     _score_pairs_arrow, so the two paths emit the same cosines and the
-    DuckDB oracles hold for either."""
-    # Arrow collect (toPandas), not Row collect: at the _BROADCAST_SCORE_LIMIT
-    # bound a Row collect builds hundreds of MB of boxed Python objects on the
-    # driver before the matrix exists; the Arrow path lands as numpy float32
-    # cells and the
-    # float32 -> float64 widening is exact, so cosines are unchanged.
-    # ``pdf``: _score_pairs_for already collected the (complete) corpus when
-    # it routed here through its merged bound-probe — don't collect twice.
-    if pdf is None:
-        pdf = sides.toPandas()
+    DuckDB oracles hold for either. The Arrow fetch lands vectors as numpy
+    float32 cells, and the float32 -> float64 widening is exact."""
     ids = pdf.iloc[:, 0].to_numpy()
     order = np.argsort(ids)
     ids_sorted = ids[order]
@@ -1083,7 +1002,7 @@ def _score_pairs_closure(
     )[order]
 
     # The matrix rides in the python command (re-shipped per task, bounded
-    # by _BROADCAST_SCORE_LIMIT), not in a SparkContext.broadcast: that
+    # by the pair_scorer route), not in a SparkContext.broadcast: that
     # measured 36% slower on q_knn_graph at sf1 (r15).
     def score(batches):
         for pdf in batches:
@@ -1096,33 +1015,13 @@ def _score_pairs_closure(
     return _scored_pairs(pairs, score)
 
 
-def _score_pairs_for(
-    pairs: DataFrame, sides: DataFrame, n_sides: int | None = None
-) -> DataFrame:
-    """Route candidate-pair scoring: closure-shipped corpus when it fits
-    _BROADCAST_SCORE_LIMIT (bounded probe, the k-means gate pattern),
-    otherwise re-attach vectors by id join and score via the Arrow batch
-    path. ``sides`` must be (id, vec). Callers that already counted the
-    corpus (e.g. knn_graph's band_bits="auto" probe) pass ``n_sides`` to
-    skip the probe. r14: the probe is ONE bounded Arrow collect
-    (limit(N+1).toPandas()) that doubles as the closure path's corpus pull
-    — the previous limit-count + toPandas shape scanned ``sides`` twice;
-    when len <= N the limit returned every row, so the closure path sees
-    the complete corpus exactly as before. Frames whose optimizer size
-    estimate is clearly lake-scale skip the probe transfer and go straight
-    to the join-attach path (r15, ADVICE — both paths emit identical
-    cosines, so the estimate only steers cost)."""
-    if n_sides is None:
-        est = _estimated_bytes(sides)
-        if est is not None and est > _SKIP_PROBE_EST_BYTES:
-            n_sides = _BROADCAST_SCORE_LIMIT + 1  # over-bound by estimate
-        else:
-            pdf = sides.limit(_BROADCAST_SCORE_LIMIT + 1).toPandas()
-            if len(pdf) <= _BROADCAST_SCORE_LIMIT:
-                return _score_pairs_closure(pairs, sides, pdf=pdf)
-            n_sides = len(pdf)
-    if n_sides <= _BROADCAST_SCORE_LIMIT:
-        return _score_pairs_closure(pairs, sides)
+def _score_pairs_for(pairs: DataFrame, sides: DataFrame, pdf) -> DataFrame:
+    """Score candidate pairs: ``pdf`` is ``route("pair_scorer", sides,
+    arrow=True)``, the complete (id, vec) corpus when it fits the closure
+    budget, scored by _score_pairs_closure; when it is None the vectors
+    are re-attached by id joins and scored via the Arrow batch path."""
+    if pdf is not None:
+        return _score_pairs_closure(pairs, pdf)
     with_vecs = pairs.join(
         sides.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a")), "id_a"
     ).join(sides.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b")), "id_b")
@@ -1193,9 +1092,11 @@ def knn_graph(
     the largest measured bucket at every oracle/parity scale through sf1
     (1431), so outputs below sf10 scale are bit-identical to the uncapped
     build."""
-    n = None
+    sides = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    pdf = route("pair_scorer", sides, arrow=True)
     if band_bits == "auto":
-        n = corpus.count()  # metadata-cheap count probe, one per build
+        # under the bound the scorer's fetch holds every row
+        n = len(pdf) if pdf is not None else corpus.count()
         band_bits = max(4, math.ceil(math.log2(max(1, n) / target_bucket)))
     tagged = corpus.withColumn("__blk", F.lit(1))
     cand = _srp_candidate_pairs(
@@ -1203,8 +1104,7 @@ def knn_graph(
         dim=dim, n_bands=n_bands, band_bits=band_bits, seed=seed,
         bucket_cap=bucket_cap, cap_window=cap_window,
     )
-    sides = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    pairs = _score_pairs_for(cand, sides, n_sides=n)
+    pairs = _score_pairs_for(cand, sides, pdf)
     # End the Python scoring stage at a shuffle write — for two reasons.
     # (1) Reuse: the sym mirror below consumes `pairs` in BOTH union
     # branches, and without an exchange between them each branch re-executes
@@ -1225,50 +1125,38 @@ def knn_graph(
 
 
 def _pq_codebooks(
-    df: DataFrame,
+    train: DataFrame,
+    sample: list | None,
     *,
     dim: int,
     n_subspaces: int,
     n_centroids: int,
     max_iter: int,
-    train_stride: int,
-    sample_rows: list | None = None,
 ) -> list[list[list[float]]]:
-    """Per-subspace PQ codebooks. Trains ALL subspaces from ONE pull of the
-    stride sample when it fits the driver bound (n_subspaces separate
-    kmeans_centroids calls would re-probe and re-collect the same rows);
-    the per-subspace distributed trainer remains the fallback above the
-    bound. _kmeans_local on numpy slices is numerically identical to
-    slicing inside the engine (float32→float64 widening is elementwise).
-    ``df`` must be (id, vec). ``sample_rows`` (r14): a caller that already
-    holds the EXACT (id, vec) stride sample this function would collect
-    (build_ivfpq_index's non-residual path — same source frame, same
-    stride) passes it to skip the collect entirely: zero Spark actions."""
+    """Per-subspace PQ codebooks from the (id, vec) training frame
+    ``train`` and its ``kmeans_sample`` route, ``sample``: under the bound
+    every subspace trains from the one fetched sample (_kmeans_local on
+    numpy slices is numerically identical to slicing inside the engine;
+    float32→float64 widening is elementwise), otherwise each subspace runs
+    the distributed Lloyd's over its slice of ``train``."""
     if dim % n_subspaces:
         raise ValueError(
             f"dim={dim} not divisible by n_subspaces={n_subspaces}: the trailing "
             f"{dim % n_subspaces} dimensions would be silently dropped from every code"
         )
     sub = dim // n_subspaces
-    if sample_rows is None:
-        train = df.select("id", "vec")
-        if train_stride > 1:
-            train = train.filter(_stride_predicate(train, "id", train_stride))
-        sample_rows = _bounded_sample(train)
-    rows = sample_rows
-    if rows is not None:
+    if sample is not None:
         return [
             _kmeans_local(
-                [(r[0], r[1][s * sub : (s + 1) * sub]) for r in rows],
+                [(r[0], r[1][s * sub : (s + 1) * sub]) for r in sample],
                 n_centroids, max_iter,
             )
             for s in range(n_subspaces)
         ]
     return [
-        kmeans_centroids(
-            df.select("id", F.slice(F.col("vec"), s * sub + 1, sub).alias("__sub")),
-            vec_col="__sub", id_col="id", k=n_centroids,
-            max_iter=max_iter, train_stride=train_stride,
+        _lloyd_distributed(
+            train.select("id", F.slice(F.col("vec"), s * sub + 1, sub).alias("__sub")),
+            "__sub", "id", n_centroids, max_iter,
         )
         for s in range(n_subspaces)
     ]
@@ -1318,9 +1206,10 @@ def pq_codes(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), *passthrough
     )
     if codebooks is None:
+        train = _stride_sample(df.select("id", "vec"), "id", train_stride)
         codebooks = _pq_codebooks(
-            df.select("id", "vec"), dim=dim, n_subspaces=n_subspaces,
-            n_centroids=n_centroids, max_iter=max_iter, train_stride=train_stride,
+            train, route("kmeans_sample", train), dim=dim, n_subspaces=n_subspaces,
+            n_centroids=n_centroids, max_iter=max_iter,
         )
     # one fused Arrow crossing for all n_subspaces assignments (bit-identical
     # to the former per-subspace _assign_nearest chain — see _pq_assign_codes)
@@ -1376,10 +1265,12 @@ def pq_adc_topk(
     Output: (query_id, neighbor_id, adc_dist rounded 6dp, rk<=k);
     deterministic ties (adc_dist asc, neighbor_id asc).
     """
-    df = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    train = _stride_sample(
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")), "id", train_stride
+    )
     codebooks = _pq_codebooks(
-        df, dim=dim, n_subspaces=n_subspaces, n_centroids=n_centroids,
-        max_iter=max_iter, train_stride=train_stride,
+        train, route("kmeans_sample", train), dim=dim, n_subspaces=n_subspaces,
+        n_centroids=n_centroids, max_iter=max_iter,
     )
     codes = pq_codes(
         corpus, vec_col=vec_col, id_col=id_col, dim=dim,
@@ -1602,23 +1493,16 @@ def build_ivfpq_index(
     meta carries the coarse centroids, PQ codebooks and hyperparameters —
     everything ivfpq_serve needs, and what save_ivfpq_index persists."""
     df = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    # coarse quantizer → inverted-list assignment (one scan). The stride
-    # sample is pulled HERE (one bounded action) so the non-residual PQ
-    # codebook training below can reuse the identical rows instead of
-    # re-collecting them — r14: the build previously cost 2 probe + 2
-    # collect actions (4 passes over the sample); now 1 collect when the
-    # sample fits the driver bound and the strides match.
-    train = df if coarse_stride <= 1 else df.filter(
-        _stride_predicate(df, "id", coarse_stride)
-    )
-    sample = _bounded_sample(train)
+    # coarse quantizer → inverted-list assignment (one scan). The one
+    # kmeans_sample route here also decides the PQ training below when the
+    # strides match: the PQ sample is then the same rows (or their
+    # residuals), so it fits exactly when the coarse sample does.
+    train = _stride_sample(df, "id", coarse_stride)
+    sample = route("kmeans_sample", train)
     if sample is not None:
         coarse = _kmeans_local(sample, n_lists, coarse_iter)
     else:
-        coarse = kmeans_centroids(
-            corpus, vec_col=vec_col, id_col=id_col, k=n_lists,
-            max_iter=coarse_iter, train_stride=coarse_stride,
-        )
+        coarse = _lloyd_distributed(train, "vec", "id", n_lists, coarse_iter)
     assigned = _assign_nearest(df, "vec", coarse).select(
         "id", "vec", F.col("__cluster").alias("list_id")
     )
@@ -1640,24 +1524,21 @@ def build_ivfpq_index(
     # PQ codebooks + one code row per corpus vector; list_id rides through
     # pq_codes (passthrough) so serving is ONE scan — no self-join to
     # re-attach the inverted-list assignment
-    if sample is not None and pq_stride == coarse_stride:
-        # the collected coarse sample is row-for-row the PQ training
-        # sample (same source frame, same stride): non-residual trains on
-        # it directly (r14); residual trains on its DRIVER-COMPUTED
-        # residuals (r15) — the assignment arithmetic is the same numpy
-        # matmul the engine's matrix_dots pandas_udf runs (float64, argmax
-        # first-occurrence ties, half-norms via the same Python fold as
-        # _assign_nearest) and the subtraction is the same elementwise
-        # float64 op as the zip_with, so the rows are bit-identical and
-        # the second bounded collect (scan + assign + residual per build)
-        # disappears.
-        pq_sample = sample if not residual else _residual_rows_local(sample, coarse)
+    pq_train = _stride_sample(enc_src.select("id", "vec"), "id", pq_stride)
+    if pq_stride != coarse_stride:
+        pq_sample = route("kmeans_sample", pq_train)
+    elif sample is not None and residual:
+        # the residuals computed on the driver with the engine's own
+        # arithmetic (same numpy matmul as matrix_dots, first-occurrence
+        # argmax, the same Python half-norm fold, elementwise float64
+        # subtraction), so the rows are bit-identical to fetching the
+        # engine's residual frame, without that scan
+        pq_sample = _residual_rows_local(sample, coarse)
     else:
-        pq_sample = None
+        pq_sample = sample
     codebooks = _pq_codebooks(
-        enc_src.select("id", "vec"), dim=dim, n_subspaces=n_subspaces,
-        n_centroids=pq_centroids, max_iter=pq_iter, train_stride=pq_stride,
-        sample_rows=pq_sample,
+        pq_train, pq_sample, dim=dim, n_subspaces=n_subspaces,
+        n_centroids=pq_centroids, max_iter=pq_iter,
     )
     codes = pq_codes(
         enc_src, vec_col="vec", id_col="id", dim=dim,
@@ -1955,7 +1836,7 @@ def semantic_dedup(
     pairs = a.join(b, "cluster").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
     sides = assigned.select("id", "vec")
     dropped = (
-        _score_pairs_for(pairs, sides)
+        _score_pairs_for(pairs, sides, route("pair_scorer", sides, arrow=True))
         .filter(F.col("cosine") >= min_cosine)
         .select(F.col("id_b").alias("id"))
         .distinct()
@@ -2021,7 +1902,7 @@ def semantic_dedup_delta(
     )
     sides = old.select("id", "vec").unionByName(new_assigned.select("id", "vec"))
     dropped = (
-        _score_pairs_for(pairs, sides)
+        _score_pairs_for(pairs, sides, route("pair_scorer", sides, arrow=True))
         .filter(F.col("cosine") >= min_cosine)
         .select(F.col("id_a").alias("id"))
         .distinct()

@@ -27,19 +27,23 @@ BUILD_JOBS = {
 }
 
 # q_pagerank's eager calls include the weighted edge list checkpoint, the
-# iteration checkpoints, and the k-NN graph's id-sorted checkpoint and
-# corpus count
+# iteration checkpoints, and the k-NN graph's id-sorted checkpoint
 PAGERANK_SITES = {
     "operators/graph.py:59",
     "operators/graph.py:102",
-    "operators/similarity.py:928",
-    "operators/similarity.py:1198",
+    "operators/similarity.py:871",
 }
 
 
+def _paths(row) -> dict[str, str]:
+    return {r["name"]: r["path"] for r in row["routes"]}
+
+
 def test_build_jobs_are_pinned(spark, sf_dir):
-    got = {q: ledger.measure(spark, q, sf_dir)["build"]["jobs"] for q in BUILD_JOBS}
-    assert got == BUILD_JOBS
+    rows = {q: ledger.measure(spark, q, sf_dir) for q in BUILD_JOBS}
+    assert {q: r["build"]["jobs"] for q, r in rows.items()} == BUILD_JOBS
+    assert _paths(rows["q_mmr_diverse"]) == {"mmr_shortlist": "local", "mmr_pairs": "local"}
+    assert all(not r["routes"] for q, r in rows.items() if q != "q_mmr_diverse")
 
 
 def test_pagerank_sites_account_for_every_build_job(spark, sf_dir):
@@ -47,10 +51,11 @@ def test_pagerank_sites_account_for_every_build_job(spark, sf_dir):
     assert PAGERANK_SITES <= {s["site"] for s in row["sites"]}
     assert sum(s["jobs"] for s in row["sites"]) + row["unattributed"]["jobs"] == row["build"]["jobs"]
     assert row["attribution_ok"]
+    assert _paths(row) == {"pair_scorer": "local"}
     # not pinned: inside an iteration checkpoint (graph.py:102) AQE's runtime
     # broadcast conversion races the other join side's shuffle stage, which
     # is sometimes submitted as one more job before the re-plan drops it
-    assert 29 <= row["build"]["jobs"] <= 31 and row["plan"]["jobs"] == 0
+    assert 27 <= row["build"]["jobs"] <= 29 and row["plan"]["jobs"] == 0
 
 
 def test_inflate_copies_keys_disjointly_and_keeps_oracle_parity(spark, sf_dir, tmp_path):

@@ -145,30 +145,6 @@ def test_dedup_clusters_two_components(spark):
     assert out == {1: (1, 3), 2: (1, 3), 3: (1, 3), 10: (10, 2), 11: (10, 2)}
 
 
-def test_dedup_clusters_local_matches_distributed(spark, monkeypatch):
-    """r14: dedup_clusters grew a driver-local union-find under an edge
-    bound. Labels, sizes, and schema must match the distributed min-label
-    propagation on a graph with a chain (diameter > 1), a triangle-with-
-    tail, and singleton-free isolation."""
-    import syscol_spark.operators.dedup as D
-
-    edges = [(5, 4), (4, 3), (3, 2), (2, 1), (10, 11), (11, 12), (10, 12),
-             (12, 13), (20, 21)]
-    pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
-
-    def run():
-        out = D.dedup_clusters(pairs)
-        assert [f.name for f in out.schema.fields] == ["id", "cluster", "cluster_size"]
-        assert out.schema["cluster_size"].dataType.simpleString() == "bigint"
-        return sorted((r["id"], r["cluster"], r["cluster_size"]) for r in out.collect())
-
-    local = run()
-    monkeypatch.setattr(D, "_CC_LOCAL_LIMIT", -1)  # force distributed rounds
-    dist = run()
-    assert local == dist
-    assert local[0] == (1, 1, 5)
-
-
 def test_cosine_similarity_known_values(spark):
     from syscol_spark.functions.vectors import cosine_similarity
 
@@ -1200,9 +1176,10 @@ def test_bpe_batched_equals_sequential(spark):
 def test_bpe_batched_runs_fewer_rounds(spark, monkeypatch):
     """The probe for VERDICT #2's 'done' bar: 32 merges at batch=8 must
     take ≥4× fewer counting rounds (Spark actions) than sequential.
-    _BPE_LOCAL_LIMIT is forced to -1 so the DISTRIBUTED rounds (the path
-    this test probes) engage despite the r14 driver-local fast path."""
+    The bpe_vocab route is forced to -1 so the DISTRIBUTED rounds (the path
+    this test probes) engage despite the driver-local trainer."""
     import syscol_spark.operators.bpe as bpe
+    from syscol_spark.operators import route
 
     calls = {"n": 0}
     real = bpe._round_top_pairs
@@ -1212,7 +1189,7 @@ def test_bpe_batched_runs_fewer_rounds(spark, monkeypatch):
         return real(words, batch)
 
     monkeypatch.setattr(bpe, "_round_top_pairs", counting)
-    monkeypatch.setattr(bpe, "_BPE_LOCAL_LIMIT", -1)
+    monkeypatch.setitem(route.BOUNDS, "bpe_vocab", -1)
     df = spark.createDataFrame(
         [("the quick brown fox jumps over the lazy dog while many other words "
           "keep pair counts diverse enough for thirty two merges to exist",)],
@@ -1227,64 +1204,6 @@ def test_bpe_batched_runs_fewer_rounds(spark, monkeypatch):
     assert seq == 32 and bat == 32
     assert seq_rounds == 32
     assert bat_rounds * 4 <= seq_rounds, (seq_rounds, bat_rounds)
-
-
-def test_bpe_local_trainer_matches_distributed(spark, monkeypatch):
-    """r14: learn_bpe_merges grew a driver-local fast path (bounded collect
-    of the vocab table + pure-Python rounds). It must be bit-identical to
-    the distributed rounds — same merges, same order, same counts — at
-    batch=1 AND batch>1, including merge-with-skip corners (consecutive
-    pairs) and the '|' / multi-char symbol handling."""
-    import syscol_spark.operators.bpe as bpe
-
-    df = spark.createDataFrame(
-        [("banana bandana abab ababab the the the quick brown fox ba|na",),
-         ("low lower lowest newest widest banana abab cabab",)],
-        "text string",
-    )
-
-    def table(batch):
-        return [
-            (r["step"], r["left_sym"], r["right_sym"], r["merged"], r["freq"])
-            for r in bpe.learn_bpe_merges(df, "text", n_merges=10, batch=batch).collect()
-        ]
-
-    local_seq, local_bat = table(1), table(4)
-    monkeypatch.setattr(bpe, "_BPE_LOCAL_LIMIT", -1)  # force distributed
-    dist_seq, dist_bat = table(1), table(4)
-    assert local_seq == dist_seq
-    assert local_bat == dist_bat
-    assert len(local_seq) == 10
-
-
-def test_mmr_local_matches_distributed(spark, monkeypatch):
-    """r14: mmr_topk grew a driver-local greedy under a shortlist bound.
-    The selection trajectory (ids, steps, simq) must be bit-identical to
-    the distributed join+window loop on a corpus with near-duplicate
-    clusters (so the diversity penalty actually changes picks)."""
-    import math
-
-    import syscol_spark.operators.similarity as sim
-
-    rows = []
-    for i in range(40):
-        base = [math.sin(0.7 * i + 0.13 * j) for j in range(8)]
-        rows.append((i, [float(v) for v in base]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = df.where("vec_id < 3")
-
-    def run():
-        out = sim.mmr_topk(df, queries, k=4, shortlist=10, lam=0.6)
-        return sorted(
-            (r["query_id"], r["step"], r["neighbor_id"], r["simq"])
-            for r in out.collect()
-        )
-
-    local = run()
-    monkeypatch.setattr(sim, "_MMR_LOCAL_LIMIT", -1)  # force distributed loop
-    dist = run()
-    assert local == dist
-    assert len(local) == 3 * 4
 
 
 def test_residual_rows_local_matches_engine(spark):

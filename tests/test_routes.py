@@ -1,0 +1,152 @@
+"""Both sides of every driver-local / distributed route
+(syscol_spark/operators/route.py) compute the same result.
+
+Each case runs one input twice: as routed (at sf0.001 every bound is far
+above the input, so the local twin runs) and with one ``BOUNDS`` entry
+forced to -1 (the distributed twin). Both runs must take the expected path
+in exactly one decision, give the same columns and types, and, for a
+catalog query, match its DuckDB oracle. Catalog cases are the cheapest
+query that reaches each bound; synthetic cases cover shapes the sf0.001
+data lacks (its near-dup components are all pairs, and no document holds
+a '|').
+"""
+
+from __future__ import annotations
+
+import logging
+
+import pytest
+
+from scripts.parity import duck_connection, normalize, values_equal
+from syscol_spark.operators import route as R
+
+
+def _cc_chains(spark, sf_dir):
+    """A chain of diameter 4, a triangle with a tail, and a lone pair:
+    the distributed propagation needs several rounds to converge."""
+    from syscol_spark.operators.dedup import dedup_clusters
+
+    edges = [(5, 4), (4, 3), (3, 2), (2, 1), (10, 11), (11, 12), (10, 12),
+             (12, 13), (20, 21)]
+    return dedup_clusters(spark.createDataFrame(edges, ["id_a", "id_b"]))
+
+
+def _bpe_corners(batch):
+    """Merge-with-skip corners (consecutive pairs: 'abab', 'banana'), '|'
+    inside a word and multi-character symbols."""
+
+    def build(spark, sf_dir):
+        from syscol_spark.operators.bpe import learn_bpe_merges
+
+        df = spark.createDataFrame(
+            [("banana bandana abab ababab the the the quick brown fox ba|na",),
+             ("low lower lowest newest widest banana abab cabab",)],
+            "text string",
+        )
+        return learn_bpe_merges(df, "text", n_merges=10, batch=batch)
+
+    build.__name__ = f"bpe_corners_batch{batch}"
+    return build
+
+
+CASES = [
+    ("mmr_shortlist", "q_mmr_diverse"),
+    ("mmr_pairs", "q_mmr_diverse"),
+    ("kmeans_sample", "q_ann_ivf"),
+    # over the bound, band_bits="auto" counts the corpus itself
+    ("pair_scorer", "q_knn_graph"),
+    ("bpe_vocab", "q_bpe_vocab_batched"),
+    ("bpe_vocab", _bpe_corners(1)),
+    ("bpe_vocab", _bpe_corners(4)),
+    ("cc_edges", "q_dedup_clusters"),
+    ("cc_edges", _cc_chains),
+]
+
+
+def _case_id(case) -> str:
+    name, src = case
+    return f"{name}-{src if isinstance(src, str) else src.__name__.strip('_')}"
+
+
+def _run(spark, sf_dir, src, caplog, name):
+    """(column names and types, sorted normalized rows, paths taken by ``name``)."""
+    from syscol_spark.plans.catalog import QUERIES, _ensure_loaded
+
+    _ensure_loaded()
+    caplog.clear()
+    with caplog.at_level(logging.DEBUG, logger="syscol_spark.route"):
+        df = QUERIES[src].builder(spark, sf_dir) if isinstance(src, str) else src(spark, sf_dir)
+        cols = [c.lower() for c in df.columns]
+        rows = normalize([tuple(r) for r in df.collect()], cols)
+    paths = [r.route["path"] for r in caplog.records if getattr(r, "route", {}).get("name") == name]
+    return [(f.name.lower(), f.dataType) for f in df.schema.fields], cols, rows, paths
+
+
+def _same(got, want) -> bool:
+    return len(got) == len(want) and all(
+        len(g) == len(w) and all(values_equal(x, y) for x, y in zip(g, w))
+        for g, w in zip(got, want)
+    )
+
+
+@pytest.mark.parametrize("case", CASES, ids=_case_id)
+def test_forced_route_matches_local_and_oracle(spark, sf_dir, monkeypatch, caplog, case):
+    name, src = case
+    types, cols, local, paths = _run(spark, sf_dir, src, caplog, name)
+    assert paths == ["local"]
+    monkeypatch.setitem(R.BOUNDS, name, -1)
+    f_types, _, forced, f_paths = _run(spark, sf_dir, src, caplog, name)
+    assert f_paths == ["distributed"]
+    assert f_types == types
+    assert len(local) > 0 and _same(forced, local)
+    if isinstance(src, str):
+        from syscol_spark.plans.catalog import QUERIES
+
+        con = duck_connection(sf_dir)
+        rel = con.sql(QUERIES[src].oracle)
+        want_cols = [c.lower() for c in rel.columns]
+        assert sorted(want_cols) == sorted(cols)
+        assert _same(forced, normalize(rel.fetchall(), want_cols))
+
+
+@pytest.mark.parametrize("trainer", ["ivfpq", "ivfpq_residual", "pq_adc"])
+def test_pq_training_decides_once_over_the_bound(spark, monkeypatch, caplog, trainer):
+    """Over the kmeans_sample bound the coarse quantizer and every PQ
+    subspace train distributed from ONE probe (no re-probe per trainer),
+    and the result agrees with the driver-local trainer's."""
+    import math
+
+    import numpy as np
+
+    import syscol_spark.operators.similarity as sim
+
+    rows = [(i, [math.sin(0.37 * i + 0.11 * j) for j in range(8)]) for i in range(64)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def build():
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger="syscol_spark.route"):
+            if trainer == "pq_adc":
+                out = sim.pq_adc_topk(
+                    corpus, corpus.filter("vec_id < 4"), dim=8, n_subspaces=2,
+                    n_centroids=4, max_iter=2, train_stride=2, k=3,
+                )
+                out = normalize([tuple(r) for r in out.collect()], out.columns)
+            else:
+                _, meta = sim.build_ivfpq_index(
+                    corpus, dim=8, n_lists=4, coarse_iter=2, coarse_stride=2, n_subspaces=2,
+                    pq_centroids=4, pq_iter=2, pq_stride=2, residual=trainer == "ivfpq_residual",
+                )
+                out = np.array(meta["coarse"]), np.array(meta["codebooks"])
+        return out, [r.route["path"] for r in caplog.records if hasattr(r, "route")]
+
+    local, paths = build()
+    assert paths == ["local"]
+    monkeypatch.setitem(R.BOUNDS, "kmeans_sample", -1)
+    dist, paths = build()
+    assert paths == ["distributed"]
+    if trainer == "pq_adc":
+        assert len(local) == 12 and _same(dist, local)
+    else:
+        for d, want in zip(dist, local):
+            assert np.allclose(d, want, rtol=0, atol=1e-12)
