@@ -267,12 +267,9 @@ def srp_gaussian_dots(vec: Column | str, dim: int, n_planes: int, seed: int = 42
 
 
 def _pack_sign_bits(dots: Column, n_planes: int) -> Column:
-    """Bucket id: sign bits of the plane dots packed into a long."""
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        d = F.element_at(dots, p + 1)
-        bucket = bucket.bitwiseOR(F.when(d >= 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long")))
-    return bucket
+    """Bucket id: sign bits of the plane dots packed into a long (one band
+    of srp_keys_from_sums)."""
+    return srp_keys_from_sums(dots, n_bands=1, band_bits=n_planes)[0]
 
 
 def srp_bucket(vec: Column | str, dim: int, n_planes: int = 8, seed: int = 42) -> Column:
@@ -338,19 +335,20 @@ def srp_topk(
     return scored.select("*", F.row_number().over(w).cast("long").alias("rk")).filter(F.col("rk") <= k)
 
 
-# --- IVF: inverted-file ANN over a coarse k-means quantizer -----------------
+# --- Quantizer core (nearest-centroid kernel, k-means trainer) and IVF ------
 
 def matrix_dots(vec: Column | str, matrix: list[list[float]]) -> Column:
     """Array of dot products <vec, row_j> for every row of a plan-time
     matrix literal, via one Arrow-batched BLAS matmul
     (batch x dim) @ (dim x n_rows) — same rationale as srp_plane_sums:
-    the interpreted higher-order fold this replaced cost O(dim*n_rows)
-    lambda-ops per ROW (64*16 ≈ 1k for the IVF quantizer), the matmul is
-    effectively free per batch. Summation order differs from a fold, but
-    the SQL oracle twin sums in ITS own (group-by) order too — both
-    engines' scores agree to ~1e-13 relative, far beyond any argmax
-    margin observed in the fixtures (see srp_plane_sums for the same
-    argument with measured margins)."""
+    an interpreted higher-order fold costs O(dim*n_rows) lambda-ops per
+    ROW, the matmul is effectively free per batch. Summation order differs
+    from a fold, but the SQL oracle twin sums in ITS own (group-by) order
+    too — both engines' scores agree to ~1e-13 relative, far beyond any
+    argmax margin observed in the fixtures (see srp_plane_sums for the same
+    argument with measured margins). The nprobe ranking (_probe_lists)
+    reads every score; a nearest-centroid assignment only needs the
+    argmax and runs _pq_assign_codes instead."""
     from pyspark.sql.functions import pandas_udf
 
     m_t = np.array(matrix, dtype="float64").T  # (dim, n_rows)
@@ -361,6 +359,51 @@ def matrix_dots(vec: Column | str, matrix: list[list[float]]) -> Column:
         return pd.Series(list(b @ m_t))
 
     return _dots(F.col(vec) if isinstance(vec, str) else vec)
+
+
+def _half_norms(centroids) -> list[float]:
+    """|c|^2 / 2 per centroid as a Python float left fold: the term every
+    nearest-centroid score and the nprobe ranking subtract, via the
+    identity argmin |v-c|^2 = argmax (<v,c> - |c|^2/2)."""
+    return [sum(x * x for x in c) / 2.0 for c in centroids]
+
+
+def _nearest_kernel(codebooks):
+    """The one nearest-centroid argmax. Returns a function of a float64
+    (n, n_subspaces * sub) array giving the (n, n_subspaces) int32 codes:
+    per subspace, a (n, sub) @ (sub, k) dgemm on the contiguous slice,
+    minus the _half_norms, first maximum on ties. One centroid set is the
+    coarse quantizer (sub = dim). The engine (_pq_assign_codes) and the
+    driver-local trainer and residuals run this same function, so their
+    assignments agree bit for bit on the same machine."""
+    mats_t = [np.array(cb, dtype="float64").T for cb in codebooks]  # (sub, k) views
+    halfs = [np.array(_half_norms(cb), dtype="float64") for cb in codebooks]
+    sub = mats_t[0].shape[0]
+
+    def nearest(x: np.ndarray) -> np.ndarray:
+        out = np.empty((x.shape[0], len(mats_t)), dtype="int32")
+        for s, m_t in enumerate(mats_t):
+            sl = np.ascontiguousarray(x[:, s * sub:(s + 1) * sub])
+            out[:, s] = np.argmax(sl @ m_t - halfs[s][None, :], axis=1)
+        return out
+
+    return nearest
+
+
+def _pq_assign_codes(vec: Column | str, codebooks: list[list[list[float]]]) -> Column:
+    """Nearest-centroid codes of every subspace in ONE Arrow crossing, as
+    an array<int> column (_nearest_kernel per batch). One column, not a
+    transformation per subspace: such a chain cost a measured ~1.3 s of
+    DRIVER plan-construction wall per index build (r14)."""
+    from pyspark.sql.functions import pandas_udf
+
+    nearest = _nearest_kernel(codebooks)
+
+    @pandas_udf("array<int>")
+    def _codes(v: pd.Series) -> pd.Series:
+        return pd.Series(list(nearest(np.stack(v.to_numpy()).astype("float64"))))
+
+    return _codes(F.col(vec) if isinstance(vec, str) else vec)
 
 
 def _stride_sample(df: DataFrame, id_col: str, stride: int) -> DataFrame:
@@ -387,19 +430,18 @@ def kmeans_centroids(
     max_iter: int = 5,
     train_stride: int = 1,
 ) -> list[list[float]]:
-    """Deterministic Lloyd's k-means as DataFrame aggregations.
+    """Deterministic Lloyd's k-means (_train_codebooks with one subspace).
 
     Init = the k vectors with the LOWEST ids (deterministic — no RNG, so
     runs are reproducible across clusters; plant better seeds upstream if
-    needed). Each iteration: assign every vector to its nearest centroid
-    (one scan; all k distances via one matrix_dots matmul against the
-    broadcast-as-literal centroid matrix) then recompute means with
-    posexplode + groupBy (one shuffle of k*dim partial sums per partition —
-    map-side combined, so shuffle volume is executors*k*dim, independent of
-    corpus size). The driver holds only the k*dim centroid matrix; the
-    corpus never leaves the cluster. Empty clusters keep their previous
-    centroid. Squared-L2 argmin via the identity
-    argmin |v-c|^2 = argmax (<v,c> - |c|^2/2).
+    needed). Each iteration assigns every vector to its nearest centroid
+    (_nearest_kernel) and moves each centroid to the mean of its members.
+    Empty clusters keep their previous centroid; training stops at an exact
+    fixpoint or after ``max_iter`` iterations. Under the ``kmeans_sample``
+    bound the training set is fetched once and iterated in numpy; over it,
+    each iteration is one scan plus a groupBy of k*dim partial sums
+    (map-side combined, so shuffle volume is independent of corpus size).
+    The driver holds only the k*dim centroid matrix.
 
     ``train_stride > 1`` trains the quantizer on the deterministic sample
     ``id % train_stride == 0`` instead of the full corpus — THE scale
@@ -409,67 +451,99 @@ def kmeans_centroids(
     stride sample (ids are dense) is uniform, deterministic, and exactly
     mirrorable in a SQL oracle twin (WHERE id % stride = 0) — unlike
     df.sample, whose RNG is engine-private."""
-    train = _stride_sample(corpus.select(id_col, vec_col), id_col, train_stride)
-    # A coarse quantizer's training set is small by design (that is what
-    # the stride sample is for, ~1000 points per centroid), so under the
-    # bound it is pulled once and Lloyd's runs in numpy: no Spark job per
-    # iteration.
-    sample = route("kmeans_sample", train)
-    if sample is not None:
-        return _kmeans_local(sample, k, max_iter)
-    return _lloyd_distributed(train, vec_col, id_col, k, max_iter)
+    train = _stride_sample(
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")), "id", train_stride
+    )
+    return _train_codebooks(train, route("kmeans_sample", train), k, max_iter, 1)[0]
+
+
+def _train_codebooks(
+    train: DataFrame | None, sample: list | None, k: int, max_iter: int, n_subspaces: int
+) -> list[list[list[float]]]:
+    """The one k-means trainer: a codebook of ``k`` centroids for each of
+    ``n_subspaces`` contiguous subspaces of the (id, vec) training frame
+    ``train``, given its ``kmeans_sample`` route result ``sample``. One
+    subspace is the coarse quantizer. Under the bound every slice of the
+    fetched sample trains in numpy (_kmeans_local; float32→float64
+    widening is elementwise, so slicing on the driver equals slicing in
+    the engine); over it _lloyd_distributed trains all subspaces in one
+    loop."""
+    if sample is None:
+        return _lloyd_distributed(train, k, max_iter, n_subspaces)
+    sub = _sub_width(len(sample[0][1]), n_subspaces)
+    return [
+        _kmeans_local([(r[0], r[1][s * sub:(s + 1) * sub]) for r in sample], k, max_iter)
+        for s in range(n_subspaces)
+    ]
 
 
 def _lloyd_distributed(
-    train: DataFrame, vec_col: str, id_col: str, k: int, max_iter: int
-) -> list[list[float]]:
-    """kmeans_centroids' distributed twin over an over-bound training frame.
-    Training re-scans it max_iter+1 times (seed pick, one assignment+sum per
-    iteration), so the frame is persisted for the duration and only the
-    first action pays the source read; it is unpersisted before returning
-    because the serving scan reads the source."""
+    train: DataFrame, k: int, max_iter: int, n_subspaces: int
+) -> list[list[list[float]]]:
+    """_train_codebooks' distributed twin over an over-bound (id, vec)
+    training frame: every subspace in one Lloyd's loop. The seeds are one
+    fetch of the k lowest-id rows; each iteration is one fused assignment
+    of the subspaces still moving and one collect of their
+    (subspace, cluster, element) sums. A subspace that reaches its
+    fixpoint is frozen, so each codebook is what a loop over that subspace
+    alone gives, and the job count does not grow with ``n_subspaces``.
+    The frame is re-scanned once per iteration, so it is persisted for
+    the duration (only the first action pays the source read) and
+    unpersisted before returning, because the serving scan reads the
+    source."""
     train = train.persist()
     try:
-        seed_rows = train.orderBy(id_col).limit(k).select(vec_col).collect()
-        centroids = [[float(x) for x in r[0]] for r in seed_rows]
-        dim = len(centroids[0])
+        seeds = [
+            [float(x) for x in r[0]]
+            for r in train.orderBy("id").limit(k).select("vec").collect()
+        ]
+        sub = _sub_width(len(seeds[0]), n_subspaces)
+        books = [[row[s * sub:(s + 1) * sub] for row in seeds] for s in range(n_subspaces)]
+        moving = list(range(n_subspaces))
         for _ in range(max_iter):
-            assigned = _assign_nearest(train, vec_col, centroids)
-            sums = (
-                assigned.select("__cluster", F.posexplode(F.col(vec_col)).alias("__i", "__x"))
-                .groupBy("__cluster", "__i")
+            # the moving subspaces' slices side by side: position p of the
+            # codes array is subspace moving[p]
+            vec = F.concat(*[F.slice("vec", s * sub + 1, sub) for s in moving])
+            assigned = train.select(vec.alias("__v")).withColumn(
+                "__codes", _pq_assign_codes("__v", [books[s] for s in moving])
+            )
+            rows = (
+                assigned.select("__codes", F.posexplode("__v").alias("__i", "__x"))
+                .select(
+                    F.expr(f"CAST(__i div {sub} AS INT)").alias("__p"),
+                    F.expr(f"__i % {sub}").alias("__j"),
+                    "__codes", "__x",
+                )
+                .groupBy("__p", F.element_at("__codes", F.col("__p") + 1).alias("__c"), "__j")
                 .agg(F.sum(F.col("__x").cast("double")).alias("s"), F.count(F.lit(1)).alias("n"))
                 .collect()
             )
-            new_c = [list(c) for c in centroids]
-            acc: dict[int, list[float]] = {}
-            cnt: dict[int, int] = {}
-            for r in sums:
-                acc.setdefault(r["__cluster"], [0.0] * dim)[r["__i"]] = r["s"]
-                cnt[r["__cluster"]] = r["n"]
-            for c_idx, vec in acc.items():
-                new_c[c_idx] = [x / cnt[c_idx] for x in vec]
-            if new_c == centroids:
+            # empty clusters keep their centroid
+            new = {s: [list(c) for c in books[s]] for s in moving}
+            for r in rows:
+                new[moving[r["__p"]]][r["__c"]][r["__j"]] = r["s"] / r["n"]
+            # a codebook that did not move is at its fixpoint: frozen
+            moving = [s for s in moving if new[s] != books[s]]
+            for s in moving:
+                books[s] = new[s]
+            if not moving:
                 break
-            centroids = new_c
-        return centroids
+        return books
     finally:
         train.unpersist()
 
 
 def _kmeans_local(rows: list, k: int, max_iter: int) -> list[list[float]]:
-    """Lloyd's on a collected (id, vec) sample — numerically the same
-    procedure as the distributed path (seeds = k lowest ids, squared-L2
-    argmin via argmax(<v,c> - |c|^2/2) with ties to the LOWEST cluster
-    (np.argmax returns the first max), means per cluster, empty clusters
-    keep their centroid, stop on exact fixpoint), so the unrolled-CTE SQL
-    oracle mirrors it identically (summation-order ulps aside, as ever)."""
+    """Lloyd's on a collected (id, vec) sample — the same procedure as the
+    distributed loop (seeds = k lowest ids, _nearest_kernel assignment,
+    means per cluster, empty clusters keep their centroid, stop on exact
+    fixpoint), so the unrolled-CTE SQL oracle mirrors it identically
+    (summation-order ulps aside, as ever)."""
     rows = sorted(rows, key=lambda r: r[0])
     x = np.array([[float(v) for v in r[1]] for r in rows], dtype="float64")
     c = x[:k].copy()
     for _ in range(max_iter):
-        scores = x @ c.T - 0.5 * (c * c).sum(axis=1)
-        assign = scores.argmax(axis=1)
+        assign = _nearest_kernel([c])(x)[:, 0]
         new_c = c.copy()
         for j in range(k):
             members = x[assign == j]
@@ -479,55 +553,6 @@ def _kmeans_local(rows: list, k: int, max_iter: int) -> list[list[float]]:
             break
         c = new_c
     return [[float(v) for v in row] for row in c]
-
-
-def _residual_rows_local(rows: list, centroids: list[list[float]]) -> list:
-    """Driver-side twin of the engine's residual encoding for an
-    already-collected (id, vec) sample: assign each vector to its nearest
-    centroid with EXACTLY the engine's arithmetic (_assign_nearest computes
-    dots via matrix_dots — a numpy float64 matmul inside a pandas_udf —
-    minus half-norms built by a Python sum() fold, argmax with
-    first-occurrence ties), then subtract the assigned centroid
-    elementwise in float64 (the zip_with op). Same machine, same numpy,
-    same op order ⇒ the residual rows are bit-identical to what a bounded
-    collect of the engine-computed residual frame would return, without
-    the extra scan+collect job per residual index build (r15)."""
-    ids = [r[0] for r in rows]
-    x = np.array([[float(v) for v in r[1]] for r in rows], dtype="float64")
-    c = np.array(centroids, dtype="float64")
-    half_norms = np.array([sum(v * v for v in cc) / 2.0 for cc in centroids])
-    assign = (x @ c.T - half_norms).argmax(axis=1)
-    res = x - c[assign]
-    return [(i, row.tolist()) for i, row in zip(ids, res)]
-
-
-def _matrix_lit(matrix: list[list[float]]) -> Column:
-    """array<array<double>> literal built as ONE parsed SQL expression.
-    Constructing it as nested F.array(F.lit(...)) costs one py4j round trip
-    per element — ~0.7 s of DRIVER wall for a 16x64 coarse-centroid matrix
-    (measured r14), paid once per index build AND once per serve; the
-    single F.expr parse is ~5 ms. repr(float) is the shortest round-trip
-    decimal and CAST('<repr>' AS DOUBLE) re-parses it to identical bits
-    (verified bitwise incl. -0.0 and subnormals), so the evaluated plan
-    values are unchanged."""
-    return F.expr(
-        "array(" + ",".join(
-            "array(" + ",".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in row) + ")"
-            for row in matrix
-        ) + ")"
-    )
-
-
-def _assign_nearest(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
-    """Attach __cluster = index of the nearest centroid (squared L2)."""
-    half_norms = [sum(x * x for x in c) / 2.0 for c in centroids]
-    dots = matrix_dots(vec_col, centroids)
-    base = df.withColumn("__dots", dots)  # projection barrier for the fold
-    score = F.zip_with(
-        F.col("__dots"), F.array(*[F.lit(h) for h in half_norms]), lambda d, h: d - h
-    )
-    cluster = (F.array_position(score, F.array_max(score)) - 1).cast("int")
-    return base.withColumn("__cluster", cluster).drop("__dots")
 
 
 def ivf_topk(
@@ -558,23 +583,13 @@ def ivf_topk(
         train_stride=train_stride,
     )
     c = _assign_nearest(corpus, vec_col, centroids).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), F.col("__cluster").alias("list_id")
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
+        F.col("__cluster").alias("list_id"),
     )
-    half_norms = [sum(x * x for x in cc) / 2.0 for cc in centroids]
-    qb = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-        matrix_dots(vec_col, centroids).alias("__dots"),
+    q = _probe_lists(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
+        "q_vec", centroids, nprobe,
     )
-    scored_lists = F.zip_with(
-        F.col("__dots"), F.array(*[F.lit(h) for h in half_norms]), lambda d, h: d - h
-    )
-    ranked = F.transform(
-        scored_lists, lambda s, i: F.struct(s.alias("score"), i.cast("int").alias("idx"))
-    )
-    probes = F.slice(F.reverse(F.array_sort(ranked)), 1, nprobe)
-    q = qb.select(
-        "query_id", "q_vec", F.explode(probes).alias("__p")
-    ).select("query_id", "q_vec", F.col("__p.idx").alias("list_id"))
     scored = (
         c.join(broadcast(q), "list_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -600,16 +615,6 @@ def rademacher_signs(dim: int, plane: int, seed: int = 42) -> list[float]:
         x ^= x >> 33
         out.append(1.0 if x & 1 else -1.0)
     return out
-
-
-def _signed_fold(vec: Column | str, signs: list[float]) -> Column:
-    """Left-fold sum of sign-flipped components, in index order, starting
-    from 0.0 — the fold shape a SQL list_reduce twin reproduces exactly."""
-    v = F.col(vec) if isinstance(vec, str) else vec
-    s = F.array(*[F.lit(x) for x in signs])
-    return F.aggregate(
-        F.zip_with(v, s, lambda a, b: a.cast("double") * b), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 def srp_plane_sums(vec: Column | str, dim: int, n_planes: int, seed: int = 42) -> Column:
@@ -796,15 +801,10 @@ def _srp_candidate_pairs(
     # each of the n_bands key expressions, re-evaluating the whole fold per
     # key (measured 8x plan blowup, ~4x wall time on q_embed_neardup).
     def keys_of(s: Column) -> Column:
-        out = []
-        for band in range(n_bands):
-            key = F.lit(0).cast("long")
-            for j in range(band_bits):
-                d = F.element_at(s, band * band_bits + j + 1)
-                key = key.bitwiseOR(
-                    F.when(d >= 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long"))
-                )
-            out.append(F.struct(F.lit(band).alias("band"), key.alias("key")))
+        out = [
+            F.struct(F.lit(band).alias("band"), key.alias("key"))
+            for band, key in enumerate(srp_keys_from_sums(s, n_bands=n_bands, band_bits=band_bits))
+        ]
         # the capped path also needs the plane-0/plane-1 dots as SCALARS:
         # computing them here, inside the same bind-once lambda, reuses the
         # one fold evaluation (element_at(sums, i) outside it would re-run
@@ -1124,42 +1124,96 @@ def knn_graph(
     return sym.select("*", F.row_number().over(w).cast("long").alias("rk")).filter(F.col("rk") <= k)
 
 
-def _pq_codebooks(
-    train: DataFrame,
-    sample: list | None,
-    *,
-    dim: int,
-    n_subspaces: int,
-    n_centroids: int,
-    max_iter: int,
-) -> list[list[list[float]]]:
-    """Per-subspace PQ codebooks from the (id, vec) training frame
-    ``train`` and its ``kmeans_sample`` route, ``sample``: under the bound
-    every subspace trains from the one fetched sample (_kmeans_local on
-    numpy slices is numerically identical to slicing inside the engine;
-    float32→float64 widening is elementwise), otherwise each subspace runs
-    the distributed Lloyd's over its slice of ``train``."""
+# --- IVF lists: nearest-list assignment, residuals, nprobe ranking ---------
+
+def _assign_nearest(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
+    """Attach __cluster = index of the nearest centroid (squared L2)."""
+    return df.withColumn("__cluster", F.element_at(_pq_assign_codes(vec_col, [centroids]), 1))
+
+
+def _matrix_lit(matrix: list[list[float]]) -> Column:
+    """array<array<double>> literal built as ONE parsed SQL expression.
+    Constructing it as nested F.array(F.lit(...)) costs one py4j round trip
+    per element — ~0.7 s of DRIVER wall for a 16x64 coarse-centroid matrix
+    (measured r14), paid once per index build AND once per serve; the
+    single F.expr parse is ~5 ms. repr(float) is the shortest round-trip
+    decimal and CAST('<repr>' AS DOUBLE) re-parses it to identical bits
+    (verified bitwise incl. -0.0 and subnormals), so the evaluated plan
+    values are unchanged."""
+    return F.expr(
+        "array(" + ",".join(
+            "array(" + ",".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in row) + ")"
+            for row in matrix
+        ) + ")"
+    )
+
+
+def _residual(vec: Column, list_id: Column, coarse: list[list[float]]) -> Column:
+    """vec − coarse[list_id], elementwise in float64 against the centroid
+    matrix literal: one column expression, no scan or join."""
+    return F.zip_with(
+        vec, F.element_at(_matrix_lit(coarse), list_id + 1), lambda a, b: a.cast("double") - b
+    )
+
+
+def _inverted_lists(df: DataFrame, coarse: list[list[float]], residual: bool) -> DataFrame:
+    """(id, vec) → (id, vec, list_id): each vector's nearest coarse list,
+    with ``vec`` replaced by its residual to that list's centroid when
+    ``residual``. The encoding source of an IVF-PQ index."""
+    assigned = _assign_nearest(df, "vec", coarse).select(
+        "id", "vec", F.col("__cluster").alias("list_id")
+    )
+    if not residual:
+        return assigned
+    return assigned.select(
+        "id", _residual(F.col("vec"), F.col("list_id"), coarse).alias("vec"), "list_id"
+    )
+
+
+def _residual_rows_local(rows: list, centroids: list[list[float]]) -> list:
+    """Driver-side twin of _inverted_lists' residual for an
+    already-collected (id, vec) sample: the same _nearest_kernel
+    assignment, then the assigned centroid subtracted elementwise in
+    float64 (the _residual op). Same machine, same numpy, same op order ⇒
+    the rows are bit-identical to a bounded collect of the engine's
+    residual frame, without the extra scan+collect job per residual index
+    build (r15)."""
+    ids = [r[0] for r in rows]
+    x = np.array([[float(v) for v in r[1]] for r in rows], dtype="float64")
+    c = np.array(centroids, dtype="float64")
+    res = x - c[_nearest_kernel([centroids])(x)[:, 0]]
+    return [(i, row.tolist()) for i, row in zip(ids, res)]
+
+
+def _probe_lists(queries: DataFrame, vec: str, coarse: list[list[float]], nprobe: int) -> DataFrame:
+    """``queries`` with one row per probed list (column ``list_id``): the
+    ``nprobe`` coarse lists whose centroids score highest
+    (<q,c> - |c|^2/2 descending, ties to the higher list index) — the
+    ranking the oracle chains mirror."""
+    cols = queries.columns
+    scores = F.zip_with(
+        F.col("__dots"), F.array(*[F.lit(h) for h in _half_norms(coarse)]), lambda d, h: d - h
+    )
+    ranked = F.transform(scores, lambda s, i: F.struct(s.alias("score"), i.cast("int").alias("idx")))
+    probes = F.slice(F.reverse(F.array_sort(ranked)), 1, nprobe)
+    return (
+        queries.withColumn("__dots", matrix_dots(vec, coarse))
+        .select(*cols, F.explode(probes).alias("__p"))
+        .select(*cols, F.col("__p.idx").alias("list_id"))
+    )
+
+
+# --- PQ: product quantization, alone and under IVF lists (IVF-PQ) ----------
+
+def _sub_width(dim: int, n_subspaces: int) -> int:
+    """Width of each of ``n_subspaces`` contiguous subspaces of a ``dim``
+    vector; raises rather than drop trailing dimensions."""
     if dim % n_subspaces:
         raise ValueError(
             f"dim={dim} not divisible by n_subspaces={n_subspaces}: the trailing "
             f"{dim % n_subspaces} dimensions would be silently dropped from every code"
         )
-    sub = dim // n_subspaces
-    if sample is not None:
-        return [
-            _kmeans_local(
-                [(r[0], r[1][s * sub : (s + 1) * sub]) for r in sample],
-                n_centroids, max_iter,
-            )
-            for s in range(n_subspaces)
-        ]
-    return [
-        _lloyd_distributed(
-            train.select("id", F.slice(F.col("vec"), s * sub + 1, sub).alias("__sub")),
-            "__sub", "id", n_centroids, max_iter,
-        )
-        for s in range(n_subspaces)
-    ]
+    return dim // n_subspaces
 
 
 def pq_codes(
@@ -1184,10 +1238,11 @@ def pq_codes(
     vector compresses to a 4-byte code word (64x) — the memory layout an
     ANN index at 100 TB actually serves from.
 
-    Serving is ONE corpus scan: all n_subspaces assignments are column
-    expressions (matrix_dots against codebook literals) stacked on the same
-    frame — no joins, no Python. Training cost is n_subspaces bounded
-    k-means runs on the stride sample.
+    Serving is ONE corpus scan: all n_subspaces assignments are one fused
+    Arrow column (_pq_assign_codes against the codebooks) — no joins.
+    Training is _train_codebooks on the stride sample: one bounded fetch,
+    then numpy per subspace, or over the bound one distributed loop for
+    all subspaces.
 
     Output: (id, c0..c{S-1} int codes, pq_code packed long, *passthrough),
     fully mirrorable by per-subspace unrolled-CTE oracles (q_embed_pq).
@@ -1195,25 +1250,17 @@ def pq_codes(
     precomputed inverted-list id — so callers composing codes with other
     per-vector state don't pay a self-join to re-attach it.
     """
-    if dim % n_subspaces:
-        raise ValueError(
-            f"dim={dim} not divisible by n_subspaces={n_subspaces}: the trailing "
-            f"{dim % n_subspaces} dimensions would be silently dropped from every code"
-        )
-    sub = dim // n_subspaces
+    _sub_width(dim, n_subspaces)
     bits = max(1, (n_centroids - 1).bit_length())
     df = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), *passthrough
     )
     if codebooks is None:
         train = _stride_sample(df.select("id", "vec"), "id", train_stride)
-        codebooks = _pq_codebooks(
-            train, route("kmeans_sample", train), dim=dim, n_subspaces=n_subspaces,
-            n_centroids=n_centroids, max_iter=max_iter,
+        codebooks = _train_codebooks(
+            train, route("kmeans_sample", train), n_centroids, max_iter, n_subspaces
         )
-    # one fused Arrow crossing for all n_subspaces assignments (bit-identical
-    # to the former per-subspace _assign_nearest chain — see _pq_assign_codes)
-    df = df.withColumn("__codes", _pq_assign_codes(F.col("vec"), codebooks, sub))
+    df = df.withColumn("__codes", _pq_assign_codes(F.col("vec"), codebooks))
     code_cols = [
         F.element_at("__codes", s + 1).alias(f"c{s}") for s in range(n_subspaces)
     ]
@@ -1268,9 +1315,8 @@ def pq_adc_topk(
     train = _stride_sample(
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")), "id", train_stride
     )
-    codebooks = _pq_codebooks(
-        train, route("kmeans_sample", train), dim=dim, n_subspaces=n_subspaces,
-        n_centroids=n_centroids, max_iter=max_iter,
+    codebooks = _train_codebooks(
+        train, route("kmeans_sample", train), n_centroids, max_iter, n_subspaces
     )
     codes = pq_codes(
         corpus, vec_col=vec_col, id_col=id_col, dim=dim,
@@ -1280,39 +1326,6 @@ def pq_adc_topk(
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"))
     scored = _adc_scored(codes, q, codebooks, id_col=id_col)
     return _top_per_query(scored, "adc_dist", k)
-
-
-def _pq_assign_codes(vec: Column | str, codebooks: list[list[list[float]]], sub: int) -> Column:
-    """ALL n_subspaces PQ code assignments in ONE Arrow crossing, as an
-    array<int> column — replaces the chained per-subspace
-    slice → _assign_nearest loop, whose ~40 DataFrame/py4j transformations
-    cost a measured ~1.3 s of pure DRIVER plan-construction wall per index
-    build (r14). Arithmetic is replicated step-for-step so the codes are
-    bit-identical to the loop's: the sub-slice is made contiguous before
-    the same (batch, sub) @ (sub, k) dgemm matrix_dots ran, the half-norms
-    are the same Python-float sums _assign_nearest embedded as literals
-    (subtracted elementwise in float64, same as the JVM zip_with), and
-    np.argmax takes the first maximum exactly like
-    array_position(score, array_max(score)))."""
-    from pyspark.sql.functions import pandas_udf
-
-    mats_t = [np.array(cb, dtype="float64").T for cb in codebooks]  # (sub, k) views
-    halfs = [
-        np.array([sum(x * x for x in row) / 2.0 for row in cb], dtype="float64")
-        for cb in codebooks
-    ]
-
-    @pandas_udf("array<int>")
-    def _codes(v: pd.Series) -> pd.Series:
-        b = np.stack(v.to_numpy()).astype("float64")  # (batch, dim)
-        out = np.empty((b.shape[0], len(mats_t)), dtype="int32")
-        for s, m_t in enumerate(mats_t):
-            sl = np.ascontiguousarray(b[:, s * sub:(s + 1) * sub])
-            score = sl @ m_t - halfs[s][None, :]
-            out[:, s] = np.argmax(score, axis=1)
-        return pd.Series(list(out))
-
-    return _codes(F.col(vec) if isinstance(vec, str) else vec)
 
 
 def _pq_dist_tables(vec: Column | str, codebooks: list[list[list[float]]], sub: int) -> Column:
@@ -1488,70 +1501,35 @@ def build_ivfpq_index(
     pq_stride: int = 1,
     residual: bool = False,
 ) -> tuple[DataFrame, dict]:
-    """Index half of IVF+PQ: one corpus scan to (id, c0.., pq_code,
-    list_id) plus the plan-time quantizer state. Returns (codes, meta);
-    meta carries the coarse centroids, PQ codebooks and hyperparameters —
-    everything ivfpq_serve needs, and what save_ivfpq_index persists."""
+    """Index half of IVF+PQ: train the quantizers, then encode the corpus
+    with them through ivfpq_append — one corpus scan to (id, c0..,
+    pq_code, list_id). Returns (codes, meta); meta carries the coarse
+    centroids, PQ codebooks and hyperparameters — everything ivfpq_serve
+    needs, and what save_ivfpq_index persists."""
     df = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    # coarse quantizer → inverted-list assignment (one scan). The one
-    # kmeans_sample route here also decides the PQ training below when the
-    # strides match: the PQ sample is then the same rows (or their
+    # The one kmeans_sample route here also decides the PQ training below
+    # when the strides match: the PQ sample is then the same rows (or their
     # residuals), so it fits exactly when the coarse sample does.
     train = _stride_sample(df, "id", coarse_stride)
     sample = route("kmeans_sample", train)
-    if sample is not None:
-        coarse = _kmeans_local(sample, n_lists, coarse_iter)
+    coarse = _train_codebooks(train, sample, n_lists, coarse_iter, 1)[0]
+    if sample is not None and pq_stride == coarse_stride:
+        # the residuals are computed on the driver with the engine's own
+        # kernel, bit-identical to fetching the engine's residual frame,
+        # without that scan; no training frame is needed
+        pq_train, pq_sample = None, _residual_rows_local(sample, coarse) if residual else sample
     else:
-        coarse = _lloyd_distributed(train, "vec", "id", n_lists, coarse_iter)
-    assigned = _assign_nearest(df, "vec", coarse).select(
-        "id", "vec", F.col("__cluster").alias("list_id")
-    )
-    if residual:
-        # residual to the assigned coarse centroid, as one column expression
-        # against the plan-time centroid matrix literal — no extra scan/join
-        cmat = _matrix_lit(coarse)
-        enc_src = assigned.select(
-            "id",
-            F.zip_with(
-                F.col("vec"),
-                F.element_at(cmat, F.col("list_id") + 1),
-                lambda a, b: a.cast("double") - b,
-            ).alias("vec"),
-            "list_id",
+        pq_train = _stride_sample(
+            _inverted_lists(df, coarse, residual).select("id", "vec"), "id", pq_stride
         )
-    else:
-        enc_src = assigned
-    # PQ codebooks + one code row per corpus vector; list_id rides through
-    # pq_codes (passthrough) so serving is ONE scan — no self-join to
-    # re-attach the inverted-list assignment
-    pq_train = _stride_sample(enc_src.select("id", "vec"), "id", pq_stride)
-    if pq_stride != coarse_stride:
-        pq_sample = route("kmeans_sample", pq_train)
-    elif sample is not None and residual:
-        # the residuals computed on the driver with the engine's own
-        # arithmetic (same numpy matmul as matrix_dots, first-occurrence
-        # argmax, the same Python half-norm fold, elementwise float64
-        # subtraction), so the rows are bit-identical to fetching the
-        # engine's residual frame, without that scan
-        pq_sample = _residual_rows_local(sample, coarse)
-    else:
-        pq_sample = sample
-    codebooks = _pq_codebooks(
-        pq_train, pq_sample, dim=dim, n_subspaces=n_subspaces,
-        n_centroids=pq_centroids, max_iter=pq_iter,
-    )
-    codes = pq_codes(
-        enc_src, vec_col="vec", id_col="id", dim=dim,
-        n_subspaces=n_subspaces, n_centroids=pq_centroids,
-        max_iter=pq_iter, train_stride=pq_stride, codebooks=codebooks,
-        passthrough=("list_id",),
-    ).withColumnRenamed("id", id_col)
+        pq_sample = route("kmeans_sample", pq_train) if pq_stride != coarse_stride else None
     meta = {
         "dim": dim, "n_lists": n_lists, "n_subspaces": n_subspaces,
         "n_centroids": pq_centroids, "residual": residual, "id_col": id_col,
-        "coarse": coarse, "codebooks": codebooks,
+        "coarse": coarse,
+        "codebooks": _train_codebooks(pq_train, pq_sample, pq_centroids, pq_iter, n_subspaces),
     }
-    return codes, meta
+    return ivfpq_append(corpus, meta, vec_col=vec_col, id_col=id_col), meta
 
 
 def ivfpq_append(
@@ -1572,9 +1550,9 @@ def ivfpq_append(
 
     Encoding is one scan of the new shard: centroid assignment and
     codebook lookup are plan-time literals, no join to the existing codes.
-    By construction, append(shard, meta) on the SHARD the index was built
-    from reproduces the build's own code rows bit-for-bit, and
-    append(full) == build_codes ∪ append(new) — asserted in
+    build_ivfpq_index encodes through this function, so append(shard,
+    meta) on the shard the index was built from IS the build's code rows,
+    and append(full) == build_codes ∪ append(new) — asserted in
     test_ivfpq_append_matches_full_encode. Quality caveat (standard for
     frozen-quantizer appends): new vectors from a drifted distribution
     quantize with the OLD codebooks; monitor per-list residual error and
@@ -1582,26 +1560,11 @@ def ivfpq_append(
     """
     idc = id_col or meta["id_col"]
     df = new_vectors.select(F.col(idc).alias("id"), F.col(vec_col).alias("vec"))
-    coarse = meta["coarse"]
-    assigned = _assign_nearest(df, "vec", coarse).select(
-        "id", "vec", F.col("__cluster").alias("list_id")
-    )
-    if meta["residual"]:
-        cmat = _matrix_lit(coarse)
-        enc_src = assigned.select(
-            "id",
-            F.zip_with(
-                F.col("vec"),
-                F.element_at(cmat, F.col("list_id") + 1),
-                lambda a, b: a.cast("double") - b,
-            ).alias("vec"),
-            "list_id",
-        )
-    else:
-        enc_src = assigned
+    # list_id rides through pq_codes (passthrough) so serving is ONE scan,
+    # no self-join to re-attach the inverted-list assignment
     return pq_codes(
-        enc_src, vec_col="vec", id_col="id", dim=meta["dim"],
-        n_subspaces=meta["n_subspaces"], n_centroids=meta["n_centroids"],
+        _inverted_lists(df, meta["coarse"], meta["residual"]), vec_col="vec", id_col="id",
+        dim=meta["dim"], n_subspaces=meta["n_subspaces"], n_centroids=meta["n_centroids"],
         codebooks=meta["codebooks"], passthrough=("list_id",),
     ).withColumnRenamed("id", idc)
 
@@ -1625,15 +1588,8 @@ def ivfpq_residual_stats(
     """
     idc = id_col or meta["id_col"]
     df = vectors.select(F.col(idc).alias("id"), F.col(vec_col).alias("vec"))
-    coarse = meta["coarse"]
-    assigned = _assign_nearest(df, "vec", coarse).select(
-        "vec", F.col("__cluster").alias("list_id")
-    )
-    cmat = _matrix_lit(coarse)
-    res = F.zip_with(
-        F.col("vec"), F.element_at(cmat, F.col("list_id") + 1), lambda a, b: a.cast("double") - b
-    )
-    norm = F.sqrt(F.aggregate(res, F.lit(0.0), lambda acc, x: acc + x * x))
+    assigned = _inverted_lists(df, meta["coarse"], residual=True)
+    norm = F.sqrt(F.aggregate(F.col("vec"), F.lit(0.0), lambda acc, x: acc + x * x))
     return (
         assigned.select("list_id", norm.alias("residual_norm"))
         .groupBy("list_id")
@@ -1718,8 +1674,7 @@ def ivfpq_serve(
     key), so join output is candidate-proportional, ~|corpus| * nprobe /
     n_lists per query, and the per-(query, neighbor) sum partially
     aggregates map-side. For the residual recipe the per-list residual
-    (q - C_list) is one zip_with against the coarse-centroid literal
-    before the same distance tables.
+    (q - C_list, _residual) feeds the same distance tables.
 
     ``refine=R`` (IVFADC+R) re-ranks each query's top-R ADC candidates by
     exact cosine against the raw ``corpus`` vectors — both joins are plain
@@ -1728,39 +1683,18 @@ def ivfpq_serve(
     """
     residual, id_col = meta["residual"], meta["id_col"]
     coarse, codebooks = meta["coarse"], meta["codebooks"]
-    half_norms = [sum(x * x for x in c) / 2.0 for c in coarse]
     if refine and corpus is None:
         raise ValueError(
             "ivfpq_serve: refine>0 needs the raw corpus frame for the exact re-rank"
         )
-
-    # nprobe best coarse lists per query (score desc, ties to the higher
-    # list index) — the ranking ivf_topk and the oracle chains mirror
-    qb = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        matrix_dots(vec_col, coarse).alias("__dots"),
+    qp = _probe_lists(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")),
+        "__qvec", coarse, nprobe,
     )
-    scored_lists = F.zip_with(
-        F.col("__dots"), F.array(*[F.lit(h) for h in half_norms]), lambda d, h: d - h
-    )
-    ranked = F.transform(
-        scored_lists, lambda s, i: F.struct(s.alias("score"), i.cast("int").alias("idx"))
-    )
-    probes = F.slice(F.reverse(F.array_sort(ranked)), 1, nprobe)
-    qp = qb.select(
-        "query_id", "__qvec", F.explode(probes).alias("__p")
-    ).select("query_id", "__qvec", F.col("__p.idx").alias("list_id"))
     if residual:
-        cmat = _matrix_lit(coarse)
         qp = qp.select(
-            "query_id",
-            "list_id",
-            F.zip_with(
-                F.col("__qvec"),
-                F.element_at(cmat, F.col("list_id") + 1),
-                lambda a, b: a.cast("double") - b,
-            ).alias("__qvec"),
+            "query_id", "list_id",
+            _residual(F.col("__qvec"), F.col("list_id"), coarse).alias("__qvec"),
         )
     scored = _adc_scored(index_codes, qp, codebooks, id_col=id_col, keys=("list_id",))
     if not refine:

@@ -13,8 +13,6 @@ scans as µs-truncated timestamp_ntz; ``load_table`` derives the canonical
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -50,27 +48,11 @@ _FAN_OUT_BYTES = 128 * 1024 * 1024
 _fan_out_cache: dict[str, bool] = {}
 
 
-def _local_stats(path: str) -> tuple[int, int] | None:
-    """(total bytes, parquet file count) via os.path — schemeless paths."""
-    try:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if not f.startswith(("_", "."))
-            )
-            n_files = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-        else:
-            size, n_files = os.path.getsize(path), 1
-    except OSError:
-        return None
-    return size, n_files
-
-
 def _hadoop_stats(spark: SparkSession, path: str) -> tuple[int, int] | None:
-    """(total bytes, parquet file count) via the Hadoop FileSystem API, so
-    the heuristic also sees object-store paths (s3a://, gs://, file://…) —
-    os.path would silently report nothing there and disable the shim."""
+    """(total bytes, parquet file count) via the Hadoop FileSystem API,
+    the same resolution spark.read uses: a schemeless path goes to the
+    default filesystem (local unless configured otherwise), and
+    object-store paths (s3a://, gs://, file://…) to theirs."""
     try:
         jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
         fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -92,7 +74,7 @@ def _hadoop_stats(spark: SparkSession, path: str) -> tuple[int, int] | None:
 
 def _needs_fan_out(spark: SparkSession, path: str) -> bool:
     if path not in _fan_out_cache:
-        stats = _local_stats(path) if "://" not in path else _hadoop_stats(spark, path)
+        stats = _hadoop_stats(spark, path)
         if stats is None:
             return False
         size, n_files = stats

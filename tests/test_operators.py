@@ -1210,8 +1210,9 @@ def test_residual_rows_local_matches_engine(spark):
     """r15: build_ivfpq_index's residual PQ training sample is computed
     driver-side from the already-collected coarse sample instead of a
     second bounded collect of the engine's residual frame. The rows must
-    be BIT-identical to what the engine's assign+zip_with residual
-    expression produces for the same vectors."""
+    be BIT-identical to what the engine's assignment plus the shared
+    residual expression (the ones build_ivfpq_index runs) produce for the
+    same vectors."""
     import math
 
     import syscol_spark.operators.similarity as sim
@@ -1224,17 +1225,9 @@ def test_residual_rows_local_matches_engine(spark):
 
     local = {i: v for i, v in sim._residual_rows_local(rows, cents)}
 
-    cmat = sim._matrix_lit(cents)
     engine = (
         sim._assign_nearest(df, "vec", cents)
-        .select(
-            "id",
-            F.zip_with(
-                F.col("vec"),
-                F.element_at(cmat, F.col("__cluster") + 1),
-                lambda a, b: a.cast("double") - b,
-            ).alias("vec"),
-        )
+        .select("id", sim._residual(F.col("vec"), F.col("__cluster"), cents).alias("vec"))
         .collect()
     )
     assert len(engine) == len(local)

@@ -150,25 +150,21 @@ def test_csv_corpus_quarantines_bad_rows(spark, tmp_path):
 
 
 def test_needs_fan_out_hadoop_fs_matches_local(spark, sf_dir):
-    """The small-file fan-out heuristic must see through URI schemes: a
-    file:// path goes down the Hadoop FileSystem branch (the same API an
-    s3a:// or gs:// path would use) and must agree byte-for-byte with the
-    os.path branch on the identical underlying file."""
-    from syscol_spark.sources.tables import (
-        _fan_out_cache,
-        _hadoop_stats,
-        _local_stats,
-        _needs_fan_out,
-    )
+    """The small-file fan-out heuristic reads one set of stats through the
+    Hadoop FileSystem API (the same API an s3a:// or gs:// path uses): a
+    plain path resolves through the default local filesystem and must give
+    the same (bytes, files) and the same decision as its file:// form."""
+    from syscol_spark.sources.tables import _fan_out_cache, _hadoop_stats, _needs_fan_out
 
     plain = f"{sf_dir}/documents.parquet"
     uri = f"file://{plain}"
-    assert _local_stats(plain) == _hadoop_stats(spark, uri)
+    assert _hadoop_stats(spark, plain) is not None
+    assert _hadoop_stats(spark, plain) == _hadoop_stats(spark, uri)
     _fan_out_cache.pop(plain, None)
     _fan_out_cache.pop(uri, None)
     assert _needs_fan_out(spark, uri) == _needs_fan_out(spark, plain)
     # a directory with hidden/_SUCCESS-style entries counts visible bytes only
-    assert _local_stats(sf_dir) == _hadoop_stats(spark, f"file://{sf_dir}")
+    assert _hadoop_stats(spark, sf_dir) == _hadoop_stats(spark, f"file://{sf_dir}")
 
 
 def test_needs_fan_out_missing_path_is_false(spark):

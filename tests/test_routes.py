@@ -8,7 +8,9 @@ in exactly one decision, give the same columns and types, and, for a
 catalog query, match its DuckDB oracle. Catalog cases are the cheapest
 query that reaches each bound; synthetic cases cover shapes the sf0.001
 data lacks (its near-dup components are all pairs, and no document holds
-a '|').
+a '|'). The k-means trainer's distributed twin also gets synthetic cases:
+subspaces that converge at different iterations, and its job count
+across subspace counts.
 """
 
 from __future__ import annotations
@@ -150,3 +152,82 @@ def test_pq_training_decides_once_over_the_bound(spark, monkeypatch, caplog, tra
     else:
         for d, want in zip(dist, local):
             assert np.allclose(d, want, rtol=0, atol=1e-12)
+
+
+def _lloyd_rows(n: int = 48) -> list:
+    """(id, 4-dim vec) rows whose first subspace (dims 0-1) is two tight
+    clusters seeded one in each, so Lloyd's reaches its fixpoint after one
+    move, and whose second (dims 2-3) is a skewed line that keeps moving
+    for six iterations."""
+    rows = []
+    for i in range(n):
+        a = (0.01 * (i % 5), 0.0) if i % 2 == 0 else (10.0, 10.0 + 0.01 * (i % 7))
+        x = float(i) ** 1.5
+        rows.append((i, [a[0], a[1], x, 0.5 * x]))
+    return rows
+
+
+def test_joint_lloyd_freezes_converged_subspaces(spark, monkeypatch):
+    """The distributed trainer runs every subspace in one loop: a subspace
+    that reaches its fixpoint is frozen (it leaves the assignment and keeps
+    its codebook) while another keeps moving for all max_iter iterations,
+    and each codebook matches the driver-local trainer's."""
+    import numpy as np
+
+    import syscol_spark.operators.similarity as sim
+
+    rows, max_iter = _lloyd_rows(), 6
+    halves = [[(i, v[s * 2:(s + 1) * 2]) for i, v in rows] for s in range(2)]
+    # the case's premise: subspace 0 stops moving after one iteration,
+    # subspace 1 still moves in the last one
+    assert sim._kmeans_local(halves[0], 2, max_iter) == sim._kmeans_local(halves[0], 2, 1)
+    assert sim._kmeans_local(halves[1], 2, max_iter) != sim._kmeans_local(halves[1], 2, max_iter - 1)
+
+    train = spark.createDataFrame(rows, "id long, vec array<double>")
+
+    def train_books():
+        return np.array(
+            sim._train_codebooks(train, R.route("kmeans_sample", train), 2, max_iter, 2)
+        )
+
+    local = train_books()
+    widths = []
+    kernel = sim._pq_assign_codes
+
+    def spy(vec, codebooks):
+        widths.append(len(codebooks))
+        return kernel(vec, codebooks)
+
+    monkeypatch.setattr(sim, "_pq_assign_codes", spy)
+    monkeypatch.setitem(R.BOUNDS, "kmeans_sample", -1)
+    dist = train_books()
+    # both subspaces in the first two iterations (the second finds
+    # subspace 0's fixpoint), then subspace 1 alone until max_iter
+    assert widths == [2, 2] + [1] * (max_iter - 2)
+    assert np.allclose(dist, local, rtol=0, atol=1e-12)
+
+
+def test_distributed_training_jobs_do_not_grow_with_subspaces(spark, monkeypatch):
+    """Over the kmeans_sample bound, PQ training runs the same number of
+    Spark jobs whether the vector is one subspace or four: one seed fetch
+    and one collect per iteration for all subspaces together."""
+    import syscol_spark.operators.similarity as sim
+
+    # every subspace a scaled copy of the same slow line: no subspace
+    # reaches its fixpoint within max_iter, so each run iterates max_iter
+    # times
+    rows = [(i, [float(i) ** 1.5, 0.5 * float(i) ** 1.5] * 4) for i in range(48)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    monkeypatch.setitem(R.BOUNDS, "kmeans_sample", -1)
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (1, 2, 4):
+        group = f"test-joint-lloyd-{n}"
+        sc.setJobGroup(group, "distributed PQ training")
+        try:
+            sim.pq_codes(corpus, dim=8, n_subspaces=n, n_centroids=2, max_iter=3)
+            jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    assert jobs[1] > 3 and jobs[1] == jobs[2] == jobs[4], jobs
