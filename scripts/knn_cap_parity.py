@@ -137,7 +137,7 @@ def main() -> None:
     out = {
         "bucket_cap": CAP,
         "cap_window": WIN,
-        "git_sha": os.popen("git -C /root/repo rev-parse --short HEAD").read().strip(),
+        "git_sha": os.popen(f"git -C {REPO} rev-parse --short HEAD").read().strip(),
         "scales": {},
     }
     for name, d in SCALES.items():

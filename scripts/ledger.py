@@ -10,14 +10,19 @@ A row holds, for the fastest of ``--reps`` repetitions:
 - ``build``: the builder call: driver Python plus the eager jobs it runs
   (probes, collects, ``localCheckpoint``s, parquet schema inference).
   ``jobs`` is the scheduler's job counter across the call; ``sites``
-  attributes those jobs and seconds to (DataFrame method, first
-  ``syscol_spark`` file:line), and ``unattributed`` holds the jobs that ran
-  outside every wrapped method. ``sites`` + ``unattributed`` must add up
+  attributes those jobs and seconds to (DataFrame method, the first
+  ``syscol_spark`` file and the function there that made the call), and
+  ``unattributed`` holds the jobs that ran outside every wrapped method.
+  A site names a function, not a line, so edits elsewhere in the file
+  leave it unchanged. ``sites`` + ``unattributed`` must add up
   to ``jobs``; ``attribution_ok`` says whether they did.
 - ``plan``: Catalyst analysis, optimization and physical planning
   (``queryExecution().executedPlan()``), and the plan's shape.
 - ``execute``: the result forced into the noop sink, so it never reaches
-  the driver, with task time and shuffle bytes per stage.
+  the driver, with task time and shuffle bytes per stage. A plan that is
+  one ``LocalTableScan`` already holds its rows on the driver (a
+  driver-local twin's result) and is collected instead: the noop sink
+  would submit a write job that no caller of such a frame pays.
 - ``python_rows``: rows out of every Python plan node the query ran.
 - ``routes``: each driver-local / distributed decision the build made
   (``syscol_spark/operators/route.py``): name, bound, observed rows, path.
@@ -142,14 +147,16 @@ class Routes(logging.Handler):
 
 
 def _call_site() -> str:
-    """file:line of the innermost caller inside the package (paths relative
-    to ``syscol_spark/``), or ``?`` when the call did not come from it.
-    A route probe counts at the operator line that asked for it, not in
-    ``operators/route.py``, which every routed operator shares."""
+    """``file::function`` of the innermost caller inside the package (paths
+    relative to ``syscol_spark/``, functions by qualified name), or ``?``
+    when the call did not come from it. A route probe counts in the
+    operator that asked for it, not in ``operators/route.py``, which every
+    routed operator shares."""
     frame = sys._getframe(2)  # noqa: SLF001 - skip this function and the wrapper
     while frame is not None:
-        if frame.f_code.co_filename.startswith(PKG) and frame.f_code.co_filename != ROUTE:
-            return f"{frame.f_code.co_filename[len(PKG):]}:{frame.f_lineno}"
+        code = frame.f_code
+        if code.co_filename.startswith(PKG) and code.co_filename != ROUTE:
+            return f"{code.co_filename[len(PKG):]}::{code.co_qualname}"
         frame = frame.f_back
     return "?"
 
@@ -218,8 +225,9 @@ def _stages(spark, phase: Phase) -> list[dict]:
 
 def plan_shape(plan: str) -> dict:
     """Exchanges, join kinds, Python node kinds and parquet scans of a
-    physical plan's text."""
+    physical plan's text, and whether the plan is one ``LocalTableScan``."""
     return {
+        "local": plan.startswith("LocalTableScan"),
         "exchanges": len(re.findall(r"\bExchange\b", plan)),
         "broadcasts": len(re.findall(r"\bBroadcastExchange\b", plan)),
         "joins": sorted(set(JOIN.findall(plan))),
@@ -243,10 +251,13 @@ def measure(spark, name: str, sf_dir: str) -> dict:
         _drain(spark)
     build_jobs = _jobs_submitted(spark) - jobs0
     with Phase(spark, f"{name} plan") as plan:
-        plan_text = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        shape = plan_shape(df._jdf.queryExecution().executedPlan().toString())  # noqa: SLF001
         _drain(spark)
     with Phase(spark, f"{name} execute") as execute:
-        df.write.format("noop").mode("overwrite").save()
+        if shape["local"]:
+            df.collect()
+        else:
+            df.write.format("noop").mode("overwrite").save()
         _drain(spark)
     site_rows = [{"method": m, "site": s, "calls": r["calls"], "jobs": r["jobs"], "s": r["s"]}
                  for (m, s), r in sorted(sites.calls.items(), key=lambda kv: -kv[1]["s"])]
@@ -259,7 +270,7 @@ def measure(spark, name: str, sf_dir: str) -> dict:
         "sites": site_rows,
         "unattributed": {"jobs": build.jobs, "s": build.seconds - sum(r["s"] for r in site_rows)},
         "attribution_ok": site_jobs + build.jobs == build_jobs,
-        "plan": {"s": plan.seconds, "jobs": plan.jobs, "stages": plan.stages, **plan_shape(plan_text)},
+        "plan": {"s": plan.seconds, "jobs": plan.jobs, "stages": plan.stages, **shape},
         "execute": {"s": execute.seconds, "jobs": execute.jobs, "stages": execute.stages,
                     "stage_detail": _stages(spark, execute)},
         "python_rows": _python_rows(spark, first_execution),

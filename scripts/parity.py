@@ -15,10 +15,12 @@ auditable fresh green independent of the driver's 50 CORRECTNESS slots.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 
@@ -28,8 +30,6 @@ from syscol_spark.sources.tables import TABLE_NAMES  # noqa: E402
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    import os
-
     con = duckdb.connect()
     for name in TABLE_NAMES:
         path = f"{sf_dir}/{name}.parquet"
@@ -144,7 +144,7 @@ def _write_artifact(path: str, sf_dir: str, results: dict, failures: int) -> Non
     import subprocess
 
     sha = subprocess.run(
-        ["git", "-C", "/root/repo", "rev-parse", "HEAD"],
+        ["git", "-C", ROOT, "rev-parse", "HEAD"],
         capture_output=True, text=True,
     ).stdout.strip()
     # "dirty" means CODE drift vs the recorded sha; a sibling parity
@@ -152,7 +152,7 @@ def _write_artifact(path: str, sf_dir: str, results: dict, failures: int) -> Non
     # (r15: the sf0.1 run recorded dirty=true solely because the sf0.01
     # artifact it was batched with was not yet committed).
     status = subprocess.run(
-        ["git", "-C", "/root/repo", "status", "--porcelain"],
+        ["git", "-C", ROOT, "status", "--porcelain"],
         capture_output=True, text=True,
     ).stdout.strip()
     dirty = bool([

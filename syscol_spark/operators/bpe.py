@@ -50,7 +50,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from syscol_spark.functions.text import tokens
-from syscol_spark.operators.route import route
+from syscol_spark.operators.route import local_frame, route
 
 
 def word_freq_table(df: DataFrame, content_col: str) -> DataFrame:
@@ -245,9 +245,7 @@ def learn_bpe_merges(
     # instead of one checkpoint plus one collect per merge batch.
     local_rows = route("bpe_vocab", wf)
     if local_rows is not None:
-        return spark.createDataFrame(
-            _learn_bpe_local(local_rows, n_merges, batch), schema
-        )
+        return local_frame(spark, _learn_bpe_local(local_rows, n_merges, batch), schema)
     # Materialize the word-frequency table EAGERLY: each merge round is its
     # own Spark action, and without the checkpoint every round would re-run
     # the corpus scan + shuffle from lineage (one corpus scan per round
@@ -274,9 +272,7 @@ def learn_bpe_merges(
             "repr",
             _apply_merges_fold(F.col("repr"), [(l, r) for l, r, _ in picked]),
         )
-    return spark.createDataFrame(
-        merges, "step int, left_sym string, right_sym string, merged string, freq long"
-    )
+    return local_frame(spark, merges, schema)
 
 
 def vocab_tokenize_longest(

@@ -24,7 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
 from syscol_spark.functions.text import word_shingles
-from syscol_spark.operators.route import route
+from syscol_spark.operators.route import local_frame, route
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -502,7 +502,7 @@ def _cc_local(pairs: DataFrame, id_a: str, edge_rows: list) -> DataFrame:
         ]
     )
     rows = [(x, lbl, sizes[lbl]) for x, lbl in labels.items()]
-    return pairs.sparkSession.createDataFrame(rows, schema)
+    return local_frame(pairs.sparkSession, rows, schema)
 
 
 def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", *, max_iter: int = 20) -> DataFrame:
@@ -521,11 +521,11 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", *, 
     corpus by design, and at oracle/bench scales they are a few hundred
     rows pushed through O(diameter) rounds of join + checkpoint +
     convergence-count jobs — pure scheduling. When the edge list fits the
-    ``cc_edges`` route, one bounded fetch + union-find computes the
+    ``graph_edges`` route, one bounded fetch + union-find computes the
     identical min-reachable-id fixpoint; above the bound the distributed
     rounds run (tests/test_routes.py runs both sides).
     """
-    edge_rows = route("cc_edges", pairs.select(id_a, id_b))
+    edge_rows = route("graph_edges", pairs.select(id_a, id_b))
     if edge_rows is not None:
         return _cc_local(pairs, id_a, [(r[0], r[1]) for r in edge_rows])
     edges = (

@@ -7,18 +7,29 @@ pipeline this ranks the k-NN graph (operators/similarity.py::knn_graph):
 high-rank nodes sit in dense semantic neighborhoods — SemDeDup-style
 prune candidates; low-rank nodes are outliers worth auditing.
 
-Scale shape (mirrors dedup_clusters):
+Like connected components, PageRank has two twins behind the
+``graph_edges`` route (operators/route.py). Under the bound the edge list
+is fetched once through Arrow and a numpy power iteration runs on the
+driver: below a size bound a distributed fixpoint is scheduling overhead
+(McSherry et al., "Scalability! But at what COST?", HotOS 2015): over a
+~1,500-edge k-NN graph the distributed iterations ran 16 Spark jobs more
+than the one fetch does, and took seconds longer. Above the bound
+the distributed iterations run. Both twins compute each rank as
+``(1-d) + d * sum(pr[src] / deg[src])`` over the node's in-edges, so a node
+with no in-edges holds ``1-d`` after the first iteration, and both round
+with the same ``F.round`` on the output column.
+
+Scale shape of the distributed twin (mirrors dedup_clusters):
 - per-iteration work is one equi-join (edges ⋈ ranks on src) plus one
   groupBy(dst) — both shuffle on node ids, never materialize anything
   denser than the edge list;
-- out-degrees are computed ONCE outside the loop;
+- out-degrees are computed ONCE outside the loop, by a window count per
+  src, so no per-node state is larger than one row;
 - the iteration chain is truncated every THIRD iteration with a
   localCheckpoint (r14 A/B: a fully-lazy 5-iteration chain measured
   SLOWER — 6.6 s vs 5.0 s at sf0.1 — because the un-materialized rank
   side re-sorts through the deep plan each round; the periodic cut keeps
-  plan depth bounded at 3 while paying only ceil(iters/3) eager jobs);
-- the node count (the only driver-side constant) comes from one count(),
-  the same one-collect-for-constants rule the k-means trainer follows.
+  plan depth bounded at 3 while paying only ceil(iters/3) eager jobs).
 
 Ranks are scaled by N (start at 1.0, sum to N) so emitted values sit
 near 1 where a 6dp round is far coarser than the float-sum ulp noise —
@@ -27,8 +38,13 @@ the engine-parity discipline from plans/catalog.py.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+from syscol_spark.operators.route import local_frame, route
 
 
 def pagerank(
@@ -41,23 +57,43 @@ def pagerank(
 ) -> DataFrame:
     """N-scaled PageRank after a fixed number of damped iterations.
 
-    Output: (node, pr) with pr rounded to 6dp; sum(pr) ≈ N.
+    Output: (node, pr) with pr rounded to 6dp; sum(pr) ≈ N. Node ids keep
+    the type of ``src_col``.
     """
+    pairs = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    local = route("graph_edges", pairs, arrow=True)
+    if local is not None:
+        pr = _pagerank_local(pairs, local, damping, iterations)
+    else:
+        pr = _pagerank_distributed(pairs, damping, iterations)
+    return pr.select("node", F.round("pr", 6).alias("pr"))
+
+
+def _pagerank_local(pairs: DataFrame, pdf: pd.DataFrame, damping: float, iterations: int) -> DataFrame:
+    """Power iteration over the fetched (src, dst) edge list, with the
+    distributed twin's arithmetic: per edge ``pr / deg`` of its src, summed
+    per dst, then ``(1-d) + d * sum``; a node with no in-edges sums 0.0."""
+    ids, idx = np.unique(np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]), return_inverse=True)
+    src, dst = idx[: len(pdf)], idx[len(pdf):]
+    deg = np.bincount(src, minlength=len(ids))[src]
+    pr = np.ones(len(ids))
+    for _ in range(iterations):
+        pr = (1.0 - damping) + damping * np.bincount(dst, weights=pr[src] / deg, minlength=len(ids))
+    schema = StructType([StructField("node", pairs.schema["src"].dataType), StructField("pr", DoubleType())])
+    return local_frame(pairs.sparkSession, list(zip(ids.tolist(), pr.tolist())), schema)
+
+
+def _pagerank_distributed(pairs: DataFrame, damping: float, iterations: int) -> DataFrame:
+    """The damped iterations as distributed joins and aggregates; (node, pr)
+    before rounding."""
     # Materialize the degree-weighted edge list ONCE, hash-partitioned on
-    # src (r15 — was TWO materializations: a repartitioned copy of the raw
-    # edges, then deg computed from it and joined back). One aggregation
-    # over the producing subplan (e.g. the whole knn_graph build) yields
-    # per-src neighbor arrays + degree; exploding restores the edge rows
-    # WITH deg attached, and the groupBy's own hash partitioning on src is
-    # exactly the layout every iteration's join reuses. Out-degree per src
-    # is bounded (k-NN edges), so the transient arrays are small.
-    weighted = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .groupBy("src")
-        .agg(F.collect_list("dst").alias("__ds"), F.count(F.lit(1)).alias("deg"))
-        .select("src", F.explode("__ds").alias("dst"), "deg")
-        .localCheckpoint()
-    )  # (src, dst, deg) fixed
+    # src: the window's exchange on src is exactly the layout every
+    # iteration's join reuses. The window counts each src's out-edges
+    # without gathering them, so a hub's out-edges never become one array
+    # (a collect_list + explode did, before).
+    weighted = pairs.withColumn(
+        "deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+    ).localCheckpoint()  # (src, dst, deg) fixed
     # ONE aggregation derives both driver-fixed node frames (r14 — was two
     # checkpoints: a union-distinct for `nodes` plus a left-anti join for
     # `dangling`): every node tagged with whether ANY in-edge reaches it.
@@ -100,4 +136,4 @@ def pagerank(
         # periodic truncation.)
         if it % 3 == 2 or it == iterations - 1:
             pr = pr.localCheckpoint()
-    return pr.select("node", F.round("pr", 6).alias("pr"))
+    return pr

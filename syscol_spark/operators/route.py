@@ -1,15 +1,18 @@
 """The driver-local / distributed choice, made in one place.
 
-Six operator decisions have a driver-local twin, exact and cheap while its
-input is small, and a distributed twin that runs at any size. Both twins
-compute the same result, so the choice steers only cost. Each decision is
-one row of ``BOUNDS`` and one bounded fetch: ``route(name, frame)`` pulls at
-most ``bound + 1`` rows, and when no more than ``bound`` came back the fetch
-returned every row, so the local twin starts from the complete input
-(``limit``'s choice of rows matters only on the over-bound side, where the
-rows are dropped). The fetch is the only measurement: Catalyst's size
-estimate sizes a 200-row MMR shortlist at tens of GB, so it cannot pick a
-side.
+Seven operators have a driver-local twin, exact and cheap while its input
+is small, and a distributed twin that runs at any size. Both twins compute
+the same result, so the choice steers only cost. Each decision is one row
+of ``BOUNDS`` (connected components and PageRank share the edge-list row)
+and one bounded fetch: ``route(name, frame)`` pulls at most ``bound + 1``
+rows, and when no more than ``bound`` came back the fetch returned every
+row, so the local twin starts from the complete input (``limit``'s choice
+of rows matters only on the over-bound side, where the rows are dropped).
+The fetch is the only measurement: Catalyst's size estimate sizes a
+200-row MMR shortlist at tens of GB, so it cannot pick a side.
+
+A local twin hands its result back through ``local_frame``, so the frame
+it returns plans as a ``LocalTableScan`` and costs no Spark job to use.
 
 Every decision is logged on the ``syscol_spark.route`` logger at DEBUG as a
 record whose ``route`` attribute is ``{name, bound, observed, path}``
@@ -22,7 +25,8 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 log = logging.getLogger("syscol_spark.route")
 
@@ -44,8 +48,8 @@ BOUNDS = {
     "pair_scorer": 65_536,
     # BPE training: (word, freq) vocabulary rows, a few MB of strings
     "bpe_vocab": 200_000,
-    # connected components: near-dup edge rows, two ids each
-    "cc_edges": 200_000,
+    # connected components and PageRank: edge rows, two ids each
+    "graph_edges": 200_000,
 }
 
 
@@ -70,3 +74,22 @@ def fits(name: str, observed: int) -> bool:
         extra={"route": {"name": name, "bound": bound, "observed": observed, "path": path}},
     )
     return path == "local"
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """A result the driver already holds, as a DataFrame that plans as a
+    ``LocalTableScan``: ``rows`` (tuples in ``schema``'s column order)
+    cross into the JVM as one Arrow table, so using the frame runs no Spark
+    job. ``createDataFrame`` over a list plans a ``Scan ExistingRDD``
+    instead, which runs one job of a task per core every time the frame is
+    used. An empty result keeps that path: it has no Arrow batch to ship."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if len(rows) == 0:
+        return spark.createDataFrame([], schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow_schema)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.functions import broadcast
 
 from syscol_spark.functions.vectors import cosine_similarity
-from syscol_spark.operators.route import fits, route
+from syscol_spark.operators.route import fits, local_frame, route
 
 
 def brute_force_topk(
@@ -220,7 +220,7 @@ def _mmr_greedy_local(sv, sv_rows: list, pair_rows: list, k: int, lam: float):
             StructField("step", LongType()),
         ]
     )
-    return sv.sparkSession.createDataFrame(out, schema)
+    return local_frame(sv.sparkSession, out, schema)
 
 
 def _srp_plane(dim: int, plane: int, seed: int = 42) -> list[float]:

@@ -7,11 +7,12 @@ Arrow q_tfidf) because the r10 autopsy showed them degrading independently."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 
 def _bench():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
 
     return bench

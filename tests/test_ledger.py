@@ -26,13 +26,18 @@ BUILD_JOBS = {
     "q_inverted_index": 1,
 }
 
-# q_pagerank's eager calls include the weighted edge list checkpoint, the
-# iteration checkpoints, and the k-NN graph's id-sorted checkpoint
+# q_pagerank's eager calls include the graph_edges route fetch of its edge
+# list, the k-NN graph's pair_scorer route fetch, and the candidate
+# generator's checkpoints (its id-sorted one among them)
 PAGERANK_SITES = {
-    "operators/graph.py:59",
-    "operators/graph.py:102",
-    "operators/similarity.py:871",
+    "operators/graph.py::pagerank",
+    "operators/similarity.py::knn_graph",
+    "operators/similarity.py::_srp_candidate_pairs",
 }
+
+# q_pagerank's build jobs at sf0.001: the k-NN graph and the one edge-list
+# fetch; PageRank itself runs on the driver
+PAGERANK_BUILD_JOBS = 12
 
 
 def _paths(row) -> dict[str, str]:
@@ -44,6 +49,9 @@ def test_build_jobs_are_pinned(spark, sf_dir):
     assert {q: r["build"]["jobs"] for q, r in rows.items()} == BUILD_JOBS
     assert _paths(rows["q_mmr_diverse"]) == {"mmr_shortlist": "local", "mmr_pairs": "local"}
     assert all(not r["routes"] for q, r in rows.items() if q != "q_mmr_diverse")
+    # the driver-local MMR result is a local relation: no execute job
+    mmr = rows["q_mmr_diverse"]
+    assert mmr["plan"]["local"] and mmr["execute"]["jobs"] == 0
 
 
 def test_pagerank_sites_account_for_every_build_job(spark, sf_dir):
@@ -51,11 +59,9 @@ def test_pagerank_sites_account_for_every_build_job(spark, sf_dir):
     assert PAGERANK_SITES <= {s["site"] for s in row["sites"]}
     assert sum(s["jobs"] for s in row["sites"]) + row["unattributed"]["jobs"] == row["build"]["jobs"]
     assert row["attribution_ok"]
-    assert _paths(row) == {"pair_scorer": "local"}
-    # not pinned: inside an iteration checkpoint (graph.py:102) AQE's runtime
-    # broadcast conversion races the other join side's shuffle stage, which
-    # is sometimes submitted as one more job before the re-plan drops it
-    assert 27 <= row["build"]["jobs"] <= 29 and row["plan"]["jobs"] == 0
+    assert _paths(row) == {"pair_scorer": "local", "graph_edges": "local"}
+    assert row["build"]["jobs"] == PAGERANK_BUILD_JOBS and row["plan"]["jobs"] == 0
+    assert row["plan"]["local"] and row["execute"]["jobs"] == 0
 
 
 def test_inflate_copies_keys_disjointly_and_keeps_oracle_parity(spark, sf_dir, tmp_path):

@@ -7,8 +7,9 @@ forced to -1 (the distributed twin). Both runs must take the expected path
 in exactly one decision, give the same columns and types, and, for a
 catalog query, match its DuckDB oracle. Catalog cases are the cheapest
 query that reaches each bound; synthetic cases cover shapes the sf0.001
-data lacks (its near-dup components are all pairs, and no document holds
-a '|'). The k-means trainer's distributed twin also gets synthetic cases:
+data lacks (its near-dup components are all pairs, no document holds a
+'|', and its k-NN graph has no hub, no node without in-edges and only
+integer ids). The k-means trainer's distributed twin also gets synthetic cases:
 subspaces that converge at different iterations, and its job count
 across subspace counts.
 """
@@ -31,6 +32,17 @@ def _cc_chains(spark, sf_dir):
     edges = [(5, 4), (4, 3), (3, 2), (2, 1), (10, 11), (11, 12), (10, 12),
              (12, 13), (20, 21)]
     return dedup_clusters(spark.createDataFrame(edges, ["id_a", "id_b"]))
+
+
+def _pagerank_hub(spark, sf_dir):
+    """A hub with 1,200 out-edges (a third of its leaves link back), a
+    source-only node, a sink-only node, and string ids."""
+    from syscol_spark.operators.graph import pagerank
+
+    leaves = [f"leaf{i:04d}" for i in range(1200)]
+    edges = [("hub", v) for v in leaves] + [(v, "hub") for v in leaves[::3]]
+    edges += [("source", "hub"), ("source", leaves[1]), (leaves[5], "sink")]
+    return pagerank(spark.createDataFrame(edges, "src string, dst string"))
 
 
 def _bpe_corners(batch):
@@ -60,9 +72,16 @@ CASES = [
     ("bpe_vocab", "q_bpe_vocab_batched"),
     ("bpe_vocab", _bpe_corners(1)),
     ("bpe_vocab", _bpe_corners(4)),
-    ("cc_edges", "q_dedup_clusters"),
-    ("cc_edges", _cc_chains),
+    ("graph_edges", "q_dedup_clusters"),
+    ("graph_edges", _cc_chains),
+    ("graph_edges", "q_pagerank"),
+    ("graph_edges", _pagerank_hub),
 ]
+
+
+# routes whose local twin's result is the case's result: it comes back as a
+# local relation, which runs no job when used
+LOCAL_RESULTS = {"mmr_shortlist", "mmr_pairs", "bpe_vocab", "graph_edges"}
 
 
 def _case_id(case) -> str:
@@ -71,7 +90,8 @@ def _case_id(case) -> str:
 
 
 def _run(spark, sf_dir, src, caplog, name):
-    """(column names and types, sorted normalized rows, paths taken by ``name``)."""
+    """(column names and types, column names, sorted normalized rows, paths
+    taken by ``name``, whether the plan is a ``LocalTableScan``)."""
     from syscol_spark.plans.catalog import QUERIES, _ensure_loaded
 
     _ensure_loaded()
@@ -81,7 +101,8 @@ def _run(spark, sf_dir, src, caplog, name):
         cols = [c.lower() for c in df.columns]
         rows = normalize([tuple(r) for r in df.collect()], cols)
     paths = [r.route["path"] for r in caplog.records if getattr(r, "route", {}).get("name") == name]
-    return [(f.name.lower(), f.dataType) for f in df.schema.fields], cols, rows, paths
+    local_scan = df._jdf.queryExecution().executedPlan().toString().startswith("LocalTableScan")  # noqa: SLF001
+    return [(f.name.lower(), f.dataType) for f in df.schema.fields], cols, rows, paths, local_scan
 
 
 def _same(got, want) -> bool:
@@ -94,10 +115,11 @@ def _same(got, want) -> bool:
 @pytest.mark.parametrize("case", CASES, ids=_case_id)
 def test_forced_route_matches_local_and_oracle(spark, sf_dir, monkeypatch, caplog, case):
     name, src = case
-    types, cols, local, paths = _run(spark, sf_dir, src, caplog, name)
+    types, cols, local, paths, local_scan = _run(spark, sf_dir, src, caplog, name)
     assert paths == ["local"]
+    assert local_scan == (name in LOCAL_RESULTS)
     monkeypatch.setitem(R.BOUNDS, name, -1)
-    f_types, _, forced, f_paths = _run(spark, sf_dir, src, caplog, name)
+    f_types, _, forced, f_paths, _ = _run(spark, sf_dir, src, caplog, name)
     assert f_paths == ["distributed"]
     assert f_types == types
     assert len(local) > 0 and _same(forced, local)
