@@ -15,7 +15,12 @@ A row holds, for the fastest of ``--reps`` repetitions:
   ``unattributed`` holds the jobs that ran outside every wrapped method.
   A site names a function, not a line, so edits elsewhere in the file
   leave it unchanged. ``sites`` + ``unattributed`` must add up
-  to ``jobs``; ``attribution_ok`` says whether they did.
+  to ``jobs``; ``attribution_ok`` says whether they did. ``py4j_calls``
+  and ``py4j_s`` count the build's Py4J round trips and their seconds
+  (a trip waits for whatever the JVM does before it replies, jobs
+  included); ``py4j_sites`` attributes them to the same
+  ``file::function`` sites, and ``unattributed`` holds the trips with no
+  ``syscol_spark`` frame, whose count varies from run to run.
 - ``plan``: Catalyst analysis, optimization and physical planning
   (``queryExecution().executedPlan()``), and the plan's shape.
 - ``execute``: the result forced into the noop sink, so it never reaches
@@ -26,6 +31,10 @@ A row holds, for the fastest of ``--reps`` repetitions:
 - ``python_rows``: rows out of every Python plan node the query ran.
 - ``routes``: each driver-local / distributed decision the build made
   (``syscol_spark/operators/route.py``): name, bound, observed rows, path.
+
+Rows are warm: every table's schema is resolved before the first row
+(``sources/tables.py`` keeps it per file version), so no row pays a
+parquet schema-inference job.
 
 Given two or more ``--sf`` directories, a row also carries ``step_ratio``:
 its wall over the same query's wall at the previous directory. ``inflate``
@@ -54,6 +63,7 @@ from perfbench.common import Phase, testdata_dir  # noqa: E402
 
 PKG = os.path.join(ROOT, "syscol_spark") + os.sep
 ROUTE = os.path.join(PKG, "operators", "route.py")
+COMMON = os.path.join(ROOT, "perfbench", "common.py")
 ACTIONS = ("collect", "count", "toPandas", "localCheckpoint", "checkpoint", "take", "head", "first")
 JOIN = re.compile(r"\b(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)\b")
 PYTHON_NODE = re.compile(r"\b(\w+(?:Python|InPandas|InArrow))\b")
@@ -78,13 +88,22 @@ class Sites:
     DataFrame actions, plus ``DataFrameReader.parquet``, where schema
     inference runs. Each outermost call runs under its own ``Phase``;
     calls nested in it (``first`` → ``head`` → ``take`` → ``collect``)
-    count once, for the outermost method."""
+    count once, for the outermost method.
+
+    Every Py4J round trip the build makes is counted too, keyed by the
+    call site alone (eager or not: composing a DataFrame is round trips
+    without jobs). Trips with no package frame on their stack, such as the
+    Py4J finalizer thread's object releases, go to ``"?"``; the ledger's
+    own bookkeeping (its ``Phase``s and drains) is not counted."""
 
     def __init__(self, spark):
         self.spark = spark
         self.calls: dict[tuple[str, str], dict] = {}
+        self.py4j: dict[str, dict] = {}
         self.stages = 0
         self._local = threading.local()
+        self._lock = threading.Lock()
+        self._client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
         from pyspark.sql.classic.dataframe import DataFrame
         from pyspark.sql.readwriter import DataFrameReader
 
@@ -94,11 +113,31 @@ class Sites:
         self._saved = [(cls, m, cls.__dict__[m]) for cls, m in self._targets]
         for cls, m, fn in self._saved:
             setattr(cls, m, self._wrap(fn, m))
+        self._client.send_command = self._count_py4j(self._client.send_command)
         return self
 
     def __exit__(self, *exc) -> None:
+        del self._client.send_command  # the class's method again
         for cls, m, fn in self._saved:
             setattr(cls, m, fn)
+
+    def _count_py4j(self, send):
+        @functools.wraps(send)
+        def wrapper(*args, **kwargs):
+            site = _call_site()
+            if site is None:
+                return send(*args, **kwargs)
+            t0 = time.perf_counter()
+            try:
+                return send(*args, **kwargs)
+            finally:
+                dt = time.perf_counter() - t0
+                with self._lock:
+                    rec = self.py4j.setdefault(site, {"calls": 0, "s": 0.0})
+                    rec["calls"] += 1
+                    rec["s"] += dt
+
+        return wrapper
 
     def _wrap(self, fn, method: str):
         @functools.wraps(fn)
@@ -146,15 +185,18 @@ class Routes(logging.Handler):
         self._log.setLevel(self._level)
 
 
-def _call_site() -> str:
+def _call_site() -> str | None:
     """``file::function`` of the innermost caller inside the package (paths
-    relative to ``syscol_spark/``, functions by qualified name), or ``?``
-    when the call did not come from it. A route probe counts in the
+    relative to ``syscol_spark/``, functions by qualified name), ``?`` when
+    the call did not come from it, or None when the ledger's own
+    bookkeeping (a ``Phase``, a drain) made it. A route probe counts in the
     operator that asked for it, not in ``operators/route.py``, which every
     routed operator shares."""
     frame = sys._getframe(2)  # noqa: SLF001 - skip this function and the wrapper
     while frame is not None:
         code = frame.f_code
+        if code.co_filename == COMMON or code is _drain.__code__:
+            return None
         if code.co_filename.startswith(PKG) and code.co_filename != ROUTE:
             return f"{code.co_filename[len(PKG):]}::{code.co_qualname}"
         frame = frame.f_back
@@ -262,13 +304,20 @@ def measure(spark, name: str, sf_dir: str) -> dict:
     site_rows = [{"method": m, "site": s, "calls": r["calls"], "jobs": r["jobs"], "s": r["s"]}
                  for (m, s), r in sorted(sites.calls.items(), key=lambda kv: -kv[1]["s"])]
     site_jobs = sum(r["jobs"] for r in site_rows)
+    trips = dict(sites.py4j)
+    stray = trips.pop("?", {"calls": 0, "s": 0.0})
+    py4j_rows = [{"site": s, **r} for s, r in sorted(trips.items(), key=lambda kv: -kv[1]["calls"])]
     return {
         "query": name,
         "sf": sf_dir,
         "wall_s": build.seconds + plan.seconds + execute.seconds,
-        "build": {"s": build.seconds, "jobs": build_jobs, "stages": build.stages + sites.stages},
+        "build": {"s": build.seconds, "jobs": build_jobs, "stages": build.stages + sites.stages,
+                  "py4j_calls": sum(r["calls"] for r in sites.py4j.values()),
+                  "py4j_s": sum(r["s"] for r in sites.py4j.values())},
         "sites": site_rows,
-        "unattributed": {"jobs": build.jobs, "s": build.seconds - sum(r["s"] for r in site_rows)},
+        "py4j_sites": py4j_rows,
+        "unattributed": {"jobs": build.jobs, "s": build.seconds - sum(r["s"] for r in site_rows),
+                         "py4j_calls": stray["calls"], "py4j_s": stray["s"]},
         "attribution_ok": site_jobs + build.jobs == build_jobs,
         "plan": {"s": plan.seconds, "jobs": plan.jobs, "stages": plan.stages, **shape},
         "execute": {"s": execute.seconds, "jobs": execute.jobs, "stages": execute.stages,
@@ -314,7 +363,11 @@ def run(spark, names: list[str], sf_dirs: list[str], reps: int, out: str | None 
     if unknown:
         raise SystemExit(f"unknown queries: {', '.join(unknown)}")
     # untimed: pays the session's first-use costs (JIT, code generation,
-    # Python workers) outside every row
+    # Python workers) and every table's schema inference outside every row
+    from syscol_spark.sources.tables import load_tables
+
+    for sf_dir in sf_dirs:
+        load_tables(spark, sf_dir)
     measure(spark, names[0], sf_dirs[0])
     _release(spark)
     ledger = {"cpus": spark.sparkContext.defaultParallelism, "reps": reps, "sf": sf_dirs, "rows": []}

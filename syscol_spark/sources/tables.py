@@ -13,8 +13,11 @@ scans as µs-truncated timestamp_ntz; ``load_table`` derives the canonical
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -45,53 +48,95 @@ TABLE_NAMES = [
 # while winning nothing).
 _FAN_OUT_TABLES = {"documents", "embeddings"}
 _FAN_OUT_BYTES = 128 * 1024 * 1024
-_fan_out_cache: dict[str, bool] = {}
+
+# SQL confs under which the same parquet footer infers a different schema
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
 
 
-def _hadoop_stats(spark: SparkSession, path: str) -> tuple[int, int] | None:
-    """(total bytes, parquet file count) via the Hadoop FileSystem API,
-    the same resolution spark.read uses: a schemeless path goes to the
-    default filesystem (local unless configured otherwise), and
-    object-store paths (s3a://, gs://, file://…) to theirs."""
+class _Resolved(NamedTuple):
+    version: tuple[int, int, int]
+    confs: tuple[str, ...]
+    schema: StructType
+    fan_out: bool
+
+
+# One entry per table path, replaced when the path's file version or the
+# schema confs change: the cache never holds more entries than there are
+# distinct table paths. Two threads loading the same new version may both
+# infer it; the later write wins and both schemas are the same.
+_resolved: dict[str, _Resolved] = {}
+
+
+def _hadoop_stats(spark: SparkSession, path: str) -> tuple[int, int, int] | None:
+    """(total bytes, parquet file count, latest modification time in ms) via
+    the Hadoop FileSystem API, the same resolution spark.read uses: a
+    schemeless path goes to the default filesystem (local unless configured
+    otherwise), and object-store paths (s3a://, gs://, file://…) to theirs.
+    The triple is the path's file version: a rewrite, an added file or a
+    removed one changes it. A directory costs a few Py4J round trips per
+    visible entry; a single file costs one stat."""
     try:
         jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
         fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
         status = fs.getFileStatus(jpath)
+        mtime = int(status.getModificationTime())
         if not status.isDirectory():
-            return int(status.getLen()), 1
+            return int(status.getLen()), 1, mtime
         size = n_files = 0
         for s in fs.listStatus(jpath):
             name = s.getPath().getName()
             if name.startswith(("_", ".")):
                 continue
             size += int(s.getLen())
+            mtime = max(mtime, int(s.getModificationTime()))
             if name.endswith(".parquet"):
                 n_files += 1
-        return size, n_files
+        return size, n_files, mtime
     except Exception:  # noqa: BLE001 — missing path / unreachable store
         return None
 
 
-def _needs_fan_out(spark: SparkSession, path: str) -> bool:
-    if path not in _fan_out_cache:
-        stats = _hadoop_stats(spark, path)
-        if stats is None:
-            return False
-        size, n_files = stats
-        # lower bound: broadcast-sized dims gain nothing from 32 near-empty
-        # partitions; they are consumed whole (broadcast) anyway
-        _fan_out_cache[path] = 256 * 1024 <= size < _FAN_OUT_BYTES and n_files <= 4
-    return _fan_out_cache[path]
+def _resolve(spark: SparkSession, path: str) -> _Resolved | None:
+    """The path's schema and fan-out decision, inferred once per file version
+    and schema confs; None when the path cannot be stat'ed."""
+    version = _hadoop_stats(spark, path)
+    if version is None:
+        return None
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    hit = _resolved.get(path)
+    if hit is not None and hit.version == version and hit.confs == confs:
+        return hit
+    schema = spark.read.parquet(path).schema  # the one inference job
+    size, n_files, _ = version
+    # lower bound: broadcast-sized dims gain nothing from 32 near-empty
+    # partitions; they are consumed whole (broadcast) anyway
+    fan_out = 256 * 1024 <= size < _FAN_OUT_BYTES and n_files <= 4
+    _resolved[path] = hit = _Resolved(version, confs, schema, fan_out)
+    return hit
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A fresh relation over ``{sf_dir}/{name}.parquet``. The schema comes
+    from ``_resolve``, so a table whose files have not changed since its last
+    load is read without a Spark job; an unreadable path falls through to
+    ``spark.read.parquet`` and raises what it raises."""
     from syscol_spark.session import ensure_engine_conf
 
     ensure_engine_conf(spark)  # session may be externally created
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if name in _FAN_OUT_TABLES and _needs_fan_out(spark, path):
-        df = df.repartition(spark.sparkContext.defaultParallelism)
+    resolved = _resolve(spark, path)
+    if resolved is None:
+        df = spark.read.parquet(path)
+    else:
+        df = spark.read.schema(resolved.schema).parquet(path)
+        if name in _FAN_OUT_TABLES and resolved.fan_out:
+            df = df.repartition(spark.sparkContext.defaultParallelism)
     if name == "events":
         # The parquet column is TIMESTAMP(NANOS); Spark 4 scans it as
         # timestamp_ntz, already truncated ns→µs. Derive the canonical

@@ -5,6 +5,7 @@ identical bytes, different transport)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from syscol_spark.config import CollectorConfig
 from syscol_spark.functions.envelope import ENVELOPE_SCHEMA, enrich_envelope
@@ -146,29 +147,138 @@ def test_csv_corpus_quarantines_bad_rows(spark, tmp_path):
     assert bad.count() == 1
 
 
-# --- fan-out shim path-scheme awareness --------------------------------------
+# --- table loads: schema and fan-out resolved once per file version ---------
+
+
+def _write(root, name: str, columns: dict) -> str:
+    """Write ``columns`` as ``root/name.parquet`` (one uncompressed file)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = f"{root}/{name}.parquet"
+    pq.write_table(pa.table(columns), path, compression="none")
+    return path
+
+
+def _load_jobs(spark, root, name: str):
+    """A ``load_table`` and the Spark jobs it submitted."""
+    from scripts.ledger import _jobs_submitted
+    from syscol_spark.sources.tables import load_table
+
+    j0 = _jobs_submitted(spark)
+    df = load_table(spark, str(root), name)
+    return df, _jobs_submitted(spark) - j0
+
+
+def test_warm_load_runs_no_job_and_sees_a_rewrite(spark, tmp_path):
+    from syscol_spark.sources.tables import _resolved
+
+    path = _write(tmp_path, "t", {"a": [1, 2, 3]})
+    df, jobs = _load_jobs(spark, tmp_path, "t")
+    assert jobs == 1 and df.columns == ["a"]
+    df, jobs = _load_jobs(spark, tmp_path, "t")
+    assert jobs == 0 and sorted(r["a"] for r in df.collect()) == [1, 2, 3]
+    # overwritten with an added column: a new version, inferred again
+    _write(tmp_path, "t", {"a": [1, 2, 3], "b": ["x", "y", "z"]})
+    df, jobs = _load_jobs(spark, tmp_path, "t")
+    assert jobs == 1 and df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y"), (3, "z")]
+    _write(tmp_path, "t", {"a": [1.5], "b": ["x"], "c": [True]})
+    df, jobs = _load_jobs(spark, tmp_path, "t")
+    assert jobs == 1 and df.dtypes == [("a", "double"), ("b", "string"), ("c", "boolean")]
+    # two rewrites later the path still holds one entry, the latest version
+    assert [k for k in _resolved if k.startswith(str(tmp_path))] == [path]
+    assert _resolved[path].schema == df.schema
+
+
+def test_schema_conf_change_reinfers(spark, tmp_path):
+    _write(tmp_path, "t", {"k": [1], "raw": [b"abc"]})
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        df, _ = _load_jobs(spark, tmp_path, "t")
+        assert dict(df.dtypes)["raw"] == "string" and df.first()["raw"] == "abc"
+        spark.conf.set(key, "false")
+        df, jobs = _load_jobs(spark, tmp_path, "t")
+        assert jobs == 1 and dict(df.dtypes)["raw"] == "binary" and bytes(df.first()["raw"]) == b"abc"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_missing_table_raises_what_spark_read_raises(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    from syscol_spark.sources.tables import load_table
+
+    with pytest.raises(AnalysisException) as plain:
+        spark.read.parquet(f"{tmp_path}/nope.parquet")
+    with pytest.raises(AnalysisException) as loaded:
+        load_table(spark, str(tmp_path), "nope")
+    assert loaded.value.getCondition() == plain.value.getCondition() == "PATH_NOT_FOUND"
+
+
+def test_two_loads_of_one_table_self_join(spark, sf_dir):
+    """Each load is a fresh relation with its own attribute ids, so two
+    loads of ``nation`` self-join as two separate reads do."""
+    from syscol_spark.sources.tables import load_table
+
+    def pairs(n1, n2):
+        return sorted(
+            tuple(r)
+            for r in n1.join(n2, n1["n_regionkey"] == n2["n_regionkey"])
+            .select(n1["n_name"], n2["n_name"])
+            .collect()
+        )
+
+    path = f"{sf_dir}/nation.parquet"
+    want = pairs(spark.read.parquet(path), spark.read.parquet(path))
+    got = pairs(load_table(spark, sf_dir, "nation"), load_table(spark, sf_dir, "nation"))
+    assert got == want and len(want) > 25
+
+
+def test_fan_out_follows_a_rewrite_across_the_lower_bound(spark, tmp_path):
+    """A ``documents`` file rewritten from under 256 KiB to over it in the
+    same process takes the new repartition decision."""
+    import random
+
+    from syscol_spark.sources.tables import _resolved
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+
+    rng = random.Random(7)
+    text = ["".join(rng.choices("abcdefghij", k=2000)) for _ in range(20)]  # ~40 KB
+    path = _write(tmp_path, "documents", {"doc_id": list(range(20)), "text": text})
+    df, _ = _load_jobs(spark, tmp_path, "documents")
+    assert not _resolved[path].fan_out and "RoundRobinPartitioning" not in plan(df)
+    text = ["".join(rng.choices("abcdefghij", k=2000)) for _ in range(200)]  # ~400 KB
+    _write(tmp_path, "documents", {"doc_id": list(range(200)), "text": text})
+    df, _ = _load_jobs(spark, tmp_path, "documents")
+    assert _resolved[path].fan_out and "RoundRobinPartitioning" in plan(df)
+    assert df.count() == 200
 
 
 def test_needs_fan_out_hadoop_fs_matches_local(spark, sf_dir):
     """The small-file fan-out heuristic reads one set of stats through the
     Hadoop FileSystem API (the same API an s3a:// or gs:// path uses): a
     plain path resolves through the default local filesystem and must give
-    the same (bytes, files) and the same decision as its file:// form."""
-    from syscol_spark.sources.tables import _fan_out_cache, _hadoop_stats, _needs_fan_out
+    the same (bytes, files, mtime) and the same decision as its file:// form."""
+    from syscol_spark.sources.tables import _hadoop_stats, _resolve, _resolved
 
     plain = f"{sf_dir}/documents.parquet"
     uri = f"file://{plain}"
     assert _hadoop_stats(spark, plain) is not None
     assert _hadoop_stats(spark, plain) == _hadoop_stats(spark, uri)
-    _fan_out_cache.pop(plain, None)
-    _fan_out_cache.pop(uri, None)
-    assert _needs_fan_out(spark, uri) == _needs_fan_out(spark, plain)
+    _resolved.pop(plain, None)
+    _resolved.pop(uri, None)
+    assert _resolve(spark, uri).fan_out == _resolve(spark, plain).fan_out
     # a directory with hidden/_SUCCESS-style entries counts visible bytes only
     assert _hadoop_stats(spark, sf_dir) == _hadoop_stats(spark, f"file://{sf_dir}")
 
 
 def test_needs_fan_out_missing_path_is_false(spark):
-    from syscol_spark.sources.tables import _needs_fan_out
+    from syscol_spark.sources.tables import _resolve
 
-    assert _needs_fan_out(spark, "/no/such/file.parquet") is False
-    assert _needs_fan_out(spark, "file:///no/such/file.parquet") is False
+    assert _resolve(spark, "/no/such/file.parquet") is None
+    assert _resolve(spark, "file:///no/such/file.parquet") is None
