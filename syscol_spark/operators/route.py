@@ -1,6 +1,6 @@
 """The driver-local / distributed choice, made in one place.
 
-Seven operators have a driver-local twin, exact and cheap while its input
+Eight operators have a driver-local twin, exact and cheap while its input
 is small, and a distributed twin that runs at any size. Both twins compute
 the same result, so the choice steers only cost. Each decision is one row
 of ``BOUNDS`` (connected components and PageRank share the edge-list row)
@@ -9,7 +9,10 @@ rows, and when no more than ``bound`` came back the fetch returned every
 row, so the local twin starts from the complete input (``limit``'s choice
 of rows matters only on the over-bound side, where the rows are dropped).
 The fetch is the only measurement: Catalyst's size estimate sizes a
-200-row MMR shortlist at tens of GB, so it cannot pick a side.
+200-row MMR shortlist at tens of GB, so it cannot pick a side. Two rows
+bound a size the driver derives from rows it already fetched, checked with
+``fits``: MMR's in-shortlist pairs (``mmr_pairs``) and the k-NN graph's
+candidate pairs (``knn_pairs``, after the ``pair_scorer`` fetch).
 
 A local twin hands its result back through ``local_frame``, so the frame
 it returns plans as a ``LocalTableScan`` and costs no Spark job to use.
@@ -50,6 +53,13 @@ BOUNDS = {
     "bpe_vocab": 200_000,
     # connected components and PageRank: edge rows, two ids each
     "graph_edges": 200_000,
+    # knn_graph: candidate pairs before deduplication, the sum over
+    # (band, key) buckets of B(B-1)/2, counted from the keys before any pair
+    # exists; 2^24 int64 pair codes are 128 MB. 10,000 uniform random
+    # dim-64 vectors (auto band_bits = 7) have 16.2M: the local twin built
+    # their graph in 3.5-3.8 s at a 584 MB driver peak, the distributed one
+    # in 22-25 s (4 cores)
+    "knn_pairs": 1 << 24,
 }
 
 
@@ -64,11 +74,13 @@ def route(name: str, frame: DataFrame, *, arrow: bool = False):
     return rows if fits(name, len(rows)) else None
 
 
-def fits(name: str, observed: int) -> bool:
+def fits(name: str, observed: int, *, local_ok: bool = True) -> bool:
     """Whether ``observed``, a size the caller already holds, is within
-    ``BOUNDS[name]``; logs the decision."""
+    ``BOUNDS[name]``; logs the decision. ``local_ok=False`` sends it to the
+    distributed twin at any size: the input has a shape that only that twin
+    handles."""
     bound = BOUNDS[name]
-    path = "local" if observed <= bound else "distributed"
+    path = "local" if local_ok and observed <= bound else "distributed"
     log.debug(
         "%s: %d against %d -> %s", name, observed, bound, path,
         extra={"route": {"name": name, "bound": bound, "observed": observed, "path": path}},

@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.functions import broadcast
 
+from syscol_spark.functions.rounding import round6_like_spark_array
 from syscol_spark.functions.vectors import cosine_similarity
 from syscol_spark.operators.route import fits, local_frame, route
 
@@ -617,6 +618,11 @@ def rademacher_signs(dim: int, plane: int, seed: int = 42) -> list[float]:
     return out
 
 
+def _sign_planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
+    """The (n_planes x dim) rademacher_signs matrix."""
+    return np.array([rademacher_signs(dim, p, seed) for p in range(n_planes)], dtype="float64")
+
+
 def srp_plane_sums(vec: Column | str, dim: int, n_planes: int, seed: int = 42) -> Column:
     """Array of ``n_planes`` signed sums <vec, ±1-plane_p>, via one
     Arrow-batched numpy matmul: (batch x dim) @ (dim x n_planes).
@@ -632,7 +638,7 @@ def srp_plane_sums(vec: Column | str, dim: int, n_planes: int, seed: int = 42) -
     order) still mirrors bucket assignment exactly."""
     from pyspark.sql.functions import pandas_udf
 
-    signs = np.array([rademacher_signs(dim, p, seed) for p in range(n_planes)], dtype="float64")
+    signs = _sign_planes(dim, n_planes, seed)
 
     @pandas_udf("array<double>")
     def _sums(v: pd.Series) -> pd.Series:
@@ -935,26 +941,33 @@ def _score_pairs_arrow(pairs_with_vecs: DataFrame) -> DataFrame:
                 continue
             va = np.stack(pdf["vec_a"].to_numpy()).astype("float64")
             vb = np.stack(pdf["vec_b"].to_numpy()).astype("float64")
-            yield _cosine_batch(pdf, va, vb)
+            yield _with_cosine(pdf, va, vb)
 
     return _scored_pairs(pairs_with_vecs, score)
 
 
-def _cosine_batch(pdf, va, vb):
-    """The one pair-cosine kernel both scorers run: (id_a, id_b, raw cosine)
-    for one Arrow batch whose row-aligned float64 vectors are ``va``/``vb``.
-    The 6dp rounding is NOT applied here — _scored_pairs rounds with F.round
-    so every scorer shares the DuckDB ROUND definition."""
+def _cosine_batch(va: np.ndarray, vb: np.ndarray) -> np.ndarray:
+    """The one pair-cosine kernel every scorer runs: the raw cosine of each
+    row-aligned pair of float64 vectors ``va``/``vb`` (NaN for a zero
+    vector). The 6dp rounding is NOT applied here — the Spark scorers round
+    with F.round and the driver-local k-NN graph with its mirror, so every
+    scorer shares the DuckDB ROUND definition."""
     dots = np.einsum("ij,ij->i", va, vb)
     na = np.sqrt(np.einsum("ij,ij->i", va, va))
     nb = np.sqrt(np.einsum("ij,ij->i", vb, vb))
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return dots / (na * nb)
+
+
+def _with_cosine(pdf, va, vb):
+    """(id_a, id_b, raw cosine) for one Arrow batch of pairs."""
     out = pdf[["id_a", "id_b"]].copy()
-    out["cosine"] = dots / (na * nb)
+    out["cosine"] = _cosine_batch(va, vb)
     return out
 
 
 def _scored_pairs(pairs: DataFrame, score) -> DataFrame:
-    """Run a _cosine_batch generator over ``pairs`` and round the cosine to
+    """Run a _with_cosine generator over ``pairs`` and round the cosine to
     6dp; output id columns keep the input's id dtypes."""
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -992,14 +1005,8 @@ def _score_pairs_closure(pairs: DataFrame, pdf) -> DataFrame:
 
     The kernel (_cosine_batch) and the final F.round are shared with
     _score_pairs_arrow, so the two paths emit the same cosines and the
-    DuckDB oracles hold for either. The Arrow fetch lands vectors as numpy
-    float32 cells, and the float32 -> float64 widening is exact."""
-    ids = pdf.iloc[:, 0].to_numpy()
-    order = np.argsort(ids)
-    ids_sorted = ids[order]
-    mat = np.array(
-        [np.asarray(v, dtype="float64") for v in pdf.iloc[:, 1]], dtype="float64"
-    )[order]
+    DuckDB oracles hold for either."""
+    ids_sorted, mat = _id_sorted(pdf)
 
     # The matrix rides in the python command (re-shipped per task, bounded
     # by the pair_scorer route), not in a SparkContext.broadcast: that
@@ -1010,9 +1017,21 @@ def _score_pairs_closure(pairs: DataFrame, pdf) -> DataFrame:
                 continue
             ia = np.searchsorted(ids_sorted, pdf["id_a"].to_numpy())
             ib = np.searchsorted(ids_sorted, pdf["id_b"].to_numpy())
-            yield _cosine_batch(pdf, mat[ia], mat[ib])
+            yield _with_cosine(pdf, mat[ia], mat[ib])
 
     return _scored_pairs(pairs, score)
+
+
+def _id_sorted(pdf) -> tuple[np.ndarray, np.ndarray]:
+    """A fetched (id, vec) corpus as (ids ascending, float64 row matrix in
+    that order). The Arrow fetch lands vectors as numpy float32 cells, and
+    the float32 -> float64 widening is exact."""
+    ids = pdf.iloc[:, 0].to_numpy()
+    order = np.argsort(ids)
+    mat = np.array(
+        [np.asarray(v, dtype="float64") for v in pdf.iloc[:, 1]], dtype="float64"
+    )
+    return ids[order], mat[order]
 
 
 def _score_pairs_for(pairs: DataFrame, sides: DataFrame, pdf) -> DataFrame:
@@ -1055,9 +1074,24 @@ def knn_graph(
     same deterministic ±1 planes keep the whole thing oracle-mirrorable.
     Output: (src, nbr, cosine, rk<=k).
 
-    Scoring is the Arrow/numpy batch path, not the column-expression fold:
-    the graph build scores EVERY candidate pair (~10^6 at n=2000 already),
-    and one einsum per Arrow batch is 10-50× the interpreted fold.
+    Two twins compute the graph. The ``pair_scorer`` route fetches the
+    (id, vec) corpus; when it holds the whole corpus the driver derives the
+    band keys and counts the candidate pairs before deduplication, the sum
+    over (band, key) buckets of B(B-1)/2. Within the ``knn_pairs`` bound,
+    and with no bucket over ``bucket_cap``, ``_knn_graph_local`` builds the
+    whole graph in numpy and returns it as a local relation, so nothing
+    downstream re-runs a k-NN plan: below a size bound distributed
+    execution is scheduling overhead (McSherry et al., "Scalability! But
+    at what COST?", HotOS 2015). Otherwise the distributed twin runs:
+    ``_srp_candidate_pairs``' band self-join (the only twin with the capped
+    windows), the routed scorer, and a window per src. Both twins widen
+    float32 cells to float64, take sign bits from the same ±1 planes,
+    score with ``_cosine_batch`` and round like ``F.round(x, 6)``, so they
+    emit the same rows.
+
+    Scoring is numpy batches, not the column-expression fold: the graph
+    build scores EVERY candidate pair (~10^6 at n=2000 already), and one
+    einsum per batch is 10-50× the interpreted fold.
 
     ``band_bits="auto"`` derives the bucket width from a corpus count
     probe: ``max(4, ceil(log2(n / target_bucket)))``, keeping the expected
@@ -1098,6 +1132,15 @@ def knn_graph(
         # under the bound the scorer's fetch holds every row
         n = len(pdf) if pdf is not None else corpus.count()
         band_bits = max(4, math.ceil(math.log2(max(1, n) / target_bucket)))
+    if pdf is not None:
+        ids, mat = _id_sorted(pdf)
+        keys = _band_keys_local(mat, dim, n_bands, band_bits, seed)
+        sizes = [np.unique(band, return_counts=True)[1] for band in keys.T]
+        volume = sum(int((b * (b - 1) // 2).sum()) for b in sizes)
+        # only the distributed twin has the capped windows
+        under_cap = max((int(b.max()) for b in sizes if len(b)), default=0) <= bucket_cap
+        if fits("knn_pairs", volume, local_ok=under_cap):
+            return _knn_graph_local(sides, ids, mat, keys, k)
     tagged = corpus.withColumn("__blk", F.lit(1))
     cand = _srp_candidate_pairs(
         tagged, vec_col=vec_col, id_col=id_col, block_col="__blk",
@@ -1122,6 +1165,81 @@ def knn_graph(
     )
     w = Window.partitionBy("src").orderBy(F.col("cosine").desc(), F.col("nbr"))
     return sym.select("*", F.row_number().over(w).cast("long").alias("rk")).filter(F.col("rk") <= k)
+
+
+def _band_keys_local(mat: np.ndarray, dim: int, n_bands: int, band_bits: int, seed: int) -> np.ndarray:
+    """(n x n_bands) band keys of the rows of ``mat``, as srp_keys_from_sums
+    packs srp_plane_sums: bit j of a band is its plane's sum >= 0, weighted
+    1 << j. One whole-corpus matmul may differ from the per-batch UDF in
+    the last ulp, far inside the 4.1e-5 minimum |sum| (srp_band_sql_keys),
+    so every sign bit is the same."""
+    sums = mat.reshape(-1, dim) @ _sign_planes(dim, n_bands * band_bits, seed).T
+    bits = (sums >= 0).reshape(-1, n_bands, band_bits).astype("int64")
+    return bits @ (np.int64(1) << np.arange(band_bits, dtype="int64"))
+
+
+# pairs scored per gather in _knn_graph_local: 2 x 8k rows of dim-64
+# float64 are 8 MB, which stays in cache (64k-pair gathers ran 2.7x slower)
+_KNN_SCORE_CHUNK = 1 << 13
+# sort slots of a 6dp cosine in [-1, 1]: 1e6 - cosine * 1e6, so a smaller
+# slot is a larger cosine; NaN takes the last slot
+_COS_SLOTS = 2_000_002
+
+
+def _knn_graph_local(sides: DataFrame, ids: np.ndarray, mat: np.ndarray, keys: np.ndarray, k: int) -> DataFrame:
+    """knn_graph's driver-local twin over the id-sorted corpus ``ids``/``mat``
+    (fetched from ``sides``) and its band ``keys``: (src, nbr, cosine, rk)
+    as a local relation, with the distributed twin's arithmetic.
+
+    Candidates are the row-index pairs i < j (so id_a < id_b) sharing a key
+    in any band, deduplicated as int64 codes i * n + j. Each is scored once
+    by _cosine_batch over bounded gathers and rounded like F.round. A zero
+    vector's NaN cosine is NULL, as the Spark scorers' Arrow crossing makes
+    it. Both directions of every pair are packed into one int64 sort key
+    (src, cosine slot, nbr), so one sort orders each src's neighbors by
+    (cosine desc with NULL last, nbr asc), as the distributed window does,
+    and the top k are read at each src's offset. ``n`` is within the
+    pair_scorer bound, so n * n * _COS_SLOTS stays far inside int64."""
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    n = len(ids)
+    a, b = np.divmod(np.unique(np.concatenate([_bucket_pairs(band, n) for band in keys.T])), n)
+    slot = np.empty(len(a), dtype="int64")
+    for s in range(0, len(a), _KNN_SCORE_CHUNK):
+        e = s + _KNN_SCORE_CHUNK
+        cos = round6_like_spark_array(_cosine_batch(mat[a[s:e]], mat[b[s:e]]))
+        slot[s:e] = np.where(np.isnan(cos), _COS_SLOTS - 1, 1_000_000 - np.rint(cos * 1e6))
+    packed = np.concatenate([(a * _COS_SLOTS + slot) * n + b, (b * _COS_SLOTS + slot) * n + a])
+    del a, b, slot
+    packed.sort()
+    starts = np.searchsorted(packed, np.arange(n + 1, dtype="int64") * (_COS_SLOTS * n))
+    take = starts[:-1, None] + np.arange(k)
+    take = take[take < starts[1:, None]]
+    src, rest = np.divmod(packed[take], _COS_SLOTS * n)
+    slot, nbr = np.divmod(rest, n)
+    cosine = [None if q == _COS_SLOTS - 1 else (1_000_000 - q) / 1e6 for q in slot.tolist()]
+    rk = take - starts[src] + 1
+    rows = list(zip(ids[src].tolist(), ids[nbr].tolist(), cosine, rk.tolist()))
+    id_type = sides.schema["id"].dataType
+    schema = StructType([
+        StructField("src", id_type), StructField("nbr", id_type),
+        StructField("cosine", DoubleType()), StructField("rk", LongType()),
+    ])
+    return local_frame(sides.sparkSession, rows, schema)
+
+
+def _bucket_pairs(keys: np.ndarray, n: int) -> np.ndarray:
+    """Codes i * n + j of every row-index pair i < j with equal ``keys``:
+    the upper triangle of each bucket, enumerated without a Python loop."""
+    order = np.argsort(keys, kind="stable")  # ascending row index per bucket
+    sk = keys[order]
+    starts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
+    sizes = np.diff(np.r_[starts, n])
+    # a member at rank r of a size-B bucket pairs with the B-1-r after it
+    fan = np.repeat(sizes, sizes) - 1 - (np.arange(n) - np.repeat(starts, sizes))
+    left = np.repeat(np.arange(n), fan)
+    step = np.arange(len(left)) - np.repeat(np.cumsum(fan) - fan, fan) + 1
+    return order[left] * n + order[left + step]
 
 
 # --- IVF lists: nearest-list assignment, residuals, nprobe ranking ---------

@@ -409,20 +409,6 @@ _SEMDEDUP_STATE = StructType(
 )
 
 
-def _round6_like_spark(x: float) -> float:
-    """Mirror F.round(col, 6) for a double: Spark rounds the value's
-    SHORTEST decimal representation HALF_UP (BigDecimal.valueOf ==
-    Double.toString == Python repr), NOT the full binary expansion and NOT
-    banker's rounding. The keep decision below thresholds on this rounded
-    cosine, so it must match the batch scorer's F.round bit-for-bit."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    if not math.isfinite(x):
-        return x
-    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
-
-
 def streaming_semantic_dedup(
     stream: DataFrame,
     centroids: list[list[float]],
@@ -453,6 +439,7 @@ def streaming_semantic_dedup(
     per-cluster state is O(vectors within the watermark horizon), matching
     the SemDeDup design point that clusters are small.
     """
+    from syscol_spark.functions.rounding import round6_like_spark
     from syscol_spark.operators.similarity import _assign_nearest
 
     assigned = (
@@ -493,7 +480,7 @@ def streaming_semantic_dedup(
                         continue  # only lower ids drop (batch rule)
                     m = np.array(m_vec, dtype="float64")
                     cos = float(v @ m) / (nv * float(np.sqrt(m @ m)))
-                    if _round6_like_spark(cos) >= min_cosine:
+                    if round6_like_spark(cos) >= min_cosine:
                         keep = False
                         break
                 out["vec_id"].append(doc_id)

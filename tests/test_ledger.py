@@ -47,20 +47,20 @@ WARM_BUILD_JOBS = {
     "q_inverted_index": 0,
 }
 
-# q_pagerank's eager calls include the graph_edges route fetch of its edge
-# list, the k-NN graph's pair_scorer route fetch, and the candidate
-# generator's checkpoints (its id-sorted one among them)
+# q_pagerank's eager calls: the k-NN graph's pair_scorer route fetch (the
+# graph itself is built on the driver) and the graph_edges route fetch of
+# its edge list, a local relation
 PAGERANK_SITES = {
     "operators/graph.py::pagerank",
     "operators/similarity.py::knn_graph",
-    "operators/similarity.py::_srp_candidate_pairs",
 }
 
-# q_pagerank's build jobs at sf0.001: the k-NN graph and the one edge-list
-# fetch; PageRank itself runs on the driver. Warm, its one table load runs
-# no job.
-PAGERANK_BUILD_JOBS = 12
-PAGERANK_WARM_BUILD_JOBS = 11
+# q_pagerank's build jobs at sf0.001: the corpus fetch, the edge-list fetch
+# (one job over the k-NN graph's local relation) and the table's schema
+# inference; the k-NN graph and PageRank run on the driver. Warm, its one
+# table load runs no job.
+PAGERANK_BUILD_JOBS = 3
+PAGERANK_WARM_BUILD_JOBS = 2
 
 
 def _cold(spark, name: str, sf_dir: str) -> dict:
@@ -100,7 +100,7 @@ def test_pagerank_sites_account_for_every_build_job(spark, sf_dir):
         assert PAGERANK_SITES <= {s["site"] for s in row["sites"]}
         assert sum(s["jobs"] for s in row["sites"]) + row["unattributed"]["jobs"] == row["build"]["jobs"]
         assert row["attribution_ok"]
-        assert _paths(row) == {"pair_scorer": "local", "graph_edges": "local"}
+        assert _paths(row) == {"pair_scorer": "local", "knn_pairs": "local", "graph_edges": "local"}
         assert row["build"]["jobs"] == jobs and row["plan"]["jobs"] == 0
         assert row["plan"]["local"] and row["execute"]["jobs"] == 0
     assert _inference_jobs(warm) == 0

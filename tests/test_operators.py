@@ -1575,7 +1575,7 @@ def test_salted_join_rejects_dim_preserving_and_reserved(spark):
         salted_join(fact.withColumn("__salt", F.lit(0)), dim, on="k")
 
 
-def test_knn_graph_auto_band_bits(spark):
+def test_knn_graph_auto_band_bits(spark, monkeypatch):
     """band_bits='auto' must keep expected bucket occupancy near
     target_bucket: the derived width is the historical pinned 4 for every
     oracle-scale corpus (<= 2000 vectors at target 125) and grows with
@@ -1590,14 +1590,18 @@ def test_knn_graph_auto_band_bits(spark):
     assert derive(20_000) == 8   # sf1: 256 buckets/band, ~78 vecs/bucket
     assert derive(2_000_000) == 14
 
-    # end-to-end: auto and the pinned width agree exactly at oracle scale
+    # end-to-end: auto and the pinned width agree exactly at oracle scale,
+    # in the driver-local twin and in the distributed one
+    from syscol_spark.operators import route
     from syscol_spark.operators.similarity import knn_graph
 
     rows = [(i, [float((i * 7 + j * 13) % 11 - 5) for j in range(8)]) for i in range(60)]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    fixed = knn_graph(corpus, k=2, dim=8, n_bands=4, band_bits=4)
-    auto = knn_graph(corpus, k=2, dim=8, n_bands=4, band_bits="auto")
-    assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, fixed.collect()))
+    for bound in (route.BOUNDS["pair_scorer"], -1):
+        monkeypatch.setitem(route.BOUNDS, "pair_scorer", bound)
+        fixed = knn_graph(corpus, k=2, dim=8, n_bands=4, band_bits=4)
+        auto = knn_graph(corpus, k=2, dim=8, n_bands=4, band_bits="auto")
+        assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, fixed.collect()))
 
 
 def test_salted_join_randomized_equivalence(spark):
@@ -1780,13 +1784,56 @@ def test_srp_bucket_cap_requires_two_planes(spark):
         )
 
 
-def test_knn_graph_capped_equals_uncapped_at_small_scale(spark):
+def test_knn_graph_local_matches_pairwise_loop(spark):
+    """The driver-local k-NN graph against a pairwise Python loop over the
+    same band keys: every pair i < j sharing a key in some band, each
+    src's top k by (cosine desc with a zero vector's NULL last, nbr asc).
+    Small-integer vectors keep every dot product exact, so the loop's
+    cosines equal the kernel's."""
+    import itertools
+    import math
+
+    import numpy as np
+
+    from syscol_spark.functions.rounding import round6_like_spark
+    from syscol_spark.operators.similarity import _band_keys_local, knn_graph
+
+    rng = np.random.default_rng(7)
+    for n in (1, 2, 17, 40, 64):
+        mat = rng.integers(-3, 4, (n, 8)).astype(float)
+        mat[n // 2] = 0.0
+        ids = [f"d{(i * 37) % 101:03d}" for i in range(n)]
+        corpus = spark.createDataFrame(
+            [(d, v.tolist()) for d, v in zip(ids, mat)], "vec_id string, embedding array<float>"
+        )
+        got = sorted(map(tuple, knn_graph(corpus, k=2, dim=8, n_bands=3, band_bits=2).collect()), key=repr)
+
+        keys = _band_keys_local(mat, 8, 3, 2, 42)
+        lists: dict = {}
+        for i, j in itertools.combinations(range(n), 2):
+            if (keys[i] == keys[j]).any():
+                norm = math.sqrt(mat[i] @ mat[i]) * math.sqrt(mat[j] @ mat[j])
+                c = round6_like_spark(float(mat[i] @ mat[j]) / norm) if norm else None
+                lists.setdefault(ids[i], []).append((ids[j], c))
+                lists.setdefault(ids[j], []).append((ids[i], c))
+        want = []
+        for src, nbrs in lists.items():
+            nbrs.sort(key=lambda x: (x[1] is None, -(x[1] or 0.0), x[0]))
+            want += [(src, nbr, c, rk) for rk, (nbr, c) in enumerate(nbrs[:2], 1)]
+        assert got == sorted(want, key=repr), n
+
+
+def test_knn_graph_capped_equals_uncapped_at_small_scale(spark, monkeypatch):
     """End-to-end: the default cap must leave a small corpus's k-NN graph
-    identical to an effectively-uncapped build."""
+    identical to an effectively-uncapped build, in the driver-local twin
+    and in the distributed one."""
+    from syscol_spark.operators import route
     from syscol_spark.operators.similarity import knn_graph
 
     rows = [(i, [float((i * 5 + j * 17) % 13 - 6) for j in range(8)]) for i in range(70)]
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    default_cap = knn_graph(corpus, k=2, dim=8, n_bands=4, band_bits=4)
-    huge_cap = knn_graph(corpus, k=2, dim=8, n_bands=4, band_bits=4, bucket_cap=10**9)
-    assert sorted(map(tuple, default_cap.collect())) == sorted(map(tuple, huge_cap.collect()))
+    for bound in (route.BOUNDS["pair_scorer"], -1):
+        monkeypatch.setitem(route.BOUNDS, "pair_scorer", bound)
+        default_cap = knn_graph(corpus, k=2, dim=8, n_bands=4, band_bits=4)
+        huge_cap = knn_graph(corpus, k=2, dim=8, n_bands=4, band_bits=4, bucket_cap=10**9)
+        assert sorted(map(tuple, default_cap.collect())) == sorted(map(tuple, huge_cap.collect()))

@@ -8,10 +8,11 @@ in exactly one decision, give the same columns and types, and, for a
 catalog query, match its DuckDB oracle. Catalog cases are the cheapest
 query that reaches each bound; synthetic cases cover shapes the sf0.001
 data lacks (its near-dup components are all pairs, no document holds a
-'|', and its k-NN graph has no hub, no node without in-edges and only
-integer ids). The k-means trainer's distributed twin also gets synthetic cases:
-subspaces that converge at different iterations, and its job count
-across subspace counts.
+'|', its k-NN graph has no hub, no node without in-edges and only
+integer ids, and its corpus has no duplicate or zero vector). The
+k-means trainer's distributed twin also gets synthetic cases: subspaces
+that converge at different iterations, and its job count across subspace
+counts.
 """
 
 from __future__ import annotations
@@ -45,6 +46,36 @@ def _pagerank_hub(spark, sf_dir):
     return pagerank(spark.createDataFrame(edges, "src string, dst string"))
 
 
+def _knn_corners(bucket_cap: int | None = None):
+    """String ids; three copies of one vector (cosine 1.0 ties, broken by
+    nbr); an all-zero vector (a NaN cosine with every candidate, NULL in
+    the result); and a vector that shares no (band, key) bucket with any
+    other. Integer components keep every plane sum exact and away from
+    zero, except the zero vector's. Band 0's largest bucket holds 6."""
+
+    def build(spark, sf_dir):
+        from syscol_spark.operators.similarity import KNN_BUCKET_CAP, knn_graph
+
+        dup = [3.0, 3.0, 2.0, 0.0, -1.0, 3.0, -2.0, 1.0]
+        rows = [("dup_c", dup), ("dup_a", dup), ("dup_b", dup),
+                ("v3", [1.0, -1.0, -1.0, 0.0, -3.0, 1.0, 3.0, -1.0]),
+                ("v4", [1.0, 3.0, 0.0, -1.0, 1.0, 1.0, 1.0, 3.0]),
+                ("v5", [-1.0, 2.0, -3.0, 1.0, 0.0, 1.0, -3.0, 2.0]),
+                ("v6", [-2.0, 1.0, 0.0, 0.0, 2.0, 3.0, 3.0, -2.0]),
+                ("v7", [-2.0, -3.0, 0.0, -1.0, -3.0, -2.0, 3.0, 3.0]),
+                ("v8", [0.0, 0.0, -1.0, 3.0, 3.0, 0.0, -3.0, -2.0]),
+                ("zero", [0.0] * 8),
+                ("loner", [2.0, 3.0, 3.0, 3.0, 2.0, -3.0, -1.0, 2.0])]
+        corpus = spark.createDataFrame(rows, "doc string, emb array<float>")
+        return knn_graph(
+            corpus, vec_col="emb", id_col="doc", k=3, dim=8, n_bands=2, band_bits=3,
+            bucket_cap=KNN_BUCKET_CAP if bucket_cap is None else bucket_cap,
+        )
+
+    build.__name__ = "knn_corners" if bucket_cap is None else f"knn_corners_cap{bucket_cap}"
+    return build
+
+
 def _bpe_corners(batch):
     """Merge-with-skip corners (consecutive pairs: 'abab', 'banana'), '|'
     inside a word and multi-character symbols."""
@@ -69,6 +100,9 @@ CASES = [
     ("kmeans_sample", "q_ann_ivf"),
     # over the bound, band_bits="auto" counts the corpus itself
     ("pair_scorer", "q_knn_graph"),
+    ("pair_scorer", _knn_corners()),
+    ("knn_pairs", "q_knn_graph"),
+    ("knn_pairs", _knn_corners()),
     ("bpe_vocab", "q_bpe_vocab_batched"),
     ("bpe_vocab", _bpe_corners(1)),
     ("bpe_vocab", _bpe_corners(4)),
@@ -81,7 +115,11 @@ CASES = [
 
 # routes whose local twin's result is the case's result: it comes back as a
 # local relation, which runs no job when used
-LOCAL_RESULTS = {"mmr_shortlist", "mmr_pairs", "bpe_vocab", "graph_edges"}
+LOCAL_RESULTS = {"mmr_shortlist", "mmr_pairs", "pair_scorer", "knn_pairs", "bpe_vocab", "graph_edges"}
+
+
+def test_every_bound_has_a_case():
+    assert {name for name, _ in CASES} == set(R.BOUNDS)
 
 
 def _case_id(case) -> str:
@@ -131,6 +169,35 @@ def test_forced_route_matches_local_and_oracle(spark, sf_dir, monkeypatch, caplo
         want_cols = [c.lower() for c in rel.columns]
         assert sorted(want_cols) == sorted(cols)
         assert _same(forced, normalize(rel.fetchall(), want_cols))
+
+
+def test_knn_corners_local_result(spark):
+    """The driver-local k-NN graph over _knn_corners: the loner is in no
+    row, the zero vector's cosines are NULL (the NaN the Spark scorers'
+    Arrow crossing turns into NULL) and rank after every number, and equal
+    cosines rank by nbr."""
+    rows = _knn_corners()(spark, None).collect()
+    assert "loner" not in {r["src"] for r in rows} | {r["nbr"] for r in rows}
+    zero = sorted((r["rk"], r["nbr"], r["cosine"]) for r in rows if r["src"] == "zero")
+    assert zero == [(1, "dup_a", None), (2, "dup_b", None), (3, "dup_c", None)]
+    dup_a = sorted((r["rk"], r["nbr"], r["cosine"]) for r in rows if r["src"] == "dup_a")
+    assert [(rk, nbr) for rk, nbr, _ in dup_a] == [(1, "dup_b"), (2, "dup_c"), (3, "v4")]
+    assert dup_a[0][2] == dup_a[1][2] == 1.0
+    v5 = sorted((r["rk"], r["nbr"], r["cosine"]) for r in rows if r["src"] == "v5")
+    assert [(rk, nbr, c is None) for rk, nbr, c in v5] == [(1, "v8", False), (2, "zero", True)]
+
+
+def test_knn_bucket_over_cap_takes_the_distributed_twin(spark, monkeypatch, caplog):
+    """A (band, key) bucket larger than bucket_cap sends the k-NN graph to
+    the distributed twin, the only one with capped windows, under the
+    knn_pairs decision; both scorers agree on the capped result."""
+    capped = _knn_corners(bucket_cap=2)
+    _, _, got, paths, local_scan = _run(spark, None, capped, caplog, "knn_pairs")
+    assert paths == ["distributed"] and not local_scan
+    monkeypatch.setitem(R.BOUNDS, "pair_scorer", -1)
+    _, _, forced, paths, _ = _run(spark, None, capped, caplog, "pair_scorer")
+    assert paths == ["distributed"]
+    assert len(got) > 0 and _same(forced, got)
 
 
 @pytest.mark.parametrize("trainer", ["ivfpq", "ivfpq_residual", "pq_adc"])

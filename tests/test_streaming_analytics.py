@@ -478,23 +478,32 @@ def test_streaming_semantic_dedup_matches_batch(spark, sf_dir, tmp_path):
 
 
 def test_round6_mirror_matches_spark_round(spark):
-    """_round6_like_spark must agree with F.round(col, 6) on arbitrary
-    doubles — the streaming dedup's keep decision thresholds on it, so any
-    divergence breaks batch parity. One Spark job over a deterministic
-    mixed sample: uniform cosines, boundary-ish values, negatives, ints."""
+    """round6_like_spark and its array form must agree with F.round(col, 6)
+    on arbitrary doubles, down to the sign of a zero: the streaming dedup's
+    keep decision thresholds on the scalar form and the driver-local k-NN
+    graph emits the array form's cosines, so any divergence breaks batch
+    parity. One Spark job over a deterministic mixed sample: uniform
+    cosines, boundary-ish values, negatives, ints, tiny negatives that
+    round to zero."""
+    import math
     import random
 
-    from syscol_spark.streaming.analytics import _round6_like_spark
+    import numpy as np
+
+    from syscol_spark.functions.rounding import round6_like_spark, round6_like_spark_array
 
     rng = random.Random(99)
     vals = [rng.uniform(-1, 1) for _ in range(3000)]
     vals += [rng.uniform(-1, 1) * 10 ** rng.randint(-9, 3) for _ in range(3000)]
     vals += [x / 2_000_000 for x in range(-20, 21)]  # exact 5e-7 half-points
-    vals += [0.0, -0.0, 1.0, -1.0, 0.1234565, 0.1234575]
+    vals += [0.0, -0.0, 1.0, -1.0, 0.1234565, 0.1234575, -1e-9, -4.9e-7, -5e-7]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     got = [r["r"] for r in df.select(F.round("x", 6).alias("r")).collect()]
-    for v, g in zip(vals, got):
-        assert _round6_like_spark(v) == g, (v, _round6_like_spark(v), g)
+    arr = round6_like_spark_array(np.array(vals)).tolist()
+    for v, g, a in zip(vals, got, arr):
+        s = round6_like_spark(v)
+        assert s == g and math.copysign(1.0, s) == math.copysign(1.0, g), (v, s, g)
+        assert a == g and math.copysign(1.0, a) == math.copysign(1.0, g), (v, a, g)
 
 
 def test_streaming_semantic_dedup_watermark_evicts_members(spark, tmp_path):
@@ -1564,7 +1573,8 @@ def test_streaming_semantic_dedup_state_survives_restart(spark, sf_dir, tmp_path
     import numpy as np
 
     from syscol_spark.operators.similarity import kmeans_centroids, semantic_dedup
-    from syscol_spark.streaming.analytics import _round6_like_spark, streaming_semantic_dedup
+    from syscol_spark.functions.rounding import round6_like_spark
+    from syscol_spark.streaming.analytics import streaming_semantic_dedup
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
     cents = kmeans_centroids(emb, k=16, max_iter=3, train_stride=1)
@@ -1587,7 +1597,7 @@ def test_streaming_semantic_dedup_state_survives_restart(spark, sf_dir, tmp_path
         for j in members:
             vj = vecs[j]
             cos = float(vi @ vj) / (ni * float(np.sqrt(vj @ vj)))
-            if _round6_like_spark(cos) >= 0.2:
+            if round6_like_spark(cos) >= 0.2:
                 return True
         return False
 
