@@ -35,8 +35,9 @@ def round6_like_spark_array(x: np.ndarray) -> np.ndarray:
     ``x * 1e6`` at most, so only values within a window far wider than that
     of a half-quantum (where half-to-even and HALF_UP can disagree), and
     values too large for an exact integer, take the scalar ``Decimal``
-    path."""
-    x = np.asarray(x, dtype="float64")
+    path. Any shape; the result has ``x``'s."""
+    shape = np.shape(x)
+    x = np.asarray(x, dtype="float64").ravel()
     y = x * 1e6
     out = np.round(y) / 1e6
     ay = np.abs(y)
@@ -45,4 +46,4 @@ def round6_like_spark_array(x: np.ndarray) -> np.ndarray:
     exact = np.flatnonzero(near_half | (ay >= 2.0**52))
     if len(exact):
         out[exact] = [round6_like_spark(v) for v in x[exact].tolist()]
-    return out + 0.0
+    return (out + 0.0).reshape(shape)

@@ -1,18 +1,21 @@
 """The driver-local / distributed choice, made in one place.
 
 Eight operators have a driver-local twin, exact and cheap while its input
-is small, and a distributed twin that runs at any size. Both twins compute
-the same result, so the choice steers only cost. Each decision is one row
-of ``BOUNDS`` (connected components and PageRank share the edge-list row)
-and one bounded fetch: ``route(name, frame)`` pulls at most ``bound + 1``
-rows, and when no more than ``bound`` came back the fetch returned every
-row, so the local twin starts from the complete input (``limit``'s choice
-of rows matters only on the over-bound side, where the rows are dropped).
-The fetch is the only measurement: Catalyst's size estimate sizes a
-200-row MMR shortlist at tens of GB, so it cannot pick a side. Two rows
-bound a size the driver derives from rows it already fetched, checked with
-``fits``: MMR's in-shortlist pairs (``mmr_pairs``) and the k-NN graph's
-candidate pairs (``knn_pairs``, after the ``pair_scorer`` fetch).
+is small, and a distributed twin that runs at any size; MMR has two local
+twins, one over the whole corpus and one over an engine-computed
+shortlist. All twins compute the same result, so the choice steers only
+cost. Each decision is one row of ``BOUNDS`` (connected components and
+PageRank share the edge-list row; MMR and the pair scorers share the
+corpus row) and one bounded fetch: ``route(name, frame)`` pulls at most
+``bound + 1`` rows, and when no more than ``bound`` came back the fetch
+returned every row, so the local twin starts from the complete input
+(``limit``'s choice of rows matters only on the over-bound side, where the
+rows are dropped). The fetch is the only measurement: Catalyst's size
+estimate sizes a 200-row MMR shortlist at tens of GB, so it cannot pick a
+side. Some rows bound a size the driver derives from rows it already
+fetched, checked with ``fits``: MMR's shortlist rows and cosines
+(``mmr_shortlist`` and ``mmr_pairs``, after the ``pair_scorer`` fetch) and
+the k-NN graph's candidate pairs (``knn_pairs``, after the same fetch).
 
 A local twin hands its result back through ``local_frame``, so the frame
 it returns plans as a ``LocalTableScan`` and costs no Spark job to use.
@@ -35,19 +38,29 @@ log = logging.getLogger("syscol_spark.route")
 
 #: rows a driver-local twin accepts, per decision
 BOUNDS = {
-    # mmr_topk: (query, candidate) shortlist rows
+    # mmr_topk: (query, candidate) shortlist rows, the n_q * min(shortlist,
+    # n_c) upper bound from the pair_scorer fetch, or the engine shortlist's
+    # rows over that fetch's bound; the driver's greedy steps scan each
+    # query's shortlist once per step
     "mmr_shortlist": 10_000,
-    # mmr_topk: in-shortlist pair rows, sum over queries of n_q * (n_q - 1),
-    # ~64 MB of Row objects; the row bound alone admits a single
-    # 10k-candidate query with ~1e8 pairs
+    # mmr_topk: every cosine the driver computes, n_q * n_c against the
+    # corpus plus n_q * s * (s - 1) within the shortlists, s = min(shortlist,
+    # n_c) (over the pair_scorer bound, the in-shortlist pairs alone, the sum
+    # over queries of n * (n - 1)); a 16 MB float64 matrix at the bound.
+    # 60,000 random dim-64 vectors and 33 queries (1.99M cosines) built
+    # locally in 2.3-2.8 s warm at a 361 MB driver peak; through the
+    # engine shortlist in 62-86 s with the driver greedy, 80-87 s with the
+    # distributed loop (4 cores)
     "mmr_pairs": 2_000_000,
     # k-means training sample, (id, vec) rows: ~100 MB of float64 at dim=64
     "kmeans_sample": 200_000,
-    # candidate-pair scoring: the (id, vec) corpus rides in the Python task
-    # closure and is re-shipped per task, so the bound is a closure budget,
-    # 65,536 x 64 dims x 8 B = 32 MB. At 200k vectors (sf10) raw closure
-    # capture wedged worker set-up and a Spark broadcast variable deadlocked
-    # worker reuse; above the bound the vectors are attached by id joins
+    # an (id, vec) corpus held on the driver: the candidate-pair scorer
+    # ships it to every task in the Python closure, re-shipped per task, so
+    # the bound is a closure budget, 65,536 x 64 dims x 8 B = 32 MB (at 200k
+    # vectors, sf10, raw closure capture wedged worker set-up and a Spark
+    # broadcast variable deadlocked worker reuse; above the bound the
+    # vectors are attached by id joins); the k-NN graph and MMR (corpus and
+    # queries, one fetch) compute from it on the driver
     "pair_scorer": 65_536,
     # BPE training: (word, freq) vocabulary rows, a few MB of strings
     "bpe_vocab": 200_000,
@@ -67,10 +80,19 @@ def route(name: str, frame: DataFrame, *, arrow: bool = False):
     """All rows of ``frame`` when it has at most ``BOUNDS[name]`` of them,
     else None, from one bounded fetch. ``arrow`` fetches a pandas frame
     through Arrow (``toPandas``): at the scorer's bound a Row collect builds
-    hundreds of MB of boxed objects before the matrix exists."""
+    hundreds of MB of boxed objects before the matrix exists. Over a local
+    relation (another twin's result) the probe plans as a
+    ``LocalTableScan``, where ``toPandas`` still runs a job and ``collect``
+    runs none, so the rows are collected and converted as ``toPandas``
+    converts them."""
     bound = BOUNDS[name]
     probe = frame.limit(bound + 1)
-    rows = probe.toPandas() if arrow else probe.collect()
+    if not arrow:
+        rows = probe.collect()
+    elif probe._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan":  # noqa: SLF001
+        rows = _arrow_table(probe.collect(), probe.schema).to_pandas()
+    else:
+        rows = probe.toPandas()
     return rows if fits(name, len(rows)) else None
 
 
@@ -95,13 +117,20 @@ def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> Da
     job. ``createDataFrame`` over a list plans a ``Scan ExistingRDD``
     instead, which runs one job of a task per core every time the frame is
     used. An empty result keeps that path: it has no Arrow batch to ship."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     if len(rows) == 0:
         return spark.createDataFrame([], schema)
+    return spark.createDataFrame(_arrow_table(rows, schema), schema)
+
+
+def _arrow_table(rows: list, schema: StructType):
+    """``rows`` (tuples in ``schema``'s column order) as an Arrow table of
+    ``schema``'s Arrow types."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     arrow_schema = to_arrow_schema(schema)
-    columns = [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow_schema)]
-    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow_schema), schema)
+    columns = zip(*rows) if rows else [[] for _ in arrow_schema]
+    arrays = [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)]
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)

@@ -15,16 +15,16 @@ Two paths:
 from __future__ import annotations
 
 import math
-from collections import Counter
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from syscol_spark.functions.rounding import round6_like_spark_array
-from syscol_spark.functions.vectors import cosine_similarity
+from syscol_spark.functions.vectors import cosine_like_spark, cosine_similarity
 from syscol_spark.operators.route import fits, local_frame, route
 
 
@@ -37,7 +37,8 @@ def brute_force_topk(
     k: int = 5,
 ) -> DataFrame:
     """Exact top-k neighbors by cosine: (query_id, neighbor_id, cosine, rk).
-    Deterministic ties: (cosine desc, neighbor_id asc)."""
+    Deterministic ties: (cosine desc, neighbor_id asc); a zero vector's
+    NULL cosine ranks after every number."""
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
     scored = (
@@ -73,12 +74,35 @@ def mmr_topk(
     op a RAG/training-data pipeline runs when plain top-k returns k copies
     of the same document.
 
-    Plan shape: one exact top-``shortlist`` pass (brute_force_topk — swap in
-    any ANN index for the shortlist at scale; the MMR stage is agnostic),
-    one pairwise-cosine self-join WITHIN each query's shortlist (shortlist²
-    rows per query, never corpus-proportional), then k-1 bounded rounds of
-    join+groupBy+window over that pair table. Everything stays distributed;
-    per-round lineage is truncated with localCheckpoint.
+    Three twins compute the result, chosen in this order:
+
+    - The ``pair_scorer`` route fetches the corpus and the queries as
+      (id, vec) in one bounded fetch. When it holds them, the driver checks
+      ``mmr_shortlist`` against ``n_q * s`` shortlist rows and
+      ``mmr_pairs`` against ``n_q * n_c + n_q * s * (s - 1)`` cosines
+      (s = min(shortlist, n_c)), before computing any. Within both,
+      ``_mmr_local`` computes the whole result in numpy and returns it as a
+      local relation: below a size bound distributed execution is
+      scheduling overhead (McSherry et al., "Scalability! But at what
+      COST?", HotOS 2015).
+    - Over the fetch bound, the engine computes the exact top-``shortlist``
+      (brute_force_topk), and the ``mmr_shortlist`` route fetches it with
+      the candidates' vectors joined. Within it and ``mmr_pairs`` (the
+      in-shortlist pairs), ``_mmr_greedy_rows`` selects on the driver.
+      This keeps a big corpus with few queries cheap. Over the shortlist
+      fetch's bound no pair count exists, so ``mmr_pairs`` is not decided.
+    - Otherwise the distributed loop runs: a pairwise-cosine self-join
+      within each query's shortlist (shortlist² rows per query, never
+      corpus-proportional), then k-1 bounded rounds of join + groupBy +
+      ``min_by`` over that pair table, lineage cut by localCheckpoint.
+
+    The driver twins compute every cosine with ``cosine_like_spark``, the
+    engine's fold in the engine's order, and round like ``F.round(x, 6)``,
+    so all twins see the same doubles. An input the mirror does not cover
+    (a NULL id, a duplicate id, a NULL or non-finite vector element, or
+    vectors of different lengths) takes the engine twins. A zero vector's
+    cosines are NULL; NULL ranks after every number, in the shortlist and
+    in each greedy step.
 
     Determinism: all cosines round to 6dp before the MMR arithmetic, ties
     break on candidate id — so the greedy trajectory is reproducible
@@ -87,11 +111,150 @@ def mmr_topk(
     Output: (query_id, neighbor_id, simq, step 1..k) — step is selection
     order, not similarity rank.
     """
+    spark = corpus.sparkSession
+    schema = StructType([
+        StructField("query_id", queries.schema[id_col].dataType),
+        StructField("neighbor_id", corpus.schema[id_col].dataType),
+        StructField("simq", DoubleType()),
+        StructField("step", LongType()),
+    ])
+    iv = [
+        side.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), F.lit(tag).alias("is_q"))
+        for side, tag in ((corpus, False), (queries, True))
+    ]
+    pdf = route("pair_scorer", iv[0].unionByName(iv[1]), arrow=True)
+    if pdf is not None:
+        mat = _mirror_matrix(pdf["vec"])
+        is_q = pdf["is_q"].to_numpy(dtype=bool)
+        ok = mat is not None and all(
+            not ids.isna().any() and ids.is_unique for ids in (pdf["id"][is_q], pdf["id"][~is_q])
+        )
+        n_q, n_c = int(is_q.sum()), int((~is_q).sum())
+        s = min(shortlist, n_c)
+        # both decisions are logged whatever the first one says
+        short_ok = fits("mmr_shortlist", n_q * s, local_ok=ok)
+        if fits("mmr_pairs", n_q * n_c + n_q * s * (s - 1), local_ok=ok) and short_ok:
+            rows = _mmr_local(
+                pdf["id"][is_q].to_numpy(), mat[is_q], pdf["id"][~is_q].to_numpy(), mat[~is_q],
+                k, shortlist, lam,
+            )
+            return local_frame(spark, rows, schema)
     short = brute_force_topk(corpus, queries, vec_col=vec_col, id_col=id_col, k=shortlist)
     sv = short.select(
         "query_id", F.col("neighbor_id").alias("cand_id"), F.col("cosine").alias("simq")
     ).localCheckpoint()
     vecs = corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("__v"))
+    if pdf is None:
+        sv_pdf = route("mmr_shortlist", sv.join(vecs, "cand_id"), arrow=True)
+        if sv_pdf is not None:
+            mat = _mirror_matrix(sv_pdf["__v"])
+            ok = mat is not None and not sv_pdf.duplicated(["query_id", "cand_id"]).any()
+            per_q = sv_pdf.groupby("query_id", sort=False).size().to_numpy()
+            if fits("mmr_pairs", int((per_q * (per_q - 1)).sum()), local_ok=ok):
+                return local_frame(spark, _mmr_greedy_rows(sv_pdf, mat, k, lam), schema)
+    return _mmr_distributed(sv, vecs, k, lam)
+
+
+def _mirror_matrix(cells) -> np.ndarray | None:
+    """Fetched vector cells as a float64 row matrix (the float32 -> float64
+    widening is exact), or None where ``cosine_like_spark`` would not mirror
+    the engine's fold: a NULL vector or element, a non-finite element, or
+    rows of different lengths (``zip_with`` pads the shorter with NULL)."""
+    vecs = [None if v is None else np.asarray(v, dtype="float64") for v in cells]
+    if any(v is None for v in vecs) or len({len(v) for v in vecs}) > 1:
+        return None
+    mat = np.stack(vecs) if vecs else np.zeros((0, 0))
+    return mat if np.isfinite(mat).all() else None
+
+
+def _mmr_local(q_ids, q_mat, c_ids, c_mat, k: int, shortlist: int, lam: float) -> list:
+    """mmr_topk's result rows computed on the driver from the fetched
+    queries and corpus (ids and float64 row matrices), with the engine's
+    arithmetic: every query-corpus cosine and every in-shortlist pair cosine
+    by ``cosine_like_spark``, rounded like ``F.round(x, 6)``. The shortlist
+    drops the query itself and orders by (cosine desc, NULL after every
+    number, id asc), as brute_force_topk's window does; the selection is
+    ``_mmr_greedy``."""
+    order = np.argsort(c_ids, kind="stable")
+    c_ids, c_mat = c_ids[order], c_mat[order]
+    cos = round6_like_spark_array(cosine_like_spark(q_mat, c_mat))
+    key = np.where(np.isnan(cos), 3.0, -cos)
+    key[q_ids[:, None] == c_ids[None, :]] = np.inf  # the query itself sorts last
+    # a stable sort keeps equal cosines in ascending id order
+    ranked = np.argsort(key, axis=1, kind="stable")[:, : min(shortlist, len(c_ids))]
+    pool_size = (np.take_along_axis(key, ranked, axis=1) != np.inf).sum(axis=1)
+    pool = c_mat[ranked]
+    sims = round6_like_spark_array(cosine_like_spark(pool, pool))
+    ids = c_ids.tolist()
+    rows = []
+    for i, qid in enumerate(q_ids.tolist()):
+        n = pool_size[i]
+        cand = ranked[i, :n]
+        rows += _mmr_rows(qid, [ids[j] for j in cand], cos[i, cand], sims[i, :n, :n], k, lam)
+    return rows
+
+
+def _mmr_greedy_rows(sv_pdf: pd.DataFrame, mat: np.ndarray, k: int, lam: float) -> list:
+    """mmr_topk's result rows from the engine's shortlist ``sv_pdf``
+    (query_id, cand_id, simq, __v) and its vectors ``mat``: the in-shortlist
+    pair cosines by ``cosine_like_spark``, rounded like ``F.round(x, 6)``,
+    then ``_mmr_greedy`` per query."""
+    cand_ids = sv_pdf["cand_id"].to_numpy()
+    simq = sv_pdf["simq"].to_numpy(dtype="float64")  # NULL -> NaN
+    rows = []
+    for qid, idx in sv_pdf.groupby("query_id", sort=False).indices.items():
+        sims = round6_like_spark_array(cosine_like_spark(mat[idx], mat[idx]))
+        qid = qid.item() if isinstance(qid, np.generic) else qid
+        rows += _mmr_rows(qid, cand_ids[idx].tolist(), simq[idx], sims, k, lam)
+    return rows
+
+
+def _mmr_rows(qid, ids: list, simq: np.ndarray, sims: np.ndarray, k: int, lam: float) -> list:
+    """(query_id, neighbor_id, simq, step) for one query's selection; a
+    NaN simq is NULL."""
+    return [
+        (qid, ids[j], None if np.isnan(simq[j]) else float(simq[j]), step)
+        for step, j in enumerate(_mmr_greedy(ids, simq, sims, k, lam), 1)
+    ]
+
+
+def _mmr_greedy(ids: list, simq: np.ndarray, sims: np.ndarray, k: int, lam: float) -> list[int]:
+    """The indices into ``ids`` that mmr_topk's distributed loop selects, in
+    selection order, from one query's shortlist: candidate ids ``ids``,
+    their rounded query cosines ``simq`` and their rounded pair cosines
+    ``sims`` (NaN for NULL). Step 1 takes the largest ``simq``; each later
+    step the largest ``lam * simq - (1 - lam) * pen``, where ``pen`` is the
+    largest pair cosine with a selected candidate. As in the engine, the
+    max skips NULLs (``np.fmax``), a NULL score ranks after every number,
+    ties go to the lowest id, and the score is the same two IEEE double
+    products and one difference."""
+    one_minus = 1.0 - lam  # computed once, as F.lit(1.0 - lam) is
+    pen = np.full(len(ids), np.nan)
+    score = simq
+    left, chosen = list(range(len(ids))), []
+    while left and len(chosen) < k:
+        if chosen:
+            pen = np.fmax(pen, sims[:, chosen[-1]])
+            score = lam * simq - one_minus * pen
+        sc = score.tolist()
+        best = min(left, key=lambda i: (True, 0.0, ids[i]) if sc[i] != sc[i] else (False, -sc[i], ids[i]))
+        chosen.append(best)
+        left.remove(best)
+    return chosen
+
+
+def _argmax_key(score: Column) -> Column:
+    """The ``min_by`` ordering that picks the largest ``score`` per query,
+    with NULL after every number and ties to the lowest cand_id: a struct
+    orders a NULL field first, so NULLs are moved last by a leading flag."""
+    return F.struct(score.isNull().alias("__null"), (-score).alias("__ns"), F.col("cand_id"))
+
+
+def _mmr_distributed(sv: DataFrame, vecs: DataFrame, k: int, lam: float) -> DataFrame:
+    """mmr_topk's distributed twin over the engine shortlist ``sv``
+    (query_id, cand_id, simq) and the corpus vectors ``vecs`` (cand_id,
+    __v): the in-shortlist pair table, then one join + aggregate +
+    checkpoint round per step."""
     pv = sv.join(vecs, "cand_id")
     pairs = (
         pv.select("query_id", F.col("cand_id"), F.col("__v").alias("__va"))
@@ -106,33 +269,14 @@ def mmr_topk(
             "query_id", "cand_id", "sel_id",
             F.round(cosine_similarity("__va", "__vb"), 6).alias("sim"),
         )
+        .localCheckpoint()
     )
-    # Driver-local greedy: the MMR state is bounded by design (queries are
-    # broadcast-small and each pool is `shortlist` rows), so under both
-    # bounds the shortlist and its pair table are pulled and the k-step
-    # greedy runs in Python: 3 Spark actions instead of one
-    # join+aggregate+checkpoint round per step. The pair cosines are still
-    # computed on-plan with the same F.round, and the greedy arithmetic is
-    # the same two IEEE-double ops with the same ties, so trajectories are
-    # bit-identical. The pair volume is counted from the fetched shortlist:
-    # one 10k-row query passes the row bound with ~1e8 pairs.
-    sv_rows = route("mmr_shortlist", sv)
-    if sv_rows is not None:
-        per_q = Counter(r["query_id"] for r in sv_rows)
-        if fits("mmr_pairs", sum(n * (n - 1) for n in per_q.values())):
-            return _mmr_greedy_local(sv, sv_rows, pairs.collect(), k, lam)
-    pairs = pairs.localCheckpoint()
-    # step-1 argmax as ONE aggregate (r15): min_by over (-simq, cand_id)
-    # == the former (simq DESC, cand_id ASC) window order; (simq, cand_id)
-    # is unique per query because cand_id is, so the same row wins.
+    # step-1 argmax as ONE aggregate (r15): min_by over _argmax_key(simq)
+    # == the (simq DESC, cand_id ASC) window order; the key is unique per
+    # query because cand_id is, so the same row wins.
     selected = (
         sv.groupBy("query_id")
-        .agg(
-            F.min_by(
-                F.struct("cand_id", "simq"),
-                F.struct((-F.col("simq")).alias("__ns"), F.col("cand_id")),
-            ).alias("__b")
-        )
+        .agg(F.min_by(F.struct("cand_id", "simq"), _argmax_key(F.col("simq"))).alias("__b"))
         .select(
             "query_id",
             F.col("__b.cand_id").alias("cand_id"),
@@ -156,12 +300,7 @@ def mmr_topk(
         # step 1: cand_id is unique within each query's candidate pool)
         pick = (
             cand.groupBy("query_id")
-            .agg(
-                F.min_by(
-                    F.struct("cand_id", "simq"),
-                    F.struct((-score).alias("__ns"), F.col("cand_id")),
-                ).alias("__b")
-            )
+            .agg(F.min_by(F.struct("cand_id", "simq"), _argmax_key(score)).alias("__b"))
             .select(
                 "query_id",
                 F.col("__b.cand_id").alias("cand_id"),
@@ -173,55 +312,6 @@ def mmr_topk(
     return selected.select(
         "query_id", F.col("cand_id").alias("neighbor_id"), "simq", "step"
     )
-
-
-def _mmr_greedy_local(sv, sv_rows: list, pair_rows: list, k: int, lam: float):
-    """Pure-Python twin of mmr_topk's distributed selection loop over the
-    collected shortlist. Inputs are the SAME engine-computed 6dp-rounded
-    cosines the distributed loop consumes; the per-step arithmetic
-    (lam*simq - (1-lam)*pen, double precision) and tie-breaks
-    ((score desc, cand_id) / step-1 (simq desc, cand_id)) are replicated
-    op-for-op, so the greedy trajectory is bit-identical."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    one_minus = 1.0 - lam  # precomputed ONCE, as F.lit(1.0 - lam) was
-    by_q: dict = {}
-    for r in sv_rows:
-        by_q.setdefault(r["query_id"], []).append((r["cand_id"], r["simq"]))
-    sim: dict = {}
-    for r in pair_rows:
-        sim[(r["query_id"], r["cand_id"], r["sel_id"])] = r["sim"]
-    out = []
-    for qid, cands in by_q.items():
-        # step 1: plain relevance, ties to the lowest cand_id
-        first = min(cands, key=lambda c: (-c[1], c[0]))
-        selected = [first]
-        remaining = {c for c in cands if c[0] != first[0]}
-        for step in range(2, k + 1):
-            best = None
-            for cand_id, simq in remaining:
-                pen = max(sim[(qid, cand_id, s[0])] for s in selected)
-                score = lam * simq - one_minus * pen
-                key = (-score, cand_id)
-                if best is None or key < best[0]:
-                    best = (key, cand_id, simq)
-            if best is None:
-                break
-            selected.append((best[1], best[2]))
-            remaining = {c for c in remaining if c[0] != best[1]}
-        out.extend(
-            (qid, cand_id, simq, step + 1)
-            for step, (cand_id, simq) in enumerate(selected)
-        )
-    schema = StructType(
-        [
-            sv.schema["query_id"],
-            StructField("neighbor_id", sv.schema["cand_id"].dataType),
-            StructField("simq", DoubleType()),
-            StructField("step", LongType()),
-        ]
-    )
-    return local_frame(sv.sparkSession, out, schema)
 
 
 def _srp_plane(dim: int, plane: int, seed: int = 42) -> list[float]:

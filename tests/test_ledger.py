@@ -23,7 +23,7 @@ BUILD_JOBS = {
     "q_embed_outliers": 1,
     "q_kmeans_lloyd": 2,
     "q_doc_fingerprint": 1,
-    "q_mmr_diverse": 10,
+    "q_mmr_diverse": 2,
     "q_sample_hash": 1,
     "q_benford": 1,
     "q_inverted_index": 1,
@@ -41,7 +41,7 @@ WARM_BUILD_JOBS = {
     "q_embed_outliers": 0,
     "q_kmeans_lloyd": 1,
     "q_doc_fingerprint": 0,
-    "q_mmr_diverse": 9,
+    "q_mmr_diverse": 1,
     "q_sample_hash": 0,
     "q_benford": 0,
     "q_inverted_index": 0,
@@ -55,12 +55,12 @@ PAGERANK_SITES = {
     "operators/similarity.py::knn_graph",
 }
 
-# q_pagerank's build jobs at sf0.001: the corpus fetch, the edge-list fetch
-# (one job over the k-NN graph's local relation) and the table's schema
-# inference; the k-NN graph and PageRank run on the driver. Warm, its one
-# table load runs no job.
-PAGERANK_BUILD_JOBS = 3
-PAGERANK_WARM_BUILD_JOBS = 2
+# q_pagerank's build jobs at sf0.001: the corpus fetch and the table's schema
+# inference; the k-NN graph and PageRank run on the driver, and the edge-list
+# fetch collects the k-NN graph's local relation without a job. Warm, its
+# one table load runs no job.
+PAGERANK_BUILD_JOBS = 2
+PAGERANK_WARM_BUILD_JOBS = 1
 
 
 def _cold(spark, name: str, sf_dir: str) -> dict:
@@ -86,7 +86,9 @@ def test_build_jobs_are_pinned(spark, sf_dir):
     assert {q: r["build"]["jobs"] for q, r in warm.items()} == WARM_BUILD_JOBS
     assert {q: BUILD_JOBS[q] - _inference_jobs(r) for q, r in cold.items()} == WARM_BUILD_JOBS
     assert all(_inference_jobs(r) == 0 for r in warm.values())
-    assert _paths(cold["q_mmr_diverse"]) == {"mmr_shortlist": "local", "mmr_pairs": "local"}
+    assert _paths(cold["q_mmr_diverse"]) == {
+        "pair_scorer": "local", "mmr_shortlist": "local", "mmr_pairs": "local",
+    }
     assert all(not r["routes"] for q, r in cold.items() if q != "q_mmr_diverse")
     # the driver-local MMR result is a local relation: no execute job
     mmr = cold["q_mmr_diverse"]

@@ -154,6 +154,36 @@ def test_cosine_similarity_known_values(spark):
     assert abs(vals[1] - 1.0) < 1e-12
 
 
+def test_cosine_fold_mirror_is_exact(spark):
+    """The driver's dot_like_spark / cosine_like_spark give the engine's
+    dot / cosine_similarity raw doubles, before any rounding, on random
+    float32 vectors; a zero vector's cosine is NULL in the engine and NaN
+    in the mirror."""
+    import numpy as np
+
+    from syscol_spark.functions.vectors import (
+        cosine_like_spark, cosine_similarity, dot, dot_like_spark,
+    )
+
+    rng = np.random.default_rng(14)
+    a = rng.standard_normal((300, 64)).astype("float32")
+    b = (rng.standard_normal((300, 64)) * rng.uniform(0.01, 100.0, (300, 1))).astype("float32")
+    b[7] = 0.0
+    df = spark.createDataFrame(
+        [(i, a[i].tolist(), b[i].tolist()) for i in range(len(a))],
+        "i int, a array<float>, b array<float>",
+    )
+    got = {r["i"]: (r["d"], r["c"]) for r in df.select(
+        "i", dot("a", "b").alias("d"), cosine_similarity("a", "b").alias("c")
+    ).collect()}
+    wa, wb = a.astype("float64"), b.astype("float64")
+    want_dot = np.diagonal(dot_like_spark(wa, wb))
+    want_cos = np.diagonal(cosine_like_spark(wa, wb))
+    assert [got[i][0] for i in range(len(a))] == want_dot.tolist()
+    assert got[7][1] is None and np.isnan(want_cos[7])
+    assert all(got[i][1] == want_cos[i] for i in range(len(a)) if i != 7)
+
+
 def test_word_shingles_and_tokens(spark):
     from syscol_spark.functions.text import token_count, word_shingles
 

@@ -9,7 +9,8 @@ catalog query, match its DuckDB oracle. Catalog cases are the cheapest
 query that reaches each bound; synthetic cases cover shapes the sf0.001
 data lacks (its near-dup components are all pairs, no document holds a
 '|', its k-NN graph has no hub, no node without in-edges and only
-integer ids, and its corpus has no duplicate or zero vector). The
+integer ids, and its corpus has no duplicate or zero vector; its MMR
+corpus is larger than the shortlist and holds every query). The
 k-means trainer's distributed twin also gets synthetic cases: subspaces
 that converge at different iterations, and its job count across subspace
 counts.
@@ -76,6 +77,28 @@ def _knn_corners(bucket_cap: int | None = None):
     return build
 
 
+def _mmr_corners(spark, sf_dir):
+    """String ids; two copies of one vector (cosine 1.0 ties, broken by
+    id); an all-zero vector (NULL cosines); a query that is not in the
+    corpus; a 7-row corpus under the 10-row shortlist; and k = 8 over
+    every query's pool (6 candidates, 7 for the outside query)."""
+    from syscol_spark.operators.similarity import mmr_topk
+
+    dup = [3.0, 3.0, 2.0, 0.0, -1.0, 3.0, -2.0, 1.0]
+    rows = [("dup_b", dup), ("dup_a", dup),
+            ("v3", [1.0, -1.0, -1.0, 0.0, -3.0, 1.0, 3.0, -1.0]),
+            ("v4", [1.0, 3.0, 0.0, -1.0, 1.0, 1.0, 1.0, 3.0]),
+            ("v5", [-1.0, 2.0, -3.0, 1.0, 0.0, 1.0, -3.0, 2.0]),
+            ("zero", [0.0] * 8),
+            ("v6", [-2.0, 1.0, 0.0, 0.0, 2.0, 3.0, 3.0, -2.0])]
+    corpus = spark.createDataFrame(rows, "doc string, emb array<float>")
+    queries = corpus.filter("doc IN ('dup_b', 'zero', 'v4')").unionByName(
+        spark.createDataFrame([("outside", [2.0, 3.0, 2.0, 0.0, -1.0, 3.0, -2.0, 0.0])],
+                              "doc string, emb array<float>")
+    )
+    return mmr_topk(corpus, queries, vec_col="emb", id_col="doc", k=8, shortlist=10, lam=0.7)
+
+
 def _bpe_corners(batch):
     """Merge-with-skip corners (consecutive pairs: 'abab', 'banana'), '|'
     inside a word and multi-character symbols."""
@@ -96,7 +119,11 @@ def _bpe_corners(batch):
 
 CASES = [
     ("mmr_shortlist", "q_mmr_diverse"),
+    ("mmr_shortlist", _mmr_corners),
     ("mmr_pairs", "q_mmr_diverse"),
+    ("mmr_pairs", _mmr_corners),
+    ("pair_scorer", "q_mmr_diverse"),
+    ("pair_scorer", _mmr_corners),
     ("kmeans_sample", "q_ann_ivf"),
     # over the bound, band_bits="auto" counts the corpus itself
     ("pair_scorer", "q_knn_graph"),
@@ -185,6 +212,69 @@ def test_knn_corners_local_result(spark):
     assert dup_a[0][2] == dup_a[1][2] == 1.0
     v5 = sorted((r["rk"], r["nbr"], r["cosine"]) for r in rows if r["src"] == "v5")
     assert [(rk, nbr, c is None) for rk, nbr, c in v5] == [(1, "v8", False), (2, "zero", True)]
+
+
+def test_mmr_corners_local_result(spark):
+    """The driver-local MMR over _mmr_corners: the zero vector's cosines
+    are NULL and rank after every number, 1.0 ties go to the lowest id, and
+    a query whose pool is smaller than k gets its whole pool."""
+    rows = _mmr_corners(spark, None).collect()
+    picks = {}
+    for r in sorted(rows, key=lambda r: r["step"]):
+        picks.setdefault(r["query_id"], []).append((r["neighbor_id"], r["simq"]))
+    assert {q: len(p) for q, p in picks.items()} == {"dup_b": 6, "zero": 6, "v4": 6, "outside": 7}
+    assert picks["zero"] == [(d, None) for d in ("dup_a", "dup_b", "v3", "v4", "v5", "v6")]
+    assert picks["dup_b"][0] == ("dup_a", 1.0)
+    assert [d for d, _ in picks["outside"][:1]] == ["dup_a"]
+    for q in ("dup_b", "v4", "outside"):
+        assert picks[q][-1] == ("zero", None)
+        assert all(c is not None for _, c in picks[q][:-1])
+
+
+@pytest.mark.parametrize("forced", [None, "pair_scorer"])
+def test_mmr_input_the_mirror_does_not_cover_takes_the_engine(spark, monkeypatch, caplog, forced):
+    """A NaN vector element (the engine orders NaN above every number, the
+    driver mirror does not) sends MMR to the distributed loop, routed and
+    over the pair_scorer bound."""
+    from syscol_spark.operators.similarity import mmr_topk
+
+    rows = [(i, [float(i), 1.0, float(i % 3)]) for i in range(8)] + [(8, [float("nan"), 1.0, 0.0])]
+    corpus = spark.createDataFrame(rows, "id long, v array<double>")
+
+    def build(spark, sf_dir):
+        return mmr_topk(corpus, corpus.filter("id < 2"), vec_col="v", id_col="id", k=3, shortlist=4)
+
+    if forced:
+        monkeypatch.setitem(R.BOUNDS, forced, -1)
+    _, _, got, paths, local_scan = _run(spark, None, build, caplog, "mmr_pairs")
+    assert paths == ["distributed"] and not local_scan and len(got) == 6
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_arrow_route_over_a_local_relation_runs_no_job(spark, id_type):
+    """route(..., arrow=True) over a local relation collects it (no Spark
+    job) and gives the pandas frame toPandas gives: the same dtypes and
+    values, vectors as float32 arrays."""
+    ids = list(range(1500)) if id_type == "long" else [f"n{i:05d}" for i in range(1500)]
+    rows = [(ids[i], ids[(7 * i) % 1500], [float(i), -0.5], i * 0.25) for i in range(1500)]
+    frame = R.local_frame(spark, rows, f"src {id_type}, dst {id_type}, vec array<float>, w double")
+    sc = spark.sparkContext
+    group = f"test-local-route-{id_type}"
+    sc.setJobGroup(group, "route over a local relation")
+    try:
+        got = R.route("graph_edges", frame, arrow=True)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    want = frame.limit(R.BOUNDS["graph_edges"] + 1).toPandas()
+    assert jobs == 0
+    assert list(got.dtypes) == list(want.dtypes)
+    assert got[["src", "dst", "w"]].equals(want[["src", "dst", "w"]])
+    assert all(
+        type(g) is type(w) and g.dtype == w.dtype and g.tolist() == w.tolist()
+        for g, w in zip(got["vec"], want["vec"])
+    )
 
 
 def test_knn_bucket_over_cap_takes_the_distributed_twin(spark, monkeypatch, caplog):
