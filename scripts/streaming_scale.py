@@ -7,10 +7,12 @@ the continuous build of q_cms_shards) over the ENTIRE sf1 events table
 (1M events, 8 parquet part files -> 8 micro-batches via
 maxFilesPerTrigger=1) and records, per micro-batch, the state-store row
 count and memory from StreamingQueryProgress. The claim under test is the
-sketch's textbook property: state is one long per (depth, bucket) CELL —
-depth*width = 768 rows MAX regardless of how many events or distinct keys
-flow through. A watermark-free stateful operator whose state grew with
-input would show a rising numRowsTotal here; the artifact pins it flat.
+sketch's textbook property: streaming_cms is a native streaming
+``groupBy(depth, bucket).count()``, so its state is Spark's aggregation
+buffer, one row per (depth, bucket) CELL — depth*width = 768 rows MAX
+regardless of how many events or distinct keys flow through. A
+watermark-free stateful operator whose state grew with input would show a
+rising numRowsTotal here; the artifact pins it flat.
 
 Writes STREAM_SCALE.json (SCALE_SF10.json-style) and exits non-zero if
 state ever exceeds the 768-cell bound or the folded sketch total drifts

@@ -4,12 +4,15 @@ Everything here is a pure Catalyst column expression — JVM-side, inside
 whole-stage codegen, zero Python in the hot path — so these run at full scan
 throughput on a 100 TB documents table. (pandas UDF variants exist only where
 semantics genuinely need Python; see operators/dedup.py simhash.)
+``posting_stats`` is the one DataFrame helper: the positional-index
+aggregate over ``tokens``, shared by the batch index queries and the
+streaming index maintainer.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 
 # Deterministic default stopword list for the language-ID heuristic.
 DEFAULT_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
@@ -223,3 +226,33 @@ def repetition_ratio(col: Column | str, n: int = 3) -> Column:
     """repetition_micro / 1e6 as a double — display form; aggregate the
     MICRO integers, never this."""
     return repetition_micro(col, n) / F.lit(1_000_000.0)
+
+
+def posting_stats(docs: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
+    """Per-(``by``, term) statistics of a positional inverted index over
+    (doc_id, text) documents: df (documents holding the term), tf_total
+    (postings), first_doc (smallest doc_id) and pos_checksum (sum of the
+    0-based positions).
+
+    One generator over one scan: a document yields a (term, pos) row per
+    token plus a (term, NULL) row per DISTINCT token, so df counts
+    per-document distinct terms (exact while each doc_id arrives once) and
+    the index is one declarative aggregate with no countDistinct, which a
+    streaming aggregation can maintain as well as a batch groupBy."""
+
+    def entries(toks: Column) -> Column:
+        return F.concat(
+            F.transform(toks, lambda t, i: F.struct(t.alias("term"), i.alias("pos"))),
+            F.transform(
+                F.array_distinct(toks),
+                lambda t: F.struct(t.alias("term"), F.lit(None).cast("int").alias("pos")),
+            ),
+        )
+
+    rows = docs.select(*by, "doc_id", F.inline(_bind_once(tokens("text"), entries)))
+    return rows.groupBy(*by, "term").agg(
+        F.count_if(F.col("pos").isNull()).alias("df"),
+        F.count("pos").alias("tf_total"),
+        F.min("doc_id").alias("first_doc"),
+        F.sum("pos").alias("pos_checksum"),
+    )

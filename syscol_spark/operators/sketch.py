@@ -1,4 +1,5 @@
-"""Frequency-sketch operators: bounded-memory heavy hitters.
+"""Frequency-sketch operators: bounded-memory heavy hitters, and the cell
+and position generators of the count-min and bloom sketches.
 
 ``heavy_hitters`` finds every token with global frequency > n/k EXACTLY,
 using the two-stage pattern that scales to 100 TB:
@@ -19,6 +20,12 @@ The expensive explode/scan runs twice (candidates, recount); both passes
 are JVM-side except the MG summarizer, which crosses per Arrow batch and
 aggregates with vectorized ``value_counts`` — no per-row Python in the hot
 path, and the decrement step touches only the bounded counter dict.
+
+``cms_cells`` and ``bloom_positions`` are the row-level halves of the two
+linear sketches: one generator per row, so the sketch itself is a plain
+``groupBy(...).count()`` that batch queries (q_cms_shards,
+q_bloom_prefilter) and the streaming maintainers (streaming/analytics.py)
+run over the same cells.
 """
 
 from __future__ import annotations
@@ -29,6 +36,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import broadcast
+
+from syscol_spark.operators.sampling import hash_bucket
 
 
 def misra_gries_candidates(df: DataFrame, col: str, *, capacity: int = 4096) -> DataFrame:
@@ -82,3 +91,24 @@ def heavy_hitters(df: DataFrame, col: str | Column, *, k: int = 50, capacity: in
         .filter(F.col("freq") * k > F.col("total"))
         .select(name, "freq")
     )
+
+
+def cms_cells(key: Column | str, seeds: tuple[int, ...], width: int) -> Column:
+    """Count-min cells of ``key``: a generator yielding one (depth, bucket)
+    row per seed, depth the seed's index and bucket its md5 ``hash_bucket``
+    in [0, width). Counting rows per (depth, bucket) builds the sketch."""
+    return F.inline(
+        F.array(
+            *[
+                F.struct(F.lit(d).alias("depth"), hash_bucket(key, seed, width).alias("bucket"))
+                for d, seed in enumerate(seeds)
+            ]
+        )
+    )
+
+
+def bloom_positions(key: Column | str, seeds: tuple[int, ...], m: int) -> Column:
+    """Bloom-filter positions of ``key``: a generator yielding one ``pos``
+    row per seed, the seed's md5 ``hash_bucket`` in [0, m). The distinct
+    positions are the filter's set bits; rows per position count keys."""
+    return F.explode(F.array(*[hash_bucket(key, seed, m) for seed in seeds])).alias("pos")

@@ -112,3 +112,22 @@ def counter_rate(
         "total_increase",
         (F.col("total_increase") / (F.col("span_us").cast("double") / F.lit(1_000_000.0))).alias("rate_per_sec"),
     )
+
+
+def cdc_compact(events: DataFrame) -> DataFrame:
+    """Latest-wins compaction of a change log keyed (user_id, event_type):
+    one row per key with its version count, first and last ``ts_us``, and
+    the value of its latest version under the (ts_us, event_id) order, so
+    an out-of-order or duplicate-timestamp feed converges to one winner.
+
+    One declarative aggregate, so the same query runs as a batch groupBy
+    (q_cdc_compact) and as a streaming aggregation in update mode
+    (streaming_cdc_compact), where the state per key is Spark's
+    aggregation buffer. Input must carry (user_id, event_type, event_id,
+    ts_us, value)."""
+    return events.groupBy("user_id", "event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_versions"),
+        F.min("ts_us").alias("first_us"),
+        F.max("ts_us").alias("last_us"),
+        F.expr("max_by(value, struct(ts_us, event_id))").alias("last_value"),
+    )

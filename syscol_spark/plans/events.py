@@ -639,8 +639,11 @@ def q_ev_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Treat the event stream as a change log keyed (user_id, event_type): one
 # output row per key with the LATEST value plus the history envelope
 # (version count, first/last change time) — the merge/upsert compaction a
-# lake table needs before serving. One shuffle: both window directions and
-# the count share a single (key, ts) sort.
+# lake table needs before serving. One groupBy, one shuffle: every windowed
+# value of the oracle is per-key-constant, and last_value is max_by over the
+# unique ordering struct (ts_us, event_id), the row_number()==1 row of the
+# DESC window. The aggregate lives in operators/timeseries.py::cdc_compact,
+# which streaming_cdc_compact runs as a streaming aggregation.
 @register(
     "q_cdc_compact",
     """
@@ -662,19 +665,9 @@ def q_ev_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="CDC latest-wins compaction: one row per key with latest value + history envelope",
 )
 def q_cdc_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    # latest-wins compaction as ONE aggregate (r15, guide §2.3/§2.4): every
-    # windowed value here is per-key-constant, so the whole query is a
-    # groupBy — count/min/max directly, and last_value = max_by over the
-    # unique ordering struct (ts_us, event_id), which picks exactly the
-    # former row_number()==1 row of the DESC window. Replaces a full
-    # (key, ts) shuffle+sort with a partially-aggregated hash exchange.
-    return ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_versions"),
-        F.min("ts_us").alias("first_us"),
-        F.max("ts_us").alias("last_us"),
-        F.expr("max_by(value, struct(ts_us, event_id))").alias("last_value"),
-    )
+    from syscol_spark.operators.timeseries import cdc_compact
+
+    return cdc_compact(_events(spark, sf_dir))
 
 
 # --- session path analysis: event-type transition bigrams --------------------

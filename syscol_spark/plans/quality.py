@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
 from syscol_spark.operators.sampling import hash_bucket, hash_bucket_sql
+from syscol_spark.operators.sketch import bloom_positions, cms_cells
 from syscol_spark.plans.catalog import register
 from syscol_spark.sources.tables import load_table
 
@@ -107,21 +108,12 @@ def _cms_oracle() -> str:
 )
 def q_cms_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
-    depth_cells = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(d).alias("depth"),
-                    hash_bucket("user_id", seed, _CMS_WIDTH).alias("bucket"),
-                )
-                for d, seed in enumerate(_CMS_SEEDS)
-            ]
-        )
-    )
     # per-shard sketch tables: what each daily job would persist
     shard_cells = (
-        ev.select(F.pmod(F.col("event_id"), F.lit(_CMS_SHARDS)).alias("shard"), depth_cells.alias("c"))
-        .select("shard", "c.depth", "c.bucket")
+        ev.select(
+            F.pmod(F.col("event_id"), F.lit(_CMS_SHARDS)).alias("shard"),
+            cms_cells("user_id", _CMS_SEEDS, _CMS_WIDTH),
+        )
         .groupBy("shard", "depth", "bucket")
         .agg(F.count(F.lit(1)).alias("cell_cnt"))
     )
@@ -135,21 +127,7 @@ def q_cms_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("exact_cnt"), "user_id")
         .limit(5)
     )
-    probes = heavy.select(
-        "user_id",
-        "exact_cnt",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("depth"),
-                        hash_bucket("user_id", seed, _CMS_WIDTH).alias("bucket"),
-                    )
-                    for d, seed in enumerate(_CMS_SEEDS)
-                ]
-            )
-        ).alias("c"),
-    ).select("user_id", "exact_cnt", "c.depth", "c.bucket")
+    probes = heavy.select("user_id", "exact_cnt", cms_cells("user_id", _CMS_SEEDS, _CMS_WIDTH))
     return (
         merged.join(broadcast(probes), ["depth", "bucket"])
         .groupBy("user_id", "exact_cnt")
@@ -232,11 +210,7 @@ def q_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter; the merge is a distinct union (bit OR of the shard filters)
     shard_bits = orders.select(
         F.pmod(F.col("o_orderkey"), F.lit(4)).alias("shard"),
-        F.explode(
-            F.array(
-                *[hash_bucket("o_custkey", seed, _BLOOM_M) for seed in _BLOOM_SEEDS]
-            )
-        ).alias("pos"),
+        bloom_positions("o_custkey", _BLOOM_SEEDS, _BLOOM_M),
     ).distinct()
     bits = shard_bits.select("pos").distinct()
     probe = cust.select(

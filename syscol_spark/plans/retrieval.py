@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
+from syscol_spark.functions.text import posting_stats
 from syscol_spark.functions.vectors import cosine_similarity
 from syscol_spark.plans.catalog import register
 from syscol_spark.sources.tables import load_table
@@ -32,12 +33,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, pos, term) positional postings — 0-based positions.
+    """(doc_id, pos, term) positional postings — 0-based positions, the
+    phrase searches' input (the index aggregates use posting_stats).
 
-    One narrow projection + generator; the downstream groupBy term is the
-    single shuffle of index construction. At 100 TB the postings build is
-    embarrassingly parallel per doc and the term shuffle is the textbook
-    map-side-combinable aggregation.
+    One narrow projection + generator, embarrassingly parallel per doc at
+    100 TB.
     """
     d = _t(spark, sf_dir, "documents")
     return d.select(
@@ -49,7 +49,8 @@ def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The index-construction aggregate: per term, document frequency, total term
 # frequency, the first posting doc, and a positions checksum (SUM of 0-based
 # positions — proves the positional payload matches without hashing arrays).
-# Plan: explode -> one groupBy(term) with partial aggregation; no joins.
+# Plan: one generator (postings + per-doc distinct terms, posting_stats) ->
+# one groupBy(term) with partial aggregation; no joins, no distinct aggregate.
 @register(
     "q_inverted_index",
     r"""
@@ -76,14 +77,7 @@ def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _postings(spark, sf_dir)
-        .groupBy("term")
-        .agg(
-            F.countDistinct("doc_id").alias("df"),
-            F.count(F.lit(1)).alias("tf_total"),
-            F.min("doc_id").alias("first_doc"),
-            F.sum("pos").alias("pos_checksum"),
-        )
+        posting_stats(_t(spark, sf_dir, "documents"))
         .orderBy(F.desc("df"), "term")
         .limit(40)
     )
@@ -268,26 +262,12 @@ def q_phrase_search_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_inverted_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _postings(spark, sf_dir)
-
-    # ONE corpus explode (r14, guide §2.3): the base and delta shards are
-    # two filters of the same posting stream, so the per-shard partials
-    # come from one groupBy(term, shard-tag) — the former two-branch shape
-    # re-planned the tokenize+posexplode pass per shard. countDistinct per
-    # (term, tag) equals the per-branch value because the tag IS the
-    # filter predicate; the shard-merge aggregate is unchanged.
-    partials = (
-        p.withColumn("__delta", F.col("doc_id") % 5 == 0)
-        .groupBy("term", "__delta")
-        .agg(
-            # countDistinct is safe to SUM across shards because the shard
-            # split is BY doc_id — a doc contributes to exactly one shard
-            F.countDistinct("doc_id").alias("df"),
-            F.count(F.lit(1)).alias("tf_total"),
-            F.min("doc_id").alias("first_doc"),
-            F.sum("pos").alias("pos_checksum"),
-        )
-    )
+    d = _t(spark, sf_dir, "documents")
+    # ONE corpus scan (r14, guide §2.3): the base and delta shards are two
+    # tags of the same posting stream, so the per-shard partials come from
+    # one posting_stats keyed by the tag. df sums across shards because the
+    # shard split is BY doc_id — a doc contributes to exactly one shard.
+    partials = posting_stats(d.withColumn("__delta", F.col("doc_id") % 5 == 0), by=("__delta",))
     merged = (
         partials
         .groupBy("term")

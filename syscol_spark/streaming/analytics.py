@@ -1,10 +1,24 @@
 """Streaming analytics operators over the envelope stream (SURVEY.md §2.11):
-event-time windows with watermark late-data handling, streaming dedup, and a
-custom stateful operator via applyInPandasWithState.
+event-time windows with watermark late-data handling, streaming dedup, and
+stateful twins of batch catalog queries.
 
-These are the streaming twins of the batch queries in plans/events.py — the
-column semantics are identical, so the oracle-checked batch results validate
-this logic; tests here exercise the incremental/stateful execution itself.
+These are the streaming twins of the batch queries in plans/ — the column
+semantics are identical, so the oracle-checked batch results validate this
+logic; tests here exercise the incremental/stateful execution itself.
+
+A twin whose batch query is a plain aggregate runs that query's own helper
+as a native streaming aggregation, so batch and stream are one
+implementation: streaming_cdc_compact (operators/timeseries.py
+cdc_compact), streaming_inverted_index (functions/text.py posting_stats),
+streaming_cms and streaming_bloom (operators/sketch.py cms_cells /
+bloom_positions). Their state is Spark's aggregation buffer, one row per
+group, and no Python runs in the stream. A checkpoint written while these
+four kept Python state (applyInPandasWithState) cannot be resumed by the
+native aggregate: the state schema differs, so such a query restarts from
+a new checkpoint. applyInPandasWithState remains only where the result
+depends on row order or keeps a bounded summary: EWMA host counters,
+z-score, CUSUM, Misra–Gries, capped sessions, burn rate, MinHash and
+SemDeDup buckets, and running top-k.
 
 Watermark policy: the envelope Timestamp is Unix-ns; event time is the
 derived µs TimestampType. At 100 TB-scale ingest, the watermark bounds state:
@@ -508,77 +522,23 @@ def streaming_semantic_dedup(
     )
 
 
-_CDC_OUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("n_versions", LongType()),
-        StructField("first_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("last_value", DoubleType()),
-    ]
-)
-_CDC_STATE = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("first_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("last_eid", LongType()),
-        StructField("last_value", DoubleType()),
-    ]
-)
-
-
 def streaming_cdc_compact(stream: DataFrame) -> DataFrame:
-    """Streaming twin of q_cdc_compact (plans/events.py): per
-    (user_id, event_type) key, maintain the latest-wins compacted row —
-    version count, first/last event time, last value under the batch twin's
-    exact tie-break ((ts_us, event_id) lexicographic, so an out-of-order or
-    duplicate-timestamp feed converges to the same winner) — and emit the
-    updated row for every key touched in each micro-batch (update mode:
-    downstream upserts by key, the CDC sink contract).
+    """Streaming twin of q_cdc_compact (plans/events.py): the SAME aggregate
+    (operators/timeseries.py::cdc_compact) run as a streaming aggregation.
+    Per (user_id, event_type) key it keeps the latest-wins compacted row —
+    version count, first/last event time, last value under the (ts_us,
+    event_id) order, so an out-of-order or duplicate-timestamp feed
+    converges to the batch winner — and emits the updated row for every key
+    touched in each micro-batch (update mode: downstream upserts by key,
+    the CDC sink contract).
 
-    State is O(1) per live key — five scalars, independent of stream length
-    and of how many versions a key has seen; the compaction happens in
-    state, never by buffering versions. Input must carry
-    (user_id, event_type, event_id, ts_us, value).
+    State is Spark's aggregation buffer, one row per live key, independent
+    of stream length and of how many versions a key has seen. Input must
+    carry (user_id, event_type, event_id, ts_us, value).
     """
+    from syscol_spark.operators.timeseries import cdc_compact
 
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        user_id, event_type = key
-        if state.exists:
-            n, first_us, last_us, last_eid, last_value = state.get
-        else:
-            n, first_us, last_us, last_eid, last_value = 0, None, None, None, None
-        for pdf in pdfs:
-            for row in pdf.itertuples():
-                ts, eid, v = int(row.ts_us), int(row.event_id), float(row.value)
-                n += 1
-                if first_us is None or ts < first_us:
-                    first_us = ts
-                if last_us is None or (ts, eid) > (last_us, last_eid):
-                    last_us, last_eid, last_value = ts, eid, v
-        state.update((n, first_us, last_us, last_eid, last_value))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "event_type": [event_type],
-                "n_versions": [n],
-                "first_us": [first_us],
-                "last_us": [last_us],
-                "last_value": [last_value],
-            }
-        )
-
-    return stream.groupBy("user_id", "event_type").applyInPandasWithState(
-        update,
-        outputStructType=_CDC_OUT,
-        stateStructType=_CDC_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return cdc_compact(stream)
 
 
 _TOPK_OUT = StructType(
@@ -1109,92 +1069,28 @@ def streaming_cusum(
     )
 
 
-_INVIDX_STATE = StructType(
-    [
-        StructField("df", LongType()),
-        StructField("tf_total", LongType()),
-        StructField("first_doc", LongType()),
-        StructField("pos_checksum", LongType()),
-    ]
-)
-_INVIDX_OUT = StructType(
-    [
-        StructField("term", StringType()),
-        StructField("df", LongType()),
-        StructField("tf_total", LongType()),
-        StructField("first_doc", LongType()),
-        StructField("pos_checksum", LongType()),
-    ]
-)
-
-
 def streaming_inverted_index(
     docs: DataFrame, *, content_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Continuous inverted-index maintenance: the streaming twin of
-    q_inverted_index / q_inverted_delta (plans/retrieval.py). Each arriving
-    document explodes to positional postings (the SAME whitespace split as
-    the batch build, so the two cannot drift), and one stateful key per TERM
-    folds the batch delta algebra incrementally: df += this batch's distinct
-    new docs, tf_total += postings, first_doc = min, pos_checksum += sum.
+    q_inverted_index / q_inverted_delta (plans/retrieval.py), running the
+    SAME aggregate (functions/text.py::posting_stats) as a streaming
+    aggregation: per TERM, df, tf_total, first_doc = min and
+    pos_checksum = sum, each folded across micro-batches by Spark.
 
-    Exactness rests on the same contract the batch delta path states: a
+    Exactness rests on the contract the batch delta path states: a
     document is ingested exactly once (doc-disjoint shards/batches), so the
-    per-batch distinct-doc count sums to the true document frequency — the
-    algebra q_inverted_delta's merge theorem proves against the full
-    rebuild. State is 4 longs per term (index-sized, never corpus-sized);
-    update mode re-emits a term's current stats whenever a batch touches it,
-    so the sink always holds the freshest posting statistics per term.
+    count of per-document distinct terms is the true document frequency.
+    State is Spark's aggregation buffer, one row per term (index-sized,
+    never corpus-sized); update mode re-emits a term's current stats
+    whenever a batch touches it, so the sink always holds the freshest
+    posting statistics per term.
     """
-    postings = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.posexplode(F.split(F.trim(F.col(content_col)), r"\s+")).alias("pos", "term"),
+    from syscol_spark.functions.text import posting_stats
+
+    return posting_stats(
+        docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(content_col).alias("text"))
     )
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            df_n, tf, first_doc, checksum = state.get
-        else:
-            df_n, tf, first_doc, checksum = 0, 0, None, 0
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            df_n += int(pdf["doc_id"].nunique())
-            tf += int(len(pdf))
-            batch_min = int(pdf["doc_id"].min())
-            first_doc = batch_min if first_doc is None else min(first_doc, batch_min)
-            checksum += int(pdf["pos"].sum())
-        state.update((df_n, tf, first_doc, checksum))
-        yield pd.DataFrame(
-            {
-                "term": [key[0]],
-                "df": [df_n],
-                "tf_total": [tf],
-                "first_doc": [first_doc],
-                "pos_checksum": [checksum],
-            }
-        )
-
-    return postings.groupBy("term").applyInPandasWithState(
-        update,
-        outputStructType=_INVIDX_OUT,
-        stateStructType=_INVIDX_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# --- continuous count-min sketch maintenance -------------------------------------
-_CMS_STATE = StructType([StructField("cell_cnt", LongType())])
-_CMS_OUT = StructType(
-    [
-        StructField("depth", IntegerType()),
-        StructField("bucket", LongType()),
-        StructField("cell_cnt", LongType()),
-    ]
-)
 
 
 def streaming_cms(
@@ -1206,63 +1102,26 @@ def streaming_cms(
 ) -> DataFrame:
     """Continuous count-min sketch maintenance: the streaming twin of
     q_cms_shards (plans/quality.py). Each arriving event maps to one cell
-    per depth row via the SAME engine-portable md5 bucket as the batch
-    build (operators/sampling.py hash_bucket — the two cannot drift), and
-    one stateful key per (depth, bucket) CELL folds the count. Count-min is
+    per depth row via the SAME generator as the batch build
+    (operators/sketch.py::cms_cells), and a streaming
+    ``groupBy(depth, bucket).count()`` folds the counts. Count-min is
     linear, so per-batch increments sum to exactly the one-shot build — the
     same merge theorem the batch shard path proves.
 
-    State is ONE long per cell: depth x width cells total (768 at the
-    registered config) REGARDLESS of key or event count — the textbook
-    bounded-state sketch. Update mode re-emits a cell whenever a batch
-    touches it, so the sink always holds the freshest sketch; a point
-    estimate is min over depths of the key's cells, served from the sink
-    without touching the stream.
+    State is Spark's aggregation buffer, one row per cell: depth x width
+    cells total (768 at the registered config) REGARDLESS of key or event
+    count — the textbook bounded-state sketch. Update mode re-emits a cell
+    whenever a batch touches it, so the sink always holds the freshest
+    sketch; a point estimate is min over depths of the key's cells, served
+    from the sink without touching the stream.
     """
-    from syscol_spark.operators.sampling import hash_bucket
+    from syscol_spark.operators.sketch import cms_cells
 
-    cells = events.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("depth"),
-                        hash_bucket(key_col, seed, width).alias("bucket"),
-                    )
-                    for d, seed in enumerate(seeds)
-                ]
-            )
-        ).alias("c")
-    ).select("c.depth", "c.bucket")
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (cnt,) = state.get if state.exists else (0,)
-        for pdf in pdfs:
-            cnt += int(len(pdf))
-        state.update((cnt,))
-        yield pd.DataFrame(
-            {"depth": [key[0]], "bucket": [key[1]], "cell_cnt": [cnt]}
-        )
-
-    return cells.groupBy("depth", "bucket").applyInPandasWithState(
-        update,
-        outputStructType=_CMS_OUT,
-        stateStructType=_CMS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return (
+        events.select(cms_cells(key_col, seeds, width))
+        .groupBy("depth", "bucket")
+        .agg(F.count(F.lit(1)).alias("cell_cnt"))
     )
-
-
-# --- continuous (counting) bloom-filter maintenance --------------------------------
-_BLOOM_STATE = StructType([StructField("n_keys", LongType())])
-_BLOOM_OUT = StructType(
-    [
-        StructField("pos", LongType()),
-        StructField("n_keys", LongType()),
-    ]
-)
 
 
 def streaming_bloom(
@@ -1274,39 +1133,23 @@ def streaming_bloom(
 ) -> DataFrame:
     """Continuous COUNTING-bloom maintenance: the streaming twin of
     q_bloom_prefilter's build side (plans/quality.py). Each arriving key
-    sets its k md5 positions (the SAME hash_bucket as the batch build), and
-    one stateful key per POSITION folds how many build-side keys hash
-    there — a counting bloom, the variant that also supports deletes by
-    decrement. A position is "set" iff n_keys > 0, so the streamed filter's
+    yields its k md5 positions via the SAME generator as the batch build
+    (operators/sketch.py::bloom_positions), and a streaming
+    ``groupBy(pos).count()`` folds how many build-side keys hash there — a
+    counting bloom, the variant that also supports deletes by decrement. A
+    position is "set" iff n_keys > 0, so the streamed filter's
     set-position set equals the batch bits table exactly (distinct-union
     merge = positions touched at least once).
 
-    State is ONE long per position: <= m longs total REGARDLESS of key
-    count — the same by-construction bound that makes the batch bits table
-    broadcast-safe. Update mode re-emits a position when a batch touches
-    it; the sink is the live filter a prefilter join reads.
+    State is Spark's aggregation buffer, one row per position: <= m rows
+    REGARDLESS of key count — the same by-construction bound that makes the
+    batch bits table broadcast-safe. Update mode re-emits a position when a
+    batch touches it; the sink is the live filter a prefilter join reads.
     """
-    from syscol_spark.operators.sampling import hash_bucket
+    from syscol_spark.operators.sketch import bloom_positions
 
-    pos = keys.select(
-        F.explode(
-            F.array(*[hash_bucket(key_col, seed, m) for seed in seeds])
-        ).alias("pos")
-    )
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (n,) = state.get if state.exists else (0,)
-        for pdf in pdfs:
-            n += int(len(pdf))
-        state.update((n,))
-        yield pd.DataFrame({"pos": [key[0]], "n_keys": [n]})
-
-    return pos.groupBy("pos").applyInPandasWithState(
-        update,
-        outputStructType=_BLOOM_OUT,
-        stateStructType=_BLOOM_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return (
+        keys.select(bloom_positions(key_col, seeds, m))
+        .groupBy("pos")
+        .agg(F.count(F.lit(1)).alias("n_keys"))
     )

@@ -177,7 +177,8 @@ def test_ranking_queries_broadcast_tiny_aggregates(spark, sf_dir, queries):
 
 
 def test_cdc_compact_single_shuffle(spark, sf_dir, queries):
-    """Both window directions + count share ONE (key, ts) exchange."""
+    """The latest-wins compaction is one groupBy: ONE hash exchange on the
+    (user_id, event_type) key, after partial aggregation."""
     import re
 
     plan = _plan(queries["q_cdc_compact"].builder(spark, sf_dir))

@@ -1275,6 +1275,138 @@ def test_streaming_inverted_index_state_survives_restart(spark, sf_dir, tmp_path
         assert stats == batch[term], (term, stats, batch[term])
 
 
+def test_streaming_cdc_compact_state_survives_restart(spark, sf_dir, tmp_path):
+    """Restart the CDC compactor from its checkpoint with a new event shard
+    pending: every key the restarted query re-emits must equal
+    q_cdc_compact over all three shards. A synthetic key has two versions
+    with the SAME ts_us in different triggers, the higher event_id landing
+    first: it must stay the winner after the restart, which fails if the
+    latest-wins order drops event_id (on an ordering tie the later version
+    replaces the earlier)."""
+    from syscol_spark.plans.catalog import query_catalog
+    from syscol_spark.sources.tables import load_table
+    from syscol_spark.streaming.analytics import streaming_cdc_compact
+
+    schema = "user_id long, event_type string, event_id long, ts_us long, value double"
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", "event_id", "ts_us", "value"
+    )
+    tie_us = 1_700_000_000_000_000
+    tie = {
+        0: (-1, "tie", 2_000_000_001, tie_us, 1.0),
+        2: (-1, "tie", 2_000_000_000, tie_us, 2.0),
+    }
+    src = str(tmp_path / "cdc_src")
+    ckpt = str(tmp_path / "cdc_ckpt")
+
+    def land(k):
+        shard = ev.filter(F.col("event_id") % 3 == k)
+        if k in tie:
+            shard = shard.unionByName(spark.createDataFrame([tie[k]], schema))
+        shard.coalesce(1).write.parquet(f"{src}/f{k}")
+
+    def run(out_dir):
+        def sink(batch_df, batch_id):
+            batch_df.write.mode("append").parquet(out_dir)
+
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(f"{src}/f*")
+        q = (
+            streaming_cdc_compact(stream)
+            .writeStream.foreachBatch(sink)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
+
+    for k in (0, 1):
+        land(k)
+    run(str(tmp_path / "out1"))
+    land(2)
+    out2 = str(tmp_path / "out2")
+    run(out2)
+
+    # one new file => one batch, but keep the highest version count anyway
+    emitted2 = {}
+    for r in spark.read.parquet(out2).collect():
+        key = (r["user_id"], r["event_type"])
+        cur = (r["n_versions"], r["first_us"], r["last_us"], r["last_value"])
+        if key not in emitted2 or cur[0] > emitted2[key][0]:
+            emitted2[key] = cur
+    assert (-1, "tie") in emitted2, "restarted query did not re-emit the tie key"
+
+    expected = {
+        (r["user_id"], r["event_type"]): (
+            r["n_versions"], r["first_us"], r["last_us"], r["last_value"]
+        )
+        for r in query_catalog()["q_cdc_compact"](spark, sf_dir).collect()
+    }
+    expected[(-1, "tie")] = (2, tie_us, tie_us, 1.0)
+    for key, got in emitted2.items():
+        assert got == expected[key], (key, got, expected[key])
+
+
+# (input table, stream schema, file split column, group key of the output)
+_NATIVE_TWINS = {
+    "cdc_compact": (
+        "events",
+        "user_id long, event_type string, event_id long, ts_us long, value double",
+        "event_id",
+        ("user_id", "event_type"),
+    ),
+    "inverted_index": ("documents", "doc_id long, text string", "doc_id", ("term",)),
+    "cms": ("events", "event_id long, user_id long", "event_id", ("depth", "bucket")),
+    "bloom": ("orders", "o_orderkey long, o_custkey long", "o_orderkey", ("pos",)),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_NATIVE_TWINS))
+def test_replaced_twins_run_without_python_state(spark, sf_dir, tmp_path, name):
+    """The four plain-aggregate twins run as Spark's own streaming
+    aggregation: the executed plan has no Python node, and the state store
+    holds exactly one row per group — at most depth x width = 768 cells for
+    the count-min sketch and m = 8,192 positions for the bloom filter."""
+    from syscol_spark.sources.tables import load_table
+    from syscol_spark.streaming import analytics
+
+    table, schema, split, key = _NATIVE_TWINS[name]
+    cols = [c.split()[0] for c in schema.split(", ")]
+    data = load_table(spark, sf_dir, table).select(*cols)
+    src = str(tmp_path / "src")
+    for k in range(3):
+        data.filter(F.col(split) % 3 == k).coalesce(1).write.parquet(f"{src}/f{k}")
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(f"{src}/f*")
+    sink = f"native_{name}"
+    q = (
+        getattr(analytics, f"streaming_{name}")(stream)
+        .writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+        plan = q._jsq.explainInternal(False)
+        progress = q.lastProgress
+    finally:
+        q.stop()
+
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "StateStoreSave" in plan, plan
+    n_groups = spark.sql(f"SELECT * FROM {sink}").select(*key).distinct().count()
+    assert n_groups > 0
+    assert progress["stateOperators"][0]["numRowsTotal"] == n_groups
+    bound = {"cms": 3 * 256, "bloom": 8192}.get(name)
+    if bound is not None:
+        assert n_groups <= bound, (n_groups, bound)
+
+
 def test_streaming_heavy_hitters_state_survives_restart(spark, tmp_path):
     """Restart the Misra-Gries maintainer (the most restart-fragile state
     shape: a variable-length counter map plus the decrement tally) from its
