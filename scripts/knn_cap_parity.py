@@ -11,7 +11,9 @@ _sim.KNN_BUCKET_CAP / KNN_CAP_WINDOW at registration time, so both sides
 keep one definition), runs the engine with the same explicit cap, verifies
 the cap actually engaged (oversized buckets exist), and value-compares the
 full q_knn_graph output engine-vs-DuckDB with the driver's normalize rules
-at sf0.01 and sf0.1.
+at sf0.01 and sf0.1, once per placement of the candidate kernel: on the
+driver (the routed build) and on the executors (``knn_pairs`` forced to
+the distributed twin).
 
 Writes KNN_CAP_PARITY.json at the repo root.
 
@@ -21,7 +23,6 @@ Usage: python scripts/knn_cap_parity.py
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import time
@@ -64,15 +65,11 @@ def bucket_stats(spark, sf_dir: str) -> dict:
         tbl.column("embedding").combine_chunks().flatten(), dtype="float64"
     ).reshape(-1, 64)
     n = mat.shape[0]
-    nb = max(4, math.ceil(math.log2(max(1, n) / 125)))
-    planes = np.array(
-        [sim.rademacher_signs(64, p) for p in range(8 * nb)], dtype="float64"
-    )
-    bits = (mat @ planes.T) >= 0
+    nb = sim.auto_band_bits(n)
+    keys = sim._band_keys_local(mat, 64, 8, nb, 42)
     sizes = {}
     for band in range(8):
-        keys = bits[:, band * nb : (band + 1) * nb] @ (1 << np.arange(nb))
-        uniq, cnt = np.unique(keys, return_counts=True)
+        uniq, cnt = np.unique(keys[:, band], return_counts=True)
         for k, c in zip(uniq, cnt):
             sizes[(band, int(k))] = int(c)
     over = [c for c in sizes.values() if c > CAP]
@@ -87,6 +84,7 @@ def bucket_stats(spark, sf_dir: str) -> dict:
 
 
 def run_scale(spark, sf_dir: str) -> dict:
+    from syscol_spark.operators import route
     from syscol_spark.operators.similarity import knn_graph
 
     stats = bucket_stats(spark, sf_dir)
@@ -94,38 +92,39 @@ def run_scale(spark, sf_dir: str) -> dict:
         f"cap {CAP} did not engage at {sf_dir}: {stats}"
     )
     t0 = time.time()
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    # the registered builder's defaults bound to the production constants at
-    # def time, so mirror its call with the lowered cap made explicit
-    sdf = knn_graph(
-        emb, k=3, dim=64, n_bands=8, band_bits="auto",
-        bucket_cap=CAP, cap_window=WIN,
-    )
-    scols = [c.lower() for c in sdf.columns]
-    srows = [tuple(r) for r in sdf.collect()]
-    spark_s = time.time() - t0
-
-    t0 = time.time()
     con = duck_connection(sf_dir)
     rel = con.sql(QUERIES["q_knn_graph"].oracle)
     ocols = [c.lower() for c in rel.columns]
     orows = rel.fetchall()
-    duck_s = time.time() - t0
+    out = {**stats, "duck_seconds": round(time.time() - t0, 2)}
 
-    assert sorted(scols) == sorted(ocols), (scols, ocols)
-    sn, on = normalize(srows, scols), normalize(orows, ocols)
-    assert len(sn) == len(on), f"rowcount spark={len(sn)} oracle={len(on)}"
-    for i, (sr, orow) in enumerate(zip(sn, on)):
-        assert all(values_equal(x, y) for x, y in zip(sr, orow)), (
-            f"value mismatch at row {i}: spark={sr} oracle={orow}"
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    bound = route.BOUNDS["knn_pairs"]
+    for placement, b in (("driver", bound), ("executors", -1)):
+        route.BOUNDS["knn_pairs"] = b
+        t0 = time.time()
+        # the registered builder's defaults bound to the production constants
+        # at def time, so mirror its call with the lowered cap made explicit
+        sdf = knn_graph(
+            emb, k=3, dim=64, n_bands=8, band_bits="auto",
+            bucket_cap=CAP, cap_window=WIN,
         )
-    return {
-        **stats,
-        "rows": len(sn),
-        "spark_seconds": round(spark_s, 2),
-        "duck_seconds": round(duck_s, 2),
-        "status": "match",
-    }
+        scols = [c.lower() for c in sdf.columns]
+        srows = [tuple(r) for r in sdf.collect()]
+        spark_s = time.time() - t0
+        local = sdf._jdf.queryExecution().executedPlan().nodeName() == "LocalTableScan"  # noqa: SLF001
+        assert local == (placement == "driver"), (placement, local)
+
+        assert sorted(scols) == sorted(ocols), (scols, ocols)
+        sn, on = normalize(srows, scols), normalize(orows, ocols)
+        assert len(sn) == len(on), f"{placement}: rowcount spark={len(sn)} oracle={len(on)}"
+        for i, (sr, orow) in enumerate(zip(sn, on)):
+            assert all(values_equal(x, y) for x, y in zip(sr, orow)), (
+                f"{placement}: value mismatch at row {i}: spark={sr} oracle={orow}"
+            )
+        out[placement] = {"rows": len(sn), "spark_seconds": round(spark_s, 2), "status": "match"}
+    route.BOUNDS["knn_pairs"] = bound
+    return out
 
 
 def main() -> None:

@@ -36,8 +36,9 @@ from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from syscol_spark.operators.similarity import (  # noqa: E402
+    _band_keys_local,
+    auto_band_bits,
     knn_graph,
-    rademacher_signs,
 )
 from syscol_spark.session import get_session  # noqa: E402
 
@@ -108,8 +109,6 @@ def _srp_ceiling(spark, emb, exact_rows, thirds, n: int) -> dict:
     least one >=0.9 exact mate sharing >=1 SRP band bucket with them — the
     BEST any window/cap policy could detect. Driver-side numpy on the few
     hundred involved vectors (same planes, same auto band width)."""
-    import math
-
     nd_pairs = [
         (int(r["qid"]), int(r["nbr"]))
         for r in exact_rows
@@ -123,17 +122,7 @@ def _srp_ceiling(spark, emb, exact_rows, thirds, n: int) -> dict:
     )
     mat = np.stack(pdf["embedding"].to_numpy()).astype("float64")
     idx = {int(v): i for i, v in enumerate(pdf["vec_id"])}
-    nb = max(4, math.ceil(math.log2(max(1, n) / 125)))
-    planes = np.array(
-        [rademacher_signs(64, p) for p in range(8 * nb)], dtype="float64"
-    )
-    bits = (mat @ planes.T) >= 0  # (n_ids, 8*nb)
-    keys = np.array(
-        [
-            [int("".join("1" if b else "0" for b in row[band * nb : (band + 1) * nb]), 2) for band in range(8)]
-            for row in bits
-        ]
-    )
+    keys = _band_keys_local(mat, 64, 8, auto_band_bits(n), 42)
     can = {}
     for qid, nbr in nd_pairs:
         shared = bool((keys[idx[qid]] == keys[idx[nbr]]).any())

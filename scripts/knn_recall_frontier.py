@@ -41,9 +41,10 @@ import pyarrow.parquet as pq  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from syscol_spark.operators.similarity import (  # noqa: E402
+    _band_keys_local,
     _srp_candidate_pairs,
+    auto_band_bits,
     knn_graph,
-    rademacher_signs,
 )
 from syscol_spark.session import get_session  # noqa: E402
 
@@ -94,15 +95,7 @@ def srp_ceiling(
     involved = sorted(set(mates) | {m for s in mates.values() for m in s})
     pos = {int(v): i for i, v in enumerate(ids)}
     sub = mat[[pos[i] for i in involved]]
-    planes = np.array(
-        [rademacher_signs(64, p) for p in range(n_bands * nb)], dtype="float64"
-    )
-    bits = (sub @ planes.T) >= 0
-    keys = np.zeros((len(involved), n_bands), dtype="int64")
-    for band in range(n_bands):
-        keys[:, band] = bits[:, band * nb : (band + 1) * nb] @ (
-            1 << np.arange(nb, dtype="int64")
-        )
+    keys = _band_keys_local(sub, 64, n_bands, nb, 42)
     idx = {v: i for i, v in enumerate(involved)}
     hit = 0
     for q, ms in mates.items():
@@ -117,7 +110,7 @@ def main() -> int:
     t0 = time.time()
     ids, mat = load_matrix()
     n = mat.shape[0]
-    nb = max(4, math.ceil(math.log2(n / 125)))
+    nb = auto_band_bits(n)
     mates = twin_census(ids, mat)
     n_q = len(mates)
     census_s = round(time.time() - t0, 1)

@@ -1,7 +1,7 @@
 """Measure how close the SRP projection dots sit to a round(x, 6) boundary.
 
 The knn_graph bucket cap orders oversized buckets by round(plane-0 dot, 6)
-and round(plane-1 dot, 6) (operators/similarity.py `_srp_candidate_pairs`;
+and round(plane-1 dot, 6) (operators/similarity.py `_srp_projections`;
 SQL mirror in plans/northstar.py `proj` CTE). Engine and oracle compute the
 same dot from the same exact ±x_i addends but in different summation
 orders, so the two sides disagree by O(1e-13) relative — and quantization
@@ -15,7 +15,7 @@ dots (the only dots the capped path orders by):
   - min/percentile distance to the nearest rounding boundary (absolute);
   - the modeled cross-engine discrepancy bound: |dot| · 1e-13 (float64
     summation-order reordering over dim=64 exact ±1-weighted addends — the
-    same bound used for the sign-bit argument, srp_plane_sums docstring);
+    same bound used for the sign-bit argument, srp_band_sql_keys docstring);
   - how many dots sit within 10× / 1× of that bound from a boundary, i.e.
     rank entries that COULD order differently engine-vs-oracle.
 
@@ -26,8 +26,9 @@ the expected MIN over N dots is ~1e-6/(2N) — at sf10's 400k dots that is
 the honest conclusion: how many rank entries are at risk, not a guarantee
 of zero. Writes ROUNDING_MARGIN.json at the repo root.
 
-Pure numpy + pyarrow (no Spark): the dots are an exact matmul replica of
-srp_plane_sums' kernel — float64 (batch × dim) @ (dim × planes).
+Pure numpy + pyarrow (no Spark): the dots are a float64 matmul over the
+engine's own planes (`_sign_planes`), as `_srp_projections` computes them
+before rounding.
 
 Usage: python scripts/rounding_margin.py
 """
@@ -44,10 +45,10 @@ import pyarrow.parquet as pq
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from syscol_spark.operators.similarity import rademacher_signs  # noqa: E402
+from syscol_spark.operators.similarity import _sign_planes  # noqa: E402
 
 DIM = 64
-REL_NOISE = 1e-13  # summation-order reordering bound, srp_plane_sums docstring
+REL_NOISE = 1e-13  # summation-order reordering bound, srp_band_sql_keys docstring
 
 SCALES = {
     "sf0.1": "/root/testdata/sf0.1",
@@ -69,10 +70,7 @@ def measure(path: str) -> dict:
     tbl = pq.read_table(path, columns=["embedding"])
     col = tbl.column("embedding").combine_chunks()
     mat = np.asarray(col.flatten(), dtype="float64").reshape(-1, DIM)
-    planes = np.array(
-        [rademacher_signs(DIM, p) for p in (0, 1)], dtype="float64"
-    )
-    dots = mat @ planes.T  # (n, 2)
+    dots = mat @ _sign_planes(DIM, 2, 42).T  # (n, 2)
     dist = boundary_distance(dots)
     noise = np.abs(dots) * REL_NOISE
     at_risk_1x = int((dist <= noise).sum())

@@ -28,8 +28,8 @@ staging means NO event is ever behind the watermark, so the latest
 snapshot per (user, session_start, sub_session) must account for every
 one of the 1,000,000 input events: SUM(max n_events) == 1e6.
 
-Merges a second entry into STREAM_SCALE.json (existing CMS entry becomes
-probes.cms_sf1). Run ALONE (bench discipline):
+Writes the ``capped_sessions_sf1`` probe of STREAM_SCALE.json through
+streaming_scale.write_probe, which keeps the other probes. Run ALONE (bench discipline):
     python scripts/streaming_keyed_scale.py
 """
 
@@ -44,8 +44,10 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
+from streaming_scale import write_probe  # noqa: E402
 
 from syscol_spark.session import get_session  # noqa: E402
 from syscol_spark.streaming.analytics import streaming_capped_sessions  # noqa: E402
@@ -236,15 +238,7 @@ def main() -> int:
             ),
         }
 
-        path = os.path.join(REPO, "STREAM_SCALE.json")
-        with open(path) as fh:
-            existing = json.load(fh)
-        if "probes" not in existing:
-            existing = {"probes": {"cms_sf1": existing}}
-        existing["probes"]["capped_sessions_sf1"] = entry
-        with open(path, "w") as fh:
-            json.dump(existing, fh, indent=1, sort_keys=True)
-            fh.write("\n")
+        write_probe("capped_sessions_sf1", entry)
         ok = entry["conservation_ok"] and entry["state_bounded_below_keyspace"]
         print(
             json.dumps(

@@ -14,7 +14,7 @@ regardless of how many events or distinct keys flow through. A
 watermark-free stateful operator whose state grew with input would show a
 rising numRowsTotal here; the artifact pins it flat.
 
-Writes STREAM_SCALE.json (SCALE_SF10.json-style) and exits non-zero if
+Writes the ``cms_sf1`` probe of STREAM_SCALE.json and exits non-zero if
 state ever exceeds the 768-cell bound or the folded sketch total drifts
 from events*depth (count-min linearity).
 
@@ -41,6 +41,22 @@ from syscol_spark.streaming.analytics import streaming_cms  # noqa: E402
 
 SF1_EVENTS = os.path.join(REPO, ".localdata", "sf1", "events.parquet")
 CELL_BOUND = 3 * 256  # seeds x width of the registered config
+STREAM_SCALE = os.path.join(REPO, "STREAM_SCALE.json")
+
+
+def write_probe(name: str, entry: dict, path: str = STREAM_SCALE) -> None:
+    """Set ``probes.<name>`` of the JSON file at ``path`` to ``entry`` and
+    keep every other probe in it (a missing file starts empty): each scale
+    script writes its own entry through this merge."""
+    try:
+        with open(path) as fh:
+            doc = json.load(fh)
+    except FileNotFoundError:
+        doc = {}
+    doc.setdefault("probes", {})[name] = entry
+    with open(path, "w") as fh:
+        json.dump(doc, fh, indent=1, sort_keys=True)
+        fh.write("\n")
 
 
 def main() -> int:
@@ -117,9 +133,7 @@ def main() -> int:
             " O(distinct keys). first-saturation value: " + str(first_full)
         ),
     }
-    with open(os.path.join(REPO, "STREAM_SCALE.json"), "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
-        fh.write("\n")
+    write_probe("cms_sf1", out)
     print(json.dumps({k: v for k, v in out.items() if k != "batches"}))
     return 0 if out["state_flat"] and out["linearity_ok"] else 1
 

@@ -66,9 +66,10 @@ BOUNDS = {
     "bpe_vocab": 200_000,
     # connected components and PageRank: edge rows, two ids each
     "graph_edges": 200_000,
-    # knn_graph: candidate pairs before deduplication, the sum over
-    # (band, key) buckets of B(B-1)/2, counted from the keys before any pair
-    # exists; 2^24 int64 pair codes are 128 MB. 10,000 uniform random
+    # knn_graph: the candidate pairs its kernel emits before deduplication
+    # (similarity.py::_srp_pair_count: B(B-1)/2 per bucket of B <=
+    # bucket_cap, the two windows' pairs above it), counted from the keys
+    # before any pair exists; 2^24 int64 pair codes are 128 MB. 10,000 uniform random
     # dim-64 vectors (auto band_bits = 7) have 16.2M: the local twin built
     # their graph in 3.5-3.8 s at a 584 MB driver peak, the distributed one
     # in 22-25 s (4 cores)

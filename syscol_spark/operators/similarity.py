@@ -1,15 +1,26 @@
 """Similarity search over embedding columns (north-star).
 
-Two paths:
-- brute_force_topk: exact cosine top-k. The query set is broadcast (it is
-  small by construction); the corpus is scanned once, scored JVM-side, and
-  reduced with a per-query ranking window. Linear in corpus size — the right
-  baseline even at 100 TB (one scan, no shuffle of the corpus itself).
-- srp_topk: sign-random-projection LSH. Corpus hashed once into 2^n_planes
-  buckets with deterministic pseudo-random hyperplanes (seeded from
-  xxhash64 — reproducible across runs/clusters, no stored model); queries
-  probe only their own bucket (+ optional multi-probe neighbors), so the
-  scored candidate set is ~corpus/2^n_planes per query.
+- Exact: brute_force_topk scores a broadcast query set against one corpus
+  scan and ranks per query; mmr_topk re-ranks for diversity (maximal
+  marginal relevance).
+- SRP (sign random projection) LSH. The hyperplanes are deterministic: a
+  multiply-xorshift hash of (plane, dimension, seed) gives every
+  coefficient, so runs and clusters agree with no stored model and the
+  DuckDB oracles rebuild the same planes.
+  - Gaussian planes (_srp_plane): srp_bucket packs the sign bits into one
+    bucket id; srp_topk probes the query's bucket and its Hamming
+    neighbors.
+  - ±1 planes (rademacher_signs): band keys for embedding near-dup
+    (srp_band_pairs) and the whole-corpus k-NN graph (knn_graph). One
+    candidate kernel (_srp_bucket_pairs) runs on the driver under a size
+    bound and per bucket group on the executors above it.
+- Quantizers: k-means (kmeans_centroids), IVF (ivf_topk), PQ (pq_codes,
+  pq_adc_topk) and IVF-PQ (ivf_pq_topk, build_ivfpq_index and its
+  append/save/load/serve helpers), over one nearest-centroid kernel.
+- SemDeDup: semantic_dedup and its incremental twin semantic_dedup_delta.
+
+Each operator with a driver-local twin picks it through
+operators/route.py; both twins compute the same result.
 """
 
 from __future__ import annotations
@@ -328,48 +339,33 @@ def _srp_plane(dim: int, plane: int, seed: int = 42) -> list[float]:
     return vals
 
 
-def srp_gaussian_dots(vec: Column | str, dim: int, n_planes: int, seed: int = 42) -> Column:
-    """Array of <vec, plane_p> for the gaussian SRP hyperplanes, computed in
-    one Arrow-batched numpy pass per batch.
+def srp_bucket(vec: Column | str, dim: int, n_planes: int = 8, seed: int = 42) -> Column:
+    """LSH bucket id: the sign bits of <vec, plane_p> over the gaussian SRP
+    hyperplanes (_srp_plane), bit p set when the dot is >= 0, packed into
+    a long in one Arrow-batched numpy pass per batch.
 
-    Bit-identical to the interpreted left-fold it replaces (and to the
-    DuckDB oracle's list_reduce twin): the elementwise multiply is the same
-    IEEE float64 op, and ``np.add.accumulate`` applies ``+`` strictly
+    Each dot is bit-identical to the DuckDB oracle's list_reduce fold
+    (plans/northstar.py::_srp_bucket_sql): the elementwise multiply is the
+    same IEEE float64 op, and ``np.add.accumulate`` applies ``+`` strictly
     sequentially in index order (the fold starts at 0.0 and 0.0+x == x), so
     every intermediate rounding matches the fold's. A BLAS matmul would NOT
     be safe here — it reorders the sum, and gaussian addends are inexact
-    (unlike the ±1 rademacher planes in srp_plane_sums, where any order
-    sums the same exact addends). The fold this replaces evaluated at
-    ~1.4M interpreted lambda-ops/s — ~1 s for 2000 rows x 6 planes x 64
-    dims — vs effectively free for the vectorized accumulate."""
+    (unlike the ±1 rademacher planes of _band_keys_local, where any order
+    sums the same exact addends)."""
     from pyspark.sql.functions import pandas_udf
 
     planes = np.array([_srp_plane(dim, p, seed) for p in range(n_planes)], dtype="float64")
+    weights = np.int64(1) << np.arange(n_planes, dtype="int64")
 
-    @pandas_udf("array<double>")
-    def _dots(v: pd.Series) -> pd.Series:
+    @pandas_udf("long")
+    def _bucket(v: pd.Series) -> pd.Series:
         m = np.stack(v.to_numpy()).astype("float64")
-        out = np.empty((m.shape[0], planes.shape[0]))
-        for p in range(planes.shape[0]):
-            out[:, p] = np.add.accumulate(m * planes[p], axis=1)[:, -1]
-        return pd.Series(list(out))
+        bits = np.empty((m.shape[0], n_planes), dtype="int64")
+        for p in range(n_planes):
+            bits[:, p] = np.add.accumulate(m * planes[p], axis=1)[:, -1] >= 0
+        return pd.Series(bits @ weights)
 
-    return _dots(F.col(vec) if isinstance(vec, str) else vec)
-
-
-def _pack_sign_bits(dots: Column, n_planes: int) -> Column:
-    """Bucket id: sign bits of the plane dots packed into a long (one band
-    of srp_keys_from_sums)."""
-    return srp_keys_from_sums(dots, n_bands=1, band_bits=n_planes)[0]
-
-
-def srp_bucket(vec: Column | str, dim: int, n_planes: int = 8, seed: int = 42) -> Column:
-    """LSH bucket id: sign bits of <vec, plane_i> packed into a long.
-
-    Convenience single-expression form; hot paths should project
-    srp_gaussian_dots into a column first and pack from it, so the Arrow
-    UDF is evaluated once rather than once per bit reference."""
-    return _pack_sign_bits(srp_gaussian_dots(vec, dim, n_planes, seed), n_planes)
+    return _bucket(F.col(vec) if isinstance(vec, str) else vec)
 
 
 def srp_topk(
@@ -396,18 +392,18 @@ def srp_topk(
     multiplicity, not the corpus size."""
     if not 0 <= probe_hamming <= 2:
         raise ValueError("probe_hamming in {0,1,2} (probe count grows as C(n_planes, r))")
-    dots = srp_gaussian_dots(vec_col, dim, n_planes)
+    bucket = srp_bucket(vec_col, dim, n_planes)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), dots.alias("_dots")
-    ).select("neighbor_id", "c_vec", _pack_sign_bits(F.col("_dots"), n_planes).alias("bucket"))
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), bucket.alias("bucket")
+    )
     masks = [0]
     if probe_hamming >= 1:
         masks += [1 << p for p in range(n_planes)]
     if probe_hamming >= 2:
         masks += [(1 << p) | (1 << q) for p in range(n_planes) for q in range(p + 1, n_planes)]
-    b = _pack_sign_bits(F.col("_dots"), n_planes)
+    b = F.col("_bucket")
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"), dots.alias("_dots")
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"), bucket.alias("_bucket")
     ).select(
         "query_id",
         "q_vec",
@@ -431,13 +427,13 @@ def srp_topk(
 def matrix_dots(vec: Column | str, matrix: list[list[float]]) -> Column:
     """Array of dot products <vec, row_j> for every row of a plan-time
     matrix literal, via one Arrow-batched BLAS matmul
-    (batch x dim) @ (dim x n_rows) — same rationale as srp_plane_sums:
+    (batch x dim) @ (dim x n_rows):
     an interpreted higher-order fold costs O(dim*n_rows) lambda-ops per
     ROW, the matmul is effectively free per batch. Summation order differs
     from a fold, but the SQL oracle twin sums in ITS own (group-by) order
     too — both engines' scores agree to ~1e-13 relative, far beyond any
-    argmax margin observed in the fixtures (see srp_plane_sums for the same
-    argument with measured margins). The nprobe ranking (_probe_lists)
+    argmax margin observed in the fixtures (see srp_band_sql_keys for the
+    same argument with measured margins). The nprobe ranking (_probe_lists)
     reads every score; a nearest-centroid assignment only needs the
     argmax and runs _pq_assign_codes instead."""
     from pyspark.sql.functions import pandas_udf
@@ -713,49 +709,52 @@ def _sign_planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return np.array([rademacher_signs(dim, p, seed) for p in range(n_planes)], dtype="float64")
 
 
-def srp_plane_sums(vec: Column | str, dim: int, n_planes: int, seed: int = 42) -> Column:
-    """Array of ``n_planes`` signed sums <vec, ±1-plane_p>, via one
-    Arrow-batched numpy matmul: (batch x dim) @ (dim x n_planes).
+def _band_keys_local(mat: np.ndarray, dim: int, n_bands: int, band_bits: int, seed: int) -> np.ndarray:
+    """(n x n_bands) band keys of the rows of ``mat``: bit j of a band is
+    the sign of the row's sum over ±1 plane band * band_bits + j (set when
+    the sum is >= 0), weighted 1 << j. One BLAS matmul: with ±1.0
+    coefficients every addend is exact, so a whole-corpus matmul on the
+    driver, a per-batch one in _srp_postings and DuckDB's list_dot_product
+    differ by ~1e-13 relative at most, far inside the 4.1e-5 minimum |sum|
+    (srp_band_sql_keys), and every sign bit is the same."""
+    sums = np.asarray(mat, dtype="float64").reshape(-1, dim) @ _sign_planes(dim, n_bands * band_bits, seed).T
+    bits = (sums >= 0).reshape(-1, n_bands, band_bits).astype("int64")
+    return bits @ (np.int64(1) << np.arange(band_bits, dtype="int64"))
 
-    NOT a column-expression fold on purpose: interpreted higher-order
-    functions evaluate ~1.4M lambda-ops/s (measured — 2.85 s for 2000
-    rows x 64 dims x 32 planes), while the BLAS matmul is effectively free
-    at any batch size. Summation order differs from a left fold, but with
-    ±1.0 coefficients every addend is EXACT; order only shifts the result
-    by ~1e-13 relative, against a measured minimum |sum| of 4.1e-5 across
-    the whole fixture (see srp_band_sql_keys) — so the downstream sign
-    bits are unaffected and the SQL oracle twin (list_dot_product, its own
-    order) still mirrors bucket assignment exactly."""
+
+def _srp_projections(mat: np.ndarray, dim: int, seed: int) -> np.ndarray:
+    """(n x 2) projections of the rows of ``mat`` that the bucket cap's two
+    windows order by: each row's sums over ±1 planes 0 and 1 (band 0's
+    first two planes), rounded like ``F.round(x, 6)``. The SQL oracles
+    round their own sums (plans/northstar.py, `proj`); the sums differ by
+    summation order only (~1e-13), so the rank orders agree unless a sum
+    sits that close to a rounding boundary, which scripts/rounding_margin.py
+    measures per corpus (ROUNDING_MARGIN.json)."""
+    planes = _sign_planes(dim, 2, seed)
+    return round6_like_spark_array(np.asarray(mat, dtype="float64").reshape(-1, dim) @ planes.T)
+
+
+def _srp_postings(vec: Column | str, dim: int, n_bands: int, band_bits: int, seed: int) -> Column:
+    """Struct (keys, proj, proj2) per row: _band_keys_local's band keys and
+    _srp_projections' two projections, in one Arrow-batched pandas UDF. It
+    runs the driver's functions, so both placements of the candidate
+    kernel read one definition of the keys and projections."""
     from pyspark.sql.functions import pandas_udf
 
-    signs = _sign_planes(dim, n_planes, seed)
+    @pandas_udf("keys array<long>, proj double, proj2 double")
+    def _postings(v: pd.Series) -> pd.DataFrame:
+        mat = np.stack(v.to_numpy())
+        proj = _srp_projections(mat, dim, seed)
+        keys = _band_keys_local(mat, dim, n_bands, band_bits, seed)
+        return pd.DataFrame({"keys": list(keys), "proj": proj[:, 0], "proj2": proj[:, 1]})
 
-    @pandas_udf("array<double>")
-    def _sums(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy()).astype("float64")
-        return pd.Series(list(m @ signs.T))
-
-    return _sums(F.col(vec) if isinstance(vec, str) else vec)
-
-
-def srp_keys_from_sums(sums: Column | str, *, n_bands: int, band_bits: int) -> list[Column]:
-    """Band keys (band_bits sign bits packed into a long) from a
-    srp_plane_sums column. Plane index = band*band_bits + j."""
-    s = F.col(sums) if isinstance(sums, str) else sums
-    keys = []
-    for band in range(n_bands):
-        key = F.lit(0).cast("long")
-        for j in range(band_bits):
-            d = F.element_at(s, band * band_bits + j + 1)
-            key = key.bitwiseOR(F.when(d >= 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long")))
-        keys.append(key)
-    return keys
+    return _postings(F.col(vec) if isinstance(vec, str) else vec)
 
 
 def srp_band_sql_keys(
     dim: int, *, n_bands: int = 8, band_bits: int = 4, seed: int = 42, vec: str = "embedding"
 ) -> list[str]:
-    """DuckDB SQL expressions computing the same band keys as srp_band_keys:
+    """DuckDB SQL expressions computing the same band keys as _band_keys_local:
     the same ±1 sign planes embedded as literals, with the dot product via
     native list_dot_product. Summation order may differ from Spark's
     left-fold, but with ±1.0 coefficients both engines sum the SAME exact
@@ -838,177 +837,126 @@ def _srp_candidate_pairs(
     cap_window: int = 64,
 ) -> DataFrame:
     """Distinct candidate id pairs (id_a < id_b) sharing the block key and
-    at least one SRP sign band. Narrow posting rows (id, block, band, key)
-    go through the index join — the vectors are re-attached to the (much
-    smaller) candidate set by callers, so 512-byte arrays never travel
-    through the n_bands-exploded join.
+    at least one SRP sign band: the executor placement of the one candidate
+    kernel, _srp_bucket_pairs, which the driver-local k-NN graph runs on the
+    whole corpus. _srp_postings gives each row its band keys and two
+    projections; ``posexplode`` turns them into narrow (id, block, proj,
+    proj2, band, key) rows, so the vectors never travel with the postings
+    (callers re-attach them to the much smaller candidate set); each
+    (block, band, key) bucket runs the kernel in ``applyInPandas``, and one
+    ``dropDuplicates`` merges the pairs that collide in several bands.
 
-    ``bucket_cap`` bounds the quadratic term: a (block, band, key) bucket
-    of B members contributes B(B-1)/2 pairs, and over a corpus with tight
-    near-duplicate clusters the bucket-size tail dominates — band WIDENING
-    cannot fix it (cluster members agree on every plane sign: the sf10
-    probe measured 2.95e9 pre-dedup pairs at the auto width and only -15%
-    per extra bit, max bucket still ~6k at 16 bits). With a cap, buckets
-    of B <= bucket_cap pair exhaustively as before, while each member of an
-    OVERSIZED bucket pairs with only its ``cap_window`` forward neighbors
-    in each of the bucket's TWO PROJECTION orderings — members sorted by
-    round(plane-0 dot, 6) and independently by round(plane-1 dot, 6), id
-    tiebreak — via offset-explode EQUI-joins, so no B^2 term survives
-    anywhere in the plan (the r12 id-order single-window probe measured
-    149M capped pairs vs 2.95B uncapped at sf10; the dual windows scale
-    that by 2*cap_window/64, still linear in postings). Projection order,
-    not id order, decides who a capped member still meets: a 1-D
-    random-projection sort puts high-cosine mates at adjacent ranks, and
-    the second independent order catches mates that happen to sort far
-    apart in the first (measured sf10 near-dup detection recall,
-    scripts/knn_recall.py: id-order 0.36, single-proj 0.48, dual-proj
-    0.70 against the 0.82 SRP-banding ceiling). The 1e-6 quantization
-    narrows cross-engine rank divergence to dots within the ~1e-13
-    summation-order discrepancy of a rounding boundary; unlike the sign
-    bits (min margin 4.1e-5 — five orders above noise, rank-proof at any
-    scale) boundary distances are uniform in the quantum, so the margin
-    is measured per corpus: scripts/rounding_margin.py /
-    ROUNDING_MARGIN.json record zero dots within 1x the noise bound at
-    every generated scale (rank orders identical under the model), but at
-    sf10 the min distance (6.9e-13) is only ~1.6x the bound and 3 of 400k
-    dots sit within 10x of a boundary — at larger corpora single
-    adjacent-rank transpositions engine-vs-oracle become expected. The
-    residual effect is bounded: one window member swapped per transposed
-    rank, never a scored cosine (those share one rounding definition
-    downstream). The cap
-    is part of the operator's approximate semantics (a deterministic
+    Per-group state is bounded: a group holds the narrow rows of one
+    bucket, B of them, and emits at most B(B-1)/2 pairs when B <=
+    ``bucket_cap`` (or the cap is None) and at most 2 * ``cap_window`` * B
+    pairs above it.
+
+    ``bucket_cap`` bounds the quadratic term: over a corpus with tight
+    near-duplicate clusters the bucket-size tail dominates, and band
+    WIDENING cannot fix it (cluster members agree on every plane sign: the
+    sf10 probe measured 2.95e9 pre-dedup pairs at the auto width and only
+    -15% per extra bit, max bucket still ~6k at 16 bits). Each member of an
+    oversized bucket therefore meets only its ``cap_window`` next members
+    in two projection orders. Projection order, not id order, decides who a
+    capped member still meets: a 1-D random-projection sort puts
+    high-cosine mates at adjacent ranks, and the second independent order
+    catches mates that sort far apart in the first (measured sf10 near-dup
+    detection recall, scripts/knn_recall.py: id-order 0.36, single-proj
+    0.48, dual-proj 0.70 against the 0.82 SRP-banding ceiling). The cap is
+    part of the operator's approximate semantics (a deterministic
     candidate-recall bound, like n_bands / band_bits) and is mirrored
-    verbatim in the SQL oracles; callers that pass bucket_cap=None keep
-    the exact pre-cap behavior."""
+    verbatim in the SQL oracles; ``bucket_cap=None`` pairs every bucket in
+    full."""
     if bucket_cap is not None and band_bits < 2:
-        # The two capped-path orderings read plane sums 1 and 2 as band-0's
-        # planes 0 and 1; with band_bits=1 element 2 is band-1/plane-0, which
-        # would silently diverge from the SQL oracle's band-0/j-1 (NULL
-        # there). No registered query can reach this (auto floors at 4), but
-        # the operator API could.
+        # The two orderings read band 0's planes 0 and 1; with band_bits=1
+        # plane 1 is band 1's, which would silently diverge from the SQL
+        # oracle's band-0/j-1 (NULL there). No registered query can reach
+        # this (auto floors at 4), but the operator API could.
         raise ValueError(
             f"bucket_cap requires band_bits >= 2 (got {band_bits}): the dual "
             "projection orderings use band 0's first two plane sums"
         )
-    # Bind the (expensive, interpreted) plane-sum fold ONCE via a lambda
-    # variable: transform over a 1-element array makes every key reference a
-    # lambda-bound value instead of a copy of the fold. A plain aliased
-    # select is NOT a barrier — CollapseProject re-inlines the alias into
-    # each of the n_bands key expressions, re-evaluating the whole fold per
-    # key (measured 8x plan blowup, ~4x wall time on q_embed_neardup).
-    def keys_of(s: Column) -> Column:
-        out = [
-            F.struct(F.lit(band).alias("band"), key.alias("key"))
-            for band, key in enumerate(srp_keys_from_sums(s, n_bands=n_bands, band_bits=band_bits))
-        ]
-        # the capped path also needs the plane-0/plane-1 dots as SCALARS:
-        # computing them here, inside the same bind-once lambda, reuses the
-        # one fold evaluation (element_at(sums, i) outside it would re-run
-        # the whole plane-sum pass)
-        return F.struct(
-            F.round(F.element_at(s, 1), 6).alias("proj"),
-            F.round(F.element_at(s, 2), 6).alias("proj2"),
-            F.array(*out).alias("bb"),
-        )
-
-    sums = srp_plane_sums(vec_col, dim, n_bands * band_bits, seed)
-    packed = F.element_at(F.transform(F.array(sums), keys_of), 1)
-    # materialize the posting rows ONCE: the self-join consumes them twice,
-    # and each evaluation re-runs the Arrow plane-sum pass over the whole
-    # corpus; the materialized frame is narrow (id, block, proj, band, key)
-    exploded = df.select(
+    postings = df.select(
         F.col(id_col).alias("id"), F.col(block_col).alias("block"),
-        packed.alias("pk"),
-    ).select(
-        "id", "block", F.col("pk.proj").alias("proj"),
-        F.col("pk.proj2").alias("proj2"), F.explode("pk.bb").alias("bb")
-    ).select(
-        "id", "block", "proj", "proj2",
-        F.col("bb.band").alias("band"), F.col("bb.key").alias("key"),
+        _srp_postings(vec_col, dim, n_bands, band_bits, seed).alias("p"),
+    ).select("id", "block", "p.proj", "p.proj2", F.posexplode("p.keys").alias("band", "key"))
+    id_type = postings.schema["id"].dataType
+
+    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("id")
+        ids = pdf["id"].to_numpy()
+        codes = _srp_bucket_pairs(
+            pdf["key"].to_numpy(), pdf[["proj", "proj2"]].to_numpy(), bucket_cap, cap_window
+        )
+        a, b = np.divmod(codes, len(ids))
+        return pd.DataFrame({"id_a": ids[a], "id_b": ids[b]})
+
+    schema = StructType([StructField("id_a", id_type), StructField("id_b", id_type)])
+    return (
+        postings.groupBy("block", "band", "key")
+        .applyInPandas(bucket_pairs, schema)
+        .dropDuplicates(["id_a", "id_b"])
     )
+
+
+def _srp_bucket_pairs(
+    keys: np.ndarray, proj: np.ndarray, bucket_cap: int | None, cap_window: int
+) -> np.ndarray:
+    """The candidate kernel: codes i * n + j of one band's candidate pairs
+    i < j over n rows in id order, row i with band key ``keys[i]`` and
+    rounded projections ``proj[i]`` (_srp_projections' two columns). A
+    bucket (the rows of one key) of B <= ``bucket_cap`` members, or any
+    bucket when the cap is None, pairs in full. Each member of a larger
+    bucket pairs with its ``cap_window`` next members in (proj[:, 0], id)
+    order and in (proj[:, 1], id) order. This is the rule the SQL oracles
+    mirror (plans/northstar.py, `sized` and `cand`). The driver runs it per
+    band over the whole corpus (_knn_graph_local), the executors per
+    (block, band, key) group (_srp_candidate_pairs); a pair found in both
+    orders, or in several bands, is the caller's to deduplicate."""
+    n = len(keys)
+    order = np.argsort(keys, kind="stable")
     if bucket_cap is None:
-        exploded = exploded.drop("proj", "proj2").localCheckpoint()
-        a, b = exploded.alias("a"), exploded.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.block") == F.col("b.block"))
-                & (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    # Bucket-capped path: size + rank every posting row inside its bucket
-    # (one shuffle on the bucket key — the window ALSO restores full
-    # cluster-wide parallelism downstream: the uncapped plan inherited the
-    # scan's partition count, which throttled the sf10 join to 16 tasks).
-    unord = Window.partitionBy("block", "band", "key")
-    sized = (
-        exploded.withColumn("bsz", F.count(F.lit(1)).over(unord))
-        .withColumn(
-            "rna", F.row_number().over(unord.orderBy("proj", "id")).cast("long")
-        )
-        .withColumn(
-            "rnb", F.row_number().over(unord.orderBy("proj2", "id")).cast("long")
-        )
-        # Restore id-grouped row order after the bucket-keyed window shuffle.
-        # This is a measured 6x on the candidate dedup, not a nicety: the
-        # self-join streams probe rows in checkpoint order, and a pair that
-        # collides in several bands is emitted once per band — id-grouped
-        # order puts those duplicates within a few consecutive probe rows,
-        # so the partial dedup aggregate hits a cache-hot map entry, while
-        # bucket order scatters them across the whole stream and every
-        # lookup becomes a cold random probe into a multi-GB map (sf1:
-        # 36 s -> 6 s for the identical 52.7M-row dedup).
-        .repartition(F.col("id"))
-        .sortWithinPartitions("id")
-        .localCheckpoint()
-    )
-    small = sized.filter(F.col("bsz") <= bucket_cap)
-    sa, sb = small.alias("a"), small.alias("b")
-    small_pairs = sa.join(
-        sb,
-        (F.col("a.block") == F.col("b.block"))
-        & (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.key") == F.col("b.key"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    # Oversized buckets: member rank r pairs with (r+1 .. r+cap_window) in
-    # EACH of the two projection orders, via an offset explode + EQUI-join
-    # on (block, band, key, rank) — at most 2 * cap_window * postings rows,
-    # never B^2. Two independent 1-D orders because one is not enough: a
-    # mate pair far apart in plane-0 order (many bucket members between
-    # their projections) is usually adjacent in the independent plane-1
-    # order — measured at sf10, dual windows lift near-dup detection the
-    # same as a single 4x-wider window at half its pair budget. Ranks are
-    # projection-ordered, so emitted ids are normalized to id_a < id_b for
-    # the dedup with the small-bucket pairs.
-    big = sized.filter(F.col("bsz") > bucket_cap)
+        return _forward_pairs(order, keys, n, n)
+    _, inverse, counts = np.unique(keys, return_inverse=True, return_counts=True)
+    big = counts[inverse] > bucket_cap
+    parts = [_forward_pairs(order[~big[order]], keys, n, n)]
+    if big.any():
+        row = np.arange(n)
+        for p in proj.T:
+            by_proj = np.lexsort((row, p, keys))
+            parts.append(_forward_pairs(by_proj[big[by_proj]], keys, cap_window, n))
+    return np.concatenate(parts)
 
-    def window_pairs(rank_col: str) -> DataFrame:
-        src = big.select(
-            "id", "block", "band", "key",
-            F.explode(
-                F.expr(
-                    f"IF({rank_col} < bsz, sequence({rank_col} + 1L, "
-                    f"least({rank_col} + {int(cap_window)}L, CAST(bsz AS BIGINT))), "
-                    "CAST(array() AS ARRAY<BIGINT>))"
-                )
-            ).alias("rr"),
-        )
-        dst = big.select(
-            F.col("id").alias("id_b_"), "block", "band", "key",
-            F.col(rank_col).alias("rr"),
-        )
-        return src.join(dst, ["block", "band", "key", "rr"]).select(
-            F.least("id", "id_b_").alias("id_a"),
-            F.greatest("id", "id_b_").alias("id_b"),
-        )
 
-    big_pairs = window_pairs("rna").unionByName(window_pairs("rnb"))
-    return small_pairs.unionByName(big_pairs).dropDuplicates(["id_a", "id_b"])
+def _forward_pairs(order: np.ndarray, keys: np.ndarray, limit: int, n: int) -> np.ndarray:
+    """Codes min * n + max pairing each row of ``order`` (row indices, rows
+    of one key adjacent) with the next ``limit`` rows of its key, enumerated
+    without a Python loop."""
+    sk = keys[order]
+    starts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
+    fan = _fans(np.diff(np.r_[starts, len(order)]), limit)
+    left = np.repeat(np.arange(len(order)), fan)
+    step = np.arange(len(left)) - np.repeat(np.cumsum(fan) - fan, fan) + 1
+    a, b = order[left], order[left + step]
+    return np.minimum(a, b) * n + np.maximum(a, b)
+
+
+def _fans(sizes: np.ndarray, limit: int) -> np.ndarray:
+    """For each member of runs of ``sizes`` members, in run order: how many
+    later members of its run it pairs with, at most ``limit``."""
+    rank = np.arange(sizes.sum()) - np.repeat(np.cumsum(sizes) - sizes, sizes)
+    return np.minimum(np.repeat(sizes, sizes) - 1 - rank, limit)
+
+
+def _srp_pair_count(keys: np.ndarray, bucket_cap: int, cap_window: int) -> int:
+    """How many pairs _srp_bucket_pairs emits over the bands (columns) of
+    ``keys`` before deduplication, from the bucket sizes alone."""
+    total = 0
+    for band in keys.T:
+        sizes = np.unique(band, return_counts=True)[1]
+        big = sizes > bucket_cap
+        total += int(_fans(sizes[~big], len(band)).sum()) + 2 * int(_fans(sizes[big], cap_window).sum())
+    return total
 
 
 def _score_pairs_arrow(pairs_with_vecs: DataFrame) -> DataFrame:
@@ -1137,6 +1085,12 @@ def _score_pairs_for(pairs: DataFrame, sides: DataFrame, pdf) -> DataFrame:
     return _score_pairs_arrow(with_vecs)
 
 
+def auto_band_bits(n: int, target_bucket: int = 125) -> int:
+    """knn_graph's ``band_bits="auto"`` width for an ``n``-vector corpus:
+    ``max(4, ceil(log2(n / target_bucket)))``."""
+    return max(4, math.ceil(math.log2(max(1, n) / target_bucket)))
+
+
 def knn_graph(
     corpus: DataFrame,
     *,
@@ -1157,27 +1111,28 @@ def knn_graph(
 
     Differs from the query-serving paths (brute_force_topk / srp_topk /
     ivf_topk take a small query set) in that every corpus vector is a query:
-    candidates come from the same sign-band equi-join as srp_band_pairs (no
+    candidates are the same sign-band collisions as srp_band_pairs' (no
     block restriction), each undirected candidate pair is scored once, then
     mirrored into both directions and ranked per source. Candidate count is
     ~n_bands * n^2 / 2^band_bits per band bucket instead of n^2 — and the
     same deterministic ±1 planes keep the whole thing oracle-mirrorable.
     Output: (src, nbr, cosine, rk<=k).
 
-    Two twins compute the graph. The ``pair_scorer`` route fetches the
-    (id, vec) corpus; when it holds the whole corpus the driver derives the
-    band keys and counts the candidate pairs before deduplication, the sum
-    over (band, key) buckets of B(B-1)/2. Within the ``knn_pairs`` bound,
-    and with no bucket over ``bucket_cap``, ``_knn_graph_local`` builds the
-    whole graph in numpy and returns it as a local relation, so nothing
-    downstream re-runs a k-NN plan: below a size bound distributed
-    execution is scheduling overhead (McSherry et al., "Scalability! But
-    at what COST?", HotOS 2015). Otherwise the distributed twin runs:
-    ``_srp_candidate_pairs``' band self-join (the only twin with the capped
-    windows), the routed scorer, and a window per src. Both twins widen
-    float32 cells to float64, take sign bits from the same ±1 planes,
-    score with ``_cosine_batch`` and round like ``F.round(x, 6)``, so they
-    emit the same rows.
+    One candidate kernel, _srp_bucket_pairs, runs in one of two places.
+    The ``pair_scorer`` route fetches the (id, vec) corpus; when it holds
+    the whole corpus the driver derives the band keys and counts the pairs
+    the kernel would emit before deduplication (_srp_pair_count: B(B-1)/2
+    per bucket of B <= ``bucket_cap``, the window pairs above it). Within
+    the ``knn_pairs`` bound ``_knn_graph_local`` runs the kernel once per
+    band, scores and ranks in numpy, and returns the graph as a local
+    relation, so nothing downstream re-runs a k-NN plan: below a size
+    bound distributed execution is scheduling overhead (McSherry et al.,
+    "Scalability! But at what COST?", HotOS 2015). Otherwise
+    ``_srp_candidate_pairs`` runs the same kernel per (band, key) group on
+    the executors, then the routed scorer and a window per src. Both
+    placements widen float32 cells to float64, take keys and projections
+    from the same functions, score with ``_cosine_batch`` and round like
+    ``F.round(x, 6)``, so they emit the same rows.
 
     Scoring is numpy batches, not the column-expression fold: the graph
     build scores EVERY candidate pair (~10^6 at n=2000 already), and one
@@ -1220,17 +1175,13 @@ def knn_graph(
     pdf = route("pair_scorer", sides, arrow=True)
     if band_bits == "auto":
         # under the bound the scorer's fetch holds every row
-        n = len(pdf) if pdf is not None else corpus.count()
-        band_bits = max(4, math.ceil(math.log2(max(1, n) / target_bucket)))
+        band_bits = auto_band_bits(len(pdf) if pdf is not None else corpus.count(), target_bucket)
     if pdf is not None:
         ids, mat = _id_sorted(pdf)
         keys = _band_keys_local(mat, dim, n_bands, band_bits, seed)
-        sizes = [np.unique(band, return_counts=True)[1] for band in keys.T]
-        volume = sum(int((b * (b - 1) // 2).sum()) for b in sizes)
-        # only the distributed twin has the capped windows
-        under_cap = max((int(b.max()) for b in sizes if len(b)), default=0) <= bucket_cap
-        if fits("knn_pairs", volume, local_ok=under_cap):
-            return _knn_graph_local(sides, ids, mat, keys, k)
+        if fits("knn_pairs", _srp_pair_count(keys, bucket_cap, cap_window)):
+            proj = _srp_projections(mat, dim, seed)
+            return _knn_graph_local(sides, ids, mat, keys, proj, k, bucket_cap, cap_window)
     tagged = corpus.withColumn("__blk", F.lit(1))
     cand = _srp_candidate_pairs(
         tagged, vec_col=vec_col, id_col=id_col, block_col="__blk",
@@ -1257,17 +1208,6 @@ def knn_graph(
     return sym.select("*", F.row_number().over(w).cast("long").alias("rk")).filter(F.col("rk") <= k)
 
 
-def _band_keys_local(mat: np.ndarray, dim: int, n_bands: int, band_bits: int, seed: int) -> np.ndarray:
-    """(n x n_bands) band keys of the rows of ``mat``, as srp_keys_from_sums
-    packs srp_plane_sums: bit j of a band is its plane's sum >= 0, weighted
-    1 << j. One whole-corpus matmul may differ from the per-batch UDF in
-    the last ulp, far inside the 4.1e-5 minimum |sum| (srp_band_sql_keys),
-    so every sign bit is the same."""
-    sums = mat.reshape(-1, dim) @ _sign_planes(dim, n_bands * band_bits, seed).T
-    bits = (sums >= 0).reshape(-1, n_bands, band_bits).astype("int64")
-    return bits @ (np.int64(1) << np.arange(band_bits, dtype="int64"))
-
-
 # pairs scored per gather in _knn_graph_local: 2 x 8k rows of dim-64
 # float64 are 8 MB, which stays in cache (64k-pair gathers ran 2.7x slower)
 _KNN_SCORE_CHUNK = 1 << 13
@@ -1276,24 +1216,28 @@ _KNN_SCORE_CHUNK = 1 << 13
 _COS_SLOTS = 2_000_002
 
 
-def _knn_graph_local(sides: DataFrame, ids: np.ndarray, mat: np.ndarray, keys: np.ndarray, k: int) -> DataFrame:
+def _knn_graph_local(
+    sides: DataFrame, ids: np.ndarray, mat: np.ndarray, keys: np.ndarray, proj: np.ndarray,
+    k: int, bucket_cap: int, cap_window: int,
+) -> DataFrame:
     """knn_graph's driver-local twin over the id-sorted corpus ``ids``/``mat``
-    (fetched from ``sides``) and its band ``keys``: (src, nbr, cosine, rk)
-    as a local relation, with the distributed twin's arithmetic.
+    (fetched from ``sides``), its band ``keys`` and projections ``proj``:
+    (src, nbr, cosine, rk) as a local relation, with the distributed twin's
+    arithmetic.
 
-    Candidates are the row-index pairs i < j (so id_a < id_b) sharing a key
-    in any band, deduplicated as int64 codes i * n + j. Each is scored once
-    by _cosine_batch over bounded gathers and rounded like F.round. A zero
+    Candidates are the row-index pairs i < j (so id_a < id_b) that
+    _srp_bucket_pairs emits in any band, deduplicated as int64 codes
+    i * n + j. Each is scored once by _cosine_batch over bounded gathers
+    and rounded like F.round. A zero
     vector's NaN cosine is NULL, as the Spark scorers' Arrow crossing makes
     it. Both directions of every pair are packed into one int64 sort key
     (src, cosine slot, nbr), so one sort orders each src's neighbors by
     (cosine desc with NULL last, nbr asc), as the distributed window does,
     and the top k are read at each src's offset. ``n`` is within the
     pair_scorer bound, so n * n * _COS_SLOTS stays far inside int64."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
     n = len(ids)
-    a, b = np.divmod(np.unique(np.concatenate([_bucket_pairs(band, n) for band in keys.T])), n)
+    pairs = [_srp_bucket_pairs(band, proj, bucket_cap, cap_window) for band in keys.T]
+    a, b = np.divmod(np.unique(np.concatenate(pairs)), n)
     slot = np.empty(len(a), dtype="int64")
     for s in range(0, len(a), _KNN_SCORE_CHUNK):
         e = s + _KNN_SCORE_CHUNK
@@ -1316,20 +1260,6 @@ def _knn_graph_local(sides: DataFrame, ids: np.ndarray, mat: np.ndarray, keys: n
         StructField("cosine", DoubleType()), StructField("rk", LongType()),
     ])
     return local_frame(sides.sparkSession, rows, schema)
-
-
-def _bucket_pairs(keys: np.ndarray, n: int) -> np.ndarray:
-    """Codes i * n + j of every row-index pair i < j with equal ``keys``:
-    the upper triangle of each bucket, enumerated without a Python loop."""
-    order = np.argsort(keys, kind="stable")  # ascending row index per bucket
-    sk = keys[order]
-    starts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
-    sizes = np.diff(np.r_[starts, n])
-    # a member at rank r of a size-B bucket pairs with the B-1-r after it
-    fan = np.repeat(sizes, sizes) - 1 - (np.arange(n) - np.repeat(starts, sizes))
-    left = np.repeat(np.arange(n), fan)
-    step = np.arange(len(left)) - np.repeat(np.cumsum(fan) - fan, fan) + 1
-    return order[left] * n + order[left + step]
 
 
 # --- IVF lists: nearest-list assignment, residuals, nprobe ranking ---------

@@ -382,21 +382,18 @@ def _hard_negatives_ann_oracle() -> str:
     ),
 )
 def q_hard_negatives_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from syscol_spark.operators.similarity import _pack_sign_bits, srp_gaussian_dots
+    from syscol_spark.operators.similarity import srp_bucket
 
     n_planes = 6
     emb = _t(spark, sf_dir, "embeddings")
-    dots = srp_gaussian_dots("embedding", 64, n_planes)
+    bucket = srp_bucket("embedding", 64, n_planes)
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("neg_label"),
         F.col("embedding").alias("c_vec"),
-        dots.alias("_dots"),
-    ).select(
-        "neighbor_id", "neg_label", "c_vec",
-        _pack_sign_bits(F.col("_dots"), n_planes).alias("bucket"),
+        bucket.alias("bucket"),
     )
-    b = _pack_sign_bits(F.col("_dots"), n_planes)
+    b = F.col("_bucket")
     masks = [0] + [1 << p for p in range(n_planes)]
     q = (
         emb.filter(F.col("vec_id") < 8)
@@ -404,7 +401,7 @@ def q_hard_negatives_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("query_id"),
             F.col("label").alias("label"),
             F.col("embedding").alias("q_vec"),
-            dots.alias("_dots"),
+            bucket.alias("_bucket"),
         )
         .select(
             "query_id", "label", "q_vec",
@@ -697,7 +694,7 @@ def _ann_recall_oracle() -> str:
     ),
 )
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from syscol_spark.operators.similarity import _pack_sign_bits, srp_gaussian_dots
+    from syscol_spark.operators.similarity import srp_bucket
 
     emb = _t(spark, sf_dir, "embeddings")
     anchors = emb.filter(F.col("vec_id") < 8).select(
@@ -720,20 +717,20 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
     )
 
-    dots = srp_gaussian_dots("embedding", 64, _RECALL_PLANES)
+    bucket = srp_bucket("embedding", 64, _RECALL_PLANES)
     hashed = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_vec"),
-        _pack_sign_bits(dots, _RECALL_PLANES).alias("bucket"),
+        bucket.alias("bucket"),
     )
-    b = _pack_sign_bits(F.col("_dots"), _RECALL_PLANES)
+    b = F.col("_bucket")
     masks = [0] + [1 << p for p in range(_RECALL_PLANES)]
     probes = (
         emb.filter(F.col("vec_id") < 8)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_vec"),
-            dots.alias("_dots"),
+            bucket.alias("_bucket"),
         )
         .select(
             "query_id",

@@ -5,6 +5,7 @@ SURVEY.md §5 — so this strategy is built fresh)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def test_asof_join_basic(spark):
@@ -1812,6 +1813,57 @@ def test_srp_bucket_cap_requires_two_planes(spark):
             corpus, vec_col="embedding", id_col="vec_id", block_col="__blk",
             dim=2, n_bands=2, band_bits=1, seed=42, bucket_cap=4,
         )
+
+
+@pytest.mark.parametrize("trial", range(4))
+def test_srp_candidate_kernel_placements_agree(spark, trial):
+    """The one candidate kernel in its two placements emits the same pair
+    set: the driver's (once per band over a block's id-sorted rows, as
+    _knn_graph_local runs it) and _srp_candidate_pairs' (once per
+    (block, band, key) group on the executors). Random small-integer
+    vectors drawn from a few prototypes give tied keys and tied
+    projections; ids are shuffled, rows fall into several blocks, and a
+    small cap sends some buckets to the windows (trial 0 runs uncapped)."""
+    import numpy as np
+
+    from syscol_spark.operators.similarity import (
+        _band_keys_local,
+        _srp_bucket_pairs,
+        _srp_candidate_pairs,
+        _srp_projections,
+    )
+
+    rng = np.random.default_rng(20261021 + trial)
+    n, dim, n_bands, band_bits = int(rng.integers(40, 90)), 8, 3, 2
+    protos = rng.integers(-2, 3, (n // 5, dim))
+    mat = (protos[rng.integers(0, len(protos), n)] + rng.integers(-1, 2, (n, dim)) * (rng.random((n, 1)) < 0.5)).astype(float)
+    blocks = rng.integers(0, 3, n)
+    ids = rng.permutation(10 * n)[:n]
+    cap = None if trial == 0 else int(rng.integers(2, 6))
+    window = int(rng.integers(1, 4))
+
+    keys = _band_keys_local(mat, dim, n_bands, band_bits, 42)
+    proj = _srp_projections(mat, dim, 42)
+    want, largest = set(), 0
+    for blk in np.unique(blocks):
+        rows = np.flatnonzero(blocks == blk)
+        rows = rows[np.argsort(ids[rows])]
+        for band in range(n_bands):
+            largest = max(largest, int(np.unique(keys[rows, band], return_counts=True)[1].max()))
+            a, b = np.divmod(_srp_bucket_pairs(keys[rows, band], proj[rows], cap, window), len(rows))
+            want |= set(zip(ids[rows[a]].tolist(), ids[rows[b]].tolist()))
+    assert cap is None or largest > cap, "no bucket over the cap"
+    assert all(x < y for x, y in want)
+
+    corpus = spark.createDataFrame(
+        [(int(i), int(k), v.tolist()) for i, k, v in zip(ids, blocks, mat)],
+        "vec_id long, blk long, embedding array<float>",
+    )
+    pairs = _srp_candidate_pairs(
+        corpus, vec_col="embedding", id_col="vec_id", block_col="blk", dim=dim,
+        n_bands=n_bands, band_bits=band_bits, seed=42, bucket_cap=cap, cap_window=window,
+    )
+    assert _rowset(pairs) == sorted(want)
 
 
 def test_knn_graph_local_matches_pairwise_loop(spark):

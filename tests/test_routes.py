@@ -277,17 +277,19 @@ def test_arrow_route_over_a_local_relation_runs_no_job(spark, id_type):
     )
 
 
-def test_knn_bucket_over_cap_takes_the_distributed_twin(spark, monkeypatch, caplog):
-    """A (band, key) bucket larger than bucket_cap sends the k-NN graph to
-    the distributed twin, the only one with capped windows, under the
-    knn_pairs decision; both scorers agree on the capped result."""
+@pytest.mark.parametrize("forced", ["knn_pairs", "pair_scorer"])
+def test_knn_bucket_over_cap_matches_the_forced_twin(spark, monkeypatch, caplog, forced):
+    """A (band, key) bucket larger than bucket_cap stays on the driver:
+    the cap is inside the candidate kernel that both twins run, so the
+    capped graph is the same with either route forced to the distributed
+    twin."""
     capped = _knn_corners(bucket_cap=2)
     _, _, got, paths, local_scan = _run(spark, None, capped, caplog, "knn_pairs")
+    assert paths == ["local"] and local_scan
+    monkeypatch.setitem(R.BOUNDS, forced, -1)
+    _, _, got_forced, paths, local_scan = _run(spark, None, capped, caplog, forced)
     assert paths == ["distributed"] and not local_scan
-    monkeypatch.setitem(R.BOUNDS, "pair_scorer", -1)
-    _, _, forced, paths, _ = _run(spark, None, capped, caplog, "pair_scorer")
-    assert paths == ["distributed"]
-    assert len(got) > 0 and _same(forced, got)
+    assert len(got) > 0 and _same(got_forced, got)
 
 
 @pytest.mark.parametrize("trainer", ["ivfpq", "ivfpq_residual", "pq_adc"])

@@ -113,15 +113,12 @@ def test_srp_band_keys_cross_engine_fuzz(spark):
     """SRP band keys (±1-plane sign bits) must be identical across engines
     on random vectors — the candidate set of every SRP query rides on the
     sign bits, and the exactness argument (same exact addends, any order)
-    must hold off-fixture too."""
+    must hold off-fixture too. The engine side is _srp_postings, the key
+    UDF the candidate builders run."""
     import duckdb
     import numpy as np
 
-    from syscol_spark.operators.similarity import (
-        srp_band_sql_keys,
-        srp_keys_from_sums,
-        srp_plane_sums,
-    )
+    from syscol_spark.operators.similarity import _srp_postings, srp_band_sql_keys
 
     dim = 64
     vecs = [np.random.RandomState(i).uniform(-1, 1, dim).astype("float32") for i in range(300)]
@@ -129,10 +126,8 @@ def test_srp_band_keys_cross_engine_fuzz(spark):
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<float>",
     )
-    keys_cols = srp_keys_from_sums(F.col("_s"), n_bands=8, band_bits=4)
     srows = (
-        vdf.withColumn("_s", srp_plane_sums("embedding", dim, 32))
-        .select("vec_id", *[c.alias(f"b{i}") for i, c in enumerate(keys_cols)])
+        vdf.select("vec_id", _srp_postings("embedding", dim, 8, 4, 42).keys.alias("keys"))
         .orderBy("vec_id")
         .collect()
     )
@@ -143,8 +138,9 @@ def test_srp_band_keys_cross_engine_fuzz(spark):
     )
     sel = ", ".join(f"{e} AS b{i}" for i, e in enumerate(srp_band_sql_keys(dim, n_bands=8, band_bits=4)))
     drows = con.sql(f"SELECT vec_id, {sel} FROM v ORDER BY vec_id").fetchall()
+    assert len(srows) == len(drows) == len(vecs)
     for sr, dr in zip(srows, drows):
-        assert [sr[f"b{i}"] for i in range(8)] == list(dr[1:])
+        assert sr["keys"] == list(dr[1:])
 
 
 def test_minhash_portable_signatures_cross_engine_fuzz(spark):
