@@ -69,10 +69,10 @@ BOUNDS = {
     # knn_graph: the candidate pairs its kernel emits before deduplication
     # (similarity.py::_srp_pair_count: B(B-1)/2 per bucket of B <=
     # bucket_cap, the two windows' pairs above it), counted from the keys
-    # before any pair exists; 2^24 int64 pair codes are 128 MB. 10,000 uniform random
-    # dim-64 vectors (auto band_bits = 7) have 16.2M: the local twin built
-    # their graph in 3.5-3.8 s at a 584 MB driver peak, the distributed one
-    # in 22-25 s (4 cores)
+    # before any pair exists; 2^24 int64 pair codes are 128 MB. 10,000
+    # uniform random dim-64 vectors (auto band_bits = 7) have 16.2M: the
+    # local twin built their graph in 3.2-4.8 s at a 708 MB driver peak,
+    # the distributed one in 28-34 s (4 cores)
     "knn_pairs": 1 << 24,
 }
 

@@ -1228,9 +1228,8 @@ def _knn_graph_local(
     Candidates are the row-index pairs i < j (so id_a < id_b) that
     _srp_bucket_pairs emits in any band, deduplicated as int64 codes
     i * n + j. Each is scored once by _cosine_batch over bounded gathers
-    and rounded like F.round. A zero
-    vector's NaN cosine is NULL, as the Spark scorers' Arrow crossing makes
-    it. Both directions of every pair are packed into one int64 sort key
+    and rounded like F.round. A zero vector's NaN cosine is NULL, as the
+    Spark scorers' Arrow crossing makes it. Both directions of every pair are packed into one int64 sort key
     (src, cosine slot, nbr), so one sort orders each src's neighbors by
     (cosine desc with NULL last, nbr asc), as the distributed window does,
     and the top k are read at each src's offset. ``n`` is within the
