@@ -28,7 +28,6 @@ discipline):
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
 import time

@@ -72,7 +72,7 @@ BOUNDS = {
     # before any pair exists; 2^24 int64 pair codes are 128 MB. 10,000
     # uniform random dim-64 vectors (auto band_bits = 7) have 16.2M: the
     # local twin built their graph in 3.2-4.8 s at a 708 MB driver peak,
-    # the distributed one in 28-34 s (4 cores)
+    # the distributed one in 13.9 s (one timed build, 4 cores)
     "knn_pairs": 1 << 24,
 }
 

@@ -892,8 +892,13 @@ def _srp_candidate_pairs(
         return pd.DataFrame({"id_a": ids[a], "id_b": ids[b]})
 
     schema = StructType([StructField("id_a", id_type), StructField("id_b", id_type)])
+    # the postings are narrow, so AQE would coalesce their shuffle onto one
+    # task and run every bucket's kernel in one Python worker; an explicit
+    # partition count keeps one task per core (the groupBy reuses it)
+    par = df.sparkSession.sparkContext.defaultParallelism
     return (
-        postings.groupBy("block", "band", "key")
+        postings.repartition(par, "block", "band", "key")
+        .groupBy("block", "band", "key")
         .applyInPandas(bucket_pairs, schema)
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -1007,8 +1012,6 @@ def _with_cosine(pdf, va, vb):
 def _scored_pairs(pairs: DataFrame, score) -> DataFrame:
     """Run a _with_cosine generator over ``pairs`` and round the cosine to
     6dp; output id columns keep the input's id dtypes."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     in_schema = pairs.schema
     out_schema = StructType(
         [in_schema["id_a"], in_schema["id_b"], StructField("cosine", DoubleType())]
@@ -1189,20 +1192,23 @@ def knn_graph(
         bucket_cap=bucket_cap, cap_window=cap_window,
     )
     pairs = _score_pairs_for(cand, sides, pdf)
-    # End the Python scoring stage at a shuffle write — for two reasons.
-    # (1) Reuse: the sym mirror below consumes `pairs` in BOTH union
-    # branches, and without an exchange between them each branch re-executes
-    # the scoring stage (ReusedExchange only kicks in at a shuffle) — the
-    # repartition halves the scoring cost at every scale. (2) Stability at
-    # scale: without it, Spark 4's WindowGroupLimit pushdown plants a local
-    # sort in the SAME task that drains the Python runner, and at sf10
-    # (99M scored pairs, 32 concurrent runner+sort pipelines in one 8g heap)
-    # the drain stalled long enough for worker output sockets to hit TCP
-    # timeouts and kill the job. With the exchange, the Python stage is a
-    # pure map stage and the partial top-k sort runs on plain shuffled rows.
+    # End the Python scoring stage at a shuffle write: without it, Spark 4's
+    # WindowGroupLimit pushdown plants a local sort in the SAME task that
+    # drains the Python runner, and at sf10 (99M scored pairs, 32 concurrent
+    # runner+sort pipelines in one 8g heap) the drain stalled long enough
+    # for worker output sockets to hit TCP timeouts and kill the job. With
+    # the exchange, the Python stage is a pure map stage and the partial
+    # top-k sort runs on plain shuffled rows. The mirror is one generator
+    # over one scan, not a self-union: the two union branches' plans hold
+    # different attribute ids under the Python nodes, so AQE reused no
+    # exchange and ran the key UDF, the kernel and the scorer twice.
     pairs = pairs.repartition("id_a", "id_b")
-    sym = pairs.selectExpr("id_a AS src", "id_b AS nbr", "cosine").unionByName(
-        pairs.selectExpr("id_b AS src", "id_a AS nbr", "cosine")
+    sym = pairs.select(
+        F.inline(F.array(
+            F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("nbr")),
+            F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("nbr")),
+        )),
+        "cosine",
     )
     w = Window.partitionBy("src").orderBy(F.col("cosine").desc(), F.col("nbr"))
     return sym.select("*", F.row_number().over(w).cast("long").alias("rk")).filter(F.col("rk") <= k)
@@ -1229,10 +1235,11 @@ def _knn_graph_local(
     _srp_bucket_pairs emits in any band, deduplicated as int64 codes
     i * n + j. Each is scored once by _cosine_batch over bounded gathers
     and rounded like F.round. A zero vector's NaN cosine is NULL, as the
-    Spark scorers' Arrow crossing makes it. Both directions of every pair are packed into one int64 sort key
-    (src, cosine slot, nbr), so one sort orders each src's neighbors by
-    (cosine desc with NULL last, nbr asc), as the distributed window does,
-    and the top k are read at each src's offset. ``n`` is within the
+    Spark scorers' Arrow crossing makes it. Both directions of every pair
+    are packed into one int64 sort key (src, cosine slot, nbr), so one sort
+    orders each src's neighbors by (cosine desc with NULL last, nbr asc),
+    as the distributed window does, and the top k are read at each src's
+    offset. ``n`` is within the
     pair_scorer bound, so n * n * _COS_SLOTS stays far inside int64."""
     n = len(ids)
     pairs = [_srp_bucket_pairs(band, proj, bucket_cap, cap_window) for band in keys.T]
